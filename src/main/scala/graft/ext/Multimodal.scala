@@ -1008,31 +1008,35 @@ object Multimodal {
       val count = u32(e + 4).toInt
       if (count < 0) return None
       // SHORT(3) = 2 bytes, LONG(4) = 4 bytes; values fit inline in
-      // the 4-byte field when size·count ≤ 4, else live at an offset
+      // the 4-byte field when size·count ≤ 4, else live at an offset.
+      // Long arithmetic: count comes from the file (up to 2^31-1).
       val elemSize = ftype match {
         case 3 => 2; case 4 => 4; case _ => 0 }
+      val span = elemSize.toLong * count
+      val base = if (span <= 4) e + 8L else u32(e + 8)
+      // every one of the tag's values lies inside the buffer — checked
+      // before a count-sized table is allocated
+      def fits: Boolean = elemSize > 0 && base + span <= bytes.length
       def value(idx: Int): Long = {
-        val base =
-          if (elemSize * count <= 4) e + 8 else u32(e + 8).toInt
-        if (base < 0 || base + elemSize * (idx + 1) > bytes.length)
-          return -1L
-        if (elemSize == 2) u16(base + 2 * idx).toLong
-        else u32(base + 4 * idx)
+        if (base + elemSize.toLong * (idx + 1) > bytes.length) return -1L
+        if (elemSize == 2) u16(base.toInt + 2 * idx).toLong
+        else u32(base.toInt + 4 * idx)
       }
       tag match {
         case 256 => w = value(0).toInt          // ImageWidth
         case 257 => h = value(0).toInt          // ImageLength
         case 258 =>                             // BitsPerSample: all 8
+          if (elemSize > 0 && !fits) return None
           bitsOk = elemSize > 0 &&
             (0 until count).forall(value(_) == 8L)
         case 259 => compression = value(0).toInt
         case 262 => photometric = value(0).toInt
         case 273 =>                             // StripOffsets
-          if (elemSize == 0) return None
+          if (!fits) return None
           offTags = Array.tabulate(count)(value(_))
         case 277 => spp = value(0).toInt        // SamplesPerPixel
         case 279 =>                             // StripByteCounts
-          if (elemSize == 0) return None
+          if (!fits) return None
           cntTags = Array.tabulate(count)(value(_))
         case 284 => planarOk = value(0) == 1L   // chunky only
         case 317 => predictor = value(0).toInt  // 2 = horizontal diff

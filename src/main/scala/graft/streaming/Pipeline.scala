@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.codec.JsonCodec
 import graft.model.Review
-import graft.ops.{Summarize, Transforms}
+import graft.ops.{Serving, Summarize, Transforms}
 
 /** Kafka endpoint configuration (reference topology, SURVEY §2.10:
   * `kafka_server_setup.sh:8-10` — topics `reviews-stream` /
@@ -77,14 +76,17 @@ object Pipeline {
       .start()
 
   /** Serving-tier ingest (K2 streaming arm): merge each micro-batch of
-    * summary updates into the keyed serving view. Mirrors the reference's
-    * consumer thread + pandas upsert (`visualizer.py:49-82`). */
-  def maintainView(summary: DataFrame, view: ServingView): DataStreamWriter[Row] =
-    summary.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        view.merge(batch, batchId)
-      }
+    * summary updates into the keyed serving view at `dir`, keyed by game
+    * and day. Mirrors the reference's consumer thread + pandas upsert
+    * (`visualizer.py:49-82`). One shard: the view is games × days, small
+    * enough to rewrite per merge ([[ShardedUpsertSink.maybeReshard]]
+    * grows it); a restart on the same `dir` and `checkpointDir` resumes
+    * both the aggregation state and the view. */
+  def maintainView(summary: DataFrame, dir: String,
+      checkpointDir: String): StreamingQuery =
+    ShardedUpsertSink.start(Serving.decomposeTime(summary), dir,
+      checkpointDir, Seq("app_id", "time_year", "time_month", "time_day"),
+      Nil, shards = 1)
 
   /** End-to-end wiring: source → summarize → Kafka sink (the whole
     * `summarizer.py` as one call). */

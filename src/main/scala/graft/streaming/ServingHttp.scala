@@ -29,10 +29,16 @@ import graft.ops.Serving
   *   - `GET /health` — liveness + the view's row count.
   *
   * Freshness model: the reference POLLS its view every 5 s; this shell
-  * instead calls the `view` SUPPLIER per request, so wiring it to
+  * instead calls the `view` SUPPLIER once per request, so wiring it to
   * [[ShardedUpsertSink.currentView]] serves each request from the
   * newest committed manifest (a manifest read, no Spark job) and
-  * wiring it to a cached DataFrame serves a fixed snapshot. Responses
+  * wiring it to a cached DataFrame serves a fixed snapshot. The store's
+  * GC may delete a resolved frame's files while the request scans them
+  * (two commits landed in between): a read that fails on a missing file
+  * resolves the view again and reruns while each new frame reads files
+  * the failed one did not (the store has committed since), within the
+  * same time budget; when nothing new was committed the missing file is
+  * a real loss and the request answers 500. Responses
   * collect() — correct for the serving tier BY CONSTRUCTION: every
   * query aggregates the pre-rolled-up view down to (games × months)
   * rows, the same cardinality the reference's pandas callbacks
@@ -81,10 +87,11 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
   private val groupSeq = new java.util.concurrent.atomic.AtomicLong
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  server.createContext("/games", ex => handle(ex)(budgeted(games())))
+  server.createContext("/games", ex => handle(ex)(budgeted(games)))
   server.createContext("/timeseries",
-    ex => handle(ex)(budgeted(timeseries(ex))))
-  server.createContext("/ranking", ex => handle(ex)(budgeted(ranking(ex))))
+    ex => handle(ex)(budgeted(timeseries(ex, _))))
+  server.createContext("/ranking",
+    ex => handle(ex)(budgeted(ranking(ex, _))))
   server.createContext("/health", ex => handle(ex)(health()))
   server.setExecutor(dispatcher)
 
@@ -122,16 +129,18 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
     * an interruptible frame, while the group cancel stops the
     * scheduled jobs themselves — so a timed-out request cannot keep
     * burning executor cores behind its 503. */
-  private def budgeted(res: => Res): Res = {
+  private def budgeted(body: DataFrame => Res): Res = {
     val group = s"serving-http-${groupSeq.incrementAndGet()}"
     @volatile var sc: Option[org.apache.spark.SparkContext] = None
     val task = new java.util.concurrent.FutureTask[Res](() => {
+      val frame = view()
       // job-group properties are thread-local: set them on the budget
       // thread that will run the Spark actions, never the dispatcher
-      sc = view().map(_.sparkSession.sparkContext)
+      sc = frame.map(_.sparkSession.sparkContext)
       sc.foreach(_.setJobGroup(group, "graft serving-http request",
         interruptOnCancel = true))
-      try res
+      try followingCommits(body, frame.getOrElse(throw
+        new IllegalArgumentException("serving view not materialized yet")))
       finally sc.foreach(_.clearJobGroup())
     })
     budgetPool.execute(task)
@@ -146,9 +155,19 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
     }
   }
 
-  private def currentView: DataFrame =
-    view().getOrElse(throw new IllegalArgumentException(
-      "serving view not materialized yet"))
+  /** `body` over `v`; when its scan finds a file gone, over a newly
+    * resolved view — as long as that view reads files `v` did not, i.e.
+    * the store has committed since and its GC took `v`'s files. */
+  private def followingCommits(body: DataFrame => Res, v: DataFrame): Res =
+    try body(v)
+    catch {
+      case e: Exception if ServingHttp.missingFile(e) =>
+        val seen = v.inputFiles.toSet
+        view().filter(_.inputFiles.exists(!seen.contains(_))) match {
+          case Some(next) => followingCommits(body, next)
+          case None => throw e
+        }
+    }
 
   private def param(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).toSeq
@@ -176,10 +195,10 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
   private def rowsJson(df: DataFrame): Res =
     Res(200, df.toJSON.collect().mkString("[", ",", "]"))
 
-  private def games(): Res = rowsJson(Serving.distinctGames(currentView))
+  private def games(v: DataFrame): Res =
+    rowsJson(Serving.distinctGames(v))
 
-  private def timeseries(ex: HttpExchange): Res = {
-    val v = currentView
+  private def timeseries(ex: HttpExchange, v: DataFrame): Res = {
     val game = param(ex, "game").getOrElse(
       throw new IllegalArgumentException("game parameter is required"))
     val metric = requireMetric(v, param(ex, "metric").getOrElse(
@@ -194,8 +213,7 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
     } else rowsJson(Serving.timeSeries(v, game, metric))
   }
 
-  private def ranking(ex: HttpExchange): Res = {
-    val v = currentView
+  private def ranking(ex: HttpExchange, v: DataFrame): Res = {
     val metric = requireMetric(v, param(ex, "metric").getOrElse(
       throw new IllegalArgumentException("metric parameter is required")))
     rowsJson(Serving.ranking(v, metric, intParam(ex, "year"),
@@ -223,6 +241,17 @@ object ServingHttp {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  /** A read failed because a file it scanned is gone: Spark's
+    * `FAILED_READ_FILE.FILE_NOT_EXIST`, or a `FileNotFoundException`
+    * anywhere in the cause chain. */
+  private[streaming] def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).exists {
+      case _: java.io.FileNotFoundException => true
+      case t: org.apache.spark.SparkThrowable =>
+        t.getCondition == "FAILED_READ_FILE.FILE_NOT_EXIST"
+      case _ => false
+    }
 
   /** Shell over a sharded-upsert serving view directory: each request
     * reads the NEWEST committed manifest (the jobless lookup tier), so

@@ -10,23 +10,31 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ext.Sharded
 import graft.ops.Upsert
 
-/** [[ParquetUpsertSink]] for views too large to rewrite per micro-batch:
-  * the keyed snapshot is partitioned by `shard = xxhash64(keys…) %
+/** The serving tier's keyed materialized view (K2): the reference's
+  * pandas upsert frame (`visualizer.py:30-44,61-82`) as a durable
+  * parquet store fed by `foreachBatch` — the plain-parquet stand-in for
+  * an Iceberg/Delta MERGE. Each merge unions the previous snapshot with
+  * the batch and keeps the latest row per key ([[Upsert.keepLatestPerKey]]
+  * ordered by `orderCols` then arrival batch); replays are harmless, so
+  * the at-least-once feed yields an effectively-once view.
+  *
+  * The keyed snapshot is partitioned by `shard = xxhash64(keys…) %
   * shards`, and each merge REWRITES ONLY THE SHARDS THE BATCH TOUCHES —
   * untouched shards are carried forward by reference through a per-
-  * version `_manifest` (shard → owning version), the plain-parquet
-  * stand-in for an Iceberg/Delta MERGE's file-level copy-on-write.
+  * version `_manifest` (shard → owning version), the stand-in for a
+  * MERGE's file-level copy-on-write. A trigger costs O(touched/shards ×
+  * view + batch), so per-trigger bytes track the BATCH's key locality,
+  * not view size — the serving-tier member of the r13
+  * bounded-per-trigger family ([[AdmissionRegistry]] guarantee 2 bounds
+  * the read side, its geometric compaction the rewrite side). A small
+  * view wants few shards (`shards = 1` is one directory rewritten per
+  * merge, as [[Pipeline.maintainView]] starts it); [[maybeReshard]]
+  * grows the modulus as the view grows.
   *
-  * Why: [[ParquetUpsertSink]] merges `previous snapshot ∪ batch` and
-  * rewrites the WHOLE view every batch — O(view) write amplification
-  * per trigger, which grows with the key domain. Here a trigger costs
-  * O(touched/shards × view + batch): a micro-batch whose keys touch few
-  * shards rewrites only those directories, so per-trigger bytes track
-  * the BATCH's key locality, not view size — the serving-tier member of
-  * the r13 bounded-per-trigger family ([[AdmissionRegistry]] guarantee
-  * 2 bounds the read side, its geometric compaction the rewrite side).
-  * The legacy sink remains the right choice for dashboard-scale views
-  * (|keys| small): one directory, no manifest indirection.
+  * Readers resolve the newest committed manifest ([[currentView]], no
+  * Spark job) and scan its files; GC keeps [[KeepVersions]] manifests,
+  * so a scan that outlives two commits can find its files deleted —
+  * [[ServingHttp]] re-resolves the view and reruns such a read.
   *
   * Layout and commit protocol:
   *   - `baseDir/v=<batchId>/shard=<s>/` — the shards REWRITTEN at that
@@ -36,11 +44,10 @@ import graft.ops.Upsert
   *     tmp + rename AFTER the parquet commit: the manifest IS the
   *     commit marker (a crashed attempt leaves data without a manifest,
   *     which every reader ignores and the replay overwrites).
-  *   - Exactly-once without transactions, same recipe as the legacy
-  *     sink: the merge reads the newest COMMITTED manifest with id <
-  *     batchId, so a replay recomputes against the same predecessor and
-  *     rewrites the same shards with the same rows — idempotent by
-  *     construction.
+  *   - Exactly-once without transactions: the merge reads the newest
+  *     COMMITTED manifest with id < batchId, so a replay recomputes
+  *     against the same predecessor and rewrites the same shards with
+  *     the same rows — idempotent by construction.
   *   - GC after commit: the last [[KeepVersions]] committed manifests
   *     (≤ batchId) pin their version ids and every (version, shard)
   *     they reference; anything else is deleted — at shard granularity,
@@ -60,9 +67,7 @@ object ShardedUpsertSink {
     * live shard per maintenance call — at P=1024 on an object store the
     * walk cost more than the decision it gates; the merge knows each
     * shard's bytes the moment it writes them, so they ride the manifest
-    * and the decision is ONE file read). `bytes = -1` marks a legacy
-    * (2-token) manifest line — sizing falls back to the walk for those
-    * shards only. */
+    * and the decision is ONE file read). */
   private case class ShardRef(version: Long, bytes: Long)
 
   private def fs(spark: SparkSession, dir: String) =
@@ -102,10 +107,9 @@ object ShardedUpsertSink {
     * later merge: a restart with a different `shards` parameter must
     * not re-hash keys under a new modulus against shard dirs laid out
     * under the old one (a key would silently stop meeting its own
-    * previous version — duplicate keys in the view). -1 when a legacy
-    * manifest has no header (caller falls back to its parameter).
-    * Body lines are `s v bytes` (bytes since r15); 2-token legacy lines
-    * parse with bytes = -1 (size-driven maintenance walks those). */
+    * previous version — duplicate keys in the view). -1 when a foreign
+    * manifest has no header (callers refuse it). Body lines are
+    * `s v bytes`; anything else is a bad manifest line. */
   private def readManifest(spark: SparkSession, baseDir: String,
       version: Long): (Int, Map[Int, ShardRef]) = {
     val in = fs(spark, baseDir).open(
@@ -120,7 +124,6 @@ object ShardedUpsertSink {
     }.getOrElse(-1)
     val refs = lines.filterNot(_.startsWith("#")).map { l =>
       l.trim.split("\\s+") match {
-        case Array(s, v) => s.toInt -> ShardRef(v.toLong, -1L)
         case Array(s, v, b) => s.toInt -> ShardRef(v.toLong, b.toLong)
         case other => throw new IllegalStateException(
           s"upsert store $baseDir: bad manifest line '$l' in v=$version")
@@ -135,8 +138,7 @@ object ShardedUpsertSink {
     val tmp = new Path(s"$baseDir/v=$version/_manifest.tmp")
     val out = f.create(tmp, true)
     try out.write((s"#shards $modulus" +: manifest.toSeq.sortBy(_._1)
-      .map { case (s, ShardRef(v, b)) =>
-        if (b >= 0) s"$s $v $b" else s"$s $v" })
+      .map { case (s, ShardRef(v, b)) => s"$s $v $b" })
       .mkString("\n").getBytes(UTF_8))
     finally out.close()
     val target = new Path(s"$baseDir/v=$version/_manifest")
@@ -414,9 +416,8 @@ object ShardedUpsertSink {
     * O(log growth)). Call from the same quiesced maintenance window as
     * [[reshard]]; view bytes come from the manifest's own per-shard
     * byte entries — ONE file read per maintenance call (VERDICT r14
-    * #2; legacy bytes-less entries fall back to a per-shard listing
-    * walk, for those shards only). Returns
-    * the new modulus when a reshard ran, None on the no-op path.
+    * #2). Returns the new modulus when a reshard ran, None on the no-op
+    * path.
     * `targetShardBytes` must sit well above parquet's per-file overhead
     * (~1 KB footer) — below it, measured bytes grow with P itself and
     * any byte-driven policy thrashes (spec pins the behavior at a sane
@@ -427,13 +428,7 @@ object ShardedUpsertSink {
     if (committed.isEmpty) return None
     val (p, manifest) = readManifest(spark, baseDir, committed.last)
     if (p <= 0 || manifest.isEmpty) return None
-    lazy val f = fs(spark, baseDir)
-    val bytes = manifest.toSeq.map {
-      case (_, ShardRef(_, b)) if b >= 0 => b
-      case (s, ShardRef(owner, _)) => // legacy bytes-less line: walk it
-        val d = new Path(s"$baseDir/v=$owner/shard=$s")
-        if (f.exists(d)) f.getContentSummary(d).getLength else 0L
-    }.sum
+    val bytes = manifest.values.map(_.bytes).sum
     if (bytes / math.max(p, 1) <= 2 * targetShardBytes) None
     else {
       val newP = math.min(1L << 20, math.max(p.toLong,

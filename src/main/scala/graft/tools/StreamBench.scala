@@ -5,10 +5,10 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Serving
-import graft.streaming.{Pipeline, ServingView}
+import graft.streaming.Pipeline
 
-/** Streaming measurements for the flagship chain. Two arms:
+/** Streaming measurements for the flagship chain and its streaming
+  * subsystems.
   *
   *   - `throughput` (default): rate source → synthetic review JSON (the
   *     Kafka `value` envelope) → [[Pipeline.summarize]] (decode →
@@ -16,14 +16,10 @@ import graft.streaming.{Pipeline, ServingView}
   *     rows/s over the steady-state window, wall time taken from the
   *     first/last progress timestamps (NOT Σ batchDuration, which skips
   *     inter-batch idle and overstates the rate).
-  *   - `serving`: the same chain lands in the K2 serving tier
-  *     ([[ServingView]] foreachBatch merge) while the main thread
-  *     continuously runs the reference's dashboard reads
-  *     ([[Serving.ranking]] / [[Serving.timeSeries]]) against the live
-  *     view. Reports per-batch merge latency and read latency — the
-  *     analog of the reference's 5 s visualizer poll
-  *     (`visualizer.py:30-44`): its freshness floor is the poll interval;
-  *     here a merged batch is queryable as soon as `merge` returns.
+  *
+  * The K2 serving tier (summary → [[graft.streaming.ShardedUpsertSink]]
+  * → HTTP reads while merges run) is measured by the repository's
+  * benchmark (`perfbench/`, workload `dashboard`).
   *
   * Context: the reference's replay producer tops out at ≈ 95 records/s BY
   * DESIGN (per-record sleep + flush, `stream_generator.py:10-11`).
@@ -48,7 +44,9 @@ import graft.streaming.{Pipeline, ServingView}
   *     CPU kernel cost, the number the 100 TB multimodal ingest story
   *     needs).
   *
-  * Round-15 arms (VERDICT r14 #1/#4/#6): `upsert-lookup` = point-lookup
+  * `upsert-sharded` (VERDICT r13 #4) = per-trigger merge cost of a
+  * sharded store at a large key domain. Round-15 arms (VERDICT r14
+  * #1/#4/#6): `upsert-lookup` = point-lookup
   * latency p50/p95 against a populated sharded store, with the retired
   * per-probe hash job as the overhead reference; `curation-paired` =
   * the load-immune A/B-interleaved chain measurement (see
@@ -56,11 +54,10 @@ import graft.streaming.{Pipeline, ServingView}
   * for the A1 window agg at a ≥10⁶ (window × game) key domain.
   *
   * Usage: runMain graft.tools.StreamBench
-  *        [throughput|serving|serving-durable|curation|curation-bounded|
-  *         mediagate|upsert-sharded|upsert-lookup|curation-paired|statestore]
+  *        [throughput|curation|curation-bounded|mediagate|upsert-sharded|
+  *         upsert-lookup|curation-paired|statestore|warc-arrival]
   *        [rowsPerSec] [secs]
-  * (`serving-durable` = the parquet-versioned snapshot mode;
-  * `curation-bounded` takes batch-row sizes instead of rowsPerSec —
+  * (`curation-bounded` takes batch-row sizes instead of rowsPerSec —
   * fixed-size triggers via rate-micro-batch, see runCurationBounded;
   * `curation-paired` takes [batchA batchB rounds];
   * `statestore` takes [rowsPerBatch triggers].)
@@ -76,7 +73,6 @@ object StreamBench {
       .getOrElse("throughput")
     val numeric = args.dropWhile(a => !a.forall(_.isDigit))
     val rps = numeric.headOption.map(_.toInt).getOrElse(mode match {
-      case "serving" => 100000
       case "curation" => 15000
       case "mediagate" => 200000
       case _ => 500000
@@ -133,28 +129,22 @@ object StreamBench {
       case "warc-arrival" => runWarcArrival(spark,
         if (numeric.length > 0) numeric(0).toInt else 16,
         if (numeric.length > 1) numeric(1).toInt else 160)
-      case m if m.startsWith("serving") =>
-        runServing(spark, Pipeline.summarize(frames), rps, seconds,
-          durable = m == "serving-durable")
       case _ => runThroughput(Pipeline.summarize(frames), rps, seconds)
     }
     spark.stop()
   }
 
-  /** The serving-durable tier at a LARGE key domain (VERDICT r13 #4):
+  /** The sharded upsert store at a LARGE key domain (VERDICT r13 #4):
     * a `keyDomain`-key view (default 10⁷) is pre-populated, then
     * fixed-size upsert triggers stream through [[graft.streaming
     * .ShardedUpsertSink]] (shards = 1024) — per-trigger merge latency,
     * touched shards, and bytes written must track the BATCH's key
-    * spread, not view size. [[graft.streaming.ParquetUpsertSink]]'s
-    * full-rewrite is measured once at the middle batch size as the
-    * baseline the manifest layout exists to beat (its per-trigger bytes
-    * ARE the view). Keys are hash-spread (worst-case locality: a
+    * spread, not view size. Keys are hash-spread (worst-case locality: a
     * `batchRows`-key trigger touches ≈ min(batchRows, P) shards — any
     * real key clustering only lowers the sharded arm's cost). */
   private def runUpsertSharded(spark: SparkSession, keyDomain: Long,
       batchSizes: Seq[Int], batchesPerPoint: Int = 10): Unit = {
-    import graft.streaming.{ParquetUpsertSink, ShardedUpsertSink}
+    import graft.streaming.ShardedUpsertSink
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shards = 1024
     def du(f: java.io.File): Long =
@@ -180,8 +170,7 @@ object StreamBench {
       .withColumn("doc", payload(col("k")))
     println(s"[streambench] mode=upsert-sharded key_domain=$keyDomain " +
       s"shards=$shards batch_sizes=${batchSizes.mkString(",")} " +
-      "row=~96B payload (bytes/trigger = new version dir; baseline = " +
-      "full-rewrite sink)")
+      "row=~96B payload (bytes/trigger = new version dir)")
 
     batchSizes.foreach { rows =>
       val base = java.nio.file.Files
@@ -224,39 +213,6 @@ object StreamBench {
         f"mb_per_trigger=${xs.map(_._3).sum / math.max(xs.size, 1) / 1e6}%8.2f " +
         f"store_mb=$viewMb%8.1f")
     }
-
-    // Full-rewrite baseline at the middle batch size: per-trigger cost
-    // is O(view) regardless of the batch.
-    val rows = batchSizes(batchSizes.size / 2)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sb_ule_").toString + "/store"
-    val merge = ParquetUpsertSink.mergeBatch(spark, base,
-      keys = Seq("k"), orderCols = Seq("seq")) _
-    merge(seed(spark), 0L)
-    val rate = spark.readStream.format("rate-micro-batch")
-      .option("rowsPerBatch", rows)
-      .option("numPartitions", cpus.toInt)
-      .load()
-    val stats = new java.util.concurrent.ConcurrentLinkedQueue[(Double, Long)]()
-    val q = upserts(rate).writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val t0 = System.nanoTime()
-        merge(batch, id + 1)
-        val ms = (System.nanoTime() - t0) / 1e6
-        stats.add((ms, du(new java.io.File(s"$base/v=${id + 1}"))))
-        ()
-      }.start()
-    val deadline = System.currentTimeMillis() + 900000L
-    while (stats.size < 4 && System.currentTimeMillis() < deadline)
-      Thread.sleep(500)
-    q.stop()
-    val xs = { import scala.jdk.CollectionConverters._
-      stats.asScala.toSeq.drop(1) }
-    val lat = xs.map(_._1)
-    println(f"[streambench] rewrite  batch_rows=$rows%6d " +
-      f"batches=${xs.size}%3d " +
-      f"merge_ms_p50=${pct(lat, 0.5)}%7.0f merge_ms_p95=${pct(lat, 0.95)}%7.0f " +
-      f"mb_per_trigger=${xs.map(_._2).sum / math.max(xs.size, 1) / 1e6}%8.2f")
   }
 
   /** Point-lookup latency against a populated sharded upsert store
@@ -756,61 +712,6 @@ object StreamBench {
         - Instant.parse(steady.head.timestamp).toEpochMilli) / 1000.0
     println(f"[streambench] mode=throughput batches=${steady.size} rows=$rows " +
       f"wall=${secs}%.1f s throughput=${rows / math.max(secs, 1e-9)}%.0f rows/s " +
-      f"(requested $rps rows/s for $seconds s)")
-  }
-
-  /** `durable = true` runs the SAME chain against the parquet-versioned
-    * snapshot mode (ServingView(snapshotDir)) — merge latency then
-    * includes the version write + swap + retire, and reads scan the
-    * committed parquet files; the delta vs the in-memory arm prices the
-    * durability the restart story buys. */
-  private def runServing(spark: SparkSession, summary: DataFrame,
-      rps: Int, seconds: Int, durable: Boolean = false): Unit = {
-    val view = if (durable)
-      new ServingView(snapshotDir = Some(java.nio.file.Files
-        .createTempDirectory("graft_sb_snap_").toString + "/snap"))
-    else new ServingView()
-    val mergeMs = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-    val q = summary.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val t0 = System.nanoTime()
-        view.merge(batch, id)
-        mergeMs.add((System.nanoTime() - t0) / 1e6)
-        ()
-      }.start()
-
-    // dashboard read loop against the LIVE view (the reference polls its
-    // pandas frame every 5 s; these are the same two query paths)
-    val rankMs = scala.collection.mutable.ArrayBuffer[Double]()
-    val seriesMs = scala.collection.mutable.ArrayBuffer[Double]()
-    val deadline = System.nanoTime() + seconds * 1000000000L
-    var viewRows = 0L
-    while (System.nanoTime() < deadline) {
-      // reads run under the view's read lock — a merge cannot release
-      // the snapshot these jobs are scanning (ServingView.read doc)
-      view.read { v =>
-        var t0 = System.nanoTime()
-        Serving.ranking(v, "T_reviews", year = Some(2020)).collect()
-        rankMs += (System.nanoTime() - t0) / 1e6
-        t0 = System.nanoTime()
-        Serving.timeSeries(v, "Game 42", "A_sentiment").collect()
-        seriesMs += (System.nanoTime() - t0) / 1e6
-        viewRows = v.count()
-      }
-      Thread.sleep(200L)
-    }
-    q.stop()
-    viewRows = view.read(_.count()).getOrElse(0L)
-    val merges = {
-      import scala.jdk.CollectionConverters._
-      mergeMs.asScala.toSeq
-    }
-    val modeName = if (durable) "serving-durable" else "serving"
-    println(f"[streambench] mode=$modeName batches=${merges.size} " +
-      f"view_rows=$viewRows reads=${rankMs.size} " +
-      f"merge_ms_p50=${pct(merges, 0.5)}%.0f merge_ms_p95=${pct(merges, 0.95)}%.0f " +
-      f"rank_ms_p50=${pct(rankMs.toSeq, 0.5)}%.0f rank_ms_p95=${pct(rankMs.toSeq, 0.95)}%.0f " +
-      f"series_ms_p50=${pct(seriesMs.toSeq, 0.5)}%.0f series_ms_p95=${pct(seriesMs.toSeq, 0.95)}%.0f " +
       f"(requested $rps rows/s for $seconds s)")
   }
 }

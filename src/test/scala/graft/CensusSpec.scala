@@ -133,20 +133,4 @@ class CensusSpec extends AnyFunSuite with SparkTestSupport {
     Caches.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
-
-  test("ServingView keeps one materialized snapshot across merges") {
-    val s = spark
-    import s.implicits._
-    Caches.releaseAll()
-    val view = new graft.streaming.ServingView(Seq("app_id"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    for (b <- 0L until 5L) {
-      val batch = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-        b.toDouble)).toDF("app_id", "time", "avg_sentiment")
-      view.merge(batch, b)
-    }
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1, s"view leaked ${after - before} snapshots")
-    assert(view.current.get.count() == 1)
-  }
 }

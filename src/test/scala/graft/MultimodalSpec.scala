@@ -980,6 +980,33 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSupport {
     assert(!Multimodal.isAvif(mp4) && Multimodal.sniffFormat(mp4).isEmpty)
   }
 
+  test("a TIFF strip table whose count outruns the file is rejected unallocated") {
+    // little-endian header + one IFD: 1x1, then StripOffsets (LONG)
+    // claiming 2^31-1 values at offset 8 — 8 GB of table in a 50-byte
+    // file. The count must be checked against the bytes before any
+    // count-sized table exists.
+    val buf = java.nio.ByteBuffer.allocate(50)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    buf.put("II".getBytes("ISO-8859-1")).putShort(42.toShort).putInt(8)
+    buf.putShort(3.toShort)
+    def entry(tag: Int, ftype: Int, count: Int, value: Int): Unit =
+      buf.putShort(tag.toShort).putShort(ftype.toShort).putInt(count)
+        .putInt(value)
+    entry(256, 3, 1, 1)
+    entry(257, 3, 1, 1)
+    entry(273, 4, Int.MaxValue, 8)
+    buf.putInt(0) // no next IFD
+    val tiff = buf.array()
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    assert(Multimodal.imageDims(tiff).isEmpty)
+    assert(Multimodal.tiffPixels(tiff).isEmpty)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (16L << 20), s"decode allocated $allocated bytes")
+  }
+
   test("decoders never throw on adversarial bytes: fuzz + bit-flipped fixtures") {
     // the ingest-gate contract: corrupt content (not just corrupt
     // structure) must yield None, never an exception that kills the

@@ -209,4 +209,75 @@ class ServingHttpSpec extends AnyFunSuite with SparkTestSupport {
         b2 == """[{"app_name":"g"},{"app_name":"h"}]""")
     } finally http.stop()
   }
+
+  /** A 2-shard store of 20 games on one day, each merge rewriting both
+    * shards with A_value = 100 * merge + game. */
+  private def rewritingStore() = {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_http_gc_").toString
+    val merges = new java.util.concurrent.atomic.AtomicLong
+    def merge(): Unit = {
+      val b = merges.getAndIncrement()
+      graft.streaming.ShardedUpsertSink.mergeBatch(s, dir,
+        Seq("app_name", "time_year", "time_month", "time_day"),
+        orderCols = Nil, shards = 2)(
+        (0 until 20).map(i => (s"g$i", 2024, 1, 1, 100.0 * b + i, 1L))
+          .toDF("app_name", "time_year", "time_month", "time_day",
+            "A_value", "T_reviews"), b)
+    }
+    merge()
+    (dir, () => merge())
+  }
+
+  test("a read whose files GC deleted reruns on a newly resolved view") {
+    // Each of the supplier's first two calls resolves the view, then
+    // two merges land (GC keeps two manifests, so every file of the
+    // resolved frame is deleted), and the stale frame is returned. The
+    // request must follow the store to its newest commit.
+    val (dir, merge) = rewritingStore()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val http = new ServingHttp(() => {
+      val v = graft.streaming.ShardedUpsertSink.currentView(spark, dir)
+      if (calls.incrementAndGet() <= 2) { merge(); merge() }
+      v
+    })
+    http.start()
+    try {
+      val (code, body) = get(HttpClient.newHttpClient(), http.boundPort,
+        "/ranking?metric=A_value")
+      assert(code == 200, body)
+      val newest = graft.streaming.ShardedUpsertSink.currentView(spark, dir).get
+      assert(body == Serving.ranking(newest, "A_value")
+        .toJSON.collect().mkString("[", ",", "]"))
+      assert(body.contains("\"A_value\":419.0"), body) // merge 4, game 19
+      assert(calls.get == 3)
+    } finally http.stop()
+  }
+
+  test("a file lost from the newest version answers 500 after one re-resolve") {
+    // No merge lands, so the re-resolved view reads nothing new: the
+    // missing file is a real loss, not GC, and must not be served around.
+    val (dir, _) = rewritingStore()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val http = new ServingHttp(() => {
+      val v = graft.streaming.ShardedUpsertSink.currentView(spark, dir)
+      if (calls.incrementAndGet() == 1) {
+        val shard = new java.io.File(s"$dir/v=0/shard=0")
+        shard.listFiles().filter(_.getName.startsWith("part-"))
+          .foreach(_.delete())
+        shard.listFiles().filter(_.getName.startsWith(".part-"))
+          .foreach(_.delete()) // checksum sidecars
+      }
+      v
+    })
+    http.start()
+    try {
+      val (code, body) = get(HttpClient.newHttpClient(), http.boundPort,
+        "/games")
+      assert(code == 500 && body.contains("FILE_NOT_EXIST"), s"$code $body")
+      assert(calls.get == 2)
+    } finally http.stop()
+  }
 }

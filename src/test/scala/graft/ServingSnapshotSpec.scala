@@ -1,77 +1,55 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{ServingView, SnapshotStore}
+import graft.streaming.{Pipeline, ShardedUpsertSink}
 
-/** Durable (parquet-versioned) ServingView snapshots: merges version the
-  * view on disk, a FRESH instance on the same dir recovers the newest
-  * committed version (the restart story), and superseded versions are
-  * retired so the store holds one copy. */
+/** Durable serving snapshots across a restart: the view `Pipeline.maintainView`
+  * keeps in the sharded store survives its query, a new query on the same
+  * store and checkpoint serves the committed view before its first batch,
+  * and later batches still merge last-write-wins. */
 class ServingSnapshotSpec extends AnyFunSuite with SparkTestSupport {
 
-  private def batch(appId: Long, sentiment: Double) = {
-    val s = spark
-    import s.implicits._
-    Seq((appId, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), sentiment))
-      .toDF("app_id", "time", "avg_sentiment")
-  }
+  private def review(appId: Long, name: String, ts: Long, sentiment: Float): String =
+    s"""{"index":1,"app_id":$appId,"app_name":"$name","review_id":$ts,
+       |"timestamp_created":$ts,"recommended":true,
+       |"sentiment":$sentiment,"author_playtime_at_review":60.0}"""
+      .stripMargin.replaceAll("\n", "")
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** (app_id, T_reviews) of the served view at `dir`. */
+  private def served(dir: String): Set[(Long, Long)] =
+    ShardedUpsertSink.currentView(spark, dir).get.collect()
+      .map(r => (r.getAs[Long]("app_id"), r.getAs[Long]("T_reviews"))).toSet
 
   test("restart recovery: a fresh view on the same dir resumes reads") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_svsnap_").toString + "/snap"
-    val view = new ServingView(Seq("app_id"), snapshotDir = Some(dir))
-    view.merge(batch(1L, 0.1), batchId = 0)
-    view.merge(batch(2L, 0.2), batchId = 1)
-    view.merge(batch(1L, 0.9), batchId = 2) // upsert of app 1
-    val expected = view.read(_.collect().map(r =>
-      (r.getAs[Long]("app_id"), r.getAs[Double]("avg_sentiment"))).toSet).get
-    assert(expected == Set((1L, 0.9), (2L, 0.2)))
-
-    // "Kill the JVM, reopen": a brand-new instance with no in-memory
-    // state recovers the newest committed version on first read.
-    val reopened = new ServingView(Seq("app_id"), snapshotDir = Some(dir))
-    val recovered = reopened.read(_.collect().map(r =>
-      (r.getAs[Long]("app_id"), r.getAs[Double]("avg_sentiment"))).toSet)
-    assert(recovered.contains(expected))
-
-    // Last-write-wins ordering spans the restart: a post-restart merge
-    // with a higher batchId overwrites, and the view stays consistent.
-    reopened.merge(batch(2L, 0.5), batchId = 3)
-    val after = reopened.read(_.collect().map(r =>
-      (r.getAs[Long]("app_id"), r.getAs[Double]("avg_sentiment"))).toSet).get
-    assert(after == Set((1L, 0.9), (2L, 0.5)))
-  }
-
-  test("superseded versions are deleted; only the committed one remains") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_svsnap_").toString + "/snap"
-    val view = new ServingView(Seq("app_id"), snapshotDir = Some(dir))
-    for (b <- 0L until 4L) view.merge(batch(1L, b.toDouble), batchId = b)
-    val versions = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName).toSeq
-    assert(versions == Seq("v=4"))
-    assert(view.read(_.count()).get == 1L)
-  }
-
-  test("SnapshotStore ignores uncommitted (marker-less) versions") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_svsnap_").toString + "/snap"
-    val store = new SnapshotStore(dir)
-    assert(store.write(Seq((1L, "a")).toDF("k", "v")) == 1L)
-    // Simulate a writer that died mid-write: v=2 exists, no _SUCCESS.
-    val dead = new java.io.File(dir + "/v=2")
-    dead.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + "/v=2/part-partial.parquet"),
-      Array[Byte](1, 2, 3))
-    assert(store.currentVersion(s) == Some(1L))
-    assert(store.read(s).get.count() == 1L)
-    // The next write claims version 2 again, overwriting the debris.
-    assert(store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v")) == 2L)
-    assert(store.currentVersion(s) == Some(2L))
-    assert(store.read(s).get.count() == 2L)
+    implicit val sql = s.sqlContext
+    val stream = MemoryStream[String]
+    val dir = tmp("graft_view_rs_")
+    val ckpt = tmp("graft_view_rs_ck_")
+    def startView() =
+      Pipeline.maintainView(Pipeline.summarize(stream.toDF()), dir, ckpt)
+    val q1 = startView()
+    try {
+      stream.addData(review(1, "g", 100L, 0.1f), review(2, "h", 100L, 0.2f))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(served(dir) == Set((1L, 1L), (2L, 1L)))
+    // "Kill the JVM, reopen": a new query on the same dirs serves the
+    // committed view before its first batch...
+    val q2 = startView()
+    try {
+      assert(served(dir) == Set((1L, 1L), (2L, 1L)))
+      // ...and a later batch still wins: the aggregation state resumed
+      // from the checkpoint, so app 1's window now counts two reviews.
+      stream.addData(review(1, "g", 200L, 0.9f))
+      q2.processAllAvailable()
+      assert(served(dir) == Set((1L, 2L), (2L, 1L)))
+    } finally q2.stop()
   }
 }

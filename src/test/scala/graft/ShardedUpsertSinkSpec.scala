@@ -5,10 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{ParquetUpsertSink, ShardedUpsertSink}
+import graft.ops.Upsert
+import graft.streaming.ShardedUpsertSink
 
-/** The manifest-pruned upsert sink: merge semantics identical to the
-  * whole-view [[ParquetUpsertSink]], per-batch rewrites limited to the
+/** The manifest-pruned upsert sink: merge semantics identical to one
+  * keep-latest pass over every batch, per-batch rewrites limited to the
   * touched shards (the write-amplification bound that is its reason to
   * exist), replay-idempotent commits, shard-granular GC, and
   * crashed-attempt (manifest-less) versions invisible to readers. */
@@ -29,26 +30,28 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
   }
 
   test("merge semantics ≡ whole-view sink across batches (incl. stale rows)") {
+    // the reference is the one-shot batch result: keep-latest per key
+    // over the union of every batch, ordered by seq then arrival
     val s = spark
     import s.implicits._
     val shardedDir = Files.createTempDirectory("graft-shup").toString
-    val legacyDir = Files.createTempDirectory("graft-shup-leg").toString
     val sharded = ShardedUpsertSink.mergeBatch(s, shardedDir,
       keys = Seq("k"), orderCols = Seq("seq"), shards = 8) _
-    val legacy = ParquetUpsertSink.mergeBatch(s, legacyDir,
-      keys = Seq("k"), orderCols = Seq("seq")) _
     val batches = Seq(
       Seq(("a", 1L, 1.0), ("b", 1L, 10.0), ("c", 1L, 7.0)),
       Seq(("a", 2L, 2.0), ("d", 1L, 30.0)),
       Seq(("a", 0L, -1.0), ("b", 3L, 11.0))) // stale a must NOT win
     batches.zipWithIndex.foreach { case (rows, i) =>
       sharded(rows.toDF("k", "seq", "v"), i.toLong)
-      legacy(rows.toDF("k", "seq", "v"), i.toLong)
     }
     val shardedView = viewMap(shardedDir)
-    val legacyView = ParquetUpsertSink.currentView(s, legacyDir).get
+    val oneShot = Upsert.keepLatestPerKey(
+      batches.zipWithIndex.flatMap { case (rows, i) =>
+        rows.map { case (k, seq, v) => (k, seq, v, i.toLong) } }
+        .toDF("k", "seq", "v", "__batch"),
+      Seq("k"), Seq("seq", "__batch"))
       .collect().map(r => r.getAs[String]("k") -> r.getAs[Double]("v")).toMap
-    assert(shardedView == legacyView &&
+    assert(shardedView == oneShot &&
       shardedView == Map("a" -> 2.0, "b" -> 11.0, "c" -> 7.0, "d" -> 30.0))
   }
 
@@ -139,21 +142,28 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
   test("a headerless (legacy/foreign) manifest is refused, not re-hashed") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-shup-leg2").toString
-    ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 8)(
-      Seq(("a", 1L, 1.0)).toDF("k", "seq", "v"), 0L)
     // strip the header: simulates a store written by a tool that does
-    // not record its modulus — guessing one would corrupt the view
-    val mp = java.nio.file.Paths.get(s"$dir/v=0/_manifest")
-    val body = new String(java.nio.file.Files.readAllBytes(mp))
-      .linesIterator.filterNot(_.startsWith("#")).mkString("\n")
-    java.nio.file.Files.write(mp, body.getBytes)
-    // drop the Hadoop local-FS checksum sidecar the raw rewrite broke
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/v=0/._manifest.crc"))
-    assertThrows[IllegalStateException] {
+    // not record its modulus — guessing one would corrupt the view.
+    // Drop the bytes column: a 2-token line is a bad manifest line.
+    val foreign: Seq[String => String] = Seq(
+      _.linesIterator.filterNot(_.startsWith("#")).mkString("\n"),
+      _.linesIterator.map { l =>
+        if (l.startsWith("#")) l else l.split("\\s+").take(2).mkString(" ")
+      }.mkString("\n"))
+    foreign.foreach { rewrite =>
+      val dir = Files.createTempDirectory("graft-shup-leg2").toString
       ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 8)(
-        Seq(("b", 1L, 2.0)).toDF("k", "seq", "v"), 1L)
+        Seq(("a", 1L, 1.0)).toDF("k", "seq", "v"), 0L)
+      val mp = java.nio.file.Paths.get(s"$dir/v=0/_manifest")
+      val body = rewrite(new String(java.nio.file.Files.readAllBytes(mp)))
+      java.nio.file.Files.write(mp, body.getBytes)
+      // drop the Hadoop local-FS checksum sidecar the raw rewrite broke
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$dir/v=0/._manifest.crc"))
+      assertThrows[IllegalStateException] {
+        ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 8)(
+          Seq(("b", 1L, 2.0)).toDF("k", "seq", "v"), 1L)
+      }
     }
   }
 
@@ -404,26 +414,6 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       s"inflated manifest bytes must drive the decision (got $fired)")
     // content survives the reshard
     assert(viewMap(dir).size == 200 && viewMap(dir)("key7") == 7.0)
-    // LEGACY manifests (2-token lines, no bytes) fall back to the walk:
-    // strip the bytes column and assert the decision still works.
-    val dirL = Files.createTempDirectory("graft-shup-mbl").toString
-    ShardedUpsertSink.mergeBatch(s, dirL, Seq("k"), Seq("seq"), shards = 2)(
-      (0 until 2000).map(i => (s"key$i", 1L, i.toDouble))
-        .toDF("k", "seq", "v"), 0L)
-    val mL = java.nio.file.Paths.get(s"$dirL/v=0/_manifest")
-    val legacy = new String(java.nio.file.Files.readAllBytes(mL))
-      .linesIterator.map { l =>
-        if (l.startsWith("#")) l
-        else l.split("\\s+").take(2).mkString(" ")
-      }.mkString("\n")
-    java.nio.file.Files.write(mL, legacy.getBytes)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dirL/v=0/._manifest.crc"))
-    val grew = ShardedUpsertSink.maybeReshard(s, dirL, Seq("k"),
-      batchId = 1L, targetShardBytes = 4096L)
-    assert(grew.exists(_ > 2),
-      s"legacy manifest must fall back to the walk (got $grew)")
-    assert(viewMap(dirL).size == 2000)
   }
 
   test("start() owns the reshard id-space: resume after reshard, no collision") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Upsert
-import graft.streaming.{Pipeline, ServingView}
+import graft.streaming.{Pipeline, ShardedUpsertSink}
 
 /** End-to-end streaming semantics over MemoryStream (SURVEY §5.2.3):
   * update-mode emission per changed window, late-data acceptance without
@@ -77,19 +77,23 @@ class StreamingPipelineSpec extends AnyFunSuite with SparkTestSupport {
     } finally q.stop()
   }
 
-  test("ServingView foreachBatch merge is last-write-wins and idempotent") {
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("maintainView foreachBatch merge is last-write-wins and idempotent") {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
     val stream = MemoryStream[String]
-    val view = new ServingView()
-    val q = Pipeline.maintainView(Pipeline.summarize(stream.toDF()), view).start()
+    val dir = tmp("graft_view_")
+    val q = Pipeline.maintainView(Pipeline.summarize(stream.toDF()), dir,
+      tmp("graft_view_ck_"))
     try {
       stream.addData(review(1, "g", 100L, 0.5f, recommended = true))
       q.processAllAvailable()
       stream.addData(review(1, "g", 200L, 0.5f, recommended = true)) // same window → upsert
       q.processAllAvailable()
-      val cur = view.current.get.collect()
+      val cur = ShardedUpsertSink.currentView(spark, dir).get.collect()
       assert(cur.length == 1)
       assert(cur.head.getAs[Long]("T_reviews") == 2L) // overwritten, not duplicated
       assert(cur.head.getAs[Int]("time_year") == 1970)
