@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   * JSON line rode inside sbt's [info] stream next to a plan-truncation
   * WARN):
   *   - the JSON is ALSO written to a file (`SPARK_GRAFT_BENCH_OUT`, default
-  *     /root/repo/target/bench_out.json) so the perf signal survives any
+  *     target/bench_out.json) so the perf signal survives any
   *     stdout mangling (under target/, not the repo root — the committed
   *     series is BENCH_rNN.json + BENCH_HISTORY.jsonl);
   *   - per-query failures are RECORDED (`"errors":{name:msg}` + the query
@@ -46,6 +46,9 @@ import java.nio.file.{Files, Paths}
   *      next round compares against untruncated data;
   *   2. newest BENCH_OUT_r*.json — a committed full bench_out.json;
   *   3. newest BENCH_r*.json — de-escaped driver wrapper (last resort).
+  * These files, the history append and the default output file resolve
+  * against the working directory (the repo root under `sbt run`), so a
+  * run from another checkout reads and appends its own history.
   * [[parseQueryTimes]]/[[movers]]/[[prevTimes]] are exposed for BenchSpec,
   * which feeds the actual committed BENCH_r07/r08 bytes and asserts the
   * known 3.3× mover is flagged.
@@ -99,7 +102,7 @@ object Bench {
     * qualifies if it carries the SAME sf dir (a local sf0.01 iteration
     * must not become the baseline for the driver's sf0.1 run). */
   def prevTimes(sfDir: String,
-      repoDir: String = "/root/repo"): (String, Map[String, Double]) = {
+      repoDir: String = "."): (String, Map[String, Double]) = {
     val sfTag = "\"sf\":" + jstr(sfDir)
     def sfMatches(txt: String): Boolean =
       txt.replace("\\\"", "\"").contains(sfTag)
@@ -151,13 +154,13 @@ object Bench {
     * speed no longer reachable — raw totals ride alongside in every
     * line, and drift > 2 is flagged for manual reading (`drift_high`). */
   def prevAnchorMed(sfDir: String,
-      repoDir: String = "/root/repo"): Option[Double] =
+      repoDir: String = "."): Option[Double] =
     prevAnchorKeyMed("anchor_med", sfDir, repoDir)
 
   /** [[prevAnchorMed]] for the r19 mid-weight SHUFFLE anchor series
     * (`anchor2_med`) — None until the first run that recorded one. */
   def prevAnchor2Med(sfDir: String,
-      repoDir: String = "/root/repo"): Option[Double] =
+      repoDir: String = "."): Option[Double] =
     prevAnchorKeyMed("anchor2_med", sfDir, repoDir)
 
   private def prevAnchorKeyMed(key: String, sfDir: String,
@@ -225,12 +228,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // under target/ (VERDICT r14 #8): BENCH_rNN.json + BENCH_HISTORY are
     // the canonical committed series; a loose repo-root bench_out.json
     // was the one place a stale artifact could pass for current evidence
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/target/bench_out.json")
+      "target/bench_out.json")
     // Targeted local adjudication: run only these queries, at a minimum
     // sample count — e.g. SPARK_GRAFT_BENCH_ONLY=q_histogram,q_join_fact
     // SPARK_GRAFT_BENCH_MIN_SAMPLES=5 re-measures suspected movers with a
@@ -243,31 +246,11 @@ object Bench {
     // each). Two baseline samples give every query a real min/max spread;
     // movers are then re-run to ≥3 before the verdict.
     val minSamples = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_SAMPLES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // coalesce tiny post-shuffle stages by advisory bytes instead of
-      // fanning out one task per core (see GraftSession); env-overridable
-      // so a parallelism-first A/B stays one flag away
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      // advisory partition size derived from the input footprint (see
-      // GraftSession.advisoryPartitionBytes): byte-based coalescing with
-      // the cluster-scale 64 MB default would serialize this corpus's
-      // compute-dense-but-byte-light candidate joins onto one task
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES",
-          GraftSession.advisoryPartitionBytes(
-            GraftSession.dirBytes(sfDir), cpus.toInt).toString))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (256 << 10).toString)
-      // match GraftSession: AQE coalescing applies inside cached plans
-      // (explicit-numPartitions pins stay exempt) — see GraftSession r20
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // byte-sized AQE coalescing with the advisory size derived from the
+    // input footprint (see GraftSession.fixtureSized): the cluster-scale
+    // 64 MB default would serialize this corpus's compute-dense but
+    // byte-light candidate joins onto one task
+    val spark = GraftSession.local(cpus, sfDir)
     spark.sparkContext.setLogLevel("WARN")
     installCodegenMonitor()
     Tables(spark, sfDir, "events").count() // warmup
@@ -289,7 +272,7 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     def anchorSample(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1, cpus.toInt)
+      spark.range(0L, 400000000L, 1, cpus)
         .selectExpr("sum(id * 2 + 1)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -306,7 +289,7 @@ object Bench {
     // stay comparable).
     def anchor2Sample(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 48000000L, 1, cpus.toInt)
+      spark.range(0L, 48000000L, 1, cpus)
         .selectExpr("pmod(xxhash64(id), 4096) AS k", "id")
         .repartition(64, col("k"))
         .groupBy("k").agg(expr("sum(id)"))
@@ -485,7 +468,7 @@ object Bench {
     // line so the NEXT round's move detector compares against untruncated
     // per-query data instead of the driver's char-budgeted tail.
     if (only.isEmpty && results.size == SparkEntry.queries.size)
-      try Files.writeString(Paths.get("/root/repo/BENCH_HISTORY.jsonl"),
+      try Files.writeString(Paths.get("BENCH_HISTORY.jsonl"),
         json + "\n", java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       catch { case e: Throwable =>

@@ -2,10 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated session builder for the graft engine.
+/** The one place the engine builds a `SparkSession`. Every entry point
+  * starts from the same product configuration:
   *
-  * Encodes the configuration the 100 TB design point relies on, so
-  * deployments (and the local harness) start from the same baseline:
+  *   - [[builder]] is that configuration with no master, for
+  *     spark-submit deployments ([[graft.streaming.Replay]]) and for
+  *     callers that add their own placement (perfbench);
+  *   - [[local]]`(threads)` is the harness session (the test suite and
+  *     the tools): `local[threads]`, shuffle partitions = threads, UI
+  *     off;
+  *   - [[local]]`(threads, inputDir)` also sizes AQE's post-shuffle
+  *     partitions from the input footprint ([[fixtureSized]]); `Bench`,
+  *     `Verify` and `Profile` run the query registry through it.
+  *
+  * The thread count a harness passes is [[cpus]]: `SPARK_GRAFT_CPUS`,
+  * else every core.
+  *
+  * The configuration:
   *
   *   - AQE on (runtime partition coalescing, skew-join splitting) — the
   *     runtime half of the skew story ([[graft.ops.Skew]] is the
@@ -13,24 +26,25 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle partitions sized to the cluster, not the 200 default;
   *   - UTC session timezone (timestamp parity with the oracle and the
   *     reference's epoch math);
-  *   - RocksDB state store ON BY DEFAULT for streaming state (the
-  *     reference runs watermark-free — state grows with |games|×|days| —
-  *     so the in-memory HDFS-backed store stops fitting long before
-  *     100 TB). Measured at a 1.9M-key window aggregation (SURVEY
-  *     §17.8, StreamBench `statestore`): per-trigger latency EQUAL to
-  *     the default store (p50 0.89 vs 0.90 s, p95 better), 2.8× less
-  *     executor memory (273 vs 778 MB), faster restart-from-checkpoint
-  *     (2.1 vs 3.0 s) — there is no latency price, only a heap ceiling
-  *     removed, so scale gets it without asking. `rocksDbState = false`
-  *     opts back into the in-memory store for tiny dashboard-scale
-  *     state where the native store's files are clutter.
+  *   - the RocksDB state store for streaming state (the reference runs
+  *     watermark-free — state grows with |games|×|days| — so the
+  *     in-memory HDFS-backed store stops fitting long before 100 TB).
+  *     Measured at a 1.9M-key window aggregation (SURVEY §17.8):
+  *     per-trigger latency EQUAL to the default store (p50 0.89 vs
+  *     0.90 s, p95 better), 2.8× less executor memory (273 vs 778 MB),
+  *     faster restart-from-checkpoint (2.1 vs 3.0 s) — no latency
+  *     price, only a heap ceiling removed.
   */
 object GraftSession {
 
+  /** Harness thread count: `SPARK_GRAFT_CPUS`, else every core. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(appName: String = "graft",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
-      rocksDbState: Boolean = true): SparkSession.Builder = {
-    val b = SparkSession.builder()
+      shufflePartitions: Int = Runtime.getRuntime.availableProcessors())
+      : SparkSession.Builder =
+    SparkSession.builder()
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -58,19 +72,34 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // fixture parquet carries TIMESTAMP(NANOS) — see graft.Tables
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (rocksDbState)
-      b.config("spark.sql.streaming.stateStore.providerClass",
+      .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else b
-  }
 
-  /** Local harness session (used by tests/tools): `local[n]` with
-    * shuffle partitions = n. */
-  def local(threads: Int): SparkSession =
+  private def localBuilder(threads: Int): SparkSession.Builder =
     builder(shufflePartitions = threads)
       .master(s"local[$threads]")
       .config("spark.ui.enabled", "false")
+
+  /** Harness session: `local[threads]` with shuffle partitions =
+    * threads. */
+  def local(threads: Int = cpus): SparkSession =
+    localBuilder(threads).getOrCreate()
+
+  /** [[local]] with AQE partition sizes fitted to the data under
+    * `inputDir` ([[fixtureSized]]). */
+  def local(threads: Int, inputDir: String): SparkSession =
+    fixtureSized(inputDir, threads)
+      .foldLeft(localBuilder(threads)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+
+  /** The AQE sizes for a session over the files under `inputDir`: the
+    * advisory partition size from [[advisoryPartitionBytes]], and a
+    * 256 KB floor under coalesced partitions. */
+  def fixtureSized(inputDir: String, cores: Int): Seq[(String, String)] =
+    Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        advisoryPartitionBytes(dirBytes(inputDir), cores).toString,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        (256 << 10).toString)
 
   /** Scale-adaptive AQE advisory partition size (guide §2: derive the
     * partitioning from the input, never a constant tuned for one

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,9 @@ object Verify {
     // re-dump while iterating (the driver always runs the full set).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench/GraftSession: byte-sized AQE coalescing (results are
-      // partition-count invariant; this keeps the dumped plans the same
-      // shape the bench times)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES",
-          GraftSession.advisoryPartitionBytes(
-            GraftSession.dirBytes(sfDir), cpus.toInt).toString))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (256 << 10).toString)
-      // match GraftSession: AQE coalescing applies inside cached plans
-      // (explicit-numPartitions pins stay exempt) — see GraftSession r20
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session: results are partition-count invariant, and
+    // this keeps the dumped plans the same shape the bench times
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -117,7 +117,10 @@ object Archives {
     * bytes would exceed `maxArchiveBytes` the walk stops with what fit
     * (a many-small-bombs archive is a bomb too). Defaults: 256 MiB per
     * member, 1 GiB per archive — far above any sane shard, far below
-    * executor memory. */
+    * executor memory. A DEFLATE member is also skipped when its `usize`
+    * is more than deflate can expand `csize` bytes to
+    * ([[MaxDeflateRatio]]), so the output buffer is bounded by the
+    * input's length, not only by the caps. */
   def zipMembers(bytes: Array[Byte],
       maxMemberBytes: Int = MaxGunzip,
       maxArchiveBytes: Long = MaxArchiveInflate): Seq[Member] = {
@@ -154,7 +157,8 @@ object Archives {
         val encrypted = (flags & 1) != 0
         if (!encrypted && !name.endsWith("/") && lho + 30 <= bytes.length &&
           csize >= 0 && usize >= 0 &&
-          csize <= maxMemberBytes && usize <= maxMemberBytes) {
+          csize <= maxMemberBytes && usize <= maxMemberBytes &&
+          (method != 8 || usize <= MaxDeflateRatio * csize + 64)) {
           if (extracted + usize > maxArchiveBytes) return out.result()
           // local header: sizes there may be zero (bit-3 streaming);
           // trust the central directory, skip local name+extra
@@ -222,6 +226,10 @@ object Archives {
     * guard in [[Multimodal]]. 256 MiB per blob is far above any sane
     * shard and far below executor memory. */
   val MaxGunzip: Int = 1 << 28
+
+  /** The most DEFLATE can expand its input: a 258-byte match costs at
+    * least 2 bits, so n compressed bytes inflate to under 1032·n. */
+  val MaxDeflateRatio: Long = 1032L
 
   /** Cumulative extracted-bytes ceiling per zip archive (see
     * [[zipMembers]]) — many small bomb members are a bomb too. */

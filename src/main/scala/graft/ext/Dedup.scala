@@ -1167,9 +1167,9 @@ object Dedup {
 
   /** Point probe over a [[writeShardedChunkIndex]] artifact — the
     * simhash serving primitive the regime measurements say this layout
-    * is FOR (ShardedStress: the chunk index loses to the flat
-    * fingerprint scan for batch appends but a probe touches ≤ `chunks`
-    * of the chunks×shards directories): the query fingerprint's chunk
+    * is FOR (SURVEY "Round-10 measurements": the chunk index loses to
+    * the flat fingerprint scan for batch appends but a probe touches
+    * ≤ `chunks` of the chunks×shards directories): the query fingerprint's chunk
     * values are bit slices computed in plain Scala, their shard values
     * by the ENGINE's own xxhash64 (one 1-row job), then ONE Or-of-And
     * scan prunes at the partition level and verifies exact hamming on

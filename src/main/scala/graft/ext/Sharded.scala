@@ -100,7 +100,8 @@ object Sharded {
     * dominated in wall-clock, but selected bytes grow with the CORPUS
     * on an unpruned read and with the TOUCHED SLICE on a pruned one,
     * so the bytes ratio is what survives a 1000× scale-up
-    * (ShardedStress reports it next to the wall-clock). Recurses
+    * (SURVEY "Round-10 measurements" reports it next to the
+    * wall-clock). Recurses
     * through the cache/AQE wrappers that hide scan leaves. */
   def scanFootprint(spark: SparkSession, paths: Seq[String])(
       body: => DataFrame): (Long, Long) = {

@@ -613,7 +613,7 @@ object Warc {
     * the crawl's compressed wire format to [[readWetSplittable]]'s
     * splittable layout, for when a corpus arrives as a FEW fat archives
     * instead of many shards and per-file parallelism can't feed the
-    * cluster (the measured 33 vs 344 MB/s gap in `tools/WarcScale`).
+    * cluster (the measured 33 vs 344 MB/s gap, SURVEY §17.10).
     * Names drop the `.gz` suffix; gzip members concatenate to one
     * plain stream (identical bytes to the pre-compression original). */
   def decompressToStaging(spark: SparkSession, pattern: String,

@@ -256,9 +256,9 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     * size-derived write width for the registry AS IT STANDS (excluding
     * this batch's own replayed append — same replay determinism as
     * admit); fold cycles converge mixed widths exactly as for live
-    * appends. Also the population path of the width-crossover bench
-    * ([[graft.tools.EmbeddingWidthBench]]), where gating 10⁶ disjoint
-    * vectors through admit() would only measure the probe being
+    * appends. Also the population path of the width-crossover
+    * measurement (SURVEY §15.13a), where gating 10⁶ disjoint vectors
+    * through admit() would only measure the probe being
     * admitted-anyway. */
   def bootstrap(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession

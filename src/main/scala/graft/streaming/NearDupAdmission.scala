@@ -35,7 +35,7 @@ import graft.ext.Dedup
   * per-trigger bytes PLATEAU at ≈ |batch| × bands × targetShardBytes +
   * the uncompacted tail — constant in corpus lifetime, where any fixed
   * shard count saturates and degrades to the full registry read
-  * (measured in AdmissionLatency). The admission join then
+  * (measured in SURVEY §15.1). The admission join then
   * hash-partitions batch buckets (|batch| × bands rows) against the
   * pruned read. Persistence goes through
   * [[AdmissionRegistry]]: per-batch overwrite appends + own-batch

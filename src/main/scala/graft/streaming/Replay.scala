@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.codec.JsonCodec
 import graft.sources.Sources
 
@@ -62,7 +63,7 @@ object Replay {
 
   def main(args: Array[String]): Unit = {
     val Array(csvPath, bootstrap, topic) = args.take(3)
-    val spark = SparkSession.builder().appName("graft-replay").getOrCreate()
+    val spark = GraftSession.builder("graft-replay").getOrCreate()
     run(spark, csvPath, KafkaEndpoint(bootstrap, topic))
     spark.stop()
   }

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.GraftSession
 import graft.ext.Sharded
 import graft.streaming.{AdmissionRegistry, ShardedUpsertSink}
 
@@ -48,15 +48,7 @@ object LifetimeSoak {
   def main(args: Array[String]): Unit = {
     val triggers = args.headOption.map(_.toInt).getOrElse(2048)
     val batchRows = if (args.length > 1) args(1).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // tiny triggers: 4 shuffle partitions keep the per-job planning +
-      // task overhead from dominating a 2k-trigger soak
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val root = java.nio.file.Files.createTempDirectory("graft_soak_").toString

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Registry-wide physical-plan audit: explains every SparkEntry query
   * at the given sf dir and reports, per query, the plan features that
   * matter at 100 TB — typed object boundaries (DeserializeToObject:
@@ -54,13 +56,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val rows = audit(spark, sfDir)
     rows.flatMap(a => a.error.map(a.name -> _)).foreach { case (n, e) =>

@@ -1,8 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Ad-hoc single-query profiler: time one registered query N times in
   * isolation (the bench host is a noisy shared VM — a query's cost is the
@@ -19,25 +18,7 @@ object Profile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val repeats = if (args.length > 2) args(2).toInt else 3
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES",
-          graft.GraftSession.advisoryPartitionBytes(
-            graft.GraftSession.dirBytes(sfDir), cpus.toInt).toString))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (256 << 10).toString)
-      // match GraftSession: AQE coalescing applies inside cached plans
-      // (explicit-numPartitions pins stay exempt) — see GraftSession r20
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)

@@ -5,6 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.streaming.Pipeline
 
 /** Streaming measurements for the flagship chain and its streaming
@@ -78,18 +79,13 @@ object StreamBench {
       case _ => 500000
     })
     val seconds = if (numeric.length > 1) numeric(1).toInt else 30
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val rate = spark.readStream.format("rate")
       .option("rowsPerSecond", rps)
-      .option("numPartitions", cpus.toInt)
+      .option("numPartitions", cpus)
       .load()
     // Synthetic review JSON in the Kafka value envelope: 500 games,
     // event times spread over ~12 days so the window state is non-trivial.
@@ -145,7 +141,7 @@ object StreamBench {
   private def runUpsertSharded(spark: SparkSession, keyDomain: Long,
       batchSizes: Seq[Int], batchesPerPoint: Int = 10): Unit = {
     import graft.streaming.ShardedUpsertSink
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val shards = 1024
     def du(f: java.io.File): Long =
       if (f.isFile) f.length()
@@ -184,7 +180,7 @@ object StreamBench {
       }
       val rate = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rows)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load()
       val stats = new java.util.concurrent.ConcurrentLinkedQueue[(Double, Int, Long)]()
       val q = upserts(rate).writeStream.outputMode("update")
@@ -227,7 +223,8 @@ object StreamBench {
     * through the checkpointed binaryFile source — the §17.10 tier's
     * streaming half, measured: per-trigger wall (cold vs warm-tail) and
     * the sustained docs/s and text-MB/s a single box ingests at. The
-    * corpus is documents×`replicas` (same fixture law as WarcScale);
+    * corpus is documents×`replicas` (same fixture law as SURVEY
+    * §17.10's throughput table);
     * each trigger is one shard ≈ corpus/`shards`. */
   private def runWarcArrival(spark: SparkSession, shards: Int,
       replicas: Int): Unit = {
@@ -443,13 +440,13 @@ object StreamBench {
   private def runCurationBounded(spark: SparkSession,
       batchSizes: Seq[Int], batchesPerPoint: Int = 12): Unit = {
     import graft.streaming.{Curation, NearDupAdmission, SpanAdmission}
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     println("[streambench] mode=curation-bounded " +
       "(batch_rows, batches, p50_s, p95_s, sustainable rows/s = rows/p95)")
     batchSizes.foreach { rows =>
       val rate = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rows)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load()
       val curated = Curation.curate(syntheticCurationDocs(rate), "text")
       val root = java.nio.file.Files
@@ -533,7 +530,7 @@ object StreamBench {
       // 10k-row shuffle itself is noise at these batch sizes)
       val query = Curation
         .curate(syntheticCurationDocs(stream.toDF().toDF("value")
-          .repartition(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)),
+          .repartition(GraftSession.cpus)),
           "text")
         .writeStream.outputMode("append")
         .option("checkpointLocation", s"$root/ckpt")
@@ -601,7 +598,7 @@ object StreamBench {
     * checkpoint → first trigger committed). */
   private def runStateStore(spark: SparkSession, rowsPerBatch: Int,
       triggers: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val games = 100000
     val days = 30
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -620,7 +617,7 @@ object StreamBench {
         .createTempDirectory(s"graft_sb_ss_$provider").toString
       val rate = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rowsPerBatch)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load()
       // hash-scrambled keys: ~63% of the 3M (game, day-window) domain
       // is distinct after 3M rows — state grows by ~10^5 keys/trigger

@@ -1,9 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ext.WarcFixtures
 import graft.sources.Warc
 import graft.streaming.NearDupAdmission
@@ -28,15 +28,7 @@ object TriggerProfile {
   def main(args: Array[String]): Unit = {
     val waves = args.headOption.map(_.toInt).getOrElse(48)
     val docsPerWave = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val root =

@@ -182,6 +182,21 @@ class ArchivesSpec extends AnyFunSuite with SparkTestSupport {
     lying(cd + 27) = 0x20
     val got = Archives.zipMembers(lying)
     assert(got.map(_.name) == Seq("ok.txt"))
+    // (1b) a usize under the per-member cap (MaxGunzip - 1) that no
+    // DEFLATE stream of this csize can reach: skipped before its buffer
+    // is allocated, so the walk allocates far below the claimed 256 MiB
+    val under = z.clone()
+    val claim = Archives.MaxGunzip - 1
+    (0 until 4).foreach(b => under(cd + 24 + b) = (claim >>> (8 * b)).toByte)
+    assert(u32(under, cd + 24) == claim.toLong)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val gotUnder = Archives.zipMembers(under)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(gotUnder.map(_.name) == Seq("ok.txt"))
+    assert(allocated < (16L << 20), s"zip walk allocated $allocated bytes")
     // (2) per-member cap skips the oversize member, walk continues
     val small = ArchiveFixtures.buildZip(Seq(
       ("big.bin", Array.fill[Byte](100)(7), true),

@@ -15,10 +15,11 @@ import graft.streaming.Pipeline
   * the same checkpoint, and assert the window aggregate CONTINUES (a
   * re-emission with the merged count) rather than restarting from zero.
   *
-  * Run twice: under the default (HDFS-backed in-memory) state store and
-  * under RocksDB — the 100 TB streaming-state path ([[GraftSession]]'s
-  * `rocksDbState` knob; watermark-free reference semantics grow state
-  * without bound, which only RocksDB survives at scale). */
+  * Run twice: under Spark's HDFS-backed in-memory state store and under
+  * RocksDB — the product's streaming-state store, which every
+  * [[GraftSession]] session (the suite's included) runs: watermark-free
+  * reference semantics grow state without bound, which only RocksDB
+  * survives at scale. */
 class CheckpointRestartSpec extends AnyFunSuite with SparkTestSupport {
 
   private def review(ts: Long, sentiment: Float): String =
@@ -66,19 +67,23 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestSupport {
       s"state did not resume across restart: $emissions")
   }
 
-  test("window state survives a stop/restart from checkpoint") {
-    runRestartScenario()
-  }
-
-  test("window state survives restart under the RocksDB state store") {
+  private def underProvider(provider: String): Unit = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      s"org.apache.spark.sql.execution.streaming.state.$provider")
     try runRestartScenario()
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("window state survives a stop/restart from checkpoint") {
+    underProvider("HDFSBackedStateStoreProvider")
+  }
+
+  test("window state survives restart under the RocksDB state store") {
+    underProvider("RocksDBStateStoreProvider")
   }
 }

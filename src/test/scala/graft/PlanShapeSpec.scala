@@ -23,7 +23,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSupport {
     * — the r10 locks counted the SIMPLE-mode spelling
     * "Exchange hashpartitioning", which never occurs in formatted
     * output, so those bounds were vacuously 0 ≤ N (caught in r11 by
-    * WebScale printing exchanges=0 for a chain with two dedups).
+    * a web-tier scale harness printing exchanges=0 for a chain with two
+    * dedups, SURVEY §14.3).
     * Counted from the TREE section (before the shared detail blocks),
     * and for executed adaptive plans from the final-plan tree only —
     * the "== Initial Plan ==" tree would double-count every shuffle.

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (JVM-singleton — Spark
-  * reuses it via getOrCreate, so suites don't pay session startup each). */
+  * reuses it via getOrCreate, so suites don't pay session startup each).
+  * It is the product session ([[GraftSession.local]]), so the suite runs
+  * the configuration that Bench, Verify and the tools run. */
 object SparkTest {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(2)
 }
 
 trait SparkTestSupport {
