@@ -73,7 +73,6 @@ object QueriesExt {
   private[graft] def artifactBuildSeconds: Map[String, Double] =
     Materialized.buildSeconds
 
-  /** The shared MinHash near-dup pairs table for `dir` (raw, unrounded). */
   /** Corpus row count from parquet footers (driver-side, no job) for the
     * scale-aware blocking caps below. At fixture scale every derived cap
     * floors to its historical constant, so the oracle SQL that embeds
@@ -95,13 +94,15 @@ object QueriesExt {
     math.max(8, math.min(256,
       (nRows(s, dir, "documents") / 2000L).toInt))
 
+  /** The shared MinHash near-dup pairs table for `dir` (raw,
+    * unrounded) — the xxhash64 perf family. */
   private def minhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"minhash_pairs:$dir") {
-      Dedup.minhashDupPairs(t(s, dir, "documents"), "text", "doc_id",
-        numHashes = 32, bands = 8, threshold = 0.5,
-        maxBucket = Dedup.scaledCap(1000, nRows(s, dir, "documents")),
-        shingle = 3)
+      Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5,
+          maxBucket = Dedup.scaledCap(1000, nRows(s, dir, "documents")),
+          shingle = 3, family = Dedup.XxHash)
+        .textPairs(t(s, dir, "documents"), "text", "doc_id")
     }
 
   /** The xxhash64 SimHash twin pairs for `dir` — the PERF-family
@@ -111,8 +112,8 @@ object QueriesExt {
   private def simhashPairsTwin(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"simhash_pairs_twin:$dir") {
-      Dedup.simhashDupPairs(t(s, dir, "documents"), "text", "doc_id",
-        maxHamming = 3)
+      Dedup.SimHash(maxHamming = 3, family = Dedup.XxHash)
+        .textPairs(t(s, dir, "documents"), "text", "doc_id")
     }
 
   /** The portable (md5) MinHash SIGNATURE INDEX for `dir` — the
@@ -125,8 +126,8 @@ object QueriesExt {
   private def minhashSigIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"minhash_sigs_portable:$dir") {
-      Dedup.minhashSignaturesPortable(t(s, dir, "documents"), "text",
-        "doc_id", numHashes = 32, shingle = 3)
+      Dedup.MinHash(numHashes = 32, shingle = 3)
+        .signatures(t(s, dir, "documents"), "text", "doc_id")
     }
 
   /** The portable (md5) SimHash FINGERPRINT INDEX for `dir` — the
@@ -136,8 +137,7 @@ object QueriesExt {
   private def simhashFpIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"simhash_fps_portable:$dir") {
-      Dedup.simhashFingerprintsPortable(t(s, dir, "documents"), "text",
-        "doc_id")
+      Dedup.SimHash().signatures(t(s, dir, "documents"), "text", "doc_id")
     }
 
   /** The portable (md5) near-dup pairs table — feeds BOTH
@@ -147,8 +147,8 @@ object QueriesExt {
   private def minhashPairsPortable(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"minhash_pairs_portable:$dir") {
-      Dedup.minhashDupPairsPortableFromSignatures(minhashSigIndex(s, dir),
-        numHashes = 32, bands = 8, threshold = 0.5)
+      Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5)
+        .pairs(minhashSigIndex(s, dir))
     }
 
   /** 1-row invariant gate over an engine-local-hash twin pairs table —
@@ -211,8 +211,7 @@ object QueriesExt {
     "minhash" -> ((minhashPairs(s, dir).count(),
       minhashPairsPortable(s, dir).count())),
     "simhash" -> ((simhashPairsTwin(s, dir).count(),
-      Dedup.simhashDupPairsPortableFromFingerprints(
-        simhashFpIndex(s, dir), maxHamming = 3).count())))
+      Dedup.SimHash(maxHamming = 3).pairs(simhashFpIndex(s, dir)).count())))
 
   /** Persisted IVF index artifacts for `dir`: Lloyd centroids (nlist
     * rows) + per-vector cell assignments, materialized once per corpus
@@ -337,45 +336,43 @@ object QueriesExt {
     })
 
   /** The SHARD-PARTITIONED inverted band index for `dir`
-    * ([[Dedup.writeShardedBandIndex]] — the physical serving layout:
+    * ([[Dedup.Scheme.writeIndex]] — the physical serving layout:
     * probes prune to one (band, shard) directory per band AT THE SCAN). */
   private def shardedBandIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"band_idx:$dir") { p =>
-      Dedup.writeShardedBandIndex(minhashSigIndex(s, dir), p,
-        numHashes = 32, bands = 8, shards = 16)
+      Dedup.MinHash(numHashes = 32, bands = 8)
+        .writeIndex(minhashSigIndex(s, dir), p)
     }
 
   // Old-slice (even-id) sharded artifacts — the on-disk layouts the
   // incremental registry queries READ (round-10 promotion, VERDICT r9
   // next-round #1: every maintained artifact now physically has the
   // partitioned layout its 100 TB pruning argument relies on, not just
-  // the band index). Shards = 16 at fixture scale; the shard count is a
-  // layout knob, not a semantic one.
+  // the band index). Every index has Dedup.IndexShards shards; the shard
+  // count is a layout knob, not a semantic one.
   private def bandIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"band_idx_old:$dir") { p =>
-      Dedup.writeShardedBandIndex(
-        minhashSigIndex(s, dir).filter(col("id") % 2 === 0), p,
-        numHashes = 32, bands = 8, shards = 16)
+      Dedup.MinHash(numHashes = 32, bands = 8)
+        .writeIndex(minhashSigIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def chunkIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"chunk_idx_old:$dir") { p =>
-      Dedup.writeShardedChunkIndex(
-        simhashFpIndex(s, dir).filter(col("id") % 2 === 0), p,
-        bits = 60, maxHamming = 3, shards = 16)
+      Dedup.SimHash(maxHamming = 3)
+        .writeIndex(simhashFpIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def gramIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"gram_idx_old:$dir") { p =>
       Dedup.writeShardedGramIndex(
-        ngramGramIndex(s, dir).filter(col("id") % 2 === 0), p, shards = 16)
+        ngramGramIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def gramCensusOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"gram_census_old:$dir") { p =>
-      Dedup.writeShardedGramCensus(ngramOldCensus(s, dir), p, shards = 16)
+      Dedup.writeShardedGramCensus(ngramOldCensus(s, dir), p)
     }
   private def bucketIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
@@ -385,14 +382,14 @@ object QueriesExt {
         .filter(col("id") % 2 === 0)
       Dedup.writeShardedBucketIndex(
         Dedup.embeddingBucketTable(vecs, "embedding", "id",
-          planes = EmbPlanes, tables = EmbTables, dim = 64), p, shards = 16)
+          planes = EmbPlanes, tables = EmbTables, dim = 64), p)
     }
   private def vecsOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"vecs_old:$dir") { p =>
       Dedup.writeShardedVectors(t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
-        .filter(col("id") % 2 === 0), p, shards = 16)
+        .filter(col("id") % 2 === 0), p)
     }
   // Whole-corpus sharded chunk index — the simhash PROBE serving
   // artifact (the regime measurements: probe structure, not an ingest
@@ -400,8 +397,7 @@ object QueriesExt {
   private def chunkIdxAllPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"chunk_idx_all:$dir") { p =>
-      Dedup.writeShardedChunkIndex(simhashFpIndex(s, dir), p,
-        bits = 60, maxHamming = 3, shards = 16)
+      Dedup.SimHash(maxHamming = 3).writeIndex(simhashFpIndex(s, dir), p)
     }
 
   // Whole-corpus serving artifacts for the ANN probe (round 10): the
@@ -416,13 +412,13 @@ object QueriesExt {
           t(s, dir, "embeddings")
             .select(col("vec_id").as("id"), col("embedding")),
           "embedding", "id", planes = LshPlanes, tables = LshTables,
-          dim = 64, seed = EmbSeed), p, shards = 16)
+          dim = 64, seed = EmbSeed), p)
     }
   private def vecsAllPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     shardedArtifact(s"vecs_all:$dir") { p =>
       Dedup.writeShardedVectors(t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding")), p, shards = 16)
+        .select(col("vec_id").as("id"), col("embedding")), p)
     }
 
   private def labelsOldPath(s: org.apache.spark.sql.SparkSession,
@@ -502,16 +498,15 @@ object QueriesExt {
   private def minhashOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"minhash_old_pairs:$dir") {
-      Dedup.minhashDupPairsPortableFromSignatures(
-        minhashSigIndex(s, dir).filter(col("id") % 2 === 0),
-        numHashes = 32, bands = 8, threshold = 0.5)
+      Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5)
+        .pairs(minhashSigIndex(s, dir).filter(col("id") % 2 === 0))
     }
 
   private def simhashOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Materialized(s, s"simhash_old_pairs:$dir") {
-      Dedup.simhashDupPairsPortableFromFingerprints(
-        simhashFpIndex(s, dir).filter(col("id") % 2 === 0), maxHamming = 3)
+      Dedup.SimHash(maxHamming = 3)
+        .pairs(simhashFpIndex(s, dir).filter(col("id") % 2 === 0))
     }
 
   private def embeddingOldPairs(s: org.apache.spark.sql.SparkSession,
@@ -523,10 +518,9 @@ object QueriesExt {
       val oldV = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
         .filter(col("id") % 2 === 0)
-      Dedup.embeddingDupPairsFromBuckets(
+      Dedup.Embedding("embedding", threshold = 0.4, oldV).pairs(
         Dedup.embeddingBucketTable(oldV, "embedding", "id",
-          planes = EmbPlanes, tables = EmbTables, dim = 64), oldV,
-        "embedding", threshold = 0.4)
+          planes = EmbPlanes, tables = EmbTables, dim = 64))
     }
 
   /** "Yesterday's" CC LABEL artifact for `dir` (labels over the even-id
@@ -541,8 +535,8 @@ object QueriesExt {
       val cap = Dedup.scaledCap(1000, nRows(s, dir, "documents"))
       Dedup.assignComponents(
         t(s, dir, "documents").filter(col("doc_id") % 2 === 0),
-        Dedup.ngramJaccardPairsFromGramsWithCensus(gOld,
-          ngramCensusIndex(s, dir), threshold = 0.5, maxDf = cap),
+        Dedup.NGram(threshold = 0.5, ngramCensusIndex(s, dir), maxDf = cap)
+          .pairs(gOld),
         "doc_id")
     }
 
@@ -937,7 +931,7 @@ object QueriesExt {
   /** Point-probe oracle: the query row's signature joined (cross, 1 row)
     * against every other signature; candidacy = any full band slice
     * equal; estimate = signature-match fraction. Mirrors
-    * Dedup.minhashProbePortable clause for clause. */
+    * Dedup.MinHash.probeId clause for clause. */
   private def minhashProbeOracle(numHashes: Int, bands: Int,
       threshold: Double, queryId: Long): String = {
     val r = numHashes / bands
@@ -962,7 +956,7 @@ object QueriesExt {
     * text expression (doc `baseDocId`'s text + `suffix` — a document NOT
     * in the corpus) through the same shingle→double-hash→min pipeline,
     * then probed against every corpus signature with NO self-exclusion.
-    * Mirrors Dedup.minhashProbeTextPortable clause for clause. */
+    * Mirrors Dedup.MinHash.probeText clause for clause. */
   private def minhashProbeTextOracle(numHashes: Int, bands: Int,
       threshold: Double, baseDocId: Long, suffix: String): String = {
     val r = numHashes / bands
@@ -997,7 +991,7 @@ object QueriesExt {
   /** Full MinHash+LSH pipeline oracle (portable md5 hash family,
     * shingle=3, value-equality band keys): shingles → double-hash mins →
     * band buckets → bounded self-join → exact signature-match estimate.
-    * Mirrors Dedup.minhashDupPairsPortable clause for clause. */
+    * Mirrors Dedup.MinHash(family = Md5).textPairs clause for clause. */
   /** Cross-corpus twin of [[minhashPortableOracle]]: signatures once over
     * documents (per-row, corpus-independent), split by the id predicate,
     * each side's buckets capped independently, A×B candidate join. */
@@ -1068,7 +1062,7 @@ object QueriesExt {
 
   /** Full SimHash pipeline oracle (portable 60-bit md5 hash): token votes
     * → fingerprint → pigeonhole chunk join → bit_count(xor) verify.
-    * Mirrors Dedup.simhashDupPairsPortable clause for clause. */
+    * Mirrors Dedup.SimHash(family = Md5).textPairs clause for clause. */
   private def simhashPortableOracle(maxHamming: Int): String = {
     val bits = 60
     val chunks = maxHamming + 1
@@ -1296,8 +1290,7 @@ object QueriesExt {
     QueryCase("q_dedup_simhash_pairs",
       (s, dir) => twinPairsGate(s, dir,
         twin = simhashPairsTwin(s, dir),
-        portable = Dedup.simhashDupPairsPortableFromFingerprints(
-          simhashFpIndex(s, dir), maxHamming = 3),
+        portable = Dedup.SimHash(maxHamming = 3).pairs(simhashFpIndex(s, dir)),
         scoreOk = col("hamming") >= 0 && col("hamming") <= 3),
       Some(twinGateOracle(simhashPortableOracle(3)))),
 
@@ -1319,10 +1312,9 @@ object QueriesExt {
         // slice's signature table) — the cross join never re-hashes
         // either side.
         val sigs = minhashSigIndex(s, dir)
-        Dedup.minhashCrossDupPairsPortableFromSignatures(
-            sigs.filter(col("id") % 5 =!= 0),
-            sigs.filter(col("id") % 5 === 0),
-            numHashes = 32, bands = 8, threshold = 0.5)
+        Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5)
+          .cross(sigs.filter(col("id") % 5 =!= 0),
+            sigs.filter(col("id") % 5 === 0))
           .withColumn("est_jaccard", round4(col("est_jaccard")))
       },
       Some(minhashCrossOracle(32, 8, 0.5, 1000))),
@@ -1360,8 +1352,7 @@ object QueriesExt {
         |GROUP BY 1, 2""".stripMargin)),
 
     QueryCase("q_dedup_simhash_portable",
-      (s, dir) => Dedup.simhashDupPairsPortableFromFingerprints(
-        simhashFpIndex(s, dir), maxHamming = 3),
+      (s, dir) => Dedup.SimHash(maxHamming = 3).pairs(simhashFpIndex(s, dir)),
       Some(simhashPortableOracle(3))),
 
     // Incremental SimHash-pairs maintenance — the fingerprint-tier twin
@@ -1377,13 +1368,12 @@ object QueriesExt {
         // Round 10: the old corpus is read through the SHARD-PARTITIONED
         // chunk index (chunkIdxOldPath) — the slice's chunk values pin a
         // bounded (ci, shard) partition set at the scan
-        // (Dedup.simhashDeltaSharded). Same whole-corpus oracle.
+        // (Dedup.Scheme.deltaSharded). Same whole-corpus oracle.
         // r19: yesterday's pairs are READ (simhashOldPairs artifact) —
         // see q_dedup_incremental.
         val newFps = simhashFpIndex(s, dir).filter(col("id") % 2 =!= 0)
-        simhashOldPairs(s, dir).unionByName(Dedup.simhashDeltaSharded(s,
-          chunkIdxOldPath(s, dir), newFps, bits = 60, maxHamming = 3,
-          shards = 16))
+        simhashOldPairs(s, dir).unionByName(Dedup.SimHash(maxHamming = 3)
+          .deltaSharded(s, chunkIdxOldPath(s, dir), newFps))
       },
       Some(simhashPortableOracle(3))),
 
@@ -1393,22 +1383,22 @@ object QueriesExt {
     // (minhashSigIndex); no self-join, no shuffle, no per-probe corpus
     // re-hash.
     QueryCase("q_dedup_probe",
-      (s, dir) => Dedup.minhashProbeFromSignatures(minhashSigIndex(s, dir),
-          queryId = 8L, numHashes = 32, bands = 8, threshold = 0.25)
+      (s, dir) => Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.25)
+          .probeId(minhashSigIndex(s, dir), queryId = 8L)
         .withColumn("est_jaccard", round4(col("est_jaccard"))),
       Some(minhashProbeOracle(32, 8, 0.25, 8L))),
 
     // The full ingest-time serving stack in one query: raw incoming
     // text → engine-computed signature → SHARD-PRUNED index scans
-    // (probeShardedBandIndexText). Same oracle as q_dedup_probe_text:
+    // (MinHash.probeIndexText). Same oracle as q_dedup_probe_text:
     // identical semantics, physical path = the partitioned layout.
     QueryCase("q_dedup_probe_text_sharded",
       (s, dir) => {
         val qtext = t(s, dir, "documents").filter(col("doc_id") === 8L)
           .select("text").head().getString(0) + " qprobe extra"
-        Dedup.probeShardedBandIndexText(s, shardedBandIndexPath(s, dir),
-            qtext, numHashes = 32, bands = 8, threshold = 0.25,
-            shards = 16, shingle = 3)
+        Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.25,
+            shingle = 3)
+          .probeIndexText(s, shardedBandIndexPath(s, dir), qtext)
           .withColumn("est_jaccard", round4(col("est_jaccard")))
       },
       Some(minhashProbeTextOracle(32, 8, 0.25, 8L, " qprobe extra"))),
@@ -1422,8 +1412,8 @@ object QueriesExt {
     QueryCase("q_dedup_probe_simhash",
       // query doc 70: has a hamming-1 partner at sf0.01, so the gate row
       // is non-empty where the driver runs it
-      (s, dir) => Dedup.simhashProbeFromFingerprints(
-        simhashFpIndex(s, dir), queryId = 70L, maxHamming = 3),
+      (s, dir) => Dedup.SimHash(maxHamming = 3)
+        .probeId(simhashFpIndex(s, dir), queryId = 70L),
       Some(simhashProbeOracle(3, 70L))),
 
     // The simhash point probe served from the PHYSICAL sharded chunk
@@ -1436,13 +1426,13 @@ object QueriesExt {
       (s, dir) => {
         val q = simhashFpIndex(s, dir).filter(col("id") === 70L)
           .select("fp").head().getLong(0)
-        Dedup.probeShardedChunkIndex(s, chunkIdxAllPath(s, dir), q,
-          bits = 60, maxHamming = 3, shards = 16, excludeId = Some(70L))
+        Dedup.SimHash(maxHamming = 3)
+          .probeIndex(s, chunkIdxAllPath(s, dir), q, excludeId = Some(70L))
       },
       Some(simhashProbeOracle(3, 70L))),
 
     // The probe against the SHARD-PARTITIONED inverted band index — the
-    // physical serving layout (writeShardedBandIndex: partitioned by
+    // physical serving layout (MinHash.writeIndex: partitioned by
     // (band, shard=xxhash64(bucket)%16)): each of the 8 per-band scans
     // prunes to ≤ 1 of 128 directories AT THE SCAN (PartitionFilters —
     // locked in ShardedIndexSpec), the disk-layout upgrade of
@@ -1452,8 +1442,8 @@ object QueriesExt {
       (s, dir) => {
         val q = minhashSigIndex(s, dir).filter(col("id") === 8L)
           .select("sig").head().getSeq[Long](0)
-        Dedup.probeShardedBandIndex(s, shardedBandIndexPath(s, dir), q,
-            numHashes = 32, bands = 8, threshold = 0.25, shards = 16,
+        Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.25)
+          .probeIndex(s, shardedBandIndexPath(s, dir), q,
             excludeId = Some(8L))
           .withColumn("est_jaccard", round4(col("est_jaccard")))
       },
@@ -1493,8 +1483,9 @@ object QueriesExt {
       (s, dir) => {
         val qtext = t(s, dir, "documents").filter(col("doc_id") === 8L)
           .select("text").head().getString(0) + " qprobe extra"
-        Dedup.minhashProbeTextPortable(minhashSigIndex(s, dir), qtext,
-            numHashes = 32, bands = 8, threshold = 0.25, shingle = 3)
+        Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.25,
+            shingle = 3)
+          .probeText(minhashSigIndex(s, dir), qtext)
           .withColumn("est_jaccard", round4(col("est_jaccard")))
       },
       Some(minhashProbeTextOracle(32, 8, 0.25, 8L, " qprobe extra"))),
@@ -1507,24 +1498,24 @@ object QueriesExt {
     // the update is old ∪ cross(old,new) ∪ self(new). The oracle is the
     // WHOLE-CORPUS pairs SQL — hash-equality proves artifact-append ≡
     // recompute exactly (caps unbound at fixture scale; see
-    // Dedup.minhashPairsIncrementalPortable for the bound-regime caveat).
+    // Dedup.Scheme for the bound-regime caveat).
     QueryCase("q_dedup_incremental",
       (s, dir) => {
         // Round 10: the old corpus's signatures are read through the
         // SHARD-PARTITIONED band index (bandIdxOldPath) — the slice's
         // band buckets become literal partition predicates, so the
         // append's old-corpus scan prunes AT THE SCAN
-        // (Dedup.minhashDeltaSharded; plan-locked in
+        // (Dedup.Scheme.deltaSharded; plan-locked in
         // ShardedArtifactsSpec). Semantics identical to the flat
-        // minhashPairsIncrementalPortable — same whole-corpus oracle.
+        // Scheme.incremental — same whole-corpus oracle.
         // r19: yesterday's pairs are READ (minhashOldPairs artifact, the
         // ngramOldPairs posture) — the query body is the ingest path:
         // artifact reads + slice-sized delta, never a per-run
         // re-derivation of the old corpus's pairs from its signatures.
         val newSigs = minhashSigIndex(s, dir).filter(col("id") % 2 =!= 0)
-        minhashOldPairs(s, dir).unionByName(Dedup.minhashDeltaSharded(s,
-            bandIdxOldPath(s, dir), newSigs, numHashes = 32, bands = 8,
-            threshold = 0.5, maxBucket = 1000, shards = 16))
+        minhashOldPairs(s, dir).unionByName(Dedup.MinHash(numHashes = 32,
+            bands = 8, threshold = 0.5, maxBucket = 1000)
+          .deltaSharded(s, bandIdxOldPath(s, dir), newSigs))
           .withColumn("est_jaccard", round4(col("est_jaccard")))
       },
       Some(minhashPortableOracle(32, 8, 0.5, 1000))),
@@ -1539,10 +1530,9 @@ object QueriesExt {
       // Direct count-join path, df cap read from the PERSISTED census
       // artifact (ngramCensusIndex) instead of a per-query corpus-wide
       // window count — identical semantics, one fewer corpus pass.
-      (s, dir) => Dedup.ngramJaccardPairsFromGramsWithCensus(
-          ngramGramIndex(s, dir), ngramCensusIndex(s, dir),
-          threshold = 0.1,
+      (s, dir) => Dedup.NGram(threshold = 0.1, ngramCensusIndex(s, dir),
           maxDf = Dedup.scaledCap(1000, nRows(s, dir, "documents")))
+        .pairs(ngramGramIndex(s, dir))
         .withColumn("jaccard", round4(col("jaccard"))),
       Some(ngramOracle(0.1))),
 
@@ -1563,8 +1553,8 @@ object QueriesExt {
         // once); old slice, new slice, cross and self all FILTER it.
         // Since round 9 the df census itself is a maintained artifact:
         // the old corpus's census is computed once and MERGED BY
-        // ADDITION with the slice's census (ngramPairsIncrementalWith-
-        // Census) — nothing about the old corpus is re-aggregated at
+        // ADDITION with the slice's census (Dedup.ngramDeltaSharded)
+        // — nothing about the old corpus is re-aggregated at
         // ingest. Cap unbound at fixture scale, so the whole-corpus
         // oracle still hash-proves artifact-append ≡ recompute.
         // Round 10: the old corpus's postings AND census are read
@@ -1578,7 +1568,7 @@ object QueriesExt {
         val cap = Dedup.scaledCap(1000, nRows(s, dir, "documents"))
         ngramOldPairs(s, dir).unionByName(Dedup.ngramDeltaSharded(s,
             gramIdxOldPath(s, dir), gramCensusOldPath(s, dir), gNew,
-            threshold = 0.1, maxDf = cap, shards = 16))
+            threshold = 0.1, maxDf = cap))
           .withColumn("jaccard", round4(col("jaccard")))
       },
       Some(ngramOracle(0.1))),
@@ -1621,8 +1611,8 @@ object QueriesExt {
         val labels = labelsOldPath(s, dir)
         // r19: cross ∪ self through the shared-blocked delta (one census
         // block + one cached slice gram table feed both branches)
-        val delta = Dedup.ngramJaccardDeltaFromGramsWithCensus(gOld,
-          gNew, census, threshold = 0.5, maxDf = cap)
+        val delta = Dedup.NGram(threshold = 0.5, census, maxDf = cap)
+          .delta(gOld, gNew)
         Dedup.assignComponentsIncrementalSharded(s, s"$labels/by_id",
           s"$labels/by_comp", docs.filter(col("doc_id") % 2 =!= 0),
           delta, "doc_id", shards = 16)
@@ -1666,9 +1656,8 @@ object QueriesExt {
           MaxSizedPlanes, 64).map(_.take(planes))
         val vecs = t(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding"))
-        Dedup.embeddingDupPairsFromBuckets(
-            Dedup.embeddingBucketTableHyper(vecs, "embedding", "id", hyper),
-            vecs, "embedding", threshold = 0.4)
+        Dedup.Embedding("embedding", threshold = 0.4, vecs).pairs(
+            Dedup.embeddingBucketTableHyper(vecs, "embedding", "id", hyper))
           .withColumn("cos", round4(col("cos")))
       },
       Some(embeddingPairsSizedOracle)),
@@ -1702,7 +1691,7 @@ object QueriesExt {
           planes = EmbPlanes, tables = EmbTables, dim = 64)
         embeddingOldPairs(s, dir).unionByName(Dedup.embeddingDeltaSharded(s,
             bucketIdxOldPath(s, dir), vecsOldPath(s, dir), newB, newV,
-            "embedding", threshold = 0.4, shards = 16))
+            "embedding", threshold = 0.4))
           .withColumn("cos", round4(col("cos")))
       },
       Some(embeddingPairsOracle)),
@@ -3814,7 +3803,7 @@ object QueriesExt {
           .select("embedding").head().getSeq[Float](0).toArray
         Similarity.lshTopKSharded(s, lshBucketIdxPath(s, dir),
             vecsAllPath(s, dir), q, k = 10, planes = LshPlanes,
-            tables = LshTables, seed = EmbSeed, shards = 16)
+            tables = LshTables, seed = EmbSeed)
           .select(col("id").as("vec_id"))
       },
       Some(lshTopKOracle)),

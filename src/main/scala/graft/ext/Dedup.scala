@@ -2,9 +2,12 @@ package graft.ext
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ops.Caches
+import graft.sources.Pq
 
 /** Large-scale training-data deduplication operators (north-star extension,
   * SURVEY §7.2 slice 3). Not present in the reference (its surface has no
@@ -135,7 +138,7 @@ object Dedup {
     filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 0)
 
   /** Distinct character k-shingles of the normalized text (alternative
-    * shingling unit for [[minhashSignature]]; word tokens are the default). */
+    * shingling unit for [[minhashSignatures]]; word tokens are the default). */
   def charShingles(c: Column, k: Int): Column = {
     val norm = normalizedText(c)
     array_distinct(transform(
@@ -143,212 +146,400 @@ object Dedup {
       i => norm.substr(i + 1, lit(k))))
   }
 
+
+  // -------------------------------------------------- blocked-pairs core
+  //
+  // MinHash, SimHash, exact n-gram Jaccard and embedding cosine are one
+  // algorithm over four SCHEMES: explode each doc to a few block keys,
+  // join on the keys (self or A×B; shuffle volume Σ key², bounded by the
+  // key width and the per-side cap), reduce the candidates to distinct
+  // pairs, score them exactly. [[Scheme]] writes that algorithm, its
+  // incremental merge law (the Incremental Top-K framework's, PAPERS.md)
+  // and its partition-pruned index (REPOSE's layout, PAPERS.md) once; a
+  // family states only its payload, keys, cap, score and hash family
+  // (SURVEY §24 has the table).
+
+  /** Hash family of the text schemes. [[XxHash]] is the fastest
+    * codegen'd engine hash, engine-local (the perf family). [[Md5]]
+    * ([[hex32]], [[hex60]]; DuckDB: `('0x' || substr(md5(u), 1, 8))::
+    * BIGINT`) is reproducible by any md5-capable engine, so the DuckDB
+    * oracle recomputes every signature, block key and pair (the portable
+    * family, ~2× the hashing cost). */
+  sealed trait HashFamily
+  case object XxHash extends HashFamily
+  case object Md5 extends HashFamily
+
+  /** Shard count of every near-dup index. The writer, the probes and
+    * the deltas all read it here, so they cannot disagree on the layout
+    * (a mismatch would prune to the wrong directories and drop pairs
+    * silently). */
+  val IndexShards = 16
+
+  /** Exchange pin for the COMPUTE-DENSE candidate joins: their per-key
+    * work is quadratic in the posting-list length while their shuffle
+    * BYTES stay small, so AQE's byte-based coalescing would collapse
+    * exactly the stages that need the cores onto a handful of tasks
+    * (r19, measured: the cc-incremental delta's pair-count stage ran 3
+    * tasks × ~0.6 s). An explicit-numPartitions repartition is exempt
+    * from AQE coalescing.
+    *
+    * The pin count is SIZE-DERIVED (r20; r19 pinned flat
+    * numShufflePartitions, which put 32-task exchanges under KB-sized
+    * incremental delta frames — pure task tax, q_dedup_ngram_pairs 0.77×
+    * in the r19 verdict): one partition per 64 KB of plan-estimated
+    * input, capped at the session's shuffle.partitions — the
+    * cluster-sized knob. Bytes understate quadratic per-key work, which
+    * is why the divisor sits ~1000× below a normal shuffle-partition
+    * target: any input ≥ partitions·64 KB still pins the full cluster
+    * width, only genuinely tiny frames stop fanning out. */
+  private def pinned(df: DataFrame, keys: String*): DataFrame = {
+    val cap = df.sparkSession.sessionState.conf.numShufflePartitions
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val n = ((est / (64L << 10)) + 1).min(BigInt(cap)).max(BigInt(1)).toInt
+    df.repartition(n, keys.map(col): _*)
+  }
+
+  /** One near-dup family, as the blocked-pairs core sees it.
+    *
+    * A family's PAYLOAD table holds one row per doc: `id` and the
+    * [[value]] column its score reads (MinHash `sig`, SimHash `fp`, the
+    * n-gram set size `nsz`, the embedding vector). Its KEYED rows hold
+    * one row per (doc, block key): `id`, the [[keys]] columns and, where
+    * the index carries it, the value. MinHash and SimHash explode their
+    * keys from the value ([[explodeKeys]]); the n-gram gram table and the
+    * embedding bucket table arrive keyed (their key tables are the
+    * persisted artifacts, too costly to re-derive per call).
+    *
+    * Orientation: self pairs have id_a < id_b; cross pairs put side A's
+    * id in id_a; [[delta]] and [[incremental]] canonicalize. */
+  sealed abstract class Scheme {
+    /** Payload column the score reads. */
+    def value: String
+    /** Block-key columns; with two, the first is the index's partition
+      * prefix (band, chunk index, sketch table). */
+    def keys: Seq[String]
+    /** value → array<struct<keys…>>; None when the input is keyed. */
+    def explodeKeys: Option[Column => Column] = None
+    /** Per-side key cap over keyed rows (MinHash `maxBucket`, the n-gram
+      * census `maxDf`). A cap marks HOT keys: the family's joins are
+      * compute-dense, so their sides are [[pinned]]; without a cap AQE
+      * plans the joins (pinning there cost 3-4 jobs per delta at sf0.01,
+      * SURVEY §24). */
+    def cap: Option[DataFrame => DataFrame] = None
+    def scoreName: String
+    /** Exact pair score from the two values. */
+    def score(a: Column, b: Column, spark: SparkSession): Column
+    def keep(score: Column): Column
+    /** Re-attaches `value_a`, `value_b` to ids-only candidate pairs
+      * when the keyed rows do not carry the value (the embedding vector
+      * table, or a pruned fetch of it). None: the payload tables supply
+      * it. */
+    def payloadSource: Option[DataFrame => DataFrame] = None
+    /** Reduce candidates to the COUNT `c` of shared keys (n-gram: the
+      * Jaccard of two sets needs only |a ∩ b|) instead of deduplicating
+      * them. */
+    def countShared: Boolean = false
+
+    private def indexValue = payloadSource.isEmpty
+    /** The pair join carries ids only where the value can be re-attached
+      * after it: by the payload source, or, under a cap (hot keys: the
+      * Σ key² candidate explosion), from the payload table the keys were
+      * exploded from — MinHash signatures through the explosion were 5×
+      * slower at sf0.1. */
+    private def valueInPairs =
+      indexValue && !(cap.isDefined && explodeKeys.isDefined)
+    private def capped(k: DataFrame) = cap.fold(k)(_(k))
+    private def pin(k: DataFrame) =
+      if (cap.isDefined) pinned(k, keys: _*) else k
+    private def valueCols(carried: Boolean) = if (carried) Seq(value) else Nil
+
+    /** Keyed rows (id, [value], keys…) of a payload table (or of a keyed
+      * table, which passes through). */
+    private def keyed(t: DataFrame, withValue: Boolean): DataFrame = {
+      val head = col("id") +: valueCols(withValue).map(col)
+      explodeKeys match {
+        case Some(bk) =>
+          t.select(head :+ explode(bk(col(value))).as("bk"): _*)
+            .select(head ++ keys.map(k => col(s"bk.$k")): _*)
+        case None => t.select(head ++ keys.map(col): _*)
+      }
+    }
+
+    /** A payload table feeds both its key explode and the re-attach join:
+      * persisted, so the second use does not recompute it, and fanned
+      * out (an index artifact is a ~1-file parquet at fixture scale;
+      * no-op at corpus scale). Keyed inputs pass as given. */
+    private def prepared(t: DataFrame): DataFrame =
+      if (explodeKeys.isDefined) Caches.track(parallelize(t)) else t
+
+    private def side(k: DataFrame, x: String, cols: Seq[String]): DataFrame =
+      k.select(keys.map(col) ++ (col("id").as(s"id_$x") +:
+        cols.map(c => col(c).as(s"${c}_$x"))): _*)
+
+    /** The key join: (id_a, [value_a], id_b, [value_b]). */
+    private def joined(a: DataFrame, b: DataFrame, self: Boolean,
+        cols: Seq[String]): DataFrame = {
+      val j = a.join(b, keys)
+      (if (self) j.filter(col("id_a") < col("id_b")) else j)
+        .select(Seq("a", "b").flatMap(x =>
+          (s"id_$x" +: cols.map(c => s"${c}_$x")).map(col)): _*)
+    }
+
+    /** Reduce candidates (count or dedup), re-attach the values an
+      * ids-only join left behind, score, keep. Values at hand score
+      * BEFORE the dedup (the score is a property of the pair), so its
+      * exchange moves only the kept pairs: carried values, and the
+      * payload source's (no cap: the sketch width bounds the candidate
+      * stream). Values from the payload tables (MinHash, whose cap marks
+      * a Σ key² candidate explosion) attach per DISTINCT pair. */
+    private def finish(cands: DataFrame, cols: Seq[String], a: DataFrame,
+        b: DataFrame): DataFrame = {
+      def scored(p: DataFrame) = p.withColumn(scoreName,
+          score(col(s"${value}_a"), col(s"${value}_b"), cands.sparkSession))
+        .filter(keep(col(scoreName)))
+        .select("id_a", "id_b", scoreName)
+      if (countShared)
+        scored(cands.groupBy(cands.columns.map(col): _*)
+          .agg(count(lit(1)).as("c")))
+      else if (cols.isEmpty && payloadSource.isEmpty) scored(attachValues(
+        cands.dropDuplicates("id_a", "id_b"), value, a, b))
+      else scored(payloadSource.fold(cands)(_(cands)))
+        .dropDuplicates("id_a", "id_b")
+    }
+
+    /** Self pairs of one corpus (id_a < id_b). */
+    def pairs(t: DataFrame): DataFrame = blockedPairs(t, None)
+
+    /** Cross pairs of corpus A against corpus B — "dedup incoming data
+      * against the existing training set" without the |A∪B|² self-join:
+      * join pressure is Σ cntA·cntB per key, each side capped on its
+      * own. */
+    def cross(a: DataFrame, b: DataFrame): DataFrame =
+      blockedPairs(a, Some(b))
+
+    private def blockedPairs(a0: DataFrame, b0: Option[DataFrame]): DataFrame = {
+      val cols = valueCols(valueInPairs)
+      val a = prepared(a0)
+      val b = b0.map(prepared).getOrElse(a)
+      val ka = capped(keyed(a, valueInPairs))
+      val kb = if (b0.isEmpty) ka else capped(keyed(b, valueInPairs))
+      finish(joined(pin(side(ka, "a", cols)), pin(side(kb, "b", cols)),
+        b0.isEmpty, cols), cols, a, b)
+    }
+
+    /** Keyed rows in the index layout: the value rides along where the
+      * index carries it, so a delta or probe scores without a second
+      * lookup. */
+    private def indexRows(t: DataFrame): DataFrame =
+      keyed(prepared(t), indexValue)
+
+    /** canon(cross(old, new)) ∪ self(new) over keyed rows in the index
+      * layout. Both candidate streams read ONE slice table and meet in
+      * one Union below a single (id_a, id_b) reduction: the corpora are
+      * id-disjoint, so the key spaces never collide and one dedup (or
+      * count) over the union equals two — one exchange instead of two.
+      * Under a cap the old side is pinned and the capped slice, a census
+      * output three join sides read, is cached. */
+    def delta(old: DataFrame, nu: DataFrame): DataFrame = {
+      val cols = valueCols(indexValue)
+      def rows(k: DataFrame) = capped(
+        k.select(keys.map(col) ++ (col("id") +: cols.map(col)): _*))
+      val nb = if (cap.isDefined) Caches.track(rows(nu)) else rows(nu)
+      val cross = joined(side(pin(rows(old)), "a", cols),
+        side(nb, "b", cols), self = false, cols)
+      val self = joined(side(nb, "a", cols), side(nb, "b", cols),
+        self = true, cols)
+      finish(cross.unionByName(self), cols, old, nu)
+        .select(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b"), col(scoreName))
+    }
+
+    /** The incremental merge law over id-disjoint payload tables:
+      * yesterday's pairs artifact plus today's [[delta]] equals a
+      * from-scratch [[pairs]] over old ∪ new EXACTLY, because candidacy
+      * and score are properties of the pair alone. The one exception is
+      * a cap that binds: per-slice key counts under-count the combined
+      * key (the standard incremental-LSH approximation; the registry's
+      * whole-corpus oracles prove the unbound regime). Old pairs are
+      * READ, never recomputed; cross is slice-sized, never |corpus|². */
+    def incremental(oldPairs: DataFrame, old: DataFrame,
+        nu: DataFrame): DataFrame =
+      oldPairs.unionByName(delta(indexRows(old), indexRows(nu)))
+
+    /** Write the index of a payload (or keyed) table: keyed rows
+      * partitioned by (prefix, shard). `mode = "append"` lands an
+      * ingest slice as new files beside the old ones. */
+    def writeIndex(t: DataFrame, path: String,
+        mode: String = "overwrite"): Unit =
+      Sharded.writeByKey(keyed(t, indexValue), path, keys.last, IndexShards,
+        extraPartitionCols = keys.init, mode = mode)
+
+    /** [[delta]] against the sharded index at `indexPath`: the slice's
+      * keys touch a bounded (≤ prefixes × IndexShards) set of
+      * directories, which become literal partition predicates, so the
+      * old-corpus read prunes at the scan.
+      *
+      * Ingest ordering: the result is a LAZY plan over `indexPath`, and
+      * an append to that path invalidates (and recomputes) plans over it
+      * (Spark's `recacheByPath`) — so a chained ingest must COMMIT the
+      * delta before appending the slice to the index, or the delta
+      * re-reads its own slice as "old" (self-pairs at the top score).
+      * ChainedAppendSpec locks the law under that ordering. */
+    def deltaSharded(spark: SparkSession, indexPath: String,
+        nu: DataFrame): DataFrame = {
+      val nk = Caches.track(indexRows(nu))
+      delta(Sharded.readTouched(spark, indexPath,
+        Sharded.touchedShards(nk, keys.last, IndexShards, keys.init),
+        keys.init), nk)
+    }
+  }
+
+  /** Distinct (id_a, id_b) pairs with `value` re-attached from the side
+    * A and side B payload tables (id, `value`). */
+  private def attachValues(p: DataFrame, value: String, va: DataFrame,
+      vb: DataFrame): DataFrame = p
+    .join(va.select(col("id").as("id_a"), col(value).as(s"${value}_a")),
+      Seq("id_a"))
+    .join(vb.select(col("id").as("id_b"), col(value).as(s"${value}_b")),
+      Seq("id_b"))
+
+  /** Point read of a sharded index: the rows whose block keys equal one
+    * of `q`'s rows (prefix…, key). The shards of `q`'s keys come from
+    * the ENGINE's own hash in one 1-row job; the read is ONE scan whose
+    * Or-of-And predicate `∨ (prefix = p ∧ shard = s ∧ key = k)` prunes
+    * to ≤ |q| directories — Catalyst extracts the partition-column
+    * weakening from the mixed disjunction, and the key equalities ride
+    * along as scan-fused data filters (round 10: one scan instead of one
+    * per key plus a union, ~2 s → sub-second at fixture scale). */
+  private[graft] def pointRead(spark: SparkSession, path: String,
+      keys: Seq[String], q: DataFrame): DataFrame = {
+    val parts = keys.init :+ "shard" :+ keys.last
+    val want = q.select(keys.init.map(col) ++ Seq(
+        Sharded.shardOf(col(keys.last), IndexShards), col(keys.last)): _*)
+      .collect()
+    Pq.read(spark, path).filter(want.map(r => parts.indices
+      .map(i => col(parts(i)) === lit(r.get(i))).reduce(_ && _))
+      .reduce(_ || _))
+  }
+
+  /** A scheme over TEXT: its payload is a per-doc signature computed by
+    * the engine from the text, its keys are fixed SLOTS of that
+    * signature (bands, chunks), and it can serve point probes. `Q` is
+    * the Scala type of one signature value. */
+  sealed abstract class TextScheme[Q] extends Scheme {
+    /** The payload table (id, value) of a text corpus. */
+    def signatures(df: DataFrame, textCol: String, idCol: String): DataFrame
+    /** Per-slot block values of a signature: candidacy = ANY slot equal. */
+    def slots(v: Column): Seq[Column]
+    def literal(q: Q): Column
+    override def explodeKeys: Option[Column => Column] = Some(v =>
+      array(slots(v).zipWithIndex.map { case (s, i) =>
+        struct(lit(i).as(keys.head), s.as(keys(1)))
+      }: _*))
+
+    def textPairs(df: DataFrame, textCol: String, idCol: String): DataFrame =
+      pairs(signatures(df, textCol, idCol))
+
+    private def scored(t: DataFrame, q: Column): DataFrame =
+      t.withColumn(scoreName, score(col(value), q, t.sparkSession))
+        .filter(keep(col(scoreName)))
+        .select(col("id").as("doc_id"), col(scoreName))
+
+    private def without(t: DataFrame, id: Option[Long]): DataFrame =
+      id.fold(t)(i => t.filter(col("id") =!= i))
+
+    /** Point PROBE of a payload table — the serving-path primitive: the
+      * query's slots become literal predicates, so candidacy is a
+      * scan-fused FILTER over the persisted signature artifact, with no
+      * join and no shuffle (PlanShapeSpec locks it). Returns
+      * (doc_id, score) kept by the threshold. */
+    def probe(t: DataFrame, q: Q, excludeId: Option[Long] = None): DataFrame = {
+      val qv = literal(q)
+      scored(without(t, excludeId).filter(slots(col(value)).zip(slots(qv))
+        .map { case (a, b) => a === b }.reduce(_ || _)), qv)
+    }
+
+    /** [[probe]] with the query taken from the table's own row `queryId`,
+      * which is excluded from the result. */
+    def probeId(t: DataFrame, queryId: Long): DataFrame = probe(t,
+      t.filter(col("id") === queryId).select(value).head().getAs[Q](0),
+      Some(queryId))
+
+    /** [[probe]] against the sharded index ([[writeIndex]]): one pruned
+      * scan ([[pointRead]]) touching ≤ one directory per slot; the index
+      * rows carry the value, so no second lookup. Result ≡ [[probe]]. */
+    def probeIndex(spark: SparkSession, path: String, q: Q,
+        excludeId: Option[Long] = None): DataFrame = {
+      val qv = literal(q)
+      val hits = pointRead(spark, path, keys, spark.range(1)
+          .select(explode(explodeKeys.get(qv)).as("k")).select("k.*"))
+        .select("id", value).dropDuplicates("id")
+      scored(without(hits, excludeId), qv)
+    }
+
+    /** The signature of one INCOMING text (not a corpus row), computed
+      * by the same engine pipeline over a 1-row frame so it matches the
+      * index bit-for-bit; None when the text has nothing to shingle. */
+    private def signatureOf(spark: SparkSession, text: String): Option[Q] =
+      signatures(spark.range(1).select(lit(-1L).as("qid"),
+          lit(text).as("qtext")), "qtext", "qid")
+        .select(value).collect().headOption.map(_.getAs[Q](0))
+
+    private def noHits(t: DataFrame): DataFrame = t.select(col("id")
+      .as("doc_id"), score(col(value), col(value), t.sparkSession)
+      .as(scoreName)).limit(0)
+
+    /** Ingest-time text probe ("what near-duplicates this INCOMING
+      * doc"): no self-exclusion, so an exact copy in the corpus surfaces
+      * at the top score; unshingleable text returns the empty result. */
+    def probeText(t: DataFrame, text: String): DataFrame =
+      signatureOf(t.sparkSession, text).fold(noHits(t))(probe(t, _))
+
+    /** [[probeText]] against the sharded index — the full serving stack:
+      * raw text → signature → shard-pruned index scan. */
+    def probeIndexText(spark: SparkSession, path: String,
+        text: String): DataFrame =
+      signatureOf(spark, text).fold(noHits(Pq.read(spark, path)))(
+        probeIndex(spark, path, _))
+  }
+
   // ------------------------------------------------------------- MinHash
 
-  /** MinHash signature expression of the distinct word-token set:
-    * signature[i] = min over tokens of `h1 + i*h2` (Kirsch–Mitzenmacher
-    * double hashing — 2 real hash evals per token, the rest is integer
-    * arithmetic). Per-row expression form; for corpus-scale signature
-    * tables prefer [[minhashSignatures]] (codegen'd explode+groupBy). */
-  def minhashSignature(text: Column, numHashes: Int): Column = {
-    val toks = array_distinct(tokens(text))
-    val hashes = transform(toks,
-      t => struct(xxhash64(t).bitwiseAND(lit(0xFFFFFFFFL)).as("h1"),
-        xxhash64(t, lit(1)).bitwiseAND(lit(0xFFFFFFFFL)).as("h2")))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(hashes,
-        h => h.getField("h1") + i.cast("long") * h.getField("h2"))))
-  }
-
-  /** Corpus-scale MinHash signature table: explode tokens → two codegen'd
-    * xxhash64 per token → `numHashes` `min` aggregates per doc. The whole
-    * pipeline is whole-stage-codegen'd `HashAggregateExec` with map-side
-    * partial min — shuffle volume is |docs| × numHashes longs regardless
-    * of corpus token count. This is the shape that holds at 100 TB; the
-    * per-row HOF variant above evaluates interpreted and doesn't.
-    * Shingling: word unigrams by default; `shingle > 1` uses word
-    * n-gram shingles (order-sensitive — discriminates reordered text). */
-  def minhashSignatures(df0: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, shingle: Int = 1): DataFrame = {
-    val df = parallelize(df0)
-    val units = if (shingle <= 1) array_distinct(tokens(col(textCol)))
-      else wordNgrams(col(textCol), shingle)
-    // 32-bit masked double hashing: h1 + i*h2 must not overflow a signed
-    // long under ANSI mode (Spark 4 default) — masked to 2^32, the worst
-    // case is ~2^37. Min-wise uniformity in a 2^32 space is ample.
-    val exploded = df.select(col(idCol).as("id"), explode(units).as("u"))
-      .select(col("id"),
-        xxhash64(col("u")).bitwiseAND(lit(0xFFFFFFFFL)).as("h1"),
-        xxhash64(col("u"), lit(1)).bitwiseAND(lit(0xFFFFFFFFL)).as("h2"))
-    val mins = (0 until numHashes).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
-    exploded.groupBy(col("id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** Banded LSH keys: signature split into `bands` bands of
-    * `numHashes/bands` rows; key = (band index, hash of that slice).
-    * Docs agreeing on ANY band become candidates — standard S-curve
-    * collision probability (1-(1-j^r)^b). */
-  def lshBandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(b, slice(sig, b * lit(r) + 1, lit(r))).as("bucket")))
-  }
-
-  /** Near-duplicate candidate pairs by MinHash+LSH with signature-estimated
-    * Jaccard ≥ `threshold`. Returns (idA, idB, est_jaccard), idA < idB.
-    *
-    * Scale shape: explode(bands) → self-join on the band key (hash
-    * Exchange on (band, bucket)) → distinct pairs → estimate from
-    * signatures. `maxBucket` caps pathological buckets (boilerplate spam
-    * collapses into one bucket at corpus scale — count and drop oversized
-    * buckets instead of letting one key quadratically dominate a task). */
-  def minhashDupPairs(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
-      maxBucket: Int = 1000, shingle: Int = 1): DataFrame =
-    bandedSigPairs(
-      minhashSignatures(df, textCol, idCol, numHashes, shingle),
-      numHashes, bands, threshold, maxBucket,
-      sig => lshBandKeys(sig, numHashes, bands))
-
-  /** Shared MinHash+LSH candidate machinery over a signature table
-    * (`id`, `sig: array<long>`): band-explode with `bandKeys`, bounded
-    * self-join, exact signature-match estimate per distinct pair.
-    *
-    * Candidate generation carries ONLY (band, bucket, id): the candidate
-    * set before pair-dedup is the explosion point (Σ bucket² rows × bands
-    * duplication) — shuffling the signature arrays through it was 5×
-    * slower than this ids-only join at sf0.1. Signatures are re-attached
-    * per DISTINCT pair afterwards (two joins against the persisted
-    * signature table — broadcast at test scale, shuffle-hash at corpus
-    * scale). */
-  private def bandedSigPairs(sigTable: DataFrame, numHashes: Int,
-      bands: Int, threshold: Double, maxBucket: Int,
-      bandKeys: Column => Column): DataFrame =
-    bandedSigPairsCross(sigTable, None, numHashes, threshold, maxBucket,
-      bandKeys)
-
-  /** Self- OR cross-corpus banded candidate machinery. `sigsB0 = None` is
-    * the self-join (canonical id_a < id_b pairs); `Some(sigsB0)` joins
-    * corpus A's buckets against corpus B's — the "dedup incoming data
-    * against the existing training set" shape, where A×B join pressure is
-    * Σ cntA·cntB per bucket and each side's bucket count is capped
-    * independently. Signature tables persist via [[graft.ops.Caches]]
-    * (band explode + two signature-attach joins per side). */
-  private def bandedSigPairsCross(sigTableA: DataFrame,
-      sigsB0: Option[DataFrame], numHashes: Int, threshold: Double,
-      maxBucket: Int, bandKeys: Column => Column): DataFrame = {
-    // Persist the signature table(s): each feeds its band explode AND a
-    // signature-attach join — without a barrier Spark recomputes it per
-    // branch. Tracked: callers release via [[graft.ops.Caches.releaseAll]]
-    // once results are materialized. parallelize (r20): a signature
-    // INDEX artifact is a ~1-file parquet at fixture scale, so the band
-    // explode + bucket census otherwise run single-task (no-op at corpus
-    // scale, where the index has ≥ cores splits).
-    val sigsA = graft.ops.Caches.track(parallelize(sigTableA))
-    def boundedBuckets(sigs: DataFrame): DataFrame = {
-      val buckets = sigs
-        .select(col("id"), explode(bandKeys(col("sig"))).as("bk"))
-        .select(col("id"), col("bk.band"), col("bk.bucket"))
-      val ok = buckets.groupBy("band", "bucket").count()
-        .filter(col("count") <= maxBucket)
-      buckets.join(ok.select("band", "bucket"), Seq("band", "bucket"))
-    }
-    val boundedA = boundedBuckets(sigsA)
-    val (sigsB, boundedB) = sigsB0 match {
-      case None     => (sigsA, boundedA)
-      case Some(b0) =>
-        val sb = graft.ops.Caches.track(parallelize(b0))
-        (sb, boundedBuckets(sb))
-    }
-
-    val joined = pinned(boundedA
-      .select(col("band"), col("bucket"), col("id").as("id_a")),
-        col("band"), col("bucket"))
-      .join(pinned(boundedB.select(col("band"), col("bucket"),
-        col("id").as("id_b")), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-    val pairs = (if (sigsB0.isEmpty) joined.filter(col("id_a") < col("id_b"))
-      else joined)
-      .select("id_a", "id_b")
-      .distinct()
-
-    pairs
-      .join(sigsA.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigsB.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          m => m)).cast("double") / lit(numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
-  }
-
-  /** CROSS-CORPUS near-dup pairs: documents in `incoming` whose MinHash
-    * estimate against some `existing` document is ≥ `threshold` — the
-    * "dedup the new crawl against the training set" step, WITHOUT the
-    * |A∪B|² self-join a naive union would pay. Returns (id_a from
-    * `existing`, id_b from `incoming`, est_jaccard); a document present
-    * in both corpora pairs with itself at estimate 1.0. Same hash family
-    * on both sides, so buckets align; blocking/cap/estimate arguments as
-    * [[minhashDupPairs]]. */
-  def minhashCrossDupPairs(existing: DataFrame, incoming: DataFrame,
-      textCol: String, idCol: String, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = 1000,
-      shingle: Int = 1): DataFrame =
-    bandedSigPairsCross(
-      minhashSignatures(existing, textCol, idCol, numHashes, shingle),
-      Some(minhashSignatures(incoming, textCol, idCol, numHashes, shingle)),
-      numHashes, threshold, maxBucket,
-      sig => lshBandKeys(sig, numHashes, bands))
-
-  /** [[minhashCrossDupPairs]] with the portable md5 hash family and
-    * value-equality band keys (see the portable-variants note below) —
-    * the oracle-checkable twin. */
-  def minhashCrossDupPairsPortable(existing: DataFrame, incoming: DataFrame,
-      textCol: String, idCol: String, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = 1000,
-      shingle: Int = 1): DataFrame =
-    minhashCrossDupPairsPortableFromSignatures(
-      minhashSignaturesPortable(existing, textCol, idCol, numHashes, shingle),
-      minhashSignaturesPortable(incoming, textCol, idCol, numHashes, shingle),
-      numHashes, bands, threshold, maxBucket)
-
-  // ------------------------------------ portable (cross-engine) variants
-  //
-  // The default pipelines hash with xxhash64 (fastest codegen'd hash in
-  // Spark) — engine-local, so the driver's DuckDB oracle can't recompute
-  // them. These variants swap ONLY the hash family for one any md5-capable
-  // engine reproduces bit-for-bit, making the whole approximate pipeline
-  // oracle-checkable end-to-end:
-  //
-  //   h32(u)  = first 8 md5 hex chars as an integer
-  //             Spark:  conv(substring(md5(u), 1, 8), 16, 10)::long
-  //             DuckDB: ('0x' || substr(md5(u), 1, 8))::BIGINT
-  //
-  // Band keys use the raw signature-slice VALUES (portable equality)
-  // instead of an engine hash of the slice. Same plan shapes, same scale
-  // arguments; md5 costs ~2× xxhash64, so the default stays xxhash64.
-
-  /** First 32 bits of md5 as a long (cross-engine reproducible hash). */
+  /** First 32 bits of md5 as a long (the [[Md5]] family's hash). */
   def hex32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** [[minhashSignatures]] with the portable md5-derived double-hash
-    * family: h1 = hex32(u), h2 = hex32(u || "|"). */
-  def minhashSignaturesPortable(df0: DataFrame, textCol: String,
-      idCol: String, numHashes: Int, shingle: Int = 1): DataFrame = {
+  /** First 60 bits of md5 as a long (15 hex chars — stays inside the
+    * signed-long budget both engines share; see [[hex32]]). */
+  def hex60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** Corpus-scale MinHash signature table (id, sig): explode shingles →
+    * two hashes per shingle → `numHashes` `min` aggregates per doc,
+    * sig[i] = min of `h1 + i*h2` (Kirsch–Mitzenmacher double hashing).
+    * The whole pipeline is whole-stage-codegen'd `HashAggregateExec`
+    * with map-side partial min — shuffle volume is |docs| × numHashes
+    * longs regardless of corpus token count. Shingling: distinct word
+    * unigrams by default; `shingle > 1` uses word n-gram shingles
+    * (order-sensitive — discriminates reordered text). [[XxHash]]:
+    * h1, h2 = xxhash64 with seeds 42 and 1, masked to 32 bits; [[Md5]]:
+    * h1 = hex32(u), h2 = hex32(u || "|"). */
+  def minhashSignatures(df0: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, shingle: Int, family: HashFamily): DataFrame = {
     val df = parallelize(df0)
     val units = if (shingle <= 1) array_distinct(tokens(col(textCol)))
       else wordNgrams(col(textCol), shingle)
+    // 32-bit hashes: h1 + i*h2 must not overflow a signed long under
+    // ANSI mode (Spark 4 default) — the worst case is ~2^37. Min-wise
+    // uniformity in a 2^32 space is ample.
+    val u = col("u")
+    val (h1, h2) = family match {
+      case XxHash => (xxhash64(u).bitwiseAND(lit(0xFFFFFFFFL)),
+        xxhash64(u, lit(1)).bitwiseAND(lit(0xFFFFFFFFL)))
+      case Md5 => (hex32(u), hex32(concat(u, lit("|"))))
+    }
     val exploded = df.select(col(idCol).as("id"), explode(units).as("u"))
-      .select(col("id"),
-        hex32(col("u")).as("h1"),
-        hex32(concat(col("u"), lit("|"))).as("h2"))
+      .select(col("id"), h1.as("h1"), h2.as("h2"))
     val mins = (0 until numHashes).map(i =>
       min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
     exploded.groupBy(col("id"))
@@ -357,364 +548,525 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** [[minhashDupPairs]] with the portable hash family and value-equality
-    * band keys (bucket = comma-joined signature slice — no engine hash in
-    * the blocking key, so an external engine derives identical candidate
-    * sets, not just collision-equivalent ones). */
-  def minhashDupPairsPortable(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
-      maxBucket: Int = 1000, shingle: Int = 1): DataFrame =
-    minhashDupPairsPortableFromSignatures(
-      minhashSignaturesPortable(df, textCol, idCol, numHashes, shingle),
-      numHashes, bands, threshold, maxBucket)
-
-  /** Value-equality band keys for the portable hash family (bucket =
-    * comma-joined signature slice — no engine hash in the blocking key,
-    * so an external engine derives identical candidate sets). */
-  private def portableBandKeys(numHashes: Int, bands: Int): Column => Column = {
+  /** Banded LSH keys of a signature: `bands` bands of `numHashes/bands`
+    * rows; key = (band, bucket of that slice). Docs agreeing on ANY band
+    * are candidates — the standard S-curve collision probability
+    * 1-(1-j^r)^b. Bucket: [[XxHash]] hashes the slice; [[Md5]] joins
+    * its values with commas (value equality, no engine hash). */
+  def lshBandKeys(sig: Column, numHashes: Int, bands: Int,
+      family: HashFamily): Column = {
     val r = numHashes / bands
     require(bands * r == numHashes, "bands must divide numHashes")
-    sig => transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        concat_ws(",",
-          transform(slice(sig, b * lit(r) + 1, lit(r)),
-            v => v.cast("string"))).as("bucket")))
+    transform(sequence(lit(0), lit(bands - 1)), b => {
+      val s = slice(sig, b * lit(r) + 1, lit(r))
+      struct(b.as("band"), (family match {
+        case XxHash => xxhash64(b, s)
+        case Md5 => concat_ws(",", transform(s, v => v.cast("string")))
+      }).as("bucket"))
+    })
   }
 
-  /** [[minhashDupPairsPortable]] over a PRECOMPUTED (id, sig) signature
-    * table — lets a persisted signature index feed pairs generation,
-    * point probes ([[minhashProbeFromSignatures]]) and incremental
-    * maintenance without re-hashing the corpus per consumer. */
-  def minhashDupPairsPortableFromSignatures(sigs: DataFrame,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame =
-    bandedSigPairs(sigs, numHashes, bands, threshold, maxBucket,
-      portableBandKeys(numHashes, bands))
-
-  /** [[minhashCrossDupPairsPortable]] over PRECOMPUTED signature tables. */
-  def minhashCrossDupPairsPortableFromSignatures(existingSigs: DataFrame,
-      incomingSigs: DataFrame, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
-    bandedSigPairsCross(existingSigs, Some(incomingSigs), numHashes,
-      threshold, maxBucket, portableBandKeys(numHashes, bands))
-
-  /** INCREMENTAL near-dup pairs maintenance — the 100 TB operating mode:
-    * never re-pair years of corpus to ingest a day. Given yesterday's
-    * pairs artifact (`oldPairs`, over the docs of `oldSigs`) and today's
-    * slice's signatures (`newSigs`, id-disjoint from the old corpus),
-    * the updated whole-corpus pairs set is
-    *
-    *   oldPairs ∪ cross(old, new) ∪ self(new)
-    *
-    * which equals a from-scratch recompute over old ∪ new EXACTLY: with
-    * value-equality band keys, a pair is a candidate iff its two
-    * signatures share a band slice VALUE — a property of the pair alone,
-    * independent of corpus composition — so the pair space partitions
-    * cleanly by which side each doc lives on. (The one caveat is
-    * `maxBucket`: per-slice bucket counts under-count the combined
-    * bucket, so a cap that binds at combined scale but not per-slice
-    * admits pairs a recompute would drop — the standard incremental-LSH
-    * approximation; q_dedup_incremental's whole-corpus oracle proves
-    * exactness in the unbound regime.)
-    *
-    * Scale shape: cross is an A×B bucket join (new slice's buckets
-    * against the persisted index — |day| × bands rows against the
-    * artifact, never |corpus|²), self(new) is a day-sized self-join, and
-    * oldPairs is READ, not recomputed. The three parts are id-disjoint
-    * by construction (old×old, old×new, new×new), so the union needs no
-    * dedup pass. */
-  def minhashPairsIncrementalPortable(oldPairs: DataFrame,
-      oldSigs: DataFrame, newSigs: DataFrame, numHashes: Int = 32,
-      bands: Int = 8, threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame = {
-    val cross = minhashCrossDupPairsPortableFromSignatures(oldSigs, newSigs,
-        numHashes, bands, threshold, maxBucket)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"),
-        col("est_jaccard"))
-    val newSelf = minhashDupPairsPortableFromSignatures(newSigs,
-      numHashes, bands, threshold, maxBucket)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
-
-  /** MinHash point PROBE against a PRECOMPUTED signature table — the
-    * serving-path primitive. `sigs` is (id, sig) from
-    * [[minhashSignatures]] / [[minhashSignaturesPortable]] (the function
-    * is hash-family-agnostic: it only compares signature values). The
-    * query row's signature is collected (one bounded row), its band
-    * slices become literal predicates, and candidacy is a scan-fused
-    * FILTER over the signature table — no join, no shuffle; with the
-    * signature table bucketed/partitioned by leading band values the
-    * probe prunes to matching buckets at 100 TB.
-    *
-    * At scale the signature table is a MATERIALIZED corpus artifact
-    * (computed once, stored as parquet, maintained incrementally) and a
-    * probe is an index read — NOT a corpus re-hash per query. Returns
-    * (doc_id, est_jaccard) for candidates with signature-match estimate
-    * ≥ `threshold`, query row excluded. */
-  def minhashProbeFromSignatures(sigs: DataFrame, queryId: Long,
-      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val q = sigs.filter(col("id") === queryId)
-      .select("sig").head().getSeq[Long](0)
-    probeWithSignature(sigs, q, numHashes, bands, threshold,
-      excludeId = Some(queryId))
-  }
-
-  /** Probe the signature index with a NEW document's RAW TEXT — the
-    * ingest-time serving shape ("what near-duplicates this INCOMING
-    * doc") where the query is NOT a corpus row. The query signature is
-    * computed by the same engine pipeline over a 1-row frame (hash
-    * semantics match the index bit-for-bit), then band slices become
-    * literal scan predicates exactly as in
-    * [[minhashProbeFromSignatures]]; no exclusion filter, so an exact
-    * copy already in the corpus surfaces at estimate 1.0. A text too
-    * short to shingle returns an empty result (nothing to match). */
-  def minhashProbeTextPortable(sigs: DataFrame, text: String,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.25,
-      shingle: Int = 1): DataFrame = {
-    val spark = sigs.sparkSession
-    val one = spark.range(1)
-      .select(lit(-1L).as("qid"), lit(text).as("qtext"))
-    val qRow = minhashSignaturesPortable(one, "qtext", "qid", numHashes,
-      shingle).select("sig").collect().headOption
-    qRow match {
-      case Some(row) =>
-        probeWithSignature(sigs, row.getSeq[Long](0), numHashes, bands,
-          threshold, excludeId = None)
-      case None => // no shingles in the query text
-        sigs.select(col("id").as("doc_id"),
-          lit(0.0).as("est_jaccard")).limit(0)
-    }
-  }
-
-  /** Shared probe body: candidacy = any full band slice of `sigs`
-    * equals the query signature's (scan-fused literal predicates);
-    * estimate = signature-match fraction. */
-  private def probeWithSignature(sigs: DataFrame, q: Seq[Long],
-      numHashes: Int, bands: Int, threshold: Double,
-      excludeId: Option[Long]): DataFrame = {
-    val r = numHashes / bands
+  /** MinHash + LSH near-dup pairs with signature-estimated Jaccard ≥
+    * `threshold` (est_jaccard = matching signature slots / numHashes).
+    * Payload `sig`; keys (band, bucket); `maxBucket` caps each side's
+    * rows per bucket (boilerplate spam collapses into one bucket at
+    * corpus scale — count and drop oversized buckets instead of letting
+    * one key quadratically dominate a task). The join carries ids only:
+    * signatures re-attach per DISTINCT pair (two joins against the
+    * persisted signature table — broadcast at test scale, shuffle-hash
+    * at corpus scale). */
+  final case class MinHash(numHashes: Int = 32, bands: Int = 8,
+      threshold: Double = 0.5, maxBucket: Int = 1000, shingle: Int = 1,
+      family: HashFamily = Md5)
+      extends TextScheme[scala.collection.Seq[Long]] {
+    private val r = numHashes / bands
     require(bands * r == numHashes, "bands must divide numHashes")
-    val anyBandMatches = (0 until bands).map { b =>
-      (0 until r).map(i =>
-        element_at(col("sig"), b * r + i + 1) === lit(q(b * r + i)))
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    val qLit = array(q.map(lit): _*)
-    val base = excludeId.map(id => sigs.filter(col("id") =!= id))
-      .getOrElse(sigs)
-    base
-      .filter(anyBandMatches)
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig"), qLit, (x, y) => x === y),
-          m => m)).cast("double") / lit(numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id").as("doc_id"), col("est_jaccard"))
+    def value = "sig"
+    def keys = Seq("band", "bucket")
+    override def explodeKeys: Option[Column => Column] =
+      Some(lshBandKeys(_, numHashes, bands, family))
+    override def cap: Option[DataFrame => DataFrame] = Some(k => k.join(
+      k.groupBy(keys.map(col): _*).count()
+        .filter(col("count") <= maxBucket).select(keys.map(col): _*), keys))
+    def scoreName = "est_jaccard"
+    def score(a: Column, b: Column, spark: SparkSession): Column =
+      size(filter(zip_with(a, b, (x, y) => x === y), m => m))
+        .cast("double") / lit(numHashes)
+    def keep(s: Column): Column = s >= threshold
+    def signatures(df: DataFrame, textCol: String, idCol: String): DataFrame =
+      minhashSignatures(df, textCol, idCol, numHashes, shingle, family)
+    def slots(v: Column): Seq[Column] =
+      (0 until bands).map(b => slice(v, b * r + 1, r))
+    def literal(q: scala.collection.Seq[Long]): Column =
+      array(q.map(lit).toSeq: _*)
   }
 
-  // --------------------- sharded band index (physical serving layout)
+  // ------------------------------------------------------------- SimHash
 
-  /** Write the INVERTED BAND INDEX of a signature table as
-    * shard-partitioned parquet — the physical layout the probe
-    * docstrings promise at 100 TB: one row per (doc, band) carrying the
-    * band's value-equality bucket string and the doc's full signature
-    * (so a probe estimates similarity without a second lookup),
-    * partitioned on disk by (band, shard) where
-    * shard = pmod(xxhash64(bucket), shards). A probe then touches
-    * exactly `bands` of the bands×shards directories — 1/`shards` of
-    * the index — and the pruning happens AT THE SCAN (PartitionFilters
-    * on literal band/shard), not as a post-read filter.
-    * ShardedIndexSpec asserts both halves: every per-band scan selects
-    * ≤ 1 partition, and the probe result is row-identical to the
-    * unsharded [[minhashProbeFromSignatures]]. */
-  def writeShardedBandIndex(sigs: DataFrame, path: String, numHashes: Int,
-      bands: Int, shards: Int = 64, mode: String = "overwrite"): Unit = {
-    val bk = portableBandKeys(numHashes, bands)
-    sigs.select(col("id"), col("sig"), explode(bk(col("sig"))).as("bk"))
-      .select(col("id"), col("sig"), col("bk.bucket").as("bucket"),
-        col("bk.band").as("band"),
-        pmod(xxhash64(col("bk.bucket")), lit(shards)).as("shard"))
-      .repartition(col("band"), col("shard")) // one file per directory
-      .write.partitionBy("band", "shard").mode(mode).parquet(path)
-    graft.sources.Pq.invalidate(path)
+  /** Fingerprint width of a hash family: xxhash64 gives 64 bits; the md5
+    * family 60 ([[hex60]]). */
+  private def simhashBits(family: HashFamily): Int = family match {
+    case XxHash => 64
+    case Md5 => 60
   }
 
-  /** Probe the sharded band index with a raw query signature: ONE scan
-    * whose predicate is the OR over bands of
-    * `band=b ∧ shard=s_b ∧ bucket=q_b` — Catalyst extracts the
-    * partition-column weakening `∨_b (band=b ∧ shard=s_b)` from the
-    * mixed disjunction (`extractPredicatesWithinOutputSet` handles
-    * Or-of-And), so the scan still prunes to ≤ `bands` of the
-    * bands×shards directories while the bucket equalities ride along as
-    * scan-fused data filters. (Round 10: collapsed from `bands`
-    * separate scans + union — identical pruning, one job instead of
-    * eight, which is the difference between ~2 s and sub-second probe
-    * latency at fixture scale.) Candidates dedup by id, then the
-    * standard signature-overlap estimate. The query buckets' shard
-    * values are computed by the ENGINE's own xxhash64 in one 1-row job,
-    * so the driver never re-implements the hash. */
-  def probeShardedBandIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      q: Seq[Long], numHashes: Int, bands: Int, threshold: Double,
-      shards: Int = 64, excludeId: Option[Long] = None): DataFrame = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
-    val qBuckets = (0 until bands).map(b =>
-      (b * r until (b + 1) * r).map(q(_)).mkString(","))
-    val qShards = spark.range(1)
-      .select(qBuckets.map(bs =>
-        pmod(xxhash64(lit(bs)), lit(shards))): _*)
-      .head().toSeq.map(_.asInstanceOf[Long])
-    val index = graft.sources.Pq.read(spark, path)
-    val qLit = array(q.map(lit): _*)
-    val candidates = index.filter((0 until bands).map { b =>
-        col("band") === lit(b) && col("shard") === lit(qShards(b)) &&
-          col("bucket") === lit(qBuckets(b))
-      }.reduce(_ || _))
-      .select("id", "sig").dropDuplicates("id")
-    excludeId.map(id => candidates.filter(col("id") =!= id))
-      .getOrElse(candidates)
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig"), qLit, (x, y) => x === y),
-          m => m)).cast("double") / lit(numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id").as("doc_id"), col("est_jaccard"))
+  /** Corpus-scale SimHash fingerprint table (id, fp): explode tokens →
+    * one codegen'd hash per token → one conditional-sum ±1 vote
+    * aggregate per bit → fp bit j = sign of vote j. Same scaling
+    * argument as [[minhashSignatures]]: whole-stage codegen, map-side
+    * partial sums, shuffle bounded by |docs| × bits longs. */
+  def simhashFingerprints(df0: DataFrame, textCol: String, idCol: String,
+      family: HashFamily): DataFrame = {
+    val bits = simhashBits(family)
+    val t = col("t")
+    val exploded = parallelize(df0).select(col(idCol).as("id"),
+        explode(tokens(col(textCol))).as("t"))
+      .select(col("id"),
+        (if (family == XxHash) xxhash64(t) else hex60(t)).as("h"))
+    val votes = (0 until bits).map(j =>
+      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L)
+        .otherwise(-1L)).as(s"v$j"))
+    val fp = (0 until bits).map(j =>
+      when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
+    exploded.groupBy(col("id"))
+      .agg(votes.head, votes.tail: _*)
+      .select(col("id"), fp.as("fp"))
   }
 
-  /** Ingest-time TEXT probe against the sharded band index
-    * ([[probeShardedBandIndex]] with the query signature computed by
-    * the engine over a 1-row frame, as in [[minhashProbeTextPortable]])
-    * — the full serving stack: raw incoming text → signature → shard-
-    * pruned index scans. No self-exclusion (an exact copy surfaces at
-    * 1.0); unshingleable text returns the empty result. */
-  def probeShardedBandIndexText(spark: org.apache.spark.sql.SparkSession,
-      path: String, text: String, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.25, shards: Int = 64,
-      shingle: Int = 1): DataFrame = {
-    val one = spark.range(1)
-      .select(lit(-1L).as("qid"), lit(text).as("qtext"))
-    minhashSignaturesPortable(one, "qtext", "qid", numHashes, shingle)
-      .select("sig").collect().headOption match {
-      case Some(row) =>
-        probeShardedBandIndex(spark, path, row.getSeq[Long](0), numHashes,
-          bands, threshold, shards, excludeId = None)
-      case None =>
-        graft.sources.Pq.read(spark, path)
-          .select(col("id").as("doc_id"), lit(0.0).as("est_jaccard"))
-          .limit(0)
-    }
+  /** SimHash near-dup pairs with Hamming distance ≤ `maxHamming`.
+    * Blocking by the pigeonhole principle: the fingerprint splits into
+    * `maxHamming+1` chunks (ci, cv) — any pair within distance k agrees
+    * on at least one chunk, so candidacy on the chunk key is lossless
+    * and exact (no caps to approximate around). Verification =
+    * `bit_count(a XOR b)`; the 64-bit fp rides the join. */
+  final case class SimHash(maxHamming: Int = 3, family: HashFamily = Md5)
+      extends TextScheme[Long] {
+    private val width = simhashBits(family) / (maxHamming + 1)
+    def value = "fp"
+    def keys = Seq("ci", "cv")
+    def scoreName = "hamming"
+    def score(a: Column, b: Column, spark: SparkSession): Column =
+      bit_count(a.bitwiseXOR(b))
+    def keep(s: Column): Column = s <= maxHamming
+    def signatures(df: DataFrame, textCol: String, idCol: String): DataFrame =
+      simhashFingerprints(df, textCol, idCol, family)
+    def slots(v: Column): Seq[Column] = (0 to maxHamming).map(c =>
+      shiftrightunsigned(v, c * width).bitwiseAND(lit((1L << width) - 1)))
+    def literal(q: Long): Column = lit(q)
   }
 
-  /** Ingest-time MinHash DELTA (cross ∪ self) against the SHARDED BAND
-    * INDEX — the slice-sized dual of [[probeShardedBandIndex]]: the
-    * slice's signatures explode to their band buckets, the bounded
-    * (≤ bands × `shards`) set of (band, shard) pairs they touch becomes
-    * literal partition predicates over the index (a realistic ingest
-    * slice has |slice| × bands bucket values — FEW keys per doc, so the
-    * read prunes to a minority of directories; ShardedArtifactsSpec
-    * locks the `PartitionFilters`), and candidates join on
-    * (band, bucket). Index rows carry the full signature
-    * ([[writeShardedBandIndex]]) so the estimate needs no second
-    * old-corpus lookup. Semantics = the cross ∪ self arms of
-    * [[minhashPairsIncrementalPortable]] exactly: per-side `maxBucket`
-    * caps count within (band, bucket) — a bucket lives wholly inside
-    * one shard, so counts over the pruned read are exact.
+  // ------------------------------------------- exact n-gram Jaccard pairs
+
+  /** Wrap the native [[graft.functions.NGramsExpr]] kernel as a Column
+    * (no session/registry needed — the expression rides the plan
+    * directly). */
+  private def ngramsNative(text: Column, n: Int, distinct: Boolean): Column = {
+    val shim = org.apache.spark.sql.graftshim.ColumnShim
+    // coalesce: the HOF reference form yields [] (not NULL) for null text
+    // (greatest() drops the null size inside the lambda) — preserve that
+    // contract exactly so kernels are interchangeable.
+    coalesce(
+      shim.column(graft.functions.NGramsExpr(
+        shim.expression(tokens(text)), shim.expression(lit(n)), distinct)),
+      typedLit(Seq.empty[String]))
+  }
+
+  /** Word n-grams of the normalized text WITH multiplicity (repetition
+    * metrics need duplicate grams; [[wordNgrams]] is the distinct form). */
+  def wordNgramsAll(text: Column, n: Int): Column =
+    ngramsNative(text, n, distinct = false)
+
+  /** Word n-grams (distinct) of the normalized text: native compiled
+    * kernel ([[graft.functions.NGramsExpr]] — one loop per row).
+    * [[wordNgramsHof]] is the built-in-HOF reference form; the kernel is
+    * asserted bit-identical to it in `NGramsExprSpec`, and every n-gram
+    * pipeline's DuckDB oracle locks the semantics end-to-end. */
+  def wordNgrams(text: Column, n: Int): Column =
+    ngramsNative(text, n, distinct = true)
+
+  /** Reference HOF form of [[wordNgrams]] (kept for the bit-identity
+    * spec; interpreted — ~2.5× slower per gram-explode pass at sf0.1).
     *
-    * Ingest ordering: the returned frame is a LAZY plan over
-    * `indexPath`, and an append to that path invalidates (and
-    * recomputes) plans over it (Spark's `recacheByPath`) — so a chained
-    * ingest must COMMIT the delta (write it to the pairs artifact)
-    * BEFORE appending the slice's rows to the index, or the delta
-    * re-reads its own slice as "old" (self-pairs at 1.0).
-    * ChainedAppendSpec locks the law under that ordering. */
-  def minhashDeltaSharded(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newSigs0: DataFrame, numHashes: Int = 32,
-      bands: Int = 8, threshold: Double = 0.5, maxBucket: Int = 1000,
-      shards: Int = 16): DataFrame = {
-    val bk = portableBandKeys(numHashes, bands)
-    // parallelize: the slice's signatures come off a ~1-file artifact at
-    // fixture scale (see bandedSigPairsCross note); no-op at corpus scale
-    val newSigs = graft.ops.Caches.track(parallelize(newSigs0))
-    val nb0 = newSigs
-      .select(col("id"), col("sig"), explode(bk(col("sig"))).as("bk"))
-      .select(col("id"), col("sig"), col("bk.bucket").as("bucket"),
-        col("bk.band").as("band"),
-        Sharded.shardOf(col("bk.bucket"), shards).as("shard"))
-    val nb = graft.ops.Caches.track(nb0)
-    val touched = nb.select("band", "shard").distinct().collect()
-      .map(r => (r.getInt(0), r.getInt(1))).sortBy(identity)
-    val pruned = graft.sources.Pq.read(spark, indexPath)
-      .filter(touched.map { case (b, sh) =>
-        col("band") === lit(b) && col("shard") === lit(sh)
-      }.reduce(_ || _))
-    def bounded(buckets: DataFrame): DataFrame = {
-      val ok = buckets.groupBy("band", "bucket").count()
-        .filter(col("count") <= maxBucket)
-      buckets.join(ok.select("band", "bucket"), Seq("band", "bucket"))
-    }
-    // r20: cross and self share ONE slice-side bounded bucket table
-    // (cached pinned by (band, bucket) so the cross probe and both
-    // self-join sides reuse the layout — the self arm previously
-    // re-exploded the slice signatures and re-ran the bucket census
-    // through bandedSigPairs), and their candidate streams co-dedup
-    // through ONE exchange: cross keys pair old×new ids, self keys pair
-    // new×new with id_a < id_b — id-disjoint corpora, so the key spaces
-    // never collide and per-stream dropDuplicates ∪ == one dropDuplicates
-    // over the union. The per-side maxBucket censuses are byte-identical
-    // to the separate-arm encoding (same slice bucket census both
-    // times), and self rows already satisfy id_a < id_b, so the final
-    // canonicalization is the identity on them.
-    val boundedNb = graft.ops.Caches.track(pinned(
-      bounded(nb.select("band", "bucket", "id", "sig")),
-      col("band"), col("bucket")))
-    val crossCands = pinned(bounded(
-        pruned.select("band", "bucket", "id", "sig")),
-        col("band"), col("bucket"))
-      .select(col("band"), col("bucket"), col("id").as("id_a"),
-        col("sig").as("sig_a"))
-      .join(boundedNb.select(col("band"), col("bucket"),
-        col("id").as("id_b"), col("sig").as("sig_b")),
-        Seq("band", "bucket"))
-      .select("id_a", "sig_a", "id_b", "sig_b")
-    val selfCands = boundedNb
-      .select(col("band"), col("bucket"), col("id").as("id_a"),
-        col("sig").as("sig_a"))
-      .join(boundedNb.select(col("band"), col("bucket"),
-        col("id").as("id_b"), col("sig").as("sig_b")),
-        Seq("band", "bucket"))
+    * The tokenization is BOUND ONCE via a singleton-array lambda
+    * (`transform(array(tokens), toks -> ...)`): higher-order functions
+    * evaluate interpreted, and an expression subtree referenced at every
+    * gram position would re-run the regex split O(positions) times per row
+    * — observed as a single 550 s task at sf0.1. A lambda variable
+    * reference is O(1) against the already-evaluated array. */
+  def wordNgramsHof(text: Column, n: Int, distinct: Boolean = true): Column = {
+    val grams = transform(array(tokens(text)), toks =>
+      filter(
+        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+          i => when(i <= size(toks) - n,
+            concat_ws(" ", slice(toks, i + 1, lit(n))))),
+        g => g.isNotNull))
+    if (distinct) array_distinct(element_at(grams, 1))
+    else element_at(grams, 1)
+  }
+
+  /** Exact n-gram Jaccard near-dup pairs, `jaccard ≥ threshold`.
+    *
+    * Threshold-adaptive set-similarity join. Both paths are exact and
+    * count-based — J(a,b) = c / (|a| + |b| − c) needs only the shared-gram
+    * COUNT c per pair, never the gram arrays (an earlier version shuffled
+    * gram ARRAYS to every candidate and verified with interpreted
+    * array_intersect: 50× slower at sf0.1). Path choice (`prefixFilter`,
+    * default auto at threshold ≥ 0.3):
+    *
+    * DIRECT (low thresholds): explode distinct grams, attach each gram's
+    * global doc-frequency with a window count (partitioned by gram — the
+    * self-join on the gram key REUSES that hash partitioning, so the cap
+    * costs no extra Exchange), self-join on the gram, count rows per
+    * (id_a, id_b) — one codegen'd partial+final HashAggregate yields c for
+    * every co-occurring pair directly. At low t nearly every co-occurring
+    * pair must be counted anyway (prefixes are ~(1−t)·|g| long), so a
+    * candidate/verify split would RE-join candidates against the gram
+    * table and cost more than it saves — measured at sf0.1, t=0.1: 941 k
+    * of 941 k co-occurring pairs survive prefix candidacy.
+    *
+    * PREFIX (high thresholds — All-Pairs/PPJoin family): rank each doc's
+    * grams RAREST-FIRST by (global df, gram); candidate generation
+    * self-joins ONLY each doc's prefix — its first |g| − ⌈t·|g|⌉ + 1 grams
+    * in that order. Lossless for J ≥ t: a qualifying pair must share
+    * ≥ ⌈t·|x|⌉ grams, and a set missing all of its prefix can share at
+    * most ⌈t·|x|⌉ − 1. The grams EXCLUDED from prefixes are exactly the
+    * hottest ones, so the Σ df² join blowup collapses superlinearly as t
+    * grows. A min/max length-ratio filter (J ≤ min/max) prunes before
+    * pair-dedup; exact c is then re-derived per candidate by joining back
+    * to the full gram table on id_a then (id_b, gram).
+    *
+    * `maxDf` caps pathological blocking grams (boilerplate spam =
+    * quadratic hot keys). On the prefix path it affects only CANDIDATE
+    * RECALL (capped grams still count in c for surviving candidates); on
+    * the direct path a capped gram is excluded from c too — pairs whose
+    * ONLY shared grams are capped may slip below threshold (recall/cost
+    * knob; maxDf=∞ is fully exact). Float care: prefix length and
+    * length-ratio use ε-conservative ceil/compares so binary-float slop
+    * can only widen the candidate set, never lose a qualifying pair. */
+  def ngramJaccardPairs(df0: DataFrame, textCol: String, idCol: String,
+      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 1000,
+      prefixFilter: Option[Boolean] = None): DataFrame =
+    ngramJaccardPairsOverGrams(ngramGramTable(df0, textCol, idCol, n),
+      threshold, maxDf, prefixFilter)
+
+  /** SUMMABLE gram-census artifact: (g, df) global doc-frequencies over
+    * a gram table. Per-slice censuses merge by addition
+    * ([[mergeGramCensus]]), which is what makes the df blocking cap
+    * maintainable at ingest time instead of re-counted per corpus pass:
+    * the census is computed once per snapshot, persisted beside the gram
+    * index, and a day's ingest touches |slice grams| + |changed census
+    * rows|, never the corpus. */
+  def ngramGramCensus(grams: DataFrame): DataFrame =
+    grams.groupBy("g").agg(count(lit(1)).as("df"))
+
+  /** Merge gram censuses by addition (doc-frequency of a gram in A ∪ B =
+    * df_A + df_B for id-disjoint corpora). */
+  def mergeGramCensus(a: DataFrame, b: DataFrame): DataFrame =
+    a.unionByName(b).groupBy("g").agg(sum(col("df")).as("df"))
+
+  /** Write the GRAM INDEX ([[ngramGramTable]] rows) as parquet
+    * partitioned by gram-hash shard. Selectivity honesty (see
+    * [[Sharded]]): a doc contributes HUNDREDS of distinct grams, so the
+    * layout prunes for probes and small slices but degrades to a full
+    * scan for large ingest slices — there the lever is the slice-side
+    * bloom semi-join, not the directory layout. Both the layout and the
+    * stress measurement carry that caveat. */
+  def writeShardedGramIndex(grams: DataFrame, path: String): Unit =
+    Sharded.writeByKey(grams.select("id", "nsz", "g"), path, "g",
+      IndexShards)
+
+  /** Write the summable GRAM CENSUS as parquet partitioned by the SAME
+    * gram-hash shard function as [[writeShardedGramIndex]] — per-shard
+    * censuses merge independently, and an append's census read prunes
+    * with the same shard set as its postings read. */
+  def writeShardedGramCensus(census: DataFrame, path: String): Unit =
+    Sharded.writeByKey(census.select("g", "df"), path, "g", IndexShards)
+
+  /** Exact n-gram Jaccard over a gram table (id, nsz, g): keys = the
+    * grams themselves, payload `nsz` (the doc's distinct-gram count)
+    * rides the join, and the reducer COUNTS shared grams c per pair —
+    * J(a, b) = c / (|a| + |b| − c) needs nothing else, never the gram
+    * arrays. The df blocking cap reads a PRECOMPUTED `census`
+    * ([[ngramGramCensus]], or a [[mergeGramCensus]] of slices) instead
+    * of a fresh corpus-wide window count; it must cover the gram
+    * population of every side for candidacy to match a whole-corpus
+    * recompute. A capped gram counts toward no pair (recall/cost knob;
+    * maxDf = ∞ is fully exact). */
+  final case class NGram(threshold: Double, census: DataFrame,
+      maxDf: Int = 1000) extends Scheme {
+    def value = "nsz"
+    def keys = Seq("g")
+    override def cap: Option[DataFrame => DataFrame] = Some(k =>
+      k.join(census.filter(col("df") <= maxDf).select("g"), Seq("g")))
+    def scoreName = "jaccard"
+    def score(a: Column, b: Column, spark: SparkSession): Column =
+      jaccard(col("c"), a, b)
+    def keep(s: Column): Column = s >= threshold
+    override def countShared = true
+  }
+
+  object NGram {
+    /** The scheme that appends `slice` (a gram table) to a corpus whose
+      * census is `oldCensus`: the slice's census merges in by addition,
+      * so the cap blocks on the census of old ∪ slice — what
+      * [[Scheme.delta]] and [[Scheme.incremental]] need to match a
+      * whole-corpus recompute. */
+    def appending(threshold: Double, oldCensus: DataFrame, slice: DataFrame,
+        maxDf: Int = 1000): NGram =
+      NGram(threshold, Caches.track(mergeGramCensus(oldCensus,
+        ngramGramCensus(slice))), maxDf)
+  }
+
+  private def jaccard(c: Column, na: Column, nb: Column): Column =
+    c.cast("double") / (na + nb - c)
+
+  /** Ingest-time exact-Jaccard DELTA over the SHARDED gram index +
+    * census: the slice's grams touch a bounded (≤ IndexShards) shard
+    * set, which prunes BOTH old-corpus reads (postings + census) at the
+    * scan; the slice's census merges by addition ([[NGram.appending]]),
+    * then [[Scheme.delta]].
+    * Pruning is lossless: a cross pair needs a SHARED gram (an old
+    * posting whose gram is in no slice shard cannot share a gram with
+    * the slice), and every retained gram's census row lives in a
+    * retained shard. */
+  def ngramDeltaSharded(spark: SparkSession, gramIndexPath: String,
+      censusPath: String, gramsNew0: DataFrame, threshold: Double,
+      maxDf: Int = 1000): DataFrame = {
+    val gramsNew = Caches.track(gramsNew0)
+    val touched = Sharded.touchedShards(gramsNew, "g", IndexShards)
+    NGram.appending(threshold, Sharded.readTouched(spark, censusPath,
+        touched).select("g", "df"), gramsNew, maxDf).delta(
+      Sharded.readTouched(spark, gramIndexPath, touched)
+        .select("id", "nsz", "g"), gramsNew)
+  }
+
+  /** Self-join count of an already-blocked gram table: (id_a, id_b, na,
+    * nb, c) per co-occurring pair, one codegen'd partial+final
+    * HashAggregate; no exchange is added here. */
+  private def pairCounts(blocked: DataFrame): DataFrame =
+    blocked
+      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
+      .join(blocked.select(col("g"), col("id").as("id_b"),
+        col("nsz").as("nb")), Seq("g"))
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "sig_a", "id_b", "sig_b")
-    crossCands.unionByName(selfCands)
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          m => m)).cast("double") / lit(numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("est_jaccard"))
+      .groupBy("id_a", "id_b", "na", "nb")
+      .agg(count(lit(1)).as("c"))
+
+  /** Full threshold-adaptive exact-Jaccard join (direct OR prefix-filter
+    * path) over a PRECOMPUTED gram table — the artifact-consuming form
+    * of [[ngramJaccardPairs]]. */
+  def ngramJaccardPairsOverGrams(grams: DataFrame, threshold: Double,
+      maxDf: Int = 1000,
+      prefixFilter: Option[Boolean] = None): DataFrame = {
+    val usePrefix = prefixFilter.getOrElse(threshold >= 0.3)
+    val exploded = grams
+      .pipe(Caches.track) // feeds candidate generation and the verify join sides
+    val withDf = exploded
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
+
+    val counted =
+      if (!usePrefix) pairCounts(withDf.filter(col("df") <= maxDf))
+      else {
+        val prefixLen =
+          col("nsz") - ceil(col("nsz") * lit(threshold) - lit(1e-9)) + 1
+        val prefix = withDf
+          .withColumn("pos", row_number().over(
+            Window.partitionBy("id").orderBy(col("df"), col("g"))))
+          .filter(col("pos") <= prefixLen && col("df") <= maxDf)
+          .select("g", "id", "nsz")
+        val candidates = prefix
+          .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
+          .join(prefix.select(col("g"), col("id").as("id_b"),
+            col("nsz").as("nb")), Seq("g"))
+          .filter(col("id_a") < col("id_b"))
+          .filter(least(col("na"), col("nb")) >=
+            greatest(col("na"), col("nb")) * lit(threshold) - lit(1e-9))
+          .select("id_a", "id_b")
+          .distinct()
+        candidates
+          .join(exploded.select(col("id").as("id_a"), col("nsz").as("na"),
+            col("g")), Seq("id_a"))
+          .join(exploded.select(col("id").as("id_b"), col("nsz").as("nb"),
+            col("g")), Seq("id_b", "g"))
+          .groupBy("id_a", "id_b", "na", "nb")
+          .agg(count(lit(1)).as("c"))
+      }
+
+    counted
+      .withColumn("jaccard", jaccard(col("c"), col("na"), col("nb")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
   }
 
-  /** [[minhashProbeFromSignatures]] with the signatures computed inline
-    * from the corpus (portable md5 family, so the whole probe is
-    * oracle-reproducible). Convenience for one-off probes; a serving
-    * path should materialize the signature table once and call
-    * [[minhashProbeFromSignatures]] directly. */
-  def minhashProbePortable(df: DataFrame, textCol: String, idCol: String,
-      queryId: Long, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.25, shingle: Int = 1): DataFrame =
-    minhashProbeFromSignatures(
-      minhashSignaturesPortable(df, textCol, idCol, numHashes, shingle),
-      queryId, numHashes, bands, threshold)
+  /** Exploded distinct word-n-gram table (id, nsz, g) — the GRAM INDEX
+    * artifact of the exact-Jaccard tier (the analog of the MinHash
+    * signature index): tokenize + n-gram the corpus ONCE, persist, and
+    * let pairs / cross / incremental consumers filter the artifact
+    * instead of re-exploding text per call. */
+  def ngramGramTable(df0: DataFrame, textCol: String, idCol: String,
+      n: Int = 3): DataFrame = {
+    val df = parallelize(df0)
+    df.select(col(idCol).as("id"), wordNgrams(col(textCol), n).as("grams"))
+      .select(col("id"), size(col("grams")).as("nsz"),
+        explode(col("grams")).as("g"))
+  }
 
-  /** MinHash dedup: drop every doc that is a near-duplicate of a
-    * smaller-id doc (greedy representative-by-min-id; the standard
-    * single-pass approximation of connected-component dedup). */
-  def minhashDedup(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
-      shingle: Int = 1): DataFrame =
-    dedupFromPairs(df,
-      minhashDupPairs(df, textCol, idCol, numHashes, bands, threshold,
-        shingle = shingle), idCol)
+  /** Direct count-join exact-Jaccard pairs over a PRECOMPUTED gram
+    * table ([[ngramGramTable]] output or a slice of it), df from a
+    * window count over the table itself. */
+  def ngramJaccardPairsFromGrams(grams: DataFrame, threshold: Double,
+      maxDf: Int = 1000): DataFrame =
+    ngramJaccardPairsOverGrams(grams, threshold, maxDf,
+      prefixFilter = Some(false))
+
+  // ------------------------------------- embedding cosine near-duplicates
+
+  /** Embedding cosine near-dups over a sign-sketch bucket table (id, t,
+    * bucket) ([[embeddingBucketTable]]): keys = (table, bucket) of
+    * random-hyperplane LSH (`planes` sign bits per table, `tables`
+    * independent tables — see [[Vectors.signBucket]]); recall grows with
+    * `tables`, cost is Σ bucket² per table. The join carries ids only;
+    * `vectors` re-attaches the vectors to the candidate pairs for the
+    * exact cosine verify (a function of the pairs, so a sharded delta
+    * can fetch only the old vectors they name). No caps: bucket
+    * membership is a per-row property of the seeded hyperplane family,
+    * so the merge law is exact. */
+  final case class Embedding(vecCol: String, threshold: Double,
+      vectors: DataFrame => DataFrame) extends Scheme {
+    def value = vecCol
+    def keys = Seq("t", "bucket")
+    def scoreName = "cos"
+    def score(a: Column, b: Column, spark: SparkSession): Column =
+      Vectors.cosineNative(spark, a, b)
+    def keep(s: Column): Column = s >= threshold
+    override def payloadSource = Some(vectors)
+  }
+
+  object Embedding {
+    /** The scheme over one vector table (id, `vecCol`) holding every id
+      * the pairs can name. */
+    def apply(vecCol: String, threshold: Double, vecs: DataFrame): Embedding =
+      Embedding(vecCol, threshold, attachValues(_, vecCol, vecs, vecs))
+  }
+
+  /** Embedding near-dup pairs (cosine ≥ `threshold`) sketched inline
+    * from `df` (`idCol`, `vecCol`). */
+  def embeddingDupPairs(df: DataFrame, vecCol: String, idCol: String,
+      threshold: Double = 0.95, planes: Int = 12, tables: Int = 4,
+      dim: Int = 64, seed: Long = 42L): DataFrame = {
+    // parallelize: the sign-sketch projection (tables × planes dot
+    // products per row) is CPU-dense and a single-file vector fixture
+    // plans to ONE scan task (no-op at corpus scale)
+    val vecs = Caches.track(
+      parallelize(df).select(col(idCol).as("id"), col(vecCol)))
+    Embedding(vecCol, threshold, vecs).pairs(
+      embeddingBucketTable(vecs, vecCol, "id", planes, tables, dim, seed))
+  }
+
+  /** PRODUCTION sketch-width sizing rule: planes = `base` +
+    * floor(log2(n / n0)), clamped to [base, max] — each corpus doubling
+    * past `n0` adds one sign bit, keeping expected bucket occupancy
+    * (and so the candidate join's Σ bucket², the quadratic term)
+    * ~constant as the corpus grows. Integer-exact (bit-length, no
+    * floating log) so an engine-independent oracle derives the SAME
+    * width from its own count(*): DuckDB's
+    * `least(max, base + length(bin(n // n0)) - 1)` is this function.
+    * Feed `n` from [[graft.sources.ParquetMeta.rowCount]] (footer
+    * metadata, no scan job). */
+  def sizedPlanes(n: Long, base: Int = 4, n0: Long = 1000,
+      max: Int = 16): Int = {
+    val k = n / n0
+    val extra =
+      if (k >= 1) 63 - java.lang.Long.numberOfLeadingZeros(k) else 0
+    math.min(max, base + extra)
+  }
+
+  /** [[embeddingBucketTable]] with an EXPLICIT hyperplane family — the
+    * entry point for width-sized sketches drawn as a PREFIX of one
+    * fixed `max`-wide family (`Vectors.hyperplanes(seed, tables, max,
+    * dim).map(_.take(planes))`): plane p of table t is the same vector
+    * at every width, so a width-parametric oracle can embed the full
+    * family once and gate terms on `p < width`. (Generating a fresh
+    * `planes`-wide family instead would shift every table's planes —
+    * `Array.fill(tables, planes, dim)` draws sequentially.) */
+  def embeddingBucketTableHyper(vecs0: DataFrame, vecCol: String,
+      idCol: String, hyper: Array[Array[Array[Double]]]): DataFrame = {
+    // parallelize at the sketch itself (CPU-dense: tables × planes dot
+    // products per row), so every caller gets the fan-out (r20)
+    signBuckets(parallelize(vecs0), vecCol, idCol, hyper)
+  }
+
+  private def signBuckets(vecs: DataFrame, vecCol: String, idCol: String,
+      hyper: Array[Array[Array[Double]]]): DataFrame = vecs
+    .withColumn("tb", explode(array(hyper.indices.map(t =>
+      struct(lit(t).as("t"),
+        Vectors.signBucketNative(vecs.sparkSession, col(vecCol), hyper, t)
+          .as("bucket"))): _*)))
+    .select(col(idCol).as("id"), col("tb.t"), col("tb.bucket"))
+
+  /** Sign-sketch BUCKET TABLE (id, t, bucket) — the persisted artifact of
+    * the embedding tier (the analog of the MinHash signature index):
+    * bucket membership is a per-row property of the seeded hyperplane
+    * family, so the table is computed once per corpus snapshot,
+    * persisted, and consumed by pairs / cross / incremental without ever
+    * re-sketching the corpus. `vecs` must carry (`idCol`, `vecCol`). */
+  def embeddingBucketTable(vecs: DataFrame, vecCol: String, idCol: String,
+      planes: Int = 12, tables: Int = 4, dim: Int = 64,
+      seed: Long = 42L): DataFrame =
+    embeddingBucketTableHyper(vecs, vecCol, idCol,
+      Vectors.hyperplanes(seed, tables, planes, dim))
+
+  /** Write the sign-sketch BUCKET TABLE as the embedding index,
+    * partitioned by (t, shard = xxhash64(bucket) % IndexShards) — a
+    * vector contributes ONE bucket per table, so ingest slices and
+    * probes touch few of the (tables × shards) directories. */
+  def writeShardedBucketIndex(buckets: DataFrame, path: String,
+      mode: String = "overwrite"): Unit =
+    Sharded.writeByKey(buckets.select("id", "t", "bucket"), path, "bucket",
+      IndexShards, extraPartitionCols = Seq("t"), mode = mode)
+
+  /** Write a VECTOR table (id, vecCol) partitioned by id-hash shard —
+    * the fetch-side artifact: candidate verification pulls only the
+    * shards the candidate ids touch ([[Sharded.fetchKeys]]). */
+  def writeShardedVectors(vecs: DataFrame, path: String,
+      mode: String = "overwrite"): Unit =
+    Sharded.writeByKey(vecs, path, "id", IndexShards, mode = mode)
+
+  /** Ingest-time embedding DELTA against the sharded bucket index +
+    * sharded vector table: [[Scheme.deltaSharded]] with the exact-cosine
+    * verify fetching ONLY the vectors its candidate pairs name — a
+    * two-phase pruned fetch (bounded shard-set job, then a pruned scan +
+    * semi-join) instead of a full old-vector scan. */
+  def embeddingDeltaSharded(spark: SparkSession, bucketIndexPath: String,
+      vecsPath: String, bucketsNew: DataFrame, vecsNew: DataFrame,
+      vecCol: String, threshold: Double): DataFrame = {
+    // id_b is always a slice id; id_a is old (cross) or new (self). The
+    // pairs feed the fetch and the attach: computed once.
+    val nv = vecsNew.select(col("id"), col(vecCol))
+    Embedding(vecCol, threshold, { (pairs0: DataFrame) =>
+      val pairs = Caches.track(pairs0)
+      attachValues(pairs, vecCol, Sharded.fetchKeys(spark, vecsPath,
+          pairs.select(col("id_a").as("id")), "id", IndexShards)
+        .select(col("id"), col(vecCol)).unionByName(nv), nv)
+    }).deltaSharded(spark, bucketIndexPath, bucketsNew)
+  }
+
+  /** CROSS-CORPUS embedding near-dup pairs: vectors in `incoming` whose
+    * cosine against some `existing` vector is ≥ `threshold`, sketched
+    * inline with one seeded hyperplane family on both sides so buckets
+    * align. Returns (id_a from `existing`, id_b from `incoming`, cos). */
+  def embeddingCrossDupPairs(existing: DataFrame, incoming: DataFrame,
+      vecCol: String, idCol: String, threshold: Double = 0.95,
+      planes: Int = 12, tables: Int = 4, dim: Int = 64,
+      seed: Long = 42L): DataFrame = {
+    def vecs(df: DataFrame) =
+      Caches.track(df.select(col(idCol).as("id"), col(vecCol)))
+    val hyper = Vectors.hyperplanes(seed, tables, planes, dim)
+    val (a, b) = (vecs(existing), vecs(incoming))
+    Embedding(vecCol, threshold, attachValues(_, vecCol, a, b))
+      .cross(signBuckets(a, vecCol, "id", hyper),
+        signBuckets(b, vecCol, "id", hyper))
+  }
 
   /** Dedup from an already-computed near-dup pairs table (id_a < id_b):
     * one anti-join. At corpus scale the pairs table is the expensive
@@ -746,7 +1098,7 @@ object Dedup {
 
   /** Point probe over a [[writeShardedAdjacency]] artifact: the query
     * id's shard is computed by the ENGINE's own hash in one 1-row job
-    * (as [[probeShardedBandIndex]] does), then the scan pins the literal
+    * (as [[pointRead]] does), then the scan pins the literal
     * (shard, doc_id) — one directory of the index, no join. */
   def probeAdjacency(spark: org.apache.spark.sql.SparkSession,
       path: String, docId: Long, shards: Int = 16): DataFrame = {
@@ -1009,989 +1361,11 @@ object Dedup {
         .select(idCol),
       Seq(idCol), "left_anti")
 
-  // ------------------------------------------------------------- SimHash
-
-  /** 64-bit SimHash of the word-token multiset: per token a 64-bit hash
-    * votes ±1 per bit position; fingerprint bit j = sign of the vote sum.
-    * Pure higher-order-function fold — one pass, no shuffle, no UDF. */
-  def simhash64(text: Column): Column = {
-    val toks = tokens(text)
-    val votes = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, j) => a + when(call_function("shiftright", h, j).bitwiseAND(lit(1L)) === 1L, 1L)
-            .otherwise(-1L))
-      })
-    aggregate(sequence(lit(0), lit(63)), lit(0L),
-      (acc, j) => acc + when(element_at(votes, j + 1) > 0,
-        call_function("shiftleft", lit(1L), j)).otherwise(0L))
-  }
-
-  /** Corpus-scale SimHash fingerprint table: explode tokens → one
-    * codegen'd xxhash64 per token → 64 conditional-sum aggregates per doc
-    * (±1 vote per bit) → fingerprint assembly. Same scaling argument as
-    * [[minhashSignatures]]: whole-stage codegen, map-side partial sums,
-    * shuffle bounded by |docs| × 64 longs. */
-  def simhashFingerprints(df0: DataFrame, textCol: String,
-      idCol: String): DataFrame = {
-    val df = parallelize(df0)
-    val exploded = df.select(col(idCol).as("id"),
-        explode(tokens(col(textCol))).as("t"))
-      .select(col("id"), xxhash64(col("t")).as("h"))
-    val votes = (0 until 64).map(j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"v$j"))
-    val fp = (0 until 64).map(j =>
-      when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-    exploded.groupBy(col("id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("id"), fp.as("fp"))
-  }
-
-  /** SimHash near-dup pairs with Hamming distance ≤ `maxHamming`.
-    * Blocking by the pigeonhole principle: split the `bits`-wide
-    * fingerprint into `maxHamming+1` chunks — any pair within distance k
-    * agrees on at least one chunk, so the self-join on (chunk index,
-    * chunk value) is lossless. Verification = `bit_count(a XOR b)`. */
-  def simhashDupPairs(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs(simhashFingerprints(df, textCol, idCol), 64, maxHamming)
-
-  /** Pigeonhole chunk-join over a fingerprint table (`id`, `fp`). */
-  private def hammingPairs(fpTable: DataFrame, bits: Int,
-      maxHamming: Int): DataFrame =
-    hammingPairsCross(fpTable, None, bits, maxHamming)
-
-  /** Self- or cross-corpus pigeonhole chunk join over fingerprint tables
-    * (`fpB0 = None` → canonical id_a < id_b self-pairs; `Some` → A×B).
-    * Same shape as [[bandedSigPairsCross]] for the MinHash tier. */
-  private def hammingPairsCross(fpA0: DataFrame, fpB0: Option[DataFrame],
-      bits: Int, maxHamming: Int): DataFrame = {
-    val chunks = maxHamming + 1
-    val width = bits / chunks
-    // parallelize: fingerprint tables read off a ~1-file artifact at
-    // fixture scale (see bandedSigPairsCross note); no-op at corpus scale
-    def chunked(t: DataFrame): DataFrame =
-      graft.ops.Caches.track(parallelize(t))
-      .withColumn("chunk", explode(transform(
-        sequence(lit(0), lit(chunks - 1)),
-        c => struct(c.as("ci"),
-          call_function("shiftrightunsigned", col("fp"), c * lit(width))
-            .bitwiseAND(lit((1L << width) - 1)).as("cv")))))
-      .select(col("id"), col("fp"), col("chunk.ci"), col("chunk.cv"))
-    val ca = chunked(fpA0)
-    val cb = fpB0.map(chunked).getOrElse(ca)
-
-    val joined = pinned(ca
-      .select(col("ci"), col("cv"), col("id").as("id_a"),
-        col("fp").as("fp_a")), col("ci"), col("cv"))
-      .join(pinned(cb.select(col("ci"), col("cv"), col("id").as("id_b"),
-        col("fp").as("fp_b")), col("ci"), col("cv")), Seq("ci", "cv"))
-    (if (fpB0.isEmpty) joined.filter(col("id_a") < col("id_b")) else joined)
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
-  /** [[simhashDupPairsPortable]] over a PRECOMPUTED (id, fp) fingerprint
-    * table — the persisted-artifact entry point (same discipline as
-    * [[minhashDupPairsPortableFromSignatures]]). */
-  def simhashDupPairsPortableFromFingerprints(fps: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs(fps, 60, maxHamming)
-
-  /** SimHash point PROBE against a PRECOMPUTED fingerprint table — the
-    * fingerprint-tier twin of [[minhashProbeFromSignatures]]: the query
-    * doc's fp is collected (one bounded row), its `maxHamming`+1
-    * pigeonhole chunks become literal scan predicates (candidacy = ANY
-    * chunk equal, lossless for distance ≤ maxHamming by the pigeonhole
-    * principle), and verification is `bit_count(fp XOR q)` fused into
-    * the same scan — no join, no shuffle, no per-probe corpus re-vote.
-    * Returns (doc_id, hamming), query row excluded. */
-  def simhashProbeFromFingerprints(fps: DataFrame, queryId: Long,
-      maxHamming: Int = 3, bits: Int = 60): DataFrame = {
-    val q = fps.filter(col("id") === queryId).select("fp").head().getLong(0)
-    probeFingerprintTable(fps, q, bits, maxHamming,
-      excludeId = Some(queryId))
-  }
-
-  /** [[simhashProbeFromFingerprints]] with the query FINGERPRINT given
-    * directly (the incoming-doc serving shape — the query need not be a
-    * corpus row): pigeonhole chunk candidacy as scan-fused literal
-    * predicates over the flat fingerprint table, exact hamming verify. */
-  def probeFingerprintTable(fps: DataFrame, queryFp: Long, bits: Int = 60,
-      maxHamming: Int = 3, excludeId: Option[Long] = None): DataFrame = {
-    val chunks = maxHamming + 1
-    val width = bits / chunks
-    val mask = (1L << width) - 1
-    val anyChunk = (0 until chunks).map { c =>
-      call_function("shiftrightunsigned", col("fp"), lit(c * width))
-        .bitwiseAND(lit(mask)) === lit((queryFp >>> (c * width)) & mask)
-    }.reduce(_ || _)
-    excludeId.map(id => fps.filter(col("id") =!= id)).getOrElse(fps)
-      .filter(anyChunk)
-      .withColumn("hamming",
-        bit_count(col("fp").bitwiseXOR(lit(queryFp))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id").as("doc_id"), col("hamming"))
-  }
-
-  /** Write the pigeonhole CHUNK INDEX of a fingerprint table as
-    * shard-partitioned parquet — the SimHash analog of
-    * [[writeShardedBandIndex]]: one row per (doc, chunk) carrying the
-    * doc's full fingerprint (so verification needs no second lookup),
-    * partitioned on disk by (ci, shard = xxhash64(cv) % shards). A doc
-    * contributes exactly `maxHamming`+1 chunk values, so both probes and
-    * realistic ingest slices touch few of the (chunks × shards)
-    * directories and the old-corpus read prunes AT THE SCAN. */
-  def writeShardedChunkIndex(fps: DataFrame, path: String, bits: Int = 60,
-      maxHamming: Int = 3, shards: Int = 16,
-      mode: String = "overwrite"): Unit = {
-    val chunks = maxHamming + 1
-    val width = bits / chunks
-    fps.withColumn("chunk", explode(transform(
-        sequence(lit(0), lit(chunks - 1)),
-        c => struct(c.as("ci"),
-          call_function("shiftrightunsigned", col("fp"), c * lit(width))
-            .bitwiseAND(lit((1L << width) - 1)).as("cv")))))
-      .select(col("id"), col("fp"), col("chunk.ci"), col("chunk.cv"),
-        Sharded.shardOf(col("chunk.cv"), shards).as("shard"))
-      .repartition(col("ci"), col("shard")) // one file per directory
-      .write.partitionBy("ci", "shard").mode(mode).parquet(path)
-    graft.sources.Pq.invalidate(path)
-  }
-
-  /** Point probe over a [[writeShardedChunkIndex]] artifact — the
-    * simhash serving primitive the regime measurements say this layout
-    * is FOR (SURVEY "Round-10 measurements": the chunk index loses to
-    * the flat fingerprint scan for batch appends but a probe touches
-    * ≤ `chunks` of the chunks×shards directories): the query fingerprint's chunk
-    * values are bit slices computed in plain Scala, their shard values
-    * by the ENGINE's own xxhash64 (one 1-row job), then ONE Or-of-And
-    * scan prunes at the partition level and verifies exact hamming on
-    * the carried fingerprint — no second lookup, no join. Result ≡
-    * [[simhashProbeFromFingerprints]] row-for-row. */
-  def probeShardedChunkIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, queryFp: Long, bits: Int = 60, maxHamming: Int = 3,
-      shards: Int = 16, excludeId: Option[Long] = None): DataFrame = {
-    val chunks = maxHamming + 1
-    val width = bits / chunks
-    val mask = (1L << width) - 1
-    val qcv = (0 until chunks).map(c => (c, (queryFp >>> (c * width)) & mask))
-    val qShards = spark.range(1)
-      .select(qcv.map { case (_, v) => Sharded.shardOf(lit(v), shards) }: _*)
-      .head().toSeq.map(_.asInstanceOf[Int])
-    val cands = graft.sources.Pq.read(spark, path)
-      .filter(qcv.zipWithIndex.map { case ((c, v), i) =>
-        col("ci") === lit(c) && col("shard") === lit(qShards(i)) &&
-          col("cv") === lit(v)
-      }.reduce(_ || _))
-      .dropDuplicates("id")
-    excludeId.map(id => cands.filter(col("id") =!= id)).getOrElse(cands)
-      .withColumn("hamming",
-        bit_count(col("fp").bitwiseXOR(lit(queryFp))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id").as("doc_id"), col("hamming"))
-  }
-
-  /** Ingest-time SimHash DELTA (cross ∪ self) against the SHARDED CHUNK
-    * INDEX: the slice's fingerprints chunk to a bounded
-    * (≤ chunks × `shards`) set of (ci, shard) pairs — literal partition
-    * predicates over the index — and candidacy joins on (ci, cv).
-    * Semantics = the cross ∪ self arms of
-    * [[simhashPairsIncrementalPortable]] exactly (pigeonhole candidacy
-    * is a per-pair property; no caps to approximate around). */
-  def simhashDeltaSharded(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newFps0: DataFrame, bits: Int = 60,
-      maxHamming: Int = 3, shards: Int = 16): DataFrame = {
-    val chunks = maxHamming + 1
-    val width = bits / chunks
-    // parallelize: slice fingerprints off a ~1-file artifact at fixture
-    // scale (see bandedSigPairsCross note); no-op at corpus scale
-    val newFps = graft.ops.Caches.track(parallelize(newFps0))
-    val nb = graft.ops.Caches.track(newFps
-      .withColumn("chunk", explode(transform(
-        sequence(lit(0), lit(chunks - 1)),
-        c => struct(c.as("ci"),
-          call_function("shiftrightunsigned", col("fp"), c * lit(width))
-            .bitwiseAND(lit((1L << width) - 1)).as("cv")))))
-      .select(col("id"), col("fp"), col("chunk.ci"), col("chunk.cv"),
-        Sharded.shardOf(col("chunk.cv"), shards).as("shard")))
-    val touched = nb.select("ci", "shard").distinct().collect()
-      .map(r => (r.getInt(0), r.getInt(1))).sortBy(identity)
-    val pruned = graft.sources.Pq.read(spark, indexPath)
-      .filter(touched.map { case (ci, sh) =>
-        col("ci") === lit(ci) && col("shard") === lit(sh)
-      }.reduce(_ || _))
-    val cross = pruned
-      .select(col("ci"), col("cv"), col("id").as("id_a"),
-        col("fp").as("fp_a"))
-      .join(nb.select(col("ci"), col("cv"), col("id").as("id_b"),
-        col("fp").as("fp_b")), Seq("ci", "cv"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming",
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("hamming"))
-    val newSelf = hammingPairs(newFps, bits, maxHamming)
-    cross.unionByName(newSelf)
-  }
-
-  /** CROSS-CORPUS SimHash pairs (portable 60-bit md5 family): incoming
-    * docs within `maxHamming` of some existing doc — the SimHash twin of
-    * [[minhashCrossDupPairsPortable]]. Returns (id_a from `existing`,
-    * id_b from `incoming`, hamming). */
-  def simhashCrossDupPairsPortable(existing: DataFrame, incoming: DataFrame,
-      textCol: String, idCol: String, maxHamming: Int = 3): DataFrame =
-    hammingPairsCross(
-      simhashFingerprintsPortable(existing, textCol, idCol),
-      Some(simhashFingerprintsPortable(incoming, textCol, idCol)),
-      60, maxHamming)
-
-  /** INCREMENTAL SimHash pairs maintenance — the same merge law as
-    * [[minhashPairsIncrementalPortable]]: oldPairs ∪ cross(old, new) ∪
-    * self(new) over id-disjoint fingerprint tables equals a from-scratch
-    * recompute EXACTLY (chunk-value candidacy is a per-pair property of
-    * the two fingerprints; this pipeline has no bucket caps). */
-  def simhashPairsIncrementalPortable(oldPairs: DataFrame,
-      oldFps: DataFrame, newFps: DataFrame,
-      maxHamming: Int = 3): DataFrame = {
-    val cross = hammingPairsCross(oldFps, Some(newFps), 60, maxHamming)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("hamming"))
-    val newSelf = hammingPairs(newFps, 60, maxHamming)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
-
-  /** First 60 bits of md5 as a long (15 hex chars — stays inside the
-    * signed-long budget both engines share; see [[hex32]]). */
-  def hex60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** [[simhashFingerprints]] with the portable md5-derived 60-bit hash:
-    * identical explode → 60 conditional-sum aggregates → fingerprint
-    * assembly, reproducible in any md5-capable engine. */
-  def simhashFingerprintsPortable(df0: DataFrame, textCol: String,
-      idCol: String): DataFrame = {
-    val df = parallelize(df0)
-    val exploded = df.select(col(idCol).as("id"),
-        explode(tokens(col(textCol))).as("t"))
-      .select(col("id"), hex60(col("t")).as("h"))
-    val votes = (0 until 60).map(j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"v$j"))
-    val fp = (0 until 60).map(j =>
-      when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-    exploded.groupBy(col("id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("id"), fp.as("fp"))
-  }
-
-  /** [[simhashDupPairs]] over the portable 60-bit fingerprint family
-    * (4 pigeonhole chunks of 15 bits at the default maxHamming=3). */
-  def simhashDupPairsPortable(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs(simhashFingerprintsPortable(df, textCol, idCol), 60,
-      maxHamming)
-
-  // ------------------------------------------- exact n-gram Jaccard pairs
-
-  /** Wrap the native [[graft.functions.NGramsExpr]] kernel as a Column
-    * (no session/registry needed — the expression rides the plan
-    * directly). */
-  private def ngramsNative(text: Column, n: Int, distinct: Boolean): Column = {
-    val shim = org.apache.spark.sql.graftshim.ColumnShim
-    // coalesce: the HOF reference form yields [] (not NULL) for null text
-    // (greatest() drops the null size inside the lambda) — preserve that
-    // contract exactly so kernels are interchangeable.
-    coalesce(
-      shim.column(graft.functions.NGramsExpr(
-        shim.expression(tokens(text)), shim.expression(lit(n)), distinct)),
-      typedLit(Seq.empty[String]))
-  }
-
-  /** Word n-grams of the normalized text WITH multiplicity (repetition
-    * metrics need duplicate grams; [[wordNgrams]] is the distinct form). */
-  def wordNgramsAll(text: Column, n: Int): Column =
-    ngramsNative(text, n, distinct = false)
-
-  /** Word n-grams (distinct) of the normalized text: native compiled
-    * kernel ([[graft.functions.NGramsExpr]] — one loop per row).
-    * [[wordNgramsHof]] is the built-in-HOF reference form; the kernel is
-    * asserted bit-identical to it in `NGramsExprSpec`, and every n-gram
-    * pipeline's DuckDB oracle locks the semantics end-to-end. */
-  def wordNgrams(text: Column, n: Int): Column =
-    ngramsNative(text, n, distinct = true)
-
-  /** Reference HOF form of [[wordNgrams]] (kept for the bit-identity
-    * spec; interpreted — ~2.5× slower per gram-explode pass at sf0.1).
-    *
-    * The tokenization is BOUND ONCE via a singleton-array lambda
-    * (`transform(array(tokens), toks -> ...)`): higher-order functions
-    * evaluate interpreted, and an expression subtree referenced at every
-    * gram position would re-run the regex split O(positions) times per row
-    * — observed as a single 550 s task at sf0.1. A lambda variable
-    * reference is O(1) against the already-evaluated array. */
-  def wordNgramsHof(text: Column, n: Int, distinct: Boolean = true): Column = {
-    val grams = transform(array(tokens(text)), toks =>
-      filter(
-        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-          i => when(i <= size(toks) - n,
-            concat_ws(" ", slice(toks, i + 1, lit(n))))),
-        g => g.isNotNull))
-    if (distinct) array_distinct(element_at(grams, 1))
-    else element_at(grams, 1)
-  }
-
-  /** Exact n-gram Jaccard near-dup pairs, `jaccard ≥ threshold`.
-    *
-    * Threshold-adaptive set-similarity join. Both paths are exact and
-    * count-based — J(a,b) = c / (|a| + |b| − c) needs only the shared-gram
-    * COUNT c per pair, never the gram arrays (an earlier version shuffled
-    * gram ARRAYS to every candidate and verified with interpreted
-    * array_intersect: 50× slower at sf0.1). Path choice (`prefixFilter`,
-    * default auto at threshold ≥ 0.3):
-    *
-    * DIRECT (low thresholds): explode distinct grams, attach each gram's
-    * global doc-frequency with a window count (partitioned by gram — the
-    * self-join on the gram key REUSES that hash partitioning, so the cap
-    * costs no extra Exchange), self-join on the gram, count rows per
-    * (id_a, id_b) — one codegen'd partial+final HashAggregate yields c for
-    * every co-occurring pair directly. At low t nearly every co-occurring
-    * pair must be counted anyway (prefixes are ~(1−t)·|g| long), so a
-    * candidate/verify split would RE-join candidates against the gram
-    * table and cost more than it saves — measured at sf0.1, t=0.1: 941 k
-    * of 941 k co-occurring pairs survive prefix candidacy.
-    *
-    * PREFIX (high thresholds — All-Pairs/PPJoin family): rank each doc's
-    * grams RAREST-FIRST by (global df, gram); candidate generation
-    * self-joins ONLY each doc's prefix — its first |g| − ⌈t·|g|⌉ + 1 grams
-    * in that order. Lossless for J ≥ t: a qualifying pair must share
-    * ≥ ⌈t·|x|⌉ grams, and a set missing all of its prefix can share at
-    * most ⌈t·|x|⌉ − 1. The grams EXCLUDED from prefixes are exactly the
-    * hottest ones, so the Σ df² join blowup collapses superlinearly as t
-    * grows. A min/max length-ratio filter (J ≤ min/max) prunes before
-    * pair-dedup; exact c is then re-derived per candidate by joining back
-    * to the full gram table on id_a then (id_b, gram).
-    *
-    * `maxDf` caps pathological blocking grams (boilerplate spam =
-    * quadratic hot keys). On the prefix path it affects only CANDIDATE
-    * RECALL (capped grams still count in c for surviving candidates); on
-    * the direct path a capped gram is excluded from c too — pairs whose
-    * ONLY shared grams are capped may slip below threshold (recall/cost
-    * knob; maxDf=∞ is fully exact). Float care: prefix length and
-    * length-ratio use ε-conservative ceil/compares so binary-float slop
-    * can only widen the candidate set, never lose a qualifying pair. */
-  def ngramJaccardPairs(df0: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 1000,
-      prefixFilter: Option[Boolean] = None): DataFrame =
-    ngramJaccardPairsOverGrams(ngramGramTable(df0, textCol, idCol, n),
-      threshold, maxDf, prefixFilter)
-
-  /** SUMMABLE gram-census artifact: (g, df) global doc-frequencies over
-    * a gram table. Per-slice censuses merge by addition
-    * ([[mergeGramCensus]]), which is what makes the df blocking cap
-    * maintainable at ingest time instead of re-counted per corpus pass:
-    * the census is computed once per snapshot, persisted beside the gram
-    * index, and a day's ingest touches |slice grams| + |changed census
-    * rows|, never the corpus. */
-  def ngramGramCensus(grams: DataFrame): DataFrame =
-    grams.groupBy("g").agg(count(lit(1)).as("df"))
-
-  /** Merge gram censuses by addition (doc-frequency of a gram in A ∪ B =
-    * df_A + df_B for id-disjoint corpora). */
-  def mergeGramCensus(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy("g").agg(sum(col("df")).as("df"))
-
-  /** Write the GRAM INDEX ([[ngramGramTable]] rows) as parquet
-    * partitioned by gram-hash shard. Selectivity honesty (see
-    * [[Sharded]]): a doc contributes HUNDREDS of distinct grams, so the
-    * layout prunes for probes and small slices but degrades to a full
-    * scan for large ingest slices — there the lever is the slice-side
-    * bloom semi-join, not the directory layout. Both the layout and the
-    * stress measurement carry that caveat. */
-  def writeShardedGramIndex(grams: DataFrame, path: String,
-      shards: Int = 16): Unit =
-    Sharded.writeByKey(grams.select("id", "nsz", "g"), path, "g", shards)
-
-  /** Write the summable GRAM CENSUS as parquet partitioned by the SAME
-    * gram-hash shard function as [[writeShardedGramIndex]] — per-shard
-    * censuses merge independently, and an append's census read prunes
-    * with the same shard set as its postings read. */
-  def writeShardedGramCensus(census: DataFrame, path: String,
-      shards: Int = 16): Unit =
-    Sharded.writeByKey(census.select("g", "df"), path, "g", shards)
-
-  /** Ingest-time exact-Jaccard DELTA (cross ∪ self) over the SHARDED
-    * gram index + census: the slice's grams touch a bounded (≤ `shards`)
-    * shard set, which prunes BOTH old-corpus reads (postings + census)
-    * at the scan; candidacy and blocking then proceed exactly as
-    * [[ngramPairsIncrementalWithCensus]] — pruning is lossless because a
-    * cross pair needs a SHARED gram (an old posting whose gram is not in
-    * any slice shard cannot share a gram with the slice), and every
-    * retained gram's census row lives in a retained shard. */
-  def ngramDeltaSharded(spark: org.apache.spark.sql.SparkSession,
-      gramIndexPath: String, censusPath: String, gramsNew0: DataFrame,
-      threshold: Double, maxDf: Int = 1000, shards: Int = 16): DataFrame = {
-    val gramsNew = graft.ops.Caches.track(gramsNew0)
-    val sliceShards = Sharded.touchedShards(gramsNew, "g", shards)
-    val gramsOld = Sharded.readTouched(spark, gramIndexPath, sliceShards)
-      .select("id", "nsz", "g")
-    val censusOld = Sharded.readTouched(spark, censusPath, sliceShards)
-      .select("g", "df")
-    val merged = graft.ops.Caches.track(
-      mergeGramCensus(censusOld, ngramGramCensus(gramsNew)))
-    // r19: shared-blocked delta — one census block + one cached slice
-    // gram table feed cross AND self. Canonicalizing the whole union is
-    // identical to canonicalizing only the cross rows (self pairs
-    // already satisfy id_a < id_b).
-    ngramJaccardDeltaFromGramsWithCensus(gramsOld, gramsNew, merged,
-        threshold, maxDf)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-  }
-
-  /** Direct count-join exact-Jaccard pairs with the df blocking cap read
-    * from a PRECOMPUTED census artifact ([[ngramGramCensus]] output or a
-    * merge of slices) instead of a fresh corpus-wide window count —
-    * semantics identical to [[ngramJaccardPairsFromGrams]] when `census`
-    * covers exactly the gram population of `grams`. */
-  def ngramJaccardPairsFromGramsWithCensus(grams: DataFrame,
-      census: DataFrame, threshold: Double, maxDf: Int = 1000): DataFrame =
-    jaccardFromCounts(pairCountsBlocked(
-      grams.join(census.filter(col("df") <= maxDf).select("g"), Seq("g"))),
-      threshold)
-
-  /** Cross(old, new) ∪ self(new) exact-Jaccard delta with the census
-    * block applied ONCE per side: the slice's blocked gram table is
-    * computed and cached once and feeds both branches — the separate
-    * cross+self encoding read the slice grams and the census twice each
-    * (r19, guide §2.4: two operations keyed the same way share one
-    * pass). Row-identical to
-    * [[ngramJaccardCrossPairsFromGramsWithCensus]] ∪
-    * [[ngramJaccardPairsFromGramsWithCensus]] (cross side keeps its
-    * A→id_a orientation; callers canonicalize if they need to). */
-  def ngramJaccardDeltaFromGramsWithCensus(gramsOld: DataFrame,
-      gramsNew: DataFrame, census: DataFrame, threshold: Double,
-      maxDf: Int = 1000): DataFrame = {
-    val ok = census.filter(col("df") <= maxDf).select("g")
-    val blockedNew = graft.ops.Caches.track(
-      pinned(gramsNew.join(ok, Seq("g")), col("g")))
-    // blockedNew is ALREADY pinned (and cached with that layout) — no
-    // further exchange on either self-join side (r20). Cross and self
-    // CO-AGGREGATE through one exchange: the two candidate streams'
-    // (id_a, id_b) key spaces are disjoint (cross pairs old×new ids,
-    // self pairs new×new — the corpora are id-disjoint by the merge-law
-    // contract), so one groupBy over their union is row-identical to
-    // unioning two separate groupBys, for one final-agg exchange + AQE
-    // stage instead of two (r20, guide §2.4).
-    val cols = Seq("id_a", "id_b", "na", "nb").map(col)
-    val crossPairs = pinned(gramsOld.join(ok, Seq("g")), col("g"))
-      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-      .join(blockedNew.select(col("g"), col("id").as("id_b"),
-        col("nsz").as("nb")), Seq("g"))
-      .select(cols: _*)
-    val selfPairs = blockedNew
-      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-      .join(blockedNew.select(col("g"), col("id").as("id_b"),
-        col("nsz").as("nb")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .select(cols: _*)
-    jaccardFromCounts(
-      crossPairs.unionByName(selfPairs)
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(count(lit(1)).as("c")),
-      threshold)
-  }
-
-  /** Exchange pin for the COMPUTE-DENSE candidate joins: their per-key
-    * work is quadratic in the posting-list length while their shuffle
-    * BYTES stay small, so AQE's byte-based coalescing would collapse
-    * exactly the stages that need the cores onto a handful of tasks
-    * (r19, measured: the cc-incremental delta's pair-count stage ran 3
-    * tasks × ~0.6 s). An explicit-numPartitions repartition is exempt
-    * from AQE coalescing.
-    *
-    * The pin count is SIZE-DERIVED (r20; r19 pinned flat
-    * numShufflePartitions, which put 32-task exchanges under KB-sized
-    * incremental delta frames — pure task tax, q_dedup_ngram_pairs 0.77×
-    * in the r19 verdict): one partition per 64 KB of plan-estimated
-    * input, capped at the session's shuffle.partitions — the
-    * cluster-sized knob. Bytes understate quadratic per-key work, which
-    * is why the divisor sits ~1000× below a normal shuffle-partition
-    * target: any input ≥ partitions·64 KB still pins the full cluster
-    * width, only genuinely tiny frames stop fanning out. */
-  private def pinned(df: DataFrame, keys: Column*): DataFrame = {
-    val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = ((est / (64L << 10)) + 1).min(BigInt(cap)).max(BigInt(1)).toInt
-    df.repartition(n, keys: _*)
-  }
-
-  private def pairCountsBlocked(blocked0: DataFrame): DataFrame =
-    pairCountsPrePinned(pinned(blocked0, col("g")))
-
-  /** [[pairCountsBlocked]] body for inputs the caller has ALREADY
-    * pinned/partitioned by `g` — both self-join sides read the same
-    * frame, so no further exchange is added here. */
-  private def pairCountsPrePinned(blocked: DataFrame): DataFrame =
-    blocked
-      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-      .join(blocked.select(col("g"), col("id").as("id_b"),
-        col("nsz").as("nb")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("c"))
-
-  private def jaccardFromCounts(counted: DataFrame,
-      threshold: Double): DataFrame = counted
-    .withColumn("jaccard",
-      col("c").cast("double") / (col("na") + col("nb") - col("c")))
-    .filter(col("jaccard") >= threshold)
-    .select("id_a", "id_b", "jaccard")
-
-  /** Full threshold-adaptive exact-Jaccard join (direct OR prefix-filter
-    * path) over a PRECOMPUTED gram table — the artifact-consuming form
-    * of [[ngramJaccardPairs]]. */
-  def ngramJaccardPairsOverGrams(grams: DataFrame, threshold: Double,
-      maxDf: Int = 1000,
-      prefixFilter: Option[Boolean] = None): DataFrame = {
-    val usePrefix = prefixFilter.getOrElse(threshold >= 0.3)
-    val exploded = grams
-      .pipe(graft.ops.Caches.track) // feeds candidate generation and the verify join sides
-    val withDf = exploded
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
-
-    def pairCounts(blocked: DataFrame): DataFrame = blocked
-      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-      .join(blocked.select(col("g"), col("id").as("id_b"),
-        col("nsz").as("nb")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("c"))
-
-    val counted =
-      if (!usePrefix) pairCounts(withDf.filter(col("df") <= maxDf))
-      else {
-        val prefixLen =
-          col("nsz") - ceil(col("nsz") * lit(threshold) - lit(1e-9)) + 1
-        val prefix = withDf
-          .withColumn("pos", row_number().over(
-            Window.partitionBy("id").orderBy(col("df"), col("g"))))
-          .filter(col("pos") <= prefixLen && col("df") <= maxDf)
-          .select("g", "id", "nsz")
-        val candidates = prefix
-          .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-          .join(prefix.select(col("g"), col("id").as("id_b"),
-            col("nsz").as("nb")), Seq("g"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(least(col("na"), col("nb")) >=
-            greatest(col("na"), col("nb")) * lit(threshold) - lit(1e-9))
-          .select("id_a", "id_b")
-          .distinct()
-        candidates
-          .join(exploded.select(col("id").as("id_a"), col("nsz").as("na"),
-            col("g")), Seq("id_a"))
-          .join(exploded.select(col("id").as("id_b"), col("nsz").as("nb"),
-            col("g")), Seq("id_b", "g"))
-          .groupBy("id_a", "id_b", "na", "nb")
-          .agg(count(lit(1)).as("c"))
-      }
-
-    counted
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** CROSS-CORPUS exact n-gram Jaccard pairs (direct count-join path):
-    * pairs (a ∈ existing, b ∈ incoming) with J ≥ `threshold`. The df
-    * blocking cap is computed over the MERGED gram census
-    * (existing ∪ incoming) so candidacy matches a whole-corpus
-    * recompute — at scale that census is the maintained artifact (per-
-    * slice gram counts are summable), updated per ingest instead of
-    * re-counted. */
-  /** Exploded distinct word-n-gram table (id, nsz, g) — the GRAM INDEX
-    * artifact of the exact-Jaccard tier (the analog of the MinHash
-    * signature index): tokenize + n-gram the corpus ONCE, persist, and
-    * let pairs / cross / incremental consumers filter the artifact
-    * instead of re-exploding text per call. */
-  def ngramGramTable(df0: DataFrame, textCol: String, idCol: String,
-      n: Int = 3): DataFrame = {
-    val df = parallelize(df0)
-    df.select(col(idCol).as("id"), wordNgrams(col(textCol), n).as("grams"))
-      .select(col("id"), size(col("grams")).as("nsz"),
-        explode(col("grams")).as("g"))
-  }
-
-  /** Direct count-join exact-Jaccard pairs over a PRECOMPUTED gram
-    * table ([[ngramGramTable]] output or a slice of it). */
-  def ngramJaccardPairsFromGrams(grams: DataFrame, threshold: Double,
-      maxDf: Int = 1000): DataFrame =
-    ngramJaccardPairsOverGrams(grams, threshold, maxDf,
-      prefixFilter = Some(false))
-
-  /** [[ngramJaccardCrossPairs]] over PRECOMPUTED gram tables. The merged
-    * census is re-counted inline here; the maintained-artifact form is
-    * [[ngramJaccardCrossPairsFromGramsWithCensus]]. */
-  def ngramJaccardCrossPairsFromGrams(gramsA: DataFrame, gramsB: DataFrame,
-      threshold: Double, maxDf: Int = 1000): DataFrame = {
-    val ea = graft.ops.Caches.track(gramsA)
-    val eb = graft.ops.Caches.track(gramsB)
-    ngramJaccardCrossPairsFromGramsWithCensus(ea, eb,
-      ngramGramCensus(ea.select("id", "nsz", "g")
-        .unionByName(eb.select("id", "nsz", "g"))),
-      threshold, maxDf)
-  }
-
-  /** Cross-corpus exact-Jaccard pairs with the df cap read from a
-    * PRECOMPUTED MERGED census ([[mergeGramCensus]] of the persisted
-    * old-corpus census and the slice's census) — the ingest-time shape:
-    * the old corpus contributes an artifact READ (gram postings + census
-    * rows), never a re-count. `census` must cover the gram population of
-    * `gramsA` ∪ `gramsB` for candidacy to match a whole-corpus
-    * recompute. */
-  def ngramJaccardCrossPairsFromGramsWithCensus(gramsA: DataFrame,
-      gramsB: DataFrame, census: DataFrame, threshold: Double,
-      maxDf: Int = 1000): DataFrame = {
-    val ok = census.filter(col("df") <= maxDf).select("g")
-    gramsA.join(ok, Seq("g"))
-      .select(col("g"), col("id").as("id_a"), col("nsz").as("na"))
-      .join(gramsB.join(ok, Seq("g"))
-        .select(col("g"), col("id").as("id_b"), col("nsz").as("nb")),
-        Seq("g"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  def ngramJaccardCrossPairs(existing: DataFrame, incoming: DataFrame,
-      textCol: String, idCol: String, n: Int = 3, threshold: Double = 0.2,
-      maxDf: Int = 1000): DataFrame =
-    ngramJaccardCrossPairsFromGrams(
-      ngramGramTable(existing, textCol, idCol, n),
-      ngramGramTable(incoming, textCol, idCol, n),
-      threshold, maxDf)
-
-  /** [[ngramPairsIncremental]] over PRECOMPUTED gram tables — the
-    * artifact-consuming form: one materialized gram index feeds old
-    * pairs, the cross step, and the new-slice self join. */
-  def ngramPairsIncrementalFromGrams(oldPairs: DataFrame,
-      gramsOld: DataFrame, gramsNew: DataFrame, threshold: Double,
-      maxDf: Int = 1000): DataFrame = {
-    val cross = ngramJaccardCrossPairsFromGrams(gramsOld, gramsNew,
-        threshold, maxDf)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-    val newSelf = ngramJaccardPairsFromGrams(gramsNew, threshold, maxDf)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
-
-  /** [[ngramPairsIncrementalFromGrams]] with the census itself a
-    * MAINTAINED artifact: `censusOld` is the persisted corpus census
-    * ([[ngramGramCensus]], computed once per snapshot), merged by
-    * ADDITION with the slice's census — the full ingest-time posture
-    * where nothing about the old corpus is re-aggregated. The merged
-    * census blocks the cross step AND the new-slice self step (the
-    * self step must see corpus-wide df for candidacy to match a
-    * whole-corpus recompute when the cap binds; in the cap-unbound
-    * regime all forms agree exactly, which is what the stress harness
-    * count-checks). */
-  def ngramPairsIncrementalWithCensus(oldPairs: DataFrame,
-      gramsOld: DataFrame, gramsNew: DataFrame, censusOld: DataFrame,
-      threshold: Double, maxDf: Int = 1000): DataFrame = {
-    val merged = graft.ops.Caches.track(
-      mergeGramCensus(censusOld, ngramGramCensus(gramsNew)))
-    val cross = ngramJaccardCrossPairsFromGramsWithCensus(gramsOld,
-        gramsNew, merged, threshold, maxDf)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-    val newSelf = ngramJaccardPairsFromGramsWithCensus(gramsNew, merged,
-      threshold, maxDf)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
-
-  /** INCREMENTAL n-gram Jaccard maintenance — the same merge law as
-    * [[minhashPairsIncrementalPortable]] for the exact-Jaccard tier:
-    * oldPairs ∪ cross(old, new) ∪ self(new) over id-disjoint corpora
-    * equals a from-scratch recompute in the df-cap-unbound regime
-    * (shared-gram candidacy and the Jaccard value are per-pair
-    * properties; the `maxDf` skew cap is the one corpus-dependent term —
-    * the cross step already blocks on the MERGED census, and a bound cap
-    * degrades exactly like the banded families' bucket caps). */
-  def ngramPairsIncremental(oldPairs: DataFrame, existing: DataFrame,
-      incoming: DataFrame, textCol: String, idCol: String, n: Int = 3,
-      threshold: Double = 0.2, maxDf: Int = 1000): DataFrame =
-    ngramPairsIncrementalFromGrams(oldPairs,
-      ngramGramTable(existing, textCol, idCol, n),
-      ngramGramTable(incoming, textCol, idCol, n),
-      threshold, maxDf)
-
-  // ------------------------------------- embedding cosine near-duplicates
-
-  /** Embedding near-dup pairs: cosine ≥ `threshold`, candidates blocked by
-    * random-hyperplane LSH (sign-bit sketch over `planes` hyperplanes per
-    * table, `tables` independent tables — see [[Vectors.signBucket]]).
-    * Recall grows with `tables`; cost is Σ bucket² per table. */
-  def embeddingDupPairs(df: DataFrame, vecCol: String, idCol: String,
-      threshold: Double = 0.95, planes: Int = 12, tables: Int = 4,
-      dim: Int = 64, seed: Long = 42L): DataFrame = {
-    // Same shape as minhashDupPairs: ids-only candidate self-join on the
-    // sketch buckets, vectors re-attached per distinct pair for the exact
-    // cosine verification (don't shuffle 64-float payloads through the
-    // pre-dedup candidate explosion).
-    // parallelize: the sign-sketch projection (tables × planes dot
-    // products per row) is CPU-dense and a single-file vector fixture
-    // plans to ONE scan task (no-op at corpus scale)
-    val vecs = graft.ops.Caches.track(
-      parallelize(df).select(col(idCol).as("id"), col(vecCol)))
-    embeddingDupPairsFromBuckets(
-      embeddingBucketTable(vecs, vecCol, "id", planes, tables, dim, seed),
-      vecs, vecCol, threshold)
-  }
-
-  /** PRODUCTION sketch-width sizing rule: planes = `base` +
-    * floor(log2(n / n0)), clamped to [base, max] — each corpus doubling
-    * past `n0` adds one sign bit, keeping expected bucket occupancy
-    * (and so the candidate join's Σ bucket², the quadratic term)
-    * ~constant as the corpus grows. Integer-exact (bit-length, no
-    * floating log) so an engine-independent oracle derives the SAME
-    * width from its own count(*): DuckDB's
-    * `least(max, base + length(bin(n // n0)) - 1)` is this function.
-    * Feed `n` from [[graft.sources.ParquetMeta.rowCount]] (footer
-    * metadata, no scan job). */
-  def sizedPlanes(n: Long, base: Int = 4, n0: Long = 1000,
-      max: Int = 16): Int = {
-    val k = n / n0
-    val extra =
-      if (k >= 1) 63 - java.lang.Long.numberOfLeadingZeros(k) else 0
-    math.min(max, base + extra)
-  }
-
-  /** [[embeddingBucketTable]] with an EXPLICIT hyperplane family — the
-    * entry point for width-sized sketches drawn as a PREFIX of one
-    * fixed `max`-wide family (`Vectors.hyperplanes(seed, tables, max,
-    * dim).map(_.take(planes))`): plane p of table t is the same vector
-    * at every width, so a width-parametric oracle can embed the full
-    * family once and gate terms on `p < width`. (Generating a fresh
-    * `planes`-wide family instead would shift every table's planes —
-    * `Array.fill(tables, planes, dim)` draws sequentially.) */
-  def embeddingBucketTableHyper(vecs0: DataFrame, vecCol: String,
-      idCol: String, hyper: Array[Array[Array[Double]]]): DataFrame = {
-    // parallelize: the sign-sketch projection (tables × planes dot
-    // products per row) is CPU-dense and a single-file vector input
-    // plans to ONE task (r20: applied at the sketch itself so every
-    // caller — pairs, sized, cross, incremental — gets the fan-out;
-    // no-op on already-split inputs and on pre-parallelized callers)
-    val vecs = parallelize(vecs0)
-    vecs
-      .withColumn("tb", explode(array(hyper.indices.map(t =>
-        struct(lit(t).as("t"),
-          Vectors.signBucketNative(vecs.sparkSession, col(vecCol), hyper, t)
-            .as("bucket"))): _*)))
-      .select(col(idCol).as("id"), col("tb.t"), col("tb.bucket"))
-  }
-
-  /** Sign-sketch BUCKET TABLE (id, t, bucket) — the persisted artifact of
-    * the embedding tier (the analog of the MinHash signature index):
-    * bucket membership is a per-row property of the seeded hyperplane
-    * family, so the table is computed once per corpus snapshot,
-    * persisted, and consumed by pairs / cross / incremental without ever
-    * re-sketching the corpus. `vecs` must carry (`idCol`, `vecCol`). */
-  def embeddingBucketTable(vecs: DataFrame, vecCol: String, idCol: String,
-      planes: Int = 12, tables: Int = 4, dim: Int = 64,
-      seed: Long = 42L): DataFrame =
-    embeddingBucketTableHyper(vecs, vecCol, idCol,
-      Vectors.hyperplanes(seed, tables, planes, dim))
-
-  /** [[embeddingDupPairs]] over a PRECOMPUTED bucket artifact — the
-    * candidate join reads (id, t, bucket) rows, and only the exact-cosine
-    * verify touches vectors (joined back by id from `vecs` = (id,
-    * `vecCol`)). */
-  def embeddingDupPairsFromBuckets(buckets0: DataFrame, vecs: DataFrame,
-      vecCol: String, threshold: Double): DataFrame = {
-    val buckets = pinned(buckets0, col("t"), col("bucket"))
-    val pairs = buckets.select(col("t"), col("bucket"), col("id").as("id_a"))
-      .join(buckets.select(col("t"), col("bucket"), col("id").as("id_b")),
-        Seq("t", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    verifyCosine(pairs, vecs, vecs, vecCol, threshold)
-  }
-
-  /** Cross-corpus pairs over PRECOMPUTED bucket artifacts (A = existing
-    * corpus — an index READ at ingest time; B = the slice). */
-  def embeddingCrossDupPairsFromBuckets(bucketsA: DataFrame,
-      vecsA: DataFrame, bucketsB: DataFrame, vecsB: DataFrame,
-      vecCol: String, threshold: Double): DataFrame = {
-    val pairs = bucketsA.select(col("t"), col("bucket"), col("id").as("id_a"))
-      .join(bucketsB.select(col("t"), col("bucket"), col("id").as("id_b")),
-        Seq("t", "bucket"))
-      .select("id_a", "id_b")
-      .distinct()
-    verifyCosine(pairs, vecsA, vecsB, vecCol, threshold)
-  }
-
-  /** Write the sign-sketch BUCKET TABLE ([[embeddingBucketTable]] rows)
-    * as parquet partitioned by (t, shard = xxhash64(bucket) % shards) —
-    * a vector contributes ONE bucket per table, so ingest slices and
-    * probes touch few of the (tables × shards) directories. */
-  def writeShardedBucketIndex(buckets: DataFrame, path: String,
-      shards: Int = 16, mode: String = "overwrite"): Unit =
-    Sharded.writeByKey(buckets.select("id", "t", "bucket"), path, "bucket",
-      shards, extraPartitionCols = Seq("t"), mode = mode)
-
-  /** Write a VECTOR table (id, vecCol) partitioned by id-hash shard —
-    * the fetch-side artifact: candidate verification pulls only the
-    * shards the candidate ids touch ([[Sharded.fetchKeys]]). */
-  def writeShardedVectors(vecs: DataFrame, path: String,
-      shards: Int = 16, mode: String = "overwrite"): Unit =
-    Sharded.writeByKey(vecs, path, "id", shards, mode = mode)
-
-  /** Ingest-time embedding DELTA (cross ∪ self) against the SHARDED
-    * bucket index + sharded vector table: the slice's buckets touch a
-    * bounded (≤ tables × `shards`) partition set (pruned candidate
-    * join), and the exact-cosine verify fetches ONLY the old vectors the
-    * candidates name — a two-phase pruned fetch (bounded shard-set job,
-    * then a pruned scan + semi-join) instead of a full old-vector scan.
-    * Semantics = the cross ∪ self arms of
-    * [[embeddingPairsIncrementalFromBuckets]] exactly (bucket membership
-    * is a per-row property of the seeded family; no caps). */
-  def embeddingDeltaSharded(spark: org.apache.spark.sql.SparkSession,
-      bucketIndexPath: String, vecsPath: String, bucketsNew0: DataFrame,
-      vecsNew: DataFrame, vecCol: String, threshold: Double,
-      shards: Int = 16): DataFrame = {
-    val bucketsNew = graft.ops.Caches.track(bucketsNew0)
-    val touched = bucketsNew
-      .select(col("t"), Sharded.shardOf(col("bucket"), shards).as("shard"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
-      .sortBy(identity)
-    val pruned = graft.sources.Pq.read(spark, bucketIndexPath)
-      .filter(touched.map { case (t, sh) =>
-        col("t") === lit(t) && col("shard") === lit(sh)
-      }.reduce(_ || _))
-    val candidates = graft.ops.Caches.track(pruned
-      .select(col("t"), col("bucket"), col("id").as("id_a"))
-      .join(bucketsNew.select(col("t"), col("bucket"),
-        col("id").as("id_b")), Seq("t", "bucket"))
-      .select("id_a", "id_b")
-      .distinct())
-    val vecsOldNeeded = Sharded.fetchKeys(spark, vecsPath,
-      candidates.select(col("id_a").as("id")), "id", shards)
-    val cross = verifyCosine(candidates, vecsOldNeeded, vecsNew, vecCol,
-        threshold)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("cos"))
-    val newSelf = embeddingDupPairsFromBuckets(bucketsNew, vecsNew, vecCol,
-      threshold)
-    cross.unionByName(newSelf)
-  }
-
-  private def verifyCosine(pairs: DataFrame, vecsA: DataFrame,
-      vecsB: DataFrame, vecCol: String, threshold: Double): DataFrame =
-    pairs
-      .join(vecsA.select(col("id").as("id_a"), col(vecCol).as("va")),
-        Seq("id_a"))
-      .join(vecsB.select(col("id").as("id_b"), col(vecCol).as("vb")),
-        Seq("id_b"))
-      .withColumn("cos",
-        Vectors.cosineNative(pairs.sparkSession, col("va"), col("vb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-
-  /** [[embeddingPairsIncremental]] with the old corpus's sketch read
-    * from the PERSISTED bucket artifact — the full ingest-time posture:
-    * the slice is sketched (slice-sized work), the old corpus
-    * contributes bucket-table and vector READS only. */
-  def embeddingPairsIncrementalFromBuckets(oldPairs: DataFrame,
-      bucketsOld: DataFrame, vecsOld: DataFrame, bucketsNew: DataFrame,
-      vecsNew: DataFrame, vecCol: String, threshold: Double): DataFrame = {
-    val cross = embeddingCrossDupPairsFromBuckets(bucketsOld, vecsOld,
-        bucketsNew, vecsNew, vecCol, threshold)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("cos"))
-    val newSelf = embeddingDupPairsFromBuckets(bucketsNew, vecsNew,
-      vecCol, threshold)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
-
-  /** CROSS-CORPUS embedding near-dup pairs: vectors in `incoming` whose
-    * cosine against some `existing` vector is ≥ `threshold` — the
-    * embedding-tier twin of [[minhashCrossDupPairs]]. Same hyperplane
-    * family (seeded) on both sides so sketch buckets align; candidates
-    * are A-buckets × B-buckets per table, ids-only until the exact cosine
-    * verify. Returns (id_a from `existing`, id_b from `incoming`, cos). */
-  def embeddingCrossDupPairs(existing: DataFrame, incoming: DataFrame,
-      vecCol: String, idCol: String, threshold: Double = 0.95,
-      planes: Int = 12, tables: Int = 4, dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    val spark = existing.sparkSession
-    val hyper = Vectors.hyperplanes(seed, tables, planes, dim)
-    def side(df: DataFrame) = {
-      val vecs = graft.ops.Caches.track(
-        df.select(col(idCol).as("id"), col(vecCol)))
-      val buckets = vecs
-        .withColumn("tb", explode(array((0 until tables).map(t =>
-          struct(lit(t).as("t"),
-            Vectors.signBucketNative(spark, col(vecCol), hyper, t)
-              .as("bucket"))): _*)))
-        .select(col("id"), col("tb.t"), col("tb.bucket"))
-      (vecs, buckets)
-    }
-    val (vecsA, bucketsA) = side(existing)
-    val (vecsB, bucketsB) = side(incoming)
-    bucketsA.select(col("t"), col("bucket"), col("id").as("id_a"))
-      .join(bucketsB.select(col("t"), col("bucket"), col("id").as("id_b")),
-        Seq("t", "bucket"))
-      .select("id_a", "id_b")
-      .distinct()
-      .join(vecsA.select(col("id").as("id_a"), col(vecCol).as("va")), Seq("id_a"))
-      .join(vecsB.select(col("id").as("id_b"), col(vecCol).as("vb")), Seq("id_b"))
-      .withColumn("cos", Vectors.cosineNative(spark, col("va"), col("vb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-  }
-
-  /** INCREMENTAL embedding near-dup maintenance — the same merge law as
-    * [[minhashPairsIncrementalPortable]], for the vector tier: given
-    * yesterday's pairs artifact over `existing` and today's id-disjoint
-    * `incoming` slice,
-    *
-    *   oldPairs ∪ cross(existing, incoming) ∪ self(incoming)
-    *
-    * equals a from-scratch [[embeddingDupPairs]] over the union EXACTLY:
-    * sketch-bucket membership is a per-row property of the seeded
-    * hyperplane family (same `seed` on every side), so per-pair candidacy
-    * is independent of corpus composition, and this pipeline has no
-    * bucket caps to approximate around. The three parts are id-disjoint
-    * (old×old, old×new, new×new) — no dedup pass needed. */
-  def embeddingPairsIncremental(oldPairs: DataFrame, existing: DataFrame,
-      incoming: DataFrame, vecCol: String, idCol: String,
-      threshold: Double = 0.95, planes: Int = 12, tables: Int = 4,
-      dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val cross = embeddingCrossDupPairs(existing, incoming, vecCol, idCol,
-        threshold, planes, tables, dim, seed)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("cos"))
-    val newSelf = embeddingDupPairs(incoming, vecCol, idCol, threshold,
-      planes, tables, dim, seed)
-    oldPairs.unionByName(cross).unionByName(newSelf)
-  }
 
   /** Semantic near-dup pairs (SemDeDup family, Abbas et al. 2023):
     * cluster the embedding space coarsely, then compare pairs ONLY within
     * a cluster — the clustering is the blocking key, exactly as LSH bands
-    * are for [[minhashDupPairs]]. Returns (id_a, id_b, cos), id_a < id_b,
+    * are for [[MinHash]]. Returns (id_a, id_b, cos), id_a < id_b,
     * cosine ≥ `threshold`, for pairs assigned to the same centroid cell.
     *
     * Scale shape: one broadcast-argmax assignment pass (no shuffle — see
@@ -2021,7 +1395,7 @@ object Dedup {
     val cells = graft.ops.Caches.track(pinned(
       Similarity.ivfAssign(parallelize(df), vecCol, centroids)
         .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell")),
-      col("cell")))
+      "cell"))
     val okCells = cells.groupBy("cell").count()
       .filter(col("count") <= maxCell).select("cell")
     val bounded = cells.join(okCells, Seq("cell"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shard-partitioned PHYSICAL layouts for persisted corpus artifacts —
-  * the generic half of [[Dedup.writeShardedBandIndex]]'s treatment,
+  * the generic half of the near-dup index ([[Dedup.Scheme.writeIndex]]),
   * extended in round 10 to every maintained artifact (gram index, gram
   * census, SimHash chunk index, embedding bucket table, CC labels,
   * pairs adjacency): the artifact is written partitioned by
@@ -63,21 +63,34 @@ object Sharded {
     graft.sources.Pq.invalidate(path) // memoized readers must re-list
   }
 
-  /** The BOUNDED (≤ `shards`) distinct shard set touched by
-    * `keys(keyCol)` — one slice-sized distinct-aggregate job whose
-    * result is at most `shards` small integers (a dimension, not the
-    * corpus; the same boundedness class as the IVF centroid pull). */
-  def touchedShards(keys: DataFrame, keyCol: String, shards: Int): Seq[Int] =
-    keys.select(shardOf(col(keyCol), shards).as("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
+  /** The BOUNDED distinct (prefix…, shard) set touched by
+    * `keys(keyCol)` — one slice-sized distinct-aggregate job whose result
+    * is at most |prefixes| × `shards` small integer tuples (a dimension,
+    * not the corpus; the same boundedness class as the IVF centroid
+    * pull). `prefixCols` are the artifact's [[writeByKey]]
+    * `extraPartitionCols`. */
+  def touchedShards(keys: DataFrame, keyCol: String, shards: Int,
+      prefixCols: Seq[String] = Nil): Seq[Seq[Int]] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    keys.select(prefixCols.map(col) :+ shardOf(col(keyCol), shards): _*)
+      .distinct().collect().map(r => r.toSeq.map(_.asInstanceOf[Int]))
+      .toSeq.sorted
+  }
 
-  /** Pruned read of a [[writeByKey]] artifact: the literal
-    * `shard IN (…)` predicate is static, so the file index prunes the
-    * untouched directories before any task launches. */
+  /** Pruned read of a [[writeByKey]] artifact: the literal predicate
+    * over the touched (prefix…, shard) tuples — `shard IN (…)` without a
+    * prefix, an Or-of-And with one — is static, so the file index
+    * prunes the untouched directories before any task launches. */
   def readTouched(spark: SparkSession, path: String,
-      shardVals: Seq[Int]): DataFrame =
-    graft.sources.Pq.read(spark, path)
-      .filter(col("shard").isin(shardVals.map(Integer.valueOf): _*))
+      touched: Seq[Seq[Int]], prefixCols: Seq[String] = Nil): DataFrame = {
+    val parts = prefixCols :+ "shard"
+    graft.sources.Pq.read(spark, path).filter(
+      if (prefixCols.isEmpty)
+        col("shard").isin(touched.map(t => Integer.valueOf(t.head)): _*)
+      else touched.map(t => parts.zip(t)
+          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+        .reduceOption(_ || _).getOrElse(lit(false)))
+  }
 
   /** Pruned point/key fetch: rows of the artifact whose `keyCol` ∈
     * `keys` — two-phase (bounded shard-set job, then a pruned scan +

@@ -83,10 +83,10 @@ object Similarity {
     * ([[Dedup.writeShardedBucketIndex]]) and its vectors by id-hash
     * shard ([[Dedup.writeShardedVectors]]); a probe evaluates the query
     * vector's bucket per table in plain Scala (plan-time, zero jobs),
-    * computes the buckets' shard values with the ENGINE's own xxhash64
-    * (one 1-row job), and scans the index ONCE with an Or-of-And
-    * predicate that prunes to ≤ `tables` of the tables×shards
-    * directories (the [[Dedup.probeShardedBandIndex]] collapse);
+    * then [[Dedup.pointRead]] computes the buckets' shard values with
+    * the ENGINE's own xxhash64 (one 1-row job) and scans the index ONCE
+    * with an Or-of-And predicate that prunes to ≤ `tables` of the
+    * tables×shards directories;
     * candidate vectors are then fetched by the pruned two-phase
     * [[Sharded.fetchKeys]] read — the whole probe touches
     * O(bucket + candidates) bytes of the corpus artifacts, never the
@@ -94,8 +94,7 @@ object Similarity {
     * cosine re-rank; plan-locked in ShardedArtifactsSpec). */
   def lshTopKSharded(spark: org.apache.spark.sql.SparkSession,
       bucketIdxPath: String, vecsPath: String, query: Array[Float],
-      k: Int, planes: Int, tables: Int, seed: Long = 42L,
-      shards: Int = 16): DataFrame = {
+      k: Int, planes: Int, tables: Int, seed: Long = 42L): DataFrame = {
     val dim = query.length
     val hyper = Vectors.hyperplanes(seed, tables, planes, dim)
     val qBuckets: Seq[(Int, Long)] = (0 until tables).map { t =>
@@ -106,17 +105,12 @@ object Similarity {
       }.sum
       (t, bucket)
     }
-    val qShards = spark.range(1)
-      .select(qBuckets.map { case (_, b) =>
-        Sharded.shardOf(lit(b), shards)
-      }: _*).head().toSeq.map(_.asInstanceOf[Int])
-    val cands = graft.sources.Pq.read(spark, bucketIdxPath)
-      .filter(qBuckets.zipWithIndex.map { case ((t, b), i) =>
-        col("t") === lit(t) && col("shard") === lit(qShards(i)) &&
-          col("bucket") === lit(b)
-      }.reduce(_ || _))
+    val cands = Dedup.pointRead(spark, bucketIdxPath, Seq("t", "bucket"),
+        spark.range(1).select(explode(array(qBuckets.map { case (t, b) =>
+          struct(lit(t).as("t"), lit(b).as("bucket"))
+        }: _*)).as("k")).select("k.*"))
       .select("id").distinct()
-    Sharded.fetchKeys(spark, vecsPath, cands, "id", shards)
+    Sharded.fetchKeys(spark, vecsPath, cands, "id", Dedup.IndexShards)
       .withColumn("score",
         Vectors.cosineNative(spark, col("embedding"), asDoubleLit(query)))
       .select(col("id"), col("score"))

@@ -109,7 +109,7 @@ object Warc {
     * damage — the caller decides quarantine vs abort. Binary-safe: the
     * payload is read as exactly Content-Length bytes, so payload bytes
     * that spell `WARC/1.0` cannot confuse this path. */
-  private[sources] def readRecord(in: InputStream): Option[RawRecord] = {
+  private[graft] def readRecord(in: InputStream): Option[RawRecord] = {
     var line = readLine(in)
     while (line.exists(_.isEmpty)) line = readLine(in) // record trailer CRLFs
     line match {
@@ -140,11 +140,12 @@ object Warc {
         }
         if (len < 0 || len > MaxPayloadBytes)
           throw fmt(s"Content-Length $len outside [0, $MaxPayloadBytes]")
-        val payload = new Array[Byte](len.toInt)
-        try new DataInputStream(in).readFully(payload) catch {
-          case _: EOFException => throw fmt(
-            s"EOF inside payload (wanted $len bytes)")
-        }
+        // readNBytes grows its buffer with the bytes that arrive, so a
+        // header claiming up to MaxPayloadBytes over a short stream
+        // allocates O(bytes present), not O(claim)
+        val payload = in.readNBytes(len.toInt)
+        if (payload.length < len)
+          throw fmt(s"EOF inside payload (wanted $len bytes)")
         Some(RawRecord(headers.toMap, payload))
     }
   }

@@ -46,7 +46,7 @@ import graft.ext.Sharded
   *      keeps adding shards the probe does NOT touch. The uncompacted
   *      tail is bounded by compactEvery × trigger size. This is the
   *      batch tier's pruning discipline ([[graft.ext.Sharded]],
-  *      `Dedup.minhashDeltaSharded`) plus the footer-derived self-sizing
+  *      `Dedup.Scheme.deltaSharded`) plus the footer-derived self-sizing
   *      of the embedding sketch (SURVEY §14.4), applied to stream state.
   *   3. **Fail-closed reads.** Only a genuinely absent registry (first
   *      batch ever) yields empty history, via an explicit filesystem

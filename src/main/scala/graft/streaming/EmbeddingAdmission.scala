@@ -11,7 +11,7 @@ import graft.ext.{Dedup, Vectors}
   * [[SpanAdmission]] = spans): an incoming vector is REJECTED iff its
   * EXACT COSINE to an already-admitted vector sharing a sign-sketch
   * bucket is ≥ `threshold` (the micro-batch twin of
-  * [[Dedup.embeddingDupPairsFromBuckets]]' blocked-verify shape), or to
+  * [[Dedup.Embedding]] scheme's blocked-verify shape), or to
   * a lower-id vector of the same batch under the same rule — the
   * keep-lowest-id, non-transitive convention of the whole admission
   * family. You dedup against the corpus you KEPT: only admitted

@@ -22,7 +22,7 @@ import graft.ext.Dedup
   * Semantics match the batch family: a doc is REJECTED iff it shares a
   * bucket with an already-admitted doc (history) or with a lower-id doc
   * of the same batch — the same keep-lowest-id, non-transitive convention
-  * as `Dedup.minhashDedup` (docs − id_b closure). The registry holds
+  * as `Dedup.dedupFromPairs` over MinHash pairs (docs − id_b closure). The registry holds
   * ADMITTED docs' buckets only: you dedup against the corpus you KEPT,
   * so near-dups of a rejected doc that match no admitted doc still land.
   *
@@ -69,9 +69,10 @@ class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
 
   /** (id, band, bucket) for every doc in `batch`. */
   private def buckets(batch: DataFrame): DataFrame =
-    Dedup.minhashSignatures(batch, textCol, idCol, numHashes)
-      .select(col("id"),
-        explode(Dedup.lshBandKeys(col("sig"), numHashes, bands)).as("bk"))
+    Dedup.minhashSignatures(batch, textCol, idCol, numHashes, shingle = 1,
+        Dedup.XxHash)
+      .select(col("id"), explode(Dedup.lshBandKeys(col("sig"), numHashes,
+        bands, Dedup.XxHash)).as("bk"))
       .select(col("id"), col("bk.band").as("band"),
         col("bk.bucket").as("bucket"))
 

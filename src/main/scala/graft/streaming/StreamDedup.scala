@@ -41,7 +41,7 @@ object StreamDedup {
       .drop("__fp")
 
   /** Dedup the stream AGAINST A STATIC REFERENCE CORPUS (the streaming
-    * twin of [[graft.ext.Dedup.minhashCrossDupPairs]]'s batch shape, at
+    * twin of [[graft.ext.Dedup.MinHash]]'s batch cross shape, at
     * exact-fingerprint granularity): incoming docs whose normalized-text
     * md5 already exists in `reference` are dropped via a stream-static
     * LEFT ANTI join. The static side is planned per micro-batch — Spark

@@ -19,7 +19,7 @@ import graft.ext.Dedup
   * recompute over the union, per maintained artifact family:
   *
   *   minhash pairs — chained against the PHYSICAL sharded band index
-  *     ([[Dedup.minhashDeltaSharded]]), each round APPENDING the
+  *     ([[Dedup.Scheme.deltaSharded]]), each round APPENDING the
   *     slice's band rows as new files into the existing partition
   *     directories (old files never rewritten) — the on-disk ingest
   *     cadence itself, not a frame-level simulation of it;
@@ -32,9 +32,9 @@ import graft.ext.Dedup
   *     (XOR-fold of (id, component) hashes) against one-shot CC over
   *     the union of ALL pairs from ALL rounds;
   *   span census — chained keyed-addition merges vs whole-union census;
-  *   simhash pairs — chained against the PHYSICAL sharded chunk index
-  *     ([[Dedup.simhashDeltaSharded]]), per-round file appends into the
-  *     (ci, shard) directories, delta committed BEFORE the append;
+  *   simhash and embedding pairs — the same chain (one `chain` loop
+  *     over the near-dup schemes) against the sharded chunk index and
+  *     the sharded bucket index + vector table;
   *   ivf index — chained against the PHYSICAL cell-partitioned
   *     assignment index ([[graft.ext.Similarity.writeIvfIndex]]) with
   *     frozen base centroids (the maintained cadence), end state checked
@@ -104,38 +104,48 @@ object ChainedStress {
       s"${slices.head.count()} docs each")
     val cap = 1 << 30 // caps unbound: exactness regime
 
-    // ---------------------------------------------------------- minhash
-    // Chain against the PHYSICAL sharded band index: round s computes
-    // its delta from the index as it stands after rounds 0..s-1, then
-    // appends its own band rows as new files (mode=append — old
-    // partition files untouched).
-    {
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("chstress_bandidx").toString
-      val baseSigs = persist(Dedup.minhashSignaturesPortable(
-        docs0, "text", "doc_id", numHashes = 32), "sigs_base")
-      Dedup.writeShardedBandIndex(baseSigs, idxDir, numHashes = 32,
-        bands = 8, shards = 16)
-      var pairs = persist(Dedup.minhashDupPairsPortableFromSignatures(
-        baseSigs, 32, 8, 0.5, cap), "mh_pairs_0")
-      var allSigs = baseSigs
+    /** One near-dup family chained against its PHYSICAL sharded index:
+      * round s computes its delta from the index as rounds 0..s-1 left
+      * it, COMMITS it to parquet, and only then appends the slice to the
+      * index as new files (mode=append — old partition files untouched).
+      * The end state must equal the one-shot pairs over the union
+      * (`oneshot`, by default the base `pairs`). `P` is one corpus side
+      * as the family consumes it. */
+    def chain[P](family: String, base: P, slices: Seq[P],
+        union: (P, P) => P, pairs: P => DataFrame,
+        write: (P, String, String) => Unit, delta: (String, P) => DataFrame,
+        round: DataFrame => DataFrame = identity)(
+        oneshot: P => DataFrame = pairs): Unit = {
+      val idx = java.nio.file.Files
+        .createTempDirectory(s"chstress_${family}_idx").toString
+      write(base, idx, "overwrite")
+      var acc = persist(pairs(base), s"${family}_pairs_0")
+      var all = base
       slices.zipWithIndex.foreach { case (sl, s) =>
-        val sliceSigs = persist(Dedup.minhashSignaturesPortable(
-          sl, "text", "doc_id", numHashes = 32), s"sigs_$s")
-        val (secs, delta) = timed(persist(Dedup.minhashDeltaSharded(
-          spark, idxDir, sliceSigs, numHashes = 32, bands = 8,
-          threshold = 0.5, maxBucket = cap, shards = 16), s"mh_delta_$s"))
-        Dedup.writeShardedBandIndex(sliceSigs, idxDir, numHashes = 32,
-          bands = 8, shards = 16, mode = "append")
-        pairs = persist(pairs.unionByName(delta), s"mh_pairs_${s + 1}")
-        allSigs = persist(allSigs.unionByName(sliceSigs), s"sigs_acc_$s")
-        println(f"[chstress] minhash round ${s + 1}: append=$secs%6.2f s " +
-          s"delta=${delta.count()} pairs_total=${pairs.count()}")
+        val (secs, d) = timed(persist(delta(idx, sl), s"${family}_delta_$s"))
+        write(sl, idx, "append")
+        acc = persist(acc.unionByName(d), s"${family}_pairs_${s + 1}")
+        all = union(all, sl)
+        println(f"[chstress] $family%-9s round ${s + 1}: append=$secs%6.2f s " +
+          s"delta=${d.count()} pairs_total=${acc.count()}")
       }
-      val oneshot = persist(Dedup.minhashDupPairsPortableFromSignatures(
-        allSigs, 32, 8, 0.5, cap), "mh_oneshot")
-      check("minhash", xorSum(pairs), xorSum(oneshot), pairs.count(),
-        oneshot.count())
+      val once = persist(oneshot(all), s"${family}_oneshot")
+      check(family, xorSum(round(acc)), xorSum(round(once)), acc.count(),
+        once.count())
+    }
+
+    // ---------------------------------------------- minhash and simhash
+    for ((family, scheme) <- Seq[(String, Dedup.TextScheme[_])](
+        "minhash" -> Dedup.MinHash(numHashes = 32, bands = 8,
+          threshold = 0.5, maxBucket = cap),
+        "simhash" -> Dedup.SimHash(maxHamming = 3))) {
+      def sigs(docs: DataFrame, tag: String) =
+        persist(scheme.signatures(docs, "text", "doc_id"), s"${family}_$tag")
+      chain[DataFrame](family, sigs(docs0, "base"),
+        slices.zipWithIndex.map { case (sl, s) => sigs(sl, s"slice_$s") },
+        (a, b) => persist(a.unionByName(b), s"${family}_acc"),
+        scheme.pairs, (t, dir, mode) => scheme.writeIndex(t, dir, mode),
+        (dir, t) => scheme.deltaSharded(spark, dir, t))()
     }
 
     // ---------------------------------------------- ngram pairs + census
@@ -143,18 +153,17 @@ object ChainedStress {
       val baseGrams = persist(Dedup.ngramGramTable(
         docs0, "text", "doc_id", n = 3), "grams_base")
       var census = persist(Dedup.ngramGramCensus(baseGrams), "census_0")
-      var pairs = persist(Dedup.ngramJaccardPairsFromGramsWithCensus(
-        baseGrams, census, threshold = 0.1, maxDf = cap), "ng_pairs_0")
+      var pairs = persist(Dedup.NGram(threshold = 0.1, census, maxDf = cap)
+        .pairs(baseGrams), "ng_pairs_0")
       var allGrams = baseGrams
       slices.zipWithIndex.foreach { case (sl, s) =>
         val sliceGrams = persist(Dedup.ngramGramTable(
           sl, "text", "doc_id", n = 3), s"grams_$s")
-        val (secs, delta) = timed(persist(
-          Dedup.ngramPairsIncrementalWithCensus(pairs.limit(0), allGrams,
-            sliceGrams, census, threshold = 0.1, maxDf = cap),
+        val ng = Dedup.NGram.appending(threshold = 0.1, census, sliceGrams,
+          maxDf = cap)
+        val (secs, delta) = timed(persist(ng.delta(allGrams, sliceGrams),
           s"ng_delta_$s"))
-        census = persist(Dedup.mergeGramCensus(census,
-          Dedup.ngramGramCensus(sliceGrams)), s"census_${s + 1}")
+        census = persist(ng.census, s"census_${s + 1}")
         pairs = persist(pairs.unionByName(delta), s"ng_pairs_${s + 1}")
         allGrams = persist(allGrams.unionByName(sliceGrams),
           s"grams_acc_$s")
@@ -174,9 +183,9 @@ object ChainedStress {
       // Chained star-edge re-propagation over the ngram tier: round s's
       // labels are round s+1's star edges. One-shot = CC over the union
       // of every round's pairs (== oneshotPairs by the check above).
-      val basePairs = persist(Dedup.ngramJaccardPairsFromGramsWithCensus(
-        baseGrams, Dedup.ngramGramCensus(baseGrams), threshold = 0.1,
-        maxDf = cap), "cc_base_pairs")
+      val basePairs = persist(Dedup.NGram(threshold = 0.1,
+        Dedup.ngramGramCensus(baseGrams), maxDf = cap).pairs(baseGrams),
+        "cc_base_pairs")
       var labels = persist(Dedup.assignComponents(
         docs0.select("doc_id"), basePairs, "doc_id"), "labels_0")
       var docsSoFar = docs0.select("doc_id")
@@ -186,14 +195,9 @@ object ChainedStress {
       slices.zipWithIndex.foreach { case (sl, s) =>
         val sliceGrams = persist(Dedup.ngramGramTable(
           sl, "text", "doc_id", n = 3), s"cc_grams_$s")
-        val merged = persist(Dedup.mergeGramCensus(censusSoFar,
-          Dedup.ngramGramCensus(sliceGrams)), s"cc_census_${s + 1}")
-        val delta = persist(
-          Dedup.ngramJaccardCrossPairsFromGramsWithCensus(gramsSoFar,
-            sliceGrams, merged, threshold = 0.1, maxDf = cap)
-          .unionByName(Dedup.ngramJaccardPairsFromGramsWithCensus(
-            sliceGrams, merged, threshold = 0.1, maxDf = cap)),
-          s"cc_delta_$s")
+        val ng = Dedup.NGram.appending(threshold = 0.1, censusSoFar,
+          sliceGrams, maxDf = cap)
+        val delta = persist(ng.delta(gramsSoFar, sliceGrams), s"cc_delta_$s")
         docsSoFar = persist(docsSoFar.unionByName(sl.select("doc_id")),
           s"cc_docs_$s")
         val (secs, nl) = timed(persist(Dedup.assignComponentsIncremental(
@@ -201,7 +205,7 @@ object ChainedStress {
         labels = nl
         gramsSoFar = persist(gramsSoFar.unionByName(sliceGrams),
           s"cc_grams_acc_$s")
-        censusSoFar = merged
+        censusSoFar = persist(ng.census, s"cc_census_${s + 1}")
         println(f"[chstress] cc_labels round ${s + 1}: " +
           f"append=$secs%6.2f s")
       }
@@ -214,10 +218,7 @@ object ChainedStress {
 
     // ------------------------------------------------ embedding pairs
     // Chained against BOTH physical artifacts (bucket index + vector
-    // table, appended per round — the second family proven against
-    // on-disk appends, after minhash): round s's delta reads the index
-    // as rounds 0..s-1 left it, is COMMITTED to parquet, and only then
-    // do the slice's bucket rows and vectors land as new files.
+    // table, appended per round). A side is (vectors, bucket table).
     {
       val embs0 = Tables(spark, sfDir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
@@ -230,75 +231,28 @@ object ChainedStress {
              org.apache.spark.sql.functions.slice(
                col("embedding"), 1, i)).cast("array<float>"))
             .as("embedding"))
-      val eSlices = (0 until nSlices).map(i => persist(
+      def side(v: DataFrame, tag: String) = (v, persist(
+        Dedup.embeddingBucketTable(v, "embedding", "id", planes = 4,
+          tables = 8, dim = 64), s"eb_$tag"))
+      val eSlices = (0 until nSlices).map(i => side(persist(
         rotate(embs0.filter(col("id") % 4 === (i % 4)), i + 1,
-          900000000L * (i + 1)), s"eslice_$i")).toIndexedSeq
-      val bDir = java.nio.file.Files
-        .createTempDirectory("chstress_bucketidx").toString
-      val vDir = java.nio.file.Files
-        .createTempDirectory("chstress_vecs").toString
-      val baseBuckets = persist(Dedup.embeddingBucketTable(embs0,
-        "embedding", "id", planes = 4, tables = 8, dim = 64), "eb_0")
-      Dedup.writeShardedBucketIndex(baseBuckets, bDir, shards = 16)
-      Dedup.writeShardedVectors(embs0, vDir, shards = 16)
-      var pairs = persist(Dedup.embeddingDupPairsFromBuckets(baseBuckets,
-        embs0, "embedding", threshold = 0.4), "em_pairs_0")
-      var allVecs = embs0
-      eSlices.zipWithIndex.foreach { case (sl, i) =>
-        val slB = persist(Dedup.embeddingBucketTable(sl, "embedding",
-          "id", planes = 4, tables = 8, dim = 64), s"eb_slice_$i")
-        val (secs, delta) = timed(persist(Dedup.embeddingDeltaSharded(
-          spark, bDir, vDir, slB, sl, "embedding", threshold = 0.4,
-          shards = 16), s"em_delta_$i"))
-        Dedup.writeShardedBucketIndex(slB, bDir, shards = 16,
-          mode = "append")
-        Dedup.writeShardedVectors(sl, vDir, shards = 16, mode = "append")
-        pairs = persist(pairs.unionByName(delta), s"em_pairs_${i + 1}")
-        allVecs = persist(allVecs.unionByName(sl), s"evecs_acc_$i")
-        println(f"[chstress] embedding round ${i + 1}: append=$secs%6.2f s " +
-          s"delta=${delta.count()} pairs_total=${pairs.count()}")
-      }
-      val oneshot = persist(Dedup.embeddingDupPairsFromBuckets(
-        persist(Dedup.embeddingBucketTable(allVecs, "embedding", "id",
-          planes = 4, tables = 8, dim = 64), "eb_all"),
-        allVecs, "embedding", threshold = 0.4), "em_oneshot")
+          900000000L * (i + 1)), s"eslice_$i"), s"slice_$i"))
       def r4(df: DataFrame) = df.withColumn("cos",
         floor(col("cos") * 10000 + 0.5) / 10000)
-      check("embedding", xorSum(r4(pairs)), xorSum(r4(oneshot)),
-        pairs.count(), oneshot.count())
-    }
-
-    // ---------------------------------------------------------- simhash
-    // Chain against the PHYSICAL sharded chunk index (r10 verdict #2:
-    // this family had only the single-slice IncrementalStress proof):
-    // round s's delta reads the chunk index as rounds 0..s-1 left it,
-    // is COMMITTED to parquet, and only then do the slice's chunk rows
-    // land as appended files in the (ci, shard) directories.
-    {
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("chstress_chunkidx").toString
-      val baseFps = persist(Dedup.simhashFingerprintsPortable(
-        docs0, "text", "doc_id"), "fps_base")
-      Dedup.writeShardedChunkIndex(baseFps, idxDir, shards = 16)
-      var pairs = persist(Dedup.simhashDupPairsPortableFromFingerprints(
-        baseFps, maxHamming = 3), "sh_pairs_0")
-      var allFps = baseFps
-      slices.zipWithIndex.foreach { case (sl, s) =>
-        val sliceFps = persist(Dedup.simhashFingerprintsPortable(
-          sl, "text", "doc_id"), s"fps_$s")
-        val (secs, delta) = timed(persist(Dedup.simhashDeltaSharded(
-          spark, idxDir, sliceFps, shards = 16), s"sh_delta_$s"))
-        Dedup.writeShardedChunkIndex(sliceFps, idxDir, shards = 16,
-          mode = "append")
-        pairs = persist(pairs.unionByName(delta), s"sh_pairs_${s + 1}")
-        allFps = persist(allFps.unionByName(sliceFps), s"fps_acc_$s")
-        println(f"[chstress] simhash round ${s + 1}: append=$secs%6.2f s " +
-          s"delta=${delta.count()} pairs_total=${pairs.count()}")
-      }
-      val oneshot = persist(Dedup.simhashDupPairsPortableFromFingerprints(
-        allFps, maxHamming = 3), "sh_oneshot")
-      check("simhash", xorSum(pairs), xorSum(oneshot), pairs.count(),
-        oneshot.count())
+      chain[(DataFrame, DataFrame)]("embedding", side(embs0, "base"),
+        eSlices,
+        { case ((va, ba), (vb, bb)) => (persist(va.unionByName(vb),
+            "evecs_acc"), persist(ba.unionByName(bb), "eb_acc")) },
+        { case (v, b) => Dedup.Embedding("embedding", 0.4, v).pairs(b) },
+        { case ((v, b), dir, mode) =>
+          Dedup.writeShardedBucketIndex(b, s"$dir/buckets", mode)
+          Dedup.writeShardedVectors(v, s"$dir/vecs", mode) },
+        { case (dir, (v, b)) => Dedup.embeddingDeltaSharded(spark,
+            s"$dir/buckets", s"$dir/vecs", b, v, "embedding", 0.4) },
+        round = r4)(
+        // re-sketch the union vectors: per-slice sketch ≡ whole-corpus
+        { case (v, _) => Dedup.embeddingDupPairs(v, "embedding", "id",
+            threshold = 0.4, planes = 4, tables = 8, dim = 64) })
     }
 
     // --------------------------------------------------------- ivf index

@@ -15,13 +15,17 @@ import graft.ext.{Dedup, Similarity}
   *
   *   append    = read(old pairs artifact) ∪ cross(old artifact, slice)
   *               ∪ self(slice)   — the incremental path
-  *   recompute = whole-corpus pairs over the merged artifact — what a
+  *   recompute = whole-corpus pairs over old ∪ slice — what a
   *               non-incremental engine pays per ingest
   *
-  * Both sides read the SAME persisted signature/fingerprint/gram/vector
+  * Both sides read the SAME persisted signature/fingerprint/gram
   * artifacts (signature build cost is excluded from both — it is linear
   * and amortized either way); the measured separation is the pairing
-  * join itself. Replicas are de-correlated from the originals (vowel
+  * join itself. Two recompute arms take an independent path, so the
+  * laws the append arm relies on are checked too: the n-gram recompute
+  * recounts doc-frequencies by window over the merged gram table (merged
+  * census ≡ recounted df), and the embedding recompute re-sketches the
+  * union vectors (per-slice sketch ≡ whole-corpus sketch). Replicas are de-correlated from the originals (vowel
   * `translate` per replica for text, element rotation for vectors) so the
   * duplicate STRUCTURE stays constant per replica instead of every doc
   * acquiring k near-identical twins — the realistic "corpus grows, dup
@@ -119,10 +123,14 @@ object IncrementalStress {
     // Slice-side artifacts (computed once per ingest either way; slice-
     // sized, so excluded from the timed separation like the old-side
     // builds are).
-    val sliceSigs = persist(Dedup.minhashSignaturesPortable(
-      sliceDocs, "text", "doc_id", numHashes = 32), "slice_sigs")
-    val sliceFps = persist(Dedup.simhashFingerprintsPortable(
-      sliceDocs, "text", "doc_id"), "slice_fps")
+    val cap = 1 << 30 // caps unbound: exactness regime (class doc)
+    val mh = Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5,
+      maxBucket = cap)
+    val sh = Dedup.SimHash(maxHamming = 3)
+    val sliceSigs = persist(mh.signatures(sliceDocs, "text", "doc_id"),
+      "slice_sigs")
+    val sliceFps = persist(sh.signatures(sliceDocs, "text", "doc_id"),
+      "slice_fps")
     val sliceGrams = persist(Dedup.ngramGramTable(
       sliceDocs, "text", "doc_id", n = 3), "slice_grams")
 
@@ -140,19 +148,12 @@ object IncrementalStress {
       // side — build time reported once for context, charged to neither
       // arm).
       val tArt0 = System.nanoTime()
-      val oldSigs = persist(Dedup.minhashSignaturesPortable(
-        oldDocs, "text", "doc_id", numHashes = 32), s"old_sigs_$k")
-      val oldFps = persist(Dedup.simhashFingerprintsPortable(
-        oldDocs, "text", "doc_id"), s"old_fps_$k")
+      val oldSigs = persist(mh.signatures(oldDocs, "text", "doc_id"),
+        s"old_sigs_$k")
+      val oldFps = persist(sh.signatures(oldDocs, "text", "doc_id"),
+        s"old_fps_$k")
       val oldGrams = persist(Dedup.ngramGramTable(
         oldDocs, "text", "doc_id", n = 3), s"old_grams_$k")
-      val cap = 1 << 30 // caps unbound: exactness regime (class doc)
-      val oldPairsMh = persist(Dedup.minhashDupPairsPortableFromSignatures(
-        oldSigs, 32, 8, 0.5, cap), s"old_pairs_mh_$k")
-      val oldPairsSh = persist(Dedup.simhashDupPairsPortableFromFingerprints(
-        oldFps, maxHamming = 3), s"old_pairs_sh_$k")
-      val oldPairsNg = persist(Dedup.ngramJaccardPairsFromGrams(
-        oldGrams, threshold = 0.1, maxDf = cap), s"old_pairs_ng_$k")
       // Production plane sizing (embeddingDupPairs doc: planes ≈
       // log2(n/32)): grow the sign-sketch width with the corpus so
       // bucket sizes stay ~constant and Σ bucket² stays linear — with a
@@ -162,7 +163,9 @@ object IncrementalStress {
       val planesK = 4 + (31 - Integer.numberOfLeadingZeros(k))
       // Maintained-census + bucket-table artifacts: the append arms read
       // these instead of re-aggregating the corpus census / re-sketching
-      // the corpus per ingest.
+      // the corpus per ingest. The n-gram scheme blocks on the census
+      // merged by addition; the embedding scheme re-attaches vectors
+      // from the old ∪ slice vector tables.
       val oldCensus = persist(Dedup.ngramGramCensus(oldGrams),
         s"old_census_$k")
       val oldVecs = oldEmbs.select(col("vec_id").as("id"), col("embedding"))
@@ -174,22 +177,40 @@ object IncrementalStress {
       val sliceBuckets = persist(Dedup.embeddingBucketTable(sliceVecs,
         "embedding", "id", planes = planesK, tables = 8, dim = 64),
         s"slice_buckets_$k")
-      val oldPairsEm = persist(Dedup.embeddingDupPairsFromBuckets(
-        oldBuckets, oldVecs, "embedding", threshold = 0.4),
-        s"old_pairs_em_$k")
+      val ng = Dedup.NGram.appending(threshold = 0.1, oldCensus, sliceGrams,
+        maxDf = cap)
+      val em = Dedup.Embedding("embedding", threshold = 0.4,
+        oldVecs.unionByName(sliceVecs))
+      // (family, scheme, old artifact, slice artifact, recompute over
+      // old ∪ slice, old pairs artifact)
+      val families = Seq[(String, Dedup.Scheme, DataFrame, DataFrame,
+          () => DataFrame)](
+        ("minhash", mh, oldSigs, sliceSigs,
+          () => mh.pairs(oldSigs.unionByName(sliceSigs))),
+        ("simhash", sh, oldFps, sliceFps,
+          () => sh.pairs(oldFps.unionByName(sliceFps))),
+        ("ngram", ng, oldGrams, sliceGrams,
+          () => Dedup.ngramJaccardPairsFromGrams(
+            oldGrams.unionByName(sliceGrams), threshold = 0.1, maxDf = cap)),
+        ("embedding", em, oldBuckets, sliceBuckets,
+          () => Dedup.embeddingDupPairs(oldEmbs.unionByName(sliceEmbs),
+            "embedding", "vec_id", threshold = 0.4, planes = planesK,
+            tables = 8, dim = 64)))
+        .map { case (f, sc, o, sl, re) =>
+          (f, sc, o, sl, re, persist(sc.pairs(o), s"old_pairs_${f}_$k")) }
       println(f"[incstress] artifacts ${k}x: build=${(System.nanoTime() - tArt0) / 1e9}%6.2f s " +
         s"(sigs+fps+grams+4 pair sets, charged to neither arm)")
 
-      // Delta = the incremental function fed an EMPTY old-pairs frame:
-      // exactly cross(old artifact, slice) ∪ self(slice), the work a
-      // real ingest performs (the old pairs stay on disk untouched).
-      val nMh = oldPairsMh.count(); val nSh = oldPairsSh.count()
-      val nNg = oldPairsNg.count(); val nEm = oldPairsEm.count()
-      report("minhash", k, nMh,
-        timed(Dedup.minhashPairsIncrementalPortable(
-          oldPairsMh.limit(0), oldSigs, sliceSigs, 32, 8, 0.5, cap).count()),
-        timed(Dedup.minhashDupPairsPortableFromSignatures(
-          oldSigs.unionByName(sliceSigs), 32, 8, 0.5, cap).count()))
+      // Delta = the scheme's incremental law fed an EMPTY old-pairs
+      // frame: exactly canon(cross(old artifact, slice)) ∪ self(slice),
+      // the work a real ingest performs (the old pairs stay on disk
+      // untouched).
+      families.foreach { case (f, sc, o, sl, recompute, oldPairs) =>
+        report(f, k, oldPairs.count(),
+          timed(sc.incremental(oldPairs.limit(0), o, sl).count()),
+          timed(recompute().count()))
+      }
+      val oldPairsMh = families.head._6
 
       // CC LABEL maintenance over the minhash pair tier (the largest
       // edge set): append arm = CC(star(old labels) ∪ PERSISTED delta) —
@@ -202,9 +223,8 @@ object IncrementalStress {
         .unionByName(sliceDocs.select("doc_id"))
       val oldLabels = persist(Dedup.assignComponents(
         oldDocs.select("doc_id"), oldPairsMh, "doc_id"), s"old_labels_$k")
-      val deltaMh = persist(Dedup.minhashPairsIncrementalPortable(
-        oldPairsMh.limit(0), oldSigs, sliceSigs, 32, 8, 0.5, cap),
-        s"delta_mh_$k")
+      val deltaMh = persist(mh.incremental(oldPairsMh.limit(0), oldSigs,
+        sliceSigs), s"delta_mh_$k")
       // XOR-fold checksum: order-independent and overflow-free under
       // ANSI arithmetic (labels are unique per doc, so XOR cancellation
       // cannot hide a discrepancy pair).
@@ -223,28 +243,6 @@ object IncrementalStress {
         f"labelsum_inc=${ccInc._2} labelsum_full=${ccFull._2} " +
         (if (ccOk) "EXACT" else "LABEL-MISMATCH"))
       require(ccOk, s"cc_labels at ${k}x: labelings differ")
-
-      report("simhash", k, nSh,
-        timed(Dedup.simhashPairsIncrementalPortable(
-          oldPairsSh.limit(0), oldFps, sliceFps, maxHamming = 3).count()),
-        timed(Dedup.simhashDupPairsPortableFromFingerprints(
-          oldFps.unionByName(sliceFps), maxHamming = 3).count()))
-
-      report("ngram", k, nNg,
-        timed(Dedup.ngramPairsIncrementalWithCensus(
-          oldPairsNg.limit(0), oldGrams, sliceGrams, oldCensus,
-          threshold = 0.1, maxDf = cap).count()),
-        timed(Dedup.ngramJaccardPairsFromGrams(
-          oldGrams.unionByName(sliceGrams), threshold = 0.1,
-          maxDf = cap).count()))
-
-      report("embedding", k, nEm,
-        timed(Dedup.embeddingPairsIncrementalFromBuckets(oldPairsEm.limit(0),
-          oldBuckets, oldVecs, sliceBuckets, sliceVecs, "embedding",
-          threshold = 0.4).count()),
-        timed(Dedup.embeddingDupPairs(oldEmbs.unionByName(sliceEmbs),
-          "embedding", "vec_id", threshold = 0.4, planes = planesK,
-          tables = 8, dim = 64).count()))
 
       // Span-census maintenance (the substring tier): the census is a
       // SUMMABLE artifact — append = merge(persisted old census, slice

@@ -98,9 +98,9 @@ object WarcArrivalSoak {
     val probeDocs = (0 until 4)
       .map(j => (900000L + j, baseText(900000L + j))).toDF("id", "text")
     def probeBuckets = Dedup
-      .minhashSignatures(probeDocs, "text", "id", 32)
+      .minhashSignatures(probeDocs, "text", "id", 32, 1, Dedup.XxHash)
       .select(col("id"),
-        explode(Dedup.lshBandKeys(col("sig"), 32, 8)).as("bk"))
+        explode(Dedup.lshBandKeys(col("sig"), 32, 8, Dedup.XxHash)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"))
 
     def liveDirs: Int = Option(new java.io.File(streamState).listFiles())

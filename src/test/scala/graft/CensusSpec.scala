@@ -111,8 +111,9 @@ class CensusSpec extends AnyFunSuite with SparkTestSupport {
     import s.implicits._
     val docs = (0 until 40).map(i => (i.toLong, s"some text $i " * 5))
       .toDF("doc_id", "text")
-    graft.ext.Dedup.minhashDupPairs(docs, "text", "doc_id",
-      numHashes = 8, bands = 4, threshold = 0.5, shingle = 3).count()
+    graft.ext.Dedup.MinHash(numHashes = 8, bands = 4, threshold = 0.5,
+        shingle = 3, family = graft.ext.Dedup.XxHash)
+      .textPairs(docs, "text", "doc_id").count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty) // tracked, live
     Caches.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)

@@ -55,16 +55,14 @@ class ChainedAppendSpec extends AnyFunSuite with SparkTestSupport {
 
     // --- minhash pairs against the sharded band index, appended per round
     val idxDir = Files.createTempDirectory("graft-chain-idx").toString
-    val baseSigs = Dedup.minhashSignaturesPortable(base, "text", "doc_id",
-      numHashes = 32, shingle = 3).cache()
-    Dedup.writeShardedBandIndex(baseSigs, idxDir, numHashes = 32,
-      bands = 8, shards = 16)
-    var pairs = Dedup.minhashDupPairsPortableFromSignatures(baseSigs,
-      32, 8, 0.2, cap).cache()
+    val mh = Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.2,
+      maxBucket = cap, shingle = 3)
+    val baseSigs = mh.signatures(base, "text", "doc_id").cache()
+    mh.writeIndex(baseSigs, idxDir)
+    var pairs = mh.pairs(baseSigs).cache()
     var allSigs = baseSigs
     slices.foreach { sl =>
-      val sliceSigs = Dedup.minhashSignaturesPortable(sl, "text",
-        "doc_id", numHashes = 32, shingle = 3).cache()
+      val sliceSigs = mh.signatures(sl, "text", "doc_id").cache()
       // COMMIT the delta to disk BEFORE appending to the index: the
       // delta is a lazy plan over the index directory, and Spark's
       // append invalidates (and recomputes) cached plans over that
@@ -75,17 +73,14 @@ class ChainedAppendSpec extends AnyFunSuite with SparkTestSupport {
       // this spec relied on cache() and caught the hazard.
       val deltaDir = Files.createTempDirectory("graft-chain-delta")
         .toString
-      Dedup.minhashDeltaSharded(s, idxDir, sliceSigs, numHashes = 32,
-          bands = 8, threshold = 0.2, maxBucket = cap, shards = 16)
+      mh.deltaSharded(s, idxDir, sliceSigs)
         .write.mode("overwrite").parquet(deltaDir)
       val delta = s.read.parquet(deltaDir)
-      Dedup.writeShardedBandIndex(sliceSigs, idxDir, numHashes = 32,
-        bands = 8, shards = 16, mode = "append")
+      mh.writeIndex(sliceSigs, idxDir, mode = "append")
       pairs = pairs.unionByName(delta).cache()
       allSigs = allSigs.unionByName(sliceSigs).cache()
     }
-    val oneshot = Dedup.minhashDupPairsPortableFromSignatures(allSigs,
-      32, 8, 0.2, cap)
+    val oneshot = mh.pairs(allSigs)
     assert(rows(pairs) == rows(oneshot) && rows(oneshot).nonEmpty)
     // cross-slice pairs must exist (slice 0 extends family 0 which
     // slice 0..2 all touch via the base) — the chain is not trivially
@@ -114,10 +109,9 @@ class ChainedAppendSpec extends AnyFunSuite with SparkTestSupport {
     var gramsSoFar = baseGrams
     slices.foreach { sl =>
       val g = Dedup.ngramGramTable(sl, "text", "doc_id", n = 3).cache()
-      val delta = Dedup.ngramJaccardCrossPairsFromGrams(gramsSoFar, g,
-          threshold = 0.3, maxDf = cap)
-        .unionByName(Dedup.ngramJaccardPairsFromGrams(g,
-          threshold = 0.3, maxDf = cap)).cache()
+      val delta = Dedup.NGram.appending(threshold = 0.3,
+          Dedup.ngramGramCensus(gramsSoFar), g, maxDf = cap)
+        .delta(gramsSoFar, g).cache()
       docsSoFar = docsSoFar.unionByName(sl.select("doc_id")).cache()
       labels = Dedup.assignComponentsIncremental(docsSoFar, labels,
         delta, "doc_id").cache()

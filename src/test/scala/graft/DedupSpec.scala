@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
 import graft.ext.Dedup
+import graft.ext.Dedup.{MinHash, SimHash, XxHash}
 
 class DedupSpec extends AnyFunSuite with SparkTestSupport {
 
@@ -34,16 +35,16 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
 
   test("minhash: identical token sets → identical signatures, est_jaccard 1.0") {
     val d = docs((1L, "alpha beta gamma delta"), (2L, "delta gamma beta alpha"))
-    val pairs = Dedup.minhashDupPairs(d, "text", "doc_id",
-      numHashes = 16, bands = 4, threshold = 0.9).collect()
+    val pairs = MinHash(numHashes = 16, bands = 4, threshold = 0.9,
+      family = XxHash).textPairs(d, "text", "doc_id").collect()
     assert(pairs.length == 1)
     assert(pairs.head.getAs[Double]("est_jaccard") == 1.0)
   }
 
   test("minhash: disjoint docs never pair at a high threshold") {
     val d = docs((1L, "aa bb cc dd ee ff"), (2L, "gg hh ii jj kk ll"))
-    assert(Dedup.minhashDupPairs(d, "text", "doc_id",
-      numHashes = 16, bands = 4, threshold = 0.5).count() == 0)
+    assert(MinHash(numHashes = 16, bands = 4, threshold = 0.5,
+      family = XxHash).textPairs(d, "text", "doc_id").count() == 0)
   }
 
   test("minhashCrossDupPairs: incoming pairs against existing, never within a side") {
@@ -55,11 +56,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (10L, "alpha beta gamma delta epsilon"),  // dup of 1 and 2
       (11L, "totally unrelated text here now"),
       (12L, "totally unrelated text here now")) // within-incoming dup: NOT reported
-    for (cross <- Seq(
-        Dedup.minhashCrossDupPairs(existing, incoming, "text", "doc_id",
-          numHashes = 16, bands = 4, threshold = 0.9),
-        Dedup.minhashCrossDupPairsPortable(existing, incoming, "text",
-          "doc_id", numHashes = 16, bands = 4, threshold = 0.9))) {
+    for (family <- Seq(XxHash, Dedup.Md5)) {
+      val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.9,
+        family = family)
+      val cross = mh.cross(mh.signatures(existing, "text", "doc_id"),
+        mh.signatures(incoming, "text", "doc_id"))
       val pairs = cross.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 10L), (2L, 10L)))
@@ -72,8 +73,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (1L, "one two three four five six seven eight nine ten"),
       (2L, "one two three four five six seven eight nine ten"),
       (3L, "completely different words entirely here now"))
-    val kept = Dedup.minhashDedup(d, "text", "doc_id",
-      numHashes = 16, bands = 4, threshold = 0.8)
+    val kept = Dedup.dedupFromPairs(d, MinHash(numHashes = 16, bands = 4,
+        threshold = 0.8, family = XxHash).textPairs(d, "text", "doc_id"),
+        "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 3L))
   }
@@ -82,8 +84,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
     val base = (1 to 30).map(i => s"word$i").mkString(" ")
     val near = base.replace("word30", "changed")
     val d = docs((1L, base), (2L, base), (3L, near))
-    val pairs = Dedup.simhashDupPairs(d, "text", "doc_id", maxHamming = 12)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getAs[Int]("hamming"))).toMap
+    val pairs = SimHash(maxHamming = 12, family = XxHash)
+      .textPairs(d, "text", "doc_id").collect().map(r => ((r.getLong(0), r.getLong(1)), r.getAs[Int]("hamming"))).toMap
     assert(pairs((1L, 2L)) == 0)
     assert(pairs.contains((1L, 3L)) && pairs((1L, 3L)) > 0)
   }
@@ -195,8 +197,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota"), // near-dup of 1
       (3L, "completely unrelated words about other topics entirely"))
-    val got = Dedup.minhashProbePortable(d, "text", "doc_id", queryId = 1L,
-      numHashes = 16, bands = 4, threshold = 0.25)
+    val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.25)
+    val got = mh.probeId(mh.signatures(d, "text", "doc_id"), queryId = 1L)
       .collect().map(r => r.getLong(0)).toSet
     assert(got == Set(2L))
   }
@@ -208,13 +210,12 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (3L, "completely unrelated words about other topics entirely"))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sigidx_").toString
-    Dedup.minhashSignaturesPortable(d, "text", "doc_id", 16)
+    val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.25)
+    mh.signatures(d, "text", "doc_id")
       .write.mode("overwrite").parquet(dir)
-    val got = Dedup.minhashProbeFromSignatures(spark.read.parquet(dir),
-      queryId = 1L, numHashes = 16, bands = 4, threshold = 0.25)
+    val got = mh.probeId(spark.read.parquet(dir), queryId = 1L)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val inline = Dedup.minhashProbePortable(d, "text", "doc_id", queryId = 1L,
-      numHashes = 16, bands = 4, threshold = 0.25)
+    val inline = mh.probeId(mh.signatures(d, "text", "doc_id"), queryId = 1L)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got == inline && got.map(_._1) == Set(2L))
   }
@@ -224,22 +225,19 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota"),
       (3L, "completely unrelated words about other topics entirely"))
-    val sigs = Dedup.minhashSignaturesPortable(d, "text", "doc_id", 16)
+    val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.2)
+    val sigs = mh.signatures(d, "text", "doc_id")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_shardtext_").toString
-    Dedup.writeShardedBandIndex(sigs, dir, numHashes = 16, bands = 4,
-      shards = 8)
+    mh.writeIndex(sigs, dir)
     val qtext = "alpha beta gamma delta epsilon zeta eta theta kappa"
-    val sharded = Dedup.probeShardedBandIndexText(spark, dir, qtext,
-        numHashes = 16, bands = 4, threshold = 0.2, shards = 8)
+    val sharded = mh.probeIndexText(spark, dir, qtext)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val flat = Dedup.minhashProbeTextPortable(sigs, qtext,
-        numHashes = 16, bands = 4, threshold = 0.2)
+    val flat = mh.probeText(sigs, qtext)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(sharded == flat && sharded.map(_._1).contains(1L))
     // unshingleable query text → empty result, correct schema
-    val empty = Dedup.probeShardedBandIndexText(spark, dir, "",
-      numHashes = 16, bands = 4, threshold = 0.2, shards = 8)
+    val empty = mh.probeIndexText(spark, dir, "")
     assert(empty.columns.toSeq == Seq("doc_id", "est_jaccard") &&
       empty.count() == 0)
   }
@@ -263,9 +261,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota"),
       (3L, "completely unrelated words about other topics entirely"),
       (4L, "alpha beta gamma delta epsilon zeta eta kappa"))
-    val fps = Dedup.simhashFingerprintsPortable(d, "text", "doc_id").cache()
-    val got = Dedup.simhashProbeFromFingerprints(fps, queryId = 1L,
-        maxHamming = 8)
+    val sh = SimHash(maxHamming = 8)
+    val fps = sh.signatures(d, "text", "doc_id").cache()
+    val got = sh.probeId(fps, queryId = 1L)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     // brute force over the collected fingerprints — no pigeonhole
     val all = fps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -285,21 +283,19 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
     val d = docs(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "completely unrelated words about other topics entirely"))
-    val sigs = Dedup.minhashSignaturesPortable(d, "text", "doc_id", 16)
+    val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.25)
+    val sigs = mh.signatures(d, "text", "doc_id")
     // An incoming doc that is a near-dup of doc 1 (one token appended).
-    val got = Dedup.minhashProbeTextPortable(sigs,
-      "alpha beta gamma delta epsilon zeta eta theta iota",
-      numHashes = 16, bands = 4, threshold = 0.25)
+    val got = mh.probeText(sigs,
+      "alpha beta gamma delta epsilon zeta eta theta iota")
       .collect().map(r => r.getLong(0)).toSet
     assert(got == Set(1L))
     // An exact copy of a corpus doc surfaces at estimate 1.0.
-    val exact = Dedup.minhashProbeTextPortable(sigs,
-      "alpha beta gamma delta epsilon zeta eta theta",
-      numHashes = 16, bands = 4, threshold = 0.25).collect()
+    val exact = mh.probeText(sigs,
+      "alpha beta gamma delta epsilon zeta eta theta").collect()
     assert(exact.exists(r => r.getLong(0) == 1L && r.getDouble(1) == 1.0))
     // A query too short to shingle returns empty, not an error.
-    assert(Dedup.minhashProbeTextPortable(sigs, "",
-      numHashes = 16, bands = 4, threshold = 0.25, shingle = 3).count() == 0)
+    assert(mh.copy(shingle = 3).probeText(sigs, "").count() == 0)
   }
 
   test("minhashPairsIncrementalPortable: artifact-append ≡ whole-corpus recompute") {
@@ -311,17 +307,14 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (5L, "alpha beta gamma delta epsilon zeta eta kappa"),     // cross pair 1/2-5
       (7L, "completely unrelated words about other topics entirely"),
       (8L, "completely unrelated words about other topics wholly")) // new∩new pair
-    val sigs = Dedup.minhashSignaturesPortable(d, "text", "doc_id", 16)
+    val mh = MinHash(numHashes = 16, bands = 4, threshold = 0.25)
+    val sigs = mh.signatures(d, "text", "doc_id")
     val oldSigs = sigs.filter(col("id") <= 3)
     val newSigs = sigs.filter(col("id") > 3)
-    val oldPairs = Dedup.minhashDupPairsPortableFromSignatures(oldSigs,
-      numHashes = 16, bands = 4, threshold = 0.25)
-    val incremental = Dedup.minhashPairsIncrementalPortable(
-        oldPairs, oldSigs, newSigs,
-        numHashes = 16, bands = 4, threshold = 0.25)
+    val oldPairs = mh.pairs(oldSigs)
+    val incremental = mh.incremental(oldPairs, oldSigs, newSigs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val recompute = Dedup.minhashDupPairsPortable(d, "text", "doc_id",
-        numHashes = 16, bands = 4, threshold = 0.25)
+    val recompute = mh.textPairs(d, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(incremental == recompute && incremental.nonEmpty)
   }
@@ -338,8 +331,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
     val nw = d.filter(col("doc_id") > 3)
     val oldPairs = Dedup.ngramJaccardPairs(old, "text", "doc_id",
       n = 3, threshold = 0.1)
-    val incremental = Dedup.ngramPairsIncremental(oldPairs, old, nw,
-        "text", "doc_id", n = 3, threshold = 0.1)
+    val (gOld, gNew) = (Dedup.ngramGramTable(old, "text", "doc_id", n = 3),
+      Dedup.ngramGramTable(nw, "text", "doc_id", n = 3))
+    val incremental = Dedup.NGram.appending(threshold = 0.1,
+        Dedup.ngramGramCensus(gOld), gNew)
+      .incremental(oldPairs, gOld, gNew)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6))).toSet
     val recompute = Dedup.ngramJaccardPairs(d, "text", "doc_id",
@@ -358,15 +354,13 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
       (5L, "alpha beta gamma delta epsilon zeta eta theta"), // cross: dups 1,2
       (7L, "completely unrelated words about other topics entirely"),
       (9L, "completely unrelated words about other topics entirely")) // new∩new
-    val oldFps = Dedup.simhashFingerprintsPortable(
-      d.filter(col("doc_id") <= 4), "text", "doc_id")
-    val newFps = Dedup.simhashFingerprintsPortable(
-      d.filter(col("doc_id") > 4), "text", "doc_id")
-    val oldPairs = Dedup.simhashDupPairsPortableFromFingerprints(oldFps)
-    val incremental = Dedup.simhashPairsIncrementalPortable(
-        oldPairs, oldFps, newFps)
+    val sh = SimHash()
+    val oldFps = sh.signatures(d.filter(col("doc_id") <= 4), "text", "doc_id")
+    val newFps = sh.signatures(d.filter(col("doc_id") > 4), "text", "doc_id")
+    val oldPairs = sh.pairs(oldFps)
+    val incremental = sh.incremental(oldPairs, oldFps, newFps)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val recompute = Dedup.simhashDupPairsPortable(d, "text", "doc_id")
+    val recompute = sh.textPairs(d, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(incremental == recompute && incremental.nonEmpty)
   }
@@ -389,8 +383,12 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
     val args = (0.9, 4, 8, 4) // threshold, planes, tables, dim
     val oldPairs = Dedup.embeddingDupPairs(old, "embedding", "vec_id",
       args._1, args._2, args._3, args._4)
-    val incremental = Dedup.embeddingPairsIncremental(oldPairs, old, nw,
-        "embedding", "vec_id", args._1, args._2, args._3, args._4)
+    val vecs = embs.select(col("vec_id").as("id"), col("embedding"))
+    def sketch(v: org.apache.spark.sql.DataFrame) = Dedup.embeddingBucketTable(
+      v, "embedding", "id", planes = args._2, tables = args._3, dim = args._4)
+    val incremental = Dedup.Embedding("embedding", args._1, vecs)
+      .incremental(oldPairs, sketch(vecs.filter(col("id") % 2 === 0)),
+        sketch(vecs.filter(col("id") % 2 =!= 0)))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6))).toSet
     val recompute = Dedup.embeddingDupPairs(embs, "embedding", "vec_id",
@@ -431,7 +429,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSupport {
   test("hot blocking keys are capped (skew guard drops oversized buckets)") {
     // 4 identical docs: bucket size 4 > maxBucket 3 → no pairs emitted
     val d = docs((1L, "x y z"), (2L, "x y z"), (3L, "x y z"), (4L, "x y z"))
-    assert(Dedup.minhashDupPairs(d, "text", "doc_id", numHashes = 16,
-      bands = 4, threshold = 0.1, maxBucket = 3).count() == 0)
+    assert(MinHash(numHashes = 16, bands = 4, threshold = 0.1,
+      maxBucket = 3, family = XxHash).textPairs(d, "text", "doc_id")
+      .count() == 0)
   }
 }

@@ -333,6 +333,50 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSupport {
     assert(!plan.contains("Join"), plan.take(4000))
   }
 
+  test("incremental near-dup deltas fuse cross and self below one (id_a, id_b) aggregate") {
+    // Every family's delta sends its cross(old, new) and self(new)
+    // candidate streams through ONE Union into ONE pair reduction
+    // (dedup or shared-key count) — one exchange and AQE stage instead
+    // of one per stream, from the one blocked-pairs core.
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        Seq(m.relation.cachedPlan)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }) ++ p.children).flatMap(nodes)
+    def unionBelow(p: SparkPlan): Boolean = p match {
+      case _: UnionExec => true
+      case q: QueryStageExec => unionBelow(q.plan)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        unionBelow(m.relation.cachedPlan)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        unionBelow(a.executedPlan)
+      // a verify that re-attaches values joins them onto the candidate
+      // stream, its left side
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        unionBelow(j.left)
+      case x if x.children.size == 1 => unionBelow(x.children.head)
+      case _ => false
+    }
+    for (q <- Seq("q_dedup_incremental", "q_dedup_incremental_simhash",
+        "q_dedup_incremental_ngram", "q_dedup_incremental_embedding")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      val fused = nodes(plan).exists {
+        case a: BaseAggregateExec =>
+          Set("id_a", "id_b").subsetOf(a.groupingExpressions.map(_.name).toSet) &&
+            unionBelow(a.child)
+        case _ => false
+      }
+      assert(fused, s"$q: no Union below an (id_a, id_b) aggregate\n" +
+        plan.treeString.take(4000))
+    }
+  }
+
   test("q_similarity_ivf_indexed probes the persisted index with a top-k heap") {
     // Index read (cell-filtered scan of the materialized assignment
     // table) + TakeOrderedAndProject — never a global sort, never a

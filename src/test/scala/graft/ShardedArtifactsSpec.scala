@@ -109,43 +109,36 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
 
   test("minhash delta over the sharded band index ≡ flat incremental; pruned at the scan") {
     val s = spark
-    val sigs = Dedup.minhashSignaturesPortable(corpus, "text", "doc_id",
-      numHashes = 32, shingle = 3).cache()
-    val newSigs = Dedup.minhashSignaturesPortable(slice, "text", "doc_id",
-      numHashes = 32, shingle = 3).cache()
+    val mh = Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.2,
+      shingle = 3)
+    val sigs = mh.signatures(corpus, "text", "doc_id").cache()
+    val newSigs = mh.signatures(slice, "text", "doc_id").cache()
     val dir = Files.createTempDirectory("graft-sh-band").toString
-    Dedup.writeShardedBandIndex(sigs, dir, numHashes = 32, bands = 8,
-      shards = 16)
-    val flat = Dedup.minhashPairsIncrementalPortable(
+    mh.writeIndex(sigs, dir)
+    val flat = mh.incremental(
       sigs.limit(0).select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0.0).as("est_jaccard")).limit(0),
-      sigs, newSigs, numHashes = 32, bands = 8, threshold = 0.2)
-    val sharded = Dedup.minhashDeltaSharded(s, dir, newSigs,
-      numHashes = 32, bands = 8, threshold = 0.2, shards = 16)
+      sigs, newSigs)
+    val sharded = mh.deltaSharded(s, dir, newSigs)
     assert(rows(sharded) == rows(flat) && rows(flat).nonEmpty)
-    assertPruned(scansOf(Dedup.minhashDeltaSharded(s, dir, newSigs,
-      numHashes = 32, bands = 8, threshold = 0.2, shards = 16), dir),
+    assertPruned(scansOf(mh.deltaSharded(s, dir, newSigs), dir),
       totalPartitions(dir), "band index")
   }
 
   test("simhash delta over the sharded chunk index ≡ flat incremental; pruned at the scan") {
     val s = spark
-    val fps = Dedup.simhashFingerprintsPortable(corpus, "text", "doc_id")
-      .cache()
-    val newFps = Dedup.simhashFingerprintsPortable(slice, "text", "doc_id")
-      .cache()
+    val sh = Dedup.SimHash(maxHamming = 3)
+    val fps = sh.signatures(corpus, "text", "doc_id").cache()
+    val newFps = sh.signatures(slice, "text", "doc_id").cache()
     val dir = Files.createTempDirectory("graft-sh-chunk").toString
-    Dedup.writeShardedChunkIndex(fps, dir, bits = 60, maxHamming = 3,
-      shards = 16)
-    val flat = Dedup.simhashPairsIncrementalPortable(
+    sh.writeIndex(fps, dir)
+    val flat = sh.incremental(
       fps.limit(0).select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0).as("hamming")).limit(0),
-      fps, newFps, maxHamming = 3)
-    val sharded = Dedup.simhashDeltaSharded(s, dir, newFps, bits = 60,
-      maxHamming = 3, shards = 16)
+      fps, newFps)
+    val sharded = sh.deltaSharded(s, dir, newFps)
     assert(rows(sharded) == rows(flat) && rows(flat).nonEmpty)
-    assertPruned(scansOf(Dedup.simhashDeltaSharded(s, dir, newFps,
-      bits = 60, maxHamming = 3, shards = 16), dir),
+    assertPruned(scansOf(sh.deltaSharded(s, dir, newFps), dir),
       totalPartitions(dir), "chunk index")
   }
 
@@ -157,26 +150,25 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
       .cache()
     val gDir = Files.createTempDirectory("graft-sh-gram").toString
     val cDir = Files.createTempDirectory("graft-sh-census").toString
-    Dedup.writeShardedGramIndex(grams, gDir, shards = 16)
-    Dedup.writeShardedGramCensus(Dedup.ngramGramCensus(grams), cDir,
-      shards = 16)
-    val flat = Dedup.ngramPairsIncrementalWithCensus(
+    Dedup.writeShardedGramIndex(grams, gDir)
+    Dedup.writeShardedGramCensus(Dedup.ngramGramCensus(grams), cDir)
+    val flat = Dedup.NGram.appending(threshold = 0.3,
+        Dedup.ngramGramCensus(grams), gramsNew, maxDf = 1000).incremental(
       grams.limit(0).select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0.0).as("jaccard")).limit(0),
-      grams, gramsNew, Dedup.ngramGramCensus(grams), threshold = 0.3,
-      maxDf = 1000)
+      grams, gramsNew)
     val sharded = Dedup.ngramDeltaSharded(s, gDir, cDir, gramsNew,
-      threshold = 0.3, maxDf = 1000, shards = 16)
+      threshold = 0.3, maxDf = 1000)
     assert(rows(sharded) == rows(flat) && rows(flat).nonEmpty)
     // Gram keys are dense per doc (Sharded's selectivity-honesty note):
     // this 3-doc slice still leaves some shards untouched, which is
     // exactly what the strict `<` lock asserts; a corpus-scale slice
     // would saturate the shard set and fall back to the bloom regime.
     assertPruned(scansOf(Dedup.ngramDeltaSharded(s, gDir, cDir, gramsNew,
-      threshold = 0.3, maxDf = 1000, shards = 16), gDir),
+      threshold = 0.3, maxDf = 1000), gDir),
       totalPartitions(gDir), "gram index")
     assertPruned(scansOf(Dedup.ngramDeltaSharded(s, gDir, cDir, gramsNew,
-      threshold = 0.3, maxDf = 1000, shards = 16), cDir),
+      threshold = 0.3, maxDf = 1000), cDir),
       totalPartitions(cDir), "gram census")
   }
 
@@ -201,22 +193,23 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
       planes = 3, tables = 4, dim = 8).cache()
     val bDir = Files.createTempDirectory("graft-sh-bucket").toString
     val vDir = Files.createTempDirectory("graft-sh-vecs").toString
-    Dedup.writeShardedBucketIndex(oldB, bDir, shards = 16)
-    Dedup.writeShardedVectors(oldVecs, vDir, shards = 16)
-    val flat = Dedup.embeddingPairsIncrementalFromBuckets(
+    Dedup.writeShardedBucketIndex(oldB, bDir)
+    Dedup.writeShardedVectors(oldVecs, vDir)
+    val flat = Dedup.Embedding("embedding", threshold = 0.5,
+        oldVecs.unionByName(newVecs)).incremental(
       oldB.limit(0).select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0.0).as("cos")).limit(0),
-      oldB, oldVecs, newB, newVecs, "embedding", threshold = 0.5)
+      oldB, newB)
     val sharded = Dedup.embeddingDeltaSharded(s, bDir, vDir, newB,
-      newVecs, "embedding", threshold = 0.5, shards = 16)
+      newVecs, "embedding", threshold = 0.5)
     def r4(df: DataFrame) = rows(df.withColumn("cos",
       floor(col("cos") * 10000 + 0.5) / 10000))
     assert(r4(sharded) == r4(flat) && r4(flat).nonEmpty)
     assertPruned(scansOf(Dedup.embeddingDeltaSharded(s, bDir, vDir, newB,
-      newVecs, "embedding", threshold = 0.5, shards = 16), bDir),
+      newVecs, "embedding", threshold = 0.5), bDir),
       totalPartitions(bDir), "bucket index")
     assertPruned(scansOf(Dedup.embeddingDeltaSharded(s, bDir, vDir, newB,
-      newVecs, "embedding", threshold = 0.5, shards = 16), vDir),
+      newVecs, "embedding", threshold = 0.5), vDir),
       totalPartitions(vDir), "vector fetch")
   }
 
@@ -231,9 +224,10 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
     val root = Files.createTempDirectory("graft-sh-labels").toString
     Dedup.writeShardedLabels(oldLabels, s"$root/by_id", s"$root/by_comp",
       "doc_id", shards = 16)
-    val delta = Dedup.ngramJaccardCrossPairsFromGrams(grams,
-      Dedup.ngramGramTable(slice, "text", "doc_id", n = 3),
-      threshold = 0.3, maxDf = 1000).select("id_a", "id_b").cache()
+    val sliceGrams = Dedup.ngramGramTable(slice, "text", "doc_id", n = 3)
+    val delta = Dedup.NGram.appending(threshold = 0.3,
+        Dedup.ngramGramCensus(grams), sliceGrams, maxDf = 1000)
+      .cross(grams, sliceGrams).select("id_a", "id_b").cache()
     assert(delta.count() > 0, "fixture: slice must touch the corpus")
     val expected = Dedup.assignComponents(
       corpus.select("doc_id").unionByName(slice.select("doc_id")),
@@ -260,20 +254,17 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
 
   test("sharded simhash point probe ≡ flat probe; one scan pruned to ≤ chunks partitions") {
     val s = spark
-    val fps = Dedup.simhashFingerprintsPortable(corpus, "text", "doc_id")
-      .cache()
+    val sh = Dedup.SimHash(maxHamming = 3)
+    val fps = sh.signatures(corpus, "text", "doc_id").cache()
     val dir = Files.createTempDirectory("graft-sh-chunkprobe").toString
-    Dedup.writeShardedChunkIndex(fps, dir, bits = 60, maxHamming = 3,
-      shards = 16)
+    sh.writeIndex(fps, dir)
     val qid = 0L
     val qfp = fps.filter(col("id") === qid).select("fp").head().getLong(0)
-    val flat = Dedup.simhashProbeFromFingerprints(fps, qid,
-      maxHamming = 3)
-    val sharded = Dedup.probeShardedChunkIndex(s, dir, qfp, bits = 60,
-      maxHamming = 3, shards = 16, excludeId = Some(qid))
+    val flat = sh.probeId(fps, qid)
+    val sharded = sh.probeIndex(s, dir, qfp, excludeId = Some(qid))
     assert(rows(sharded) == rows(flat) && rows(flat).nonEmpty)
-    val scans = scansOf(Dedup.probeShardedChunkIndex(s, dir, qfp,
-      bits = 60, maxHamming = 3, shards = 16, excludeId = Some(qid)), dir)
+    val scans = scansOf(sh.probeIndex(s, dir, qfp, excludeId = Some(qid)),
+      dir)
     assert(scans.size == 1, s"expected one probe scan, got ${scans.size}")
     scans.foreach { f =>
       assert(f.selectedPartitions.partitionCount <= 4,
@@ -296,24 +287,24 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
       "id", planes = 3, tables = 4, dim = 8, seed = 7L).cache()
     val bDir = Files.createTempDirectory("graft-sh-lshidx").toString
     val vDir = Files.createTempDirectory("graft-sh-lshvecs").toString
-    graft.ext.Dedup.writeShardedBucketIndex(buckets, bDir, shards = 16)
-    graft.ext.Dedup.writeShardedVectors(vecs, vDir, shards = 16)
+    graft.ext.Dedup.writeShardedBucketIndex(buckets, bDir)
+    graft.ext.Dedup.writeShardedVectors(vecs, vDir)
     val q = vec(3)
     val flat = graft.ext.Similarity.lshTopK(
       vecs.withColumnRenamed("id", "vec_id"), "embedding", "vec_id", q,
       k = 5, planes = 3, tables = 4, seed = 7L)
       .select(col("vec_id").as("id"), col("score"))
     val sharded = graft.ext.Similarity.lshTopKSharded(s, bDir, vDir, q,
-      k = 5, planes = 3, tables = 4, seed = 7L, shards = 16)
+      k = 5, planes = 3, tables = 4, seed = 7L)
     def r4(df: DataFrame) = df.withColumn("score",
       floor(col("score") * 10000 + 0.5) / 10000).collect()
       .map(_.mkString("|")).toSeq
     assert(r4(sharded) == r4(flat) && r4(flat).nonEmpty)
     assertPruned(scansOf(graft.ext.Similarity.lshTopKSharded(s, bDir,
-      vDir, q, k = 5, planes = 3, tables = 4, seed = 7L, shards = 16),
+      vDir, q, k = 5, planes = 3, tables = 4, seed = 7L),
       bDir), totalPartitions(bDir), "LSH bucket index")
     scansOf(graft.ext.Similarity.lshTopKSharded(s, bDir, vDir, q, k = 5,
-      planes = 3, tables = 4, seed = 7L, shards = 16), bDir).foreach { f =>
+      planes = 3, tables = 4, seed = 7L), bDir).foreach { f =>
       assert(f.selectedPartitions.partitionCount <= 4,
         s"probe selected ${f.selectedPartitions.partitionCount} > tables")
     }
@@ -325,10 +316,9 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
     // must touch a strict minority of the artifact's bytes even at
     // fixture scale, and the flat OR-filter must touch all of them
     val s = spark
-    val sigs = Dedup.minhashSignaturesPortable(corpus, "text", "doc_id",
-      numHashes = 32, shingle = 3).cache()
-    val pairs = Dedup.minhashDupPairsPortableFromSignatures(sigs,
-      numHashes = 32, bands = 8, threshold = 0.2).cache()
+    val mh = Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.2,
+      shingle = 3)
+    val pairs = mh.textPairs(corpus, "text", "doc_id").cache()
     val flatDir = Files.createTempDirectory("graft-fp-flat").toString
     pairs.write.mode("overwrite").parquet(flatDir)
     val adjDir = Files.createTempDirectory("graft-fp-adj").toString
@@ -354,10 +344,9 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
 
   test("adjacency probe reads one shard and matches the pairs rows") {
     val s = spark
-    val sigs = Dedup.minhashSignaturesPortable(corpus, "text", "doc_id",
-      numHashes = 32, shingle = 3).cache()
-    val pairs = Dedup.minhashDupPairsPortableFromSignatures(sigs,
-      numHashes = 32, bands = 8, threshold = 0.2).cache()
+    val mh = Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.2,
+      shingle = 3)
+    val pairs = mh.textPairs(corpus, "text", "doc_id").cache()
     assert(pairs.count() > 0)
     val dir = Files.createTempDirectory("graft-sh-adj").toString
     Dedup.writeShardedAdjacency(pairs, dir, "est_jaccard", shards = 16)

@@ -23,21 +23,20 @@ class ShardedIndexSpec extends AnyFunSuite with SparkTestSupport {
         s"about topic $fam with tokens t$fam u$fam v$fam w$fam"
       (i.toLong, if (i < 6) base else base + s" unique tail $i x$i y$i z$i")
     }.toDF("doc_id", "text")
-    Dedup.minhashSignaturesPortable(docs, "text", "doc_id",
-      numHashes = 32, shingle = 3)
+    mh.signatures(docs, "text", "doc_id")
   }
+
+  private val mh = Dedup.MinHash(numHashes = 32, bands = 8,
+    threshold = 0.2, shingle = 3)
 
   test("sharded probe ≡ unsharded probe; every per-band scan prunes to ≤1 partition") {
     val s = spark
     val sg = sigs.cache()
     val dir = Files.createTempDirectory("graft-shardidx").toString
-    Dedup.writeShardedBandIndex(sg, dir, numHashes = 32, bands = 8,
-      shards = 16)
+    mh.writeIndex(sg, dir)
     val q = sg.filter(col("id") === 0L).select("sig").head().getSeq[Long](0)
-    val probe = Dedup.probeShardedBandIndex(s, dir, q, numHashes = 32,
-      bands = 8, threshold = 0.2, shards = 16, excludeId = Some(0L))
-    val reference = Dedup.minhashProbeFromSignatures(sg, queryId = 0L,
-      numHashes = 32, bands = 8, threshold = 0.2)
+    val probe = mh.probeIndex(s, dir, q, excludeId = Some(0L))
+    val reference = mh.probeId(sg, queryId = 0L)
     val got = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     val want = reference.collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -53,8 +52,7 @@ class ShardedIndexSpec extends AnyFunSuite with SparkTestSupport {
     val prevAqe = s.conf.get(aqeKey)
     val scans = try {
       s.conf.set(aqeKey, "false")
-      val p2 = Dedup.probeShardedBandIndex(s, dir, q, numHashes = 32,
-        bands = 8, threshold = 0.2, shards = 16, excludeId = Some(0L))
+      val p2 = mh.probeIndex(s, dir, q, excludeId = Some(0L))
       p2.collect()
       p2.queryExecution.executedPlan.collectLeaves()
         .collect { case f: FileSourceScanExec => f }
@@ -73,8 +71,7 @@ class ShardedIndexSpec extends AnyFunSuite with SparkTestSupport {
     val s = spark
     val sg = sigs
     val dir = Files.createTempDirectory("graft-shardidx2").toString
-    Dedup.writeShardedBandIndex(sg, dir, numHashes = 32, bands = 8,
-      shards = 16)
+    mh.writeIndex(sg, dir)
     val idx = s.read.parquet(dir)
     assert(idx.columns.toSet == Set("id", "sig", "bucket", "band", "shard"))
     // every doc appears once per band; shard is the engine hash of the

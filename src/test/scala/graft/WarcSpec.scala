@@ -165,6 +165,27 @@ class WarcSpec extends AnyFunSuite with SparkTestSupport {
     intercept[org.apache.spark.SparkException] {
       Warc.readRecords(spark, dir, strict = true).collect()
     }
+    // a ~100-byte record whose header claims MaxPayloadBytes − 1: it
+    // quarantines like any short payload, and the decode allocates with
+    // the bytes present, not with the claim
+    val liar = new String(rec(3, "liar"), UTF_8).replace(
+      "Content-Length: 4\r\n",
+      s"Content-Length: ${Warc.MaxPayloadBytes - 1}\r\n").getBytes(UTF_8)
+    val dir2 = tmpDir()
+    write(s"$dir2/l.warc", liar)
+    val lied = Warc.readRecords(spark, dir2).collect()
+    assert(lied.length == 1 &&
+      lied.head.getAs[String]("error").contains("EOF"))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val thrown = intercept[Warc.WarcFormatException] {
+      Warc.readRecord(new java.io.ByteArrayInputStream(liar))
+    }
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(thrown.getMessage.contains("EOF"))
+    assert(allocated < (16L << 20), s"decode allocated $allocated bytes")
   }
 
   // ---------------------------------------------------- splittable path
