@@ -33,7 +33,15 @@ import org.apache.spark.sql.SparkSession
   *     per-trigger latency EQUAL to the default store (p50 0.89 vs
   *     0.90 s, p95 better), 2.8× less executor memory (273 vs 778 MB),
   *     faster restart-from-checkpoint (2.1 vs 3.0 s) — no latency
-  *     price, only a heap ceiling removed.
+  *     price, only a heap ceiling removed;
+  *   - RocksDB changelog checkpointing (Spark's default is off): a
+  *     trigger's state commit writes each partition's changelog instead
+  *     of zipping and uploading a snapshot of every partition, and
+  *     snapshots are made in background maintenance. A checkpoint
+  *     written with it off restarts with it on (`CheckpointRestartSpec`).
+  *     It cut the dashboard benchmark's state commit p50 from 762 to
+  *     483 ms (SURVEY §25). Only stateful streaming operators use a
+  *     state store, so batch queries are unaffected.
   */
 object GraftSession {
 
@@ -74,6 +82,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
 
   private def localBuilder(threads: Int): SparkSession.Builder =
     builder(shufflePartitions = threads)

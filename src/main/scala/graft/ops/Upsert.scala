@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * Scale note: `row_number()` over `partitionBy(keys)` is one hash
   * Exchange on the keys followed by a per-partition sort — no skew issue
   * as long as a single key's update history fits a partition (true here:
-  * keys are per-game-per-day). For streaming use, [[graft.streaming.Pipeline]]
-  * applies the same function inside `foreachBatch` to merge micro-batches
-  * into the view.
+  * keys are per-game-per-day). An input already hash-partitioned on a
+  * subset of `keys` is clustered enough, and the window then plans no
+  * exchange of its own: [[graft.streaming.ShardedUpsertSink]]'s merge
+  * hashes its union by `shard` and passes `shard +: keys`, so its one
+  * exchange serves both the window and the shard-partitioned write.
   */
 object Upsert {
 

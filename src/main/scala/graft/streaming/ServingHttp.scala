@@ -31,18 +31,23 @@ import graft.ops.Serving
   * Freshness model: the reference POLLS its view every 5 s; this shell
   * instead calls the `view` SUPPLIER once per request, so wiring it to
   * [[ShardedUpsertSink.currentView]] serves each request from the
-  * newest committed manifest (a manifest read, no Spark job) and
-  * wiring it to a cached DataFrame serves a fixed snapshot. The store's
-  * GC may delete a resolved frame's files while the request scans them
-  * (two commits landed in between): a read that fails on a missing file
-  * resolves the view again and reruns while each new frame reads files
-  * the failed one did not (the store has committed since), within the
-  * same time budget; when nothing new was committed the missing file is
-  * a real loss and the request answers 500. Responses
-  * collect() — correct for the serving tier BY CONSTRUCTION: every
-  * query aggregates the pre-rolled-up view down to (games × months)
-  * rows, the same cardinality the reference's pandas callbacks
-  * materialize.
+  * newest committed manifest and wiring it to a cached DataFrame serves
+  * a fixed snapshot. Over the sharded store a view resolution is a
+  * manifest read, the shard listings and one parquet footer, no Spark
+  * job; a view that fits one advisory partition (the dashboard's) is
+  * read as one partition, so each `/timeseries`, `/ranking` and
+  * `/games` request runs ONE Spark job of one task with no exchange.
+  * The store's GC may delete a resolved frame's files while the request
+  * scans them (two commits landed in between): a read that fails on a
+  * missing file resolves the view again and reruns while each new frame
+  * reads files the failed one did not (the store has committed since),
+  * within the same time budget; when nothing new was committed — or the
+  * view cannot be resolved again because no shard has a data file left
+  * — the missing file is a real loss and the request answers 500 with
+  * the scan's error. Responses collect() — correct for the serving
+  * tier BY CONSTRUCTION: every query aggregates the pre-rolled-up view
+  * down to (games × months) rows, the same cardinality the reference's
+  * pandas callbacks materialize.
   *
   * Input hygiene: `metric` must exist in the view schema and carry the
   * A_/T_ prefix discipline — unknown names 400 with the allowed list
@@ -163,7 +168,10 @@ final class ServingHttp(view: () => Option[DataFrame], port: Int = 0,
     catch {
       case e: Exception if ServingHttp.missingFile(e) =>
         val seen = v.inputFiles.toSet
-        view().filter(_.inputFiles.exists(!seen.contains(_))) match {
+        val next =
+          try view()
+          catch { case r: Exception if ServingHttp.missingFile(r) => None }
+        next.filter(_.inputFiles.exists(!seen.contains(_))) match {
           case Some(next) => followingCommits(body, next)
           case None => throw e
         }

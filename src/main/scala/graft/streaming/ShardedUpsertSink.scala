@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import graft.ext.Sharded
 import graft.ops.Upsert
@@ -31,9 +34,16 @@ import graft.ops.Upsert
   * merge, as [[Pipeline.maintainView]] starts it); [[maybeReshard]]
   * grows the modulus as the view grows.
   *
+  * A merge's Spark work is one job to collect the touched shards and
+  * one shuffle on `shard` under the write ([[mergeBatch]]); every read
+  * of the store carries the stored schema from one driver-side parquet
+  * footer, so no read infers a schema with a job of its own.
+  *
   * Readers resolve the newest committed manifest ([[currentView]], no
-  * Spark job) and scan its files; GC keeps [[KeepVersions]] manifests,
-  * so a scan that outlives two commits can find its files deleted —
+  * Spark job) and scan its files; a view that fits one advisory
+  * partition is read as one partition, so a serving query over it is
+  * one job of one task. GC keeps [[KeepVersions]] manifests, so a scan
+  * that outlives two commits can find its files deleted —
   * [[ServingHttp]] re-resolves the view and reruns such a read.
   *
   * Layout and commit protocol:
@@ -159,14 +169,14 @@ object ShardedUpsertSink {
     * r15's jobless-lookup measurement the root-path spelling spent
     * ~0.5 s listing every shard dir of the version to then prune all
     * but one). The `shard IN (…)` literal additionally pins the file-
-    * index pruning for the footprint locks. `knownSchema` (the stored
-    * PAYLOAD schema, when the caller already holds it) suppresses
-    * Spark's footer-inference job at relation-resolution time — the
-    * jobless-lookup path. */
+    * index pruning for the footprint locks. Every read carries the
+    * stored PAYLOAD schema — `knownSchema` when the caller already holds
+    * it, else [[storedSchema]] of the shards read — so relation
+    * resolution runs no footer-inference job: building the frame is
+    * driver-side listing and one footer read, no Spark job. */
   private def readShards(spark: SparkSession, baseDir: String,
       manifest: Map[Int, ShardRef], wanted: Option[Set[Int]],
-      knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] = {
+      knownSchema: Option[StructType] = None): Option[DataFrame] = {
     val live = wanted match {
       case Some(w) => manifest.filter { case (s, _) => w.contains(s) }
       case None => manifest
@@ -174,18 +184,17 @@ object ShardedUpsertSink {
     if (live.isEmpty) return None
     // the physical layout adds the shard partition column; it must ride
     // the explicit schema for the isin predicate to prune at file index
-    val readSchema = knownSchema.map(s => org.apache.spark.sql.types
-      .StructType(s.fields :+ org.apache.spark.sql.types
-        .StructField("shard", org.apache.spark.sql.types.IntegerType)))
+    val readSchema = StructType(
+      knownSchema.getOrElse(storedSchema(spark, baseDir, live)).fields :+
+        StructField("shard", IntegerType))
     val reads = live.groupBy(_._2.version).toSeq.sortBy(_._1).map { case (v, ss) =>
       // basePath anchors partition discovery at the version dir: v=<id>
       // itself matches the col=val pattern and would otherwise join the
       // upward walk (the AdmissionRegistry batch= lesson).
-      val rd = spark.read.option("basePath", s"$baseDir/v=$v")
       val paths =
         if (wanted.isEmpty) Seq(s"$baseDir/v=$v") // full view: one root
         else ss.keys.toSeq.sorted.map(s => s"$baseDir/v=$v/shard=$s")
-      readSchema.fold(rd)(rd.schema)
+      spark.read.option("basePath", s"$baseDir/v=$v").schema(readSchema)
         .parquet(paths: _*)
         .filter(col("shard").isin(ss.keys.toSeq.sorted
           .map(Integer.valueOf): _*))
@@ -194,37 +203,59 @@ object ShardedUpsertSink {
   }
 
   /** The stored PAYLOAD schema (without the `shard` partition column),
-    * read DRIVER-SIDE from one live shard's parquet footer — Spark
-    * embeds its own StructType JSON in every file it writes; the
-    * physical-schema conversion is the fallback for foreign files. No
-    * Spark job, no relation resolution: the jobless half of [[lookup]]. */
+    * read DRIVER-SIDE from the footer of one data file: the first of
+    * `manifest`'s shards, in shard order, whose directory still holds a
+    * parquet file. Spark embeds its own StructType JSON in every file it
+    * writes; the physical-schema conversion is the fallback for foreign
+    * files. No Spark job, no relation resolution. A manifest none of
+    * whose shards holds a data file (its files were lost, or GC took
+    * them after the manifest was read) raises `FileNotFoundException`,
+    * the same missing-file failure a scan of those shards would raise. */
   private def storedSchema(spark: SparkSession, baseDir: String,
-      ref: (Int, ShardRef)): org.apache.spark.sql.types.StructType = {
+      manifest: Map[Int, ShardRef]): StructType = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(s"$baseDir/v=${ref._2.version}/shard=${ref._1}")
-    val file = fs(spark, baseDir).listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .minBy(_.getPath.getName)
+    val f = fs(spark, baseDir)
+    val file = manifest.toSeq.sortBy(_._1).iterator.flatMap { case (s, ref) =>
+      val dir = new Path(s"$baseDir/v=${ref.version}/shard=$s")
+      val listed =
+        try f.listStatus(dir)
+        catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+      listed.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .minByOption(_.getPath.getName)
+    }.nextOption().getOrElse(throw new FileNotFoundException(
+      s"upsert store $baseDir: no data file in any of the shards " +
+        manifest.keys.toSeq.sorted.mkString(",")))
     val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try {
       val meta = r.getFooter.getFileMetaData
       Option(meta.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
         .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
           .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
     } finally r.close()
   }
 
   /** The current materialized view (without the physical `shard`
-    * column); None before the first commit. */
+    * column); None before the first commit. Resolving it runs no Spark
+    * job: one manifest read, the shard listings and one footer
+    * ([[readShards]]). A view whose manifest records at most
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` of shard bytes is
+    * returned as ONE partition: an aggregate or sort over it then needs
+    * no exchange, so each serving query ([[graft.ops.Serving]]) runs one
+    * job of one task. A larger view keeps the scan's partitions. */
   def currentView(spark: SparkSession, baseDir: String): Option[DataFrame] =
     versions(spark, baseDir).lastOption.flatMap { v =>
-      readShards(spark, baseDir, readManifest(spark, baseDir, v)._2, None)
-    }.map(_.drop("shard"))
+      val manifest = readManifest(spark, baseDir, v)._2
+      readShards(spark, baseDir, manifest, None).map { df =>
+        val view = df.drop("shard")
+        if (manifest.values.map(_.bytes).sum <= spark.sessionState.conf
+            .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) view.coalesce(1)
+        else view
+      }
+    }
 
   /** POINT LOOKUP: the current view's rows for ONE key, reading only the
     * key's own `shard=` directory under its owning version — the serving
@@ -261,7 +292,7 @@ object ShardedUpsertSink {
       if (manifest.isEmpty) None
       else {
         // stored schema: one live shard's footer, read driver-side
-        val schema = storedSchema(spark, baseDir, manifest.head)
+        val schema = storedSchema(spark, baseDir, manifest)
         val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
         val typed = keys.zip(values).map { case (k, x) =>
           require(schema.fieldNames.contains(k),
@@ -285,9 +316,7 @@ object ShardedUpsertSink {
             Some(schema))
           .getOrElse(spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(schema.fields :+
-              org.apache.spark.sql.types.StructField("shard",
-                org.apache.spark.sql.types.IntegerType)))))
+            StructType(schema.fields :+ StructField("shard", IntegerType)))))
           .map { df =>
             keys.zip(typed).foldLeft(df) { case (d, (k, l)) =>
               d.filter(col(k) ===
@@ -319,22 +348,28 @@ object ShardedUpsertSink {
       case None => shards
     }
     val prevManifest = prev.map(_._2).getOrElse(Map.empty[Int, ShardRef])
-    val tagged = batch.withColumn("__batch", lit(batchId))
+    // the id enters the plan through a UDF, not a literal: generated
+    // code inlines a long literal, so every merge would compile its
+    // stages afresh, while a UDF is referenced, and the code is the same
+    val tagged = batch.withColumn("__batch", udf(() => batchId).apply())
       .withColumn("shard", shardExpr(keys, p))
       .persist()
     try {
-      val touched = tagged.select("shard").distinct()
-        .collect().map(_.getInt(0)).toSet
+      val touched = touchedShards(tagged)
       val unioned = readShards(spark, baseDir, prevManifest,
           Some(touched)) match {
         case Some(prev) => prev.unionByName(tagged)
         case None => tagged
       }
-      // keep-latest within the touched shards only; rows keep their
-      // shard value (a key's shard is a pure function of the key, so
-      // merge never moves rows across shards)
-      Upsert.keepLatestPerKey(unioned, keys, orderCols :+ "__batch")
-        .repartition(col("shard"))
+      // keep-latest within the touched shards only, behind ONE exchange:
+      // the union is hashed by shard, and keep-latest runs per
+      // (shard +: keys) — the same groups as per key, because a key's
+      // shard is a pure function of the key (merge never moves rows
+      // across shards). Hash partitioning on shard already clusters
+      // those groups, so the window plans no exchange of its own, and
+      // its sort (shard first) is the order the partitioned write needs.
+      Upsert.keepLatestPerKey(unioned.repartition(col("shard")),
+          "shard" +: keys, orderCols :+ "__batch")
         .write.partitionBy("shard")
         .mode("overwrite").parquet(s"$baseDir/v=$batchId")
       // size the rewritten shards NOW (O(touched) listings amortized
@@ -346,6 +381,16 @@ object ShardedUpsertSink {
       writeManifest(spark, baseDir, batchId, p, manifest)
       gc(spark, baseDir, batchId)
     } finally tagged.unpersist()
+  }
+
+  /** The distinct `shard` values of `tagged`: deduplicated inside each
+    * partition, then on the driver — one job and no shuffle, where a
+    * `distinct()` would plan an exchange and a second job. */
+  private def touchedShards(tagged: DataFrame): Set[Int] = {
+    val s = tagged.sparkSession
+    import s.implicits._
+    tagged.select("shard").as[Int].mapPartitions(_.toSet.iterator)
+      .collect().toSet
   }
 
   /** OFFLINE maintenance: rewrite the current view under a NEW shard

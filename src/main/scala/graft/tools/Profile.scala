@@ -64,20 +64,25 @@ object Profile {
 
     Tables(spark, sfDir, "documents").count() // warmup
     val fn = SparkEntry.queries(name)
-    if (doExplain) fn(spark, sfDir).explain("formatted")
+    // every run starts from released caches, run 1 included: building the
+    // plan to explain it evaluates the query's tracked frames
+    def release(): Unit = {
+      spark.catalog.clearCache()
+      graft.ops.Caches.releaseAll() // checkpoint storage (outside cache mgr)
+      // let straggler listener events drain before the counters are read
+      // or reset
+      Thread.sleep(100)
+    }
+    if (doExplain) { fn(spark, sfDir).explain("formatted"); release() }
     (1 to repeats).foreach { i =>
       Seq(jobs, stages, tasks, shufRead, shufWrite).foreach(_.set(0))
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      graft.ops.Caches.releaseAll() // checkpoint storage (outside cache mgr)
-      // let straggler listener events drain before reading the counters
-      Thread.sleep(100)
+      release()
       println(f"[profile] $name run $i: rows=$n time=$dt%.2f s " +
         f"jobs=${jobs.get()} stages=${stages.get()} tasks=${tasks.get()} " +
-        f"shufRead=${shufRead.get() / 1048576.0}%.1fMB " +
-        f"shufWrite=${shufWrite.get() / 1048576.0}%.1fMB")
+        s"shufReadBytes=${shufRead.get()} shufWriteBytes=${shufWrite.get()}")
     }
     spark.stop()
   }

@@ -280,4 +280,30 @@ class ServingHttpSpec extends AnyFunSuite with SparkTestSupport {
       assert(calls.get == 2)
     } finally http.stop()
   }
+
+  test("a newest version with no data file left answers 500 FILE_NOT_EXIST") {
+    // Every shard loses its files after the view resolved: the re-resolve
+    // finds no footer to take the schema from, which is the same loss as
+    // the failed scan, so the scan's error answers.
+    val (dir, _) = rewritingStore()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val http = new ServingHttp(() => {
+      val call = calls.incrementAndGet() // counted before resolving
+      val v = graft.streaming.ShardedUpsertSink.currentView(spark, dir)
+      if (call == 1)
+        new java.io.File(s"$dir/v=0").listFiles()
+          .filter(_.getName.startsWith("shard="))
+          .flatMap(_.listFiles())
+          .filter(_.getName.contains("part-"))
+          .foreach(_.delete())
+      v
+    })
+    http.start()
+    try {
+      val (code, body) = get(HttpClient.newHttpClient(), http.boundPort,
+        "/games")
+      assert(code == 500 && body.contains("FILE_NOT_EXIST"), s"$code $body")
+      assert(calls.get == 2)
+    } finally http.stop()
+  }
 }

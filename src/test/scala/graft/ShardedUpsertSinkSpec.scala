@@ -370,6 +370,34 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     }
   }
 
+  test("the schema probe skips a shard with no data file; none left is FileNotFound") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-shup-probe").toString
+    ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 4)(
+      (0 until 40).map(i => (i.toLong, 1L, i.toDouble))
+        .toDF("k", "seq", "v"), 0L)
+    val shardDirs = new java.io.File(s"$dir/v=0").listFiles()
+      .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
+    def emptyOut(d: java.io.File): Unit =
+      d.listFiles().filter(_.getName.contains("part-")).foreach(_.delete())
+    // the first shard in order is the one the probe reads first
+    emptyOut(shardDirs.head)
+    val lost = shardDirs.head.getName.stripPrefix("shard=").toInt
+    val kept = (0 until 40).map(_.toLong).find { k =>
+      ShardedUpsertSink.lookup(s, dir, Seq("k"), Seq(k)).get
+        .collect().nonEmpty
+    }
+    assert(kept.nonEmpty, s"no key readable with shard $lost emptied")
+    shardDirs.tail.foreach(emptyOut)
+    assertThrows[java.io.FileNotFoundException] {
+      ShardedUpsertSink.lookup(s, dir, Seq("k"), Seq(kept.get))
+    }
+    assertThrows[java.io.FileNotFoundException] {
+      ShardedUpsertSink.currentView(s, dir)
+    }
+  }
+
   test("manifest carries per-shard bytes; maybeReshard decides from ONE read") {
     val s = spark
     import s.implicits._
