@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 import java.nio.file.{Files, Paths}
 
+import graft.tools.Run
+import graft.tools.Run.jstr
+
 /** Driver-run benchmark: every registered query timed at
   * SPARK_GRAFT_SF_DIR (default sf0.1), one JSON line out.
   *
@@ -54,13 +57,6 @@ import java.nio.file.{Files, Paths}
   * known 3.3× mover is flagged.
   */
 object Bench {
-
-  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Per-query times from any bench artifact: a full-precision
     * bench_out/history line, the driver's truncated stdout block, or the
@@ -234,24 +230,18 @@ object Bench {
     // was the one place a stale artifact could pass for current evidence
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "target/bench_out.json")
-    // Targeted local adjudication: run only these queries, at a minimum
-    // sample count — e.g. SPARK_GRAFT_BENCH_ONLY=q_histogram,q_join_fact
-    // SPARK_GRAFT_BENCH_MIN_SAMPLES=5 re-measures suspected movers with a
-    // real spread instead of a single shared-host sample.
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Default 2, not 1: with a single sample, sub-threshold queries carry
+    // 2 samples, not 1: with a single sample, sub-threshold queries carry
     // spread.n=1 and the telemetry cannot separate host noise from a real
     // regression (the round-8 lesson — five queries "moved" on one sample
     // each). Two baseline samples give every query a real min/max spread;
-    // movers are then re-run to ≥3 before the verdict.
-    val minSamples = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_SAMPLES", "2").toInt
+    // movers are then re-run to ≥3 before the verdict. A targeted
+    // re-measure of a few queries is `Run profile`.
+    val minSamples = 2
     // byte-sized AQE coalescing with the advisory size derived from the
     // input footprint (see GraftSession.fixtureSized): the cluster-scale
     // 64 MB default would serialize this corpus's compute-dense but
     // byte-light candidate joins onto one task
-    val spark = GraftSession.local(cpus, sfDir)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Some(sfDir))
     installCodegenMonitor()
     Tables(spark, sfDir, "events").count() // warmup
 
@@ -265,17 +255,8 @@ object Bench {
     // yields a drift factor and a drift-NORMALIZED total, making
     // round-over-round comparison self-adjudicating (no more A/B
     // re-benches of old commits).
-    def loadavg1(): Double =
-      try java.nio.file.Files
-        .readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    def anchorSample(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1, cpus)
-        .selectExpr("sum(id * 2 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def anchorSample(): Double = Run.timed(spark.range(0L, 400000000L, 1, cpus)
+      .selectExpr("sum(id * 2 + 1)").collect())._2
     // MID-WEIGHT SHUFFLE ANCHOR (VERDICT r18 #1): the sub-second
     // CPU anchor above cannot distinguish "host slow" from
     // "parallel-heavy spread slow" — r18's two same-evening runs agreed
@@ -287,15 +268,11 @@ object Bench {
     // actually contend on. Reported as anchor2_med/drift2 NEXT TO the
     // CPU anchor (anchor_med keeps its series semantics; history lines
     // stay comparable).
-    def anchor2Sample(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 48000000L, 1, cpus)
-        .selectExpr("pmod(xxhash64(id), 4096) AS k", "id")
-        .repartition(64, col("k"))
-        .groupBy("k").agg(expr("sum(id)"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def anchor2Sample(): Double = Run.timed(spark.range(0L, 48000000L, 1, cpus)
+      .selectExpr("pmod(xxhash64(id), 4096) AS k", "id")
+      .repartition(64, col("k"))
+      .groupBy("k").agg(expr("sum(id)"))
+      .write.format("noop").mode("overwrite").save())._2
     anchorSample() // JIT/codegen warm for the anchor's own plan
     val anchors = scala.collection.mutable.ListBuffer[Double]()
     anchors += anchorSample()
@@ -309,7 +286,6 @@ object Bench {
     var failed = Set.empty[String]
 
     val queries = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     val loads = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val fellBack = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -330,9 +306,8 @@ object Bench {
       // per-query load annotation: a slow sample next to a high load
       // reads as host interference; next to a quiet load it reads as a
       // real regression (VERDICT r15 #2)
-      loads(name) = math.max(loads.getOrElse(name, -1.0), loadavg1())
-      spark.catalog.clearCache()
-      graft.ops.Caches.releaseAll() // checkpoint storage (outside cache mgr)
+      loads(name) = math.max(loads.getOrElse(name, -1.0), Run.loadavg())
+      Run.release(spark)
       dt
     }
 
@@ -464,16 +439,15 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","method":"min_of_retries_gt_${rerunSec}s","wall_sec":${f"$wallSec%.2f"},"n_reruns":$rerun,"queries":$qs,"r1_total":$r1Total,"production_total":${f"$productionTotal%.2f"},"anchors_total":${f"$anchorsTotal%.2f"},$driftJson,"n_queries":${results.size},"errors":$errJson,"n_errors":${errors.size},"spread":$spreadJson,"codegen_fallbacks":$cgJson,"n_codegen_fallbacks":${fellBack.size},"prev_bench":${jstr(prevName)},"moved":$movedJson,"n_moved":${moved.size},"artifact_builds":$artJson,"loadavg":${jstr(loadavg)},"sf":${jstr(sfDir)}}"""
     Option(Paths.get(outFile).getParent).foreach(Files.createDirectories(_))
     Files.writeString(Paths.get(outFile), json + "\n")
-    // Full-precision history: a COMPLETE run (no query filter) appends its
-    // line so the NEXT round's move detector compares against untruncated
-    // per-query data instead of the driver's char-budgeted tail.
-    if (only.isEmpty && results.size == SparkEntry.queries.size)
-      try Files.writeString(Paths.get("BENCH_HISTORY.jsonl"),
-        json + "\n", java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] history append failed: ${e.getMessage}")
-      }
+    // Full-precision history: every run appends its line so the NEXT
+    // round's move detector compares against untruncated per-query data
+    // instead of the char-budgeted stdout line below.
+    try Files.writeString(Paths.get("BENCH_HISTORY.jsonl"),
+      json + "\n", java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] history append failed: ${e.getMessage}")
+    }
     // The driver captures only the LAST 2000 chars of the run log and parses
     // the metric line out of that tail. The full-precision line above grew
     // past 2000 chars at 58 queries (BENCH_r01/r02 both came back

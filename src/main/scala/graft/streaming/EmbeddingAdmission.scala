@@ -70,11 +70,7 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     maxPlanes: Int = 20,
     /** corpus size at which the width starts growing (one extra sign
       * bit per doubling past it) — [[Dedup.sizedPlanes]]' n0. */
-    sizeDatum: Long = 1000L,
-    /** See [[NearDupAdmission]]'s `adaptiveExec` / [[AdmissionRegistry
-      * .withFixedPlans]]: micro-batch admission plans default to
-      * non-adaptive execution (profiled per-trigger fixed cost). */
-    adaptiveExec: Boolean = false) extends Serializable {
+    sizeDatum: Long = 1000L) extends Serializable {
 
   require(planes >= 1 && planes <= maxPlanes && maxPlanes <= 62,
     s"need 1 <= planes($planes) <= maxPlanes($maxPlanes) <= 62")
@@ -176,7 +172,7 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     * and registers their (planes, bucket, vector) rows under `batchId`. */
   def admit(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    AdmissionRegistry.withFixedPlans(spark, adaptiveExec) {
+    AdmissionRegistry.withFixedPlans(spark) {
     verifyFamilyParams(spark)
     registry.maybeCompact(spark, batchId, compactEvery)
     // ONE footer walk (no scan job, own batch excluded for replay
@@ -281,7 +277,7 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
   /** `foreachBatch` adapter. */
   def step(forward: (DataFrame, Long) => Unit)(
       batch: DataFrame, batchId: Long): Unit =
-    AdmissionRegistry.withFixedPlans(batch.sparkSession, adaptiveExec) {
+    AdmissionRegistry.withFixedPlans(batch.sparkSession) {
       forward(admit(batch, batchId), batchId)
     }
 }

@@ -47,20 +47,7 @@ import graft.ext.Dedup
 class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
     numHashes: Int = 32, bands: Int = 8,
     compactEvery: Int = 64, shards: Int = 16,
-    targetShardBytes: Long = 16L << 20,
-    /** Run the admission's own plans under adaptive query execution.
-      * Default OFF (r17, VERDICT r16 #5): admission plans are
-      * micro-batch-bounded and FIXED-SHAPE (the shuffle width is the
-      * caller's `spark.sql.shuffle.partitions` decision), so AQE's
-      * per-exchange re-plan materializes each stage as its own job —
-      * profiled at 18 vs 10 jobs and +24% per-trigger wall on 16-doc
-      * triggers (tools/TriggerProfile), with zero effect on results.
-      * Opt back in for heavily skewed backlog-drain batches where
-      * AQE's skew-split pays for its scheduling rounds. The toggle is
-      * scoped to THIS admission's actions (saved/restored around each
-      * trigger) but is session-visible while one runs — the normal
-      * one-stream-per-session deployment never observes it. */
-    adaptiveExec: Boolean = false) extends Serializable {
+    targetShardBytes: Long = 16L << 20) extends Serializable {
 
   private val registry = new AdmissionRegistry(stateDir, StructType(Seq(
     StructField("band", IntegerType), StructField("bucket", LongType))),
@@ -83,9 +70,10 @@ class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
   def admit(batch: DataFrame, batchId: Long): DataFrame =
     admitInstrumented(batch, batchId, (_, _) => ())
 
-  /** [[admit]] with a phase probe for [[graft.tools.TriggerProfile]]:
-    * `probe(phaseName, elapsedMs)` fires after each internal phase —
-    * zero overhead on the production path (the default no-op). */
+  /** [[admit]] with a phase probe for `Run crawl-arrival`
+    * ([[graft.tools.CrawlArrival]]): `probe(phaseName, elapsedMs)` fires
+    * after each internal phase — zero overhead on the production path
+    * (the default no-op). */
   def admitInstrumented(batch: DataFrame, batchId: Long,
       probe: (String, Long) => Unit): DataFrame = {
     def timed[T](phase: String)(body: => T): T = {
@@ -95,9 +83,9 @@ class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
       r
     }
     val spark = batch.sparkSession
-    // Plan-mode scope (see `adaptiveExec` doc): every action below runs
-    // under the shared fixed-plans toggle.
-    AdmissionRegistry.withFixedPlans(spark, adaptiveExec) {
+    // every action below runs under fixed (non-adaptive) plans — see
+    // AdmissionRegistry.withFixedPlans
+    AdmissionRegistry.withFixedPlans(spark) {
     // Committed-watermark compaction (every `compactEvery` batches):
     // when this batch is handed to the sink, batch `batchId-1`'s output
     // is durably committed, so folding the directories below it is
@@ -226,13 +214,13 @@ class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
         registry.historyTouched(spark, batchId, tokens))
       // no per-branch distinct: the union's own distinct below covers
       // both, and each inner distinct was a full extra exchange per
-      // trigger (TriggerProfile r17)
+      // trigger (`Run crawl-arrival`'s per-phase split, r17)
       val vsHistory = bf.join(history,
         Seq("band", "bucket"), "left_semi").select(col("id"))
       // in-batch gate as a WINDOW min over (band, bucket), not a
       // groupBy + self-join: one exchange inside the decide job,
       // instead of a separate broadcast-build job per trigger
-      // (TriggerProfile r18 — each broadcast exchange is its own job
+      // (`Run crawl-arrival`, r18 — each broadcast exchange is its own job
       // and ~40-50 ms of fixed launch cost)
       val vsBatch = bf.withColumn("__keep",
           min(col("id")).over(org.apache.spark.sql.expressions.Window
@@ -274,7 +262,7 @@ class NearDupAdmission(stateDir: String, textCol: String, idCol: String,
     // scope the plan-mode toggle over the DOWNSTREAM consumption too:
     // the admitted frame the sink materializes is as micro-batch-
     // bounded as the admission plans themselves
-    AdmissionRegistry.withFixedPlans(batch.sparkSession, adaptiveExec) {
+    AdmissionRegistry.withFixedPlans(batch.sparkSession) {
       forward(admit(batch, batchId), batchId)
     }
 }

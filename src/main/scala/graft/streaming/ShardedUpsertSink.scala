@@ -416,8 +416,8 @@ object ShardedUpsertSink {
     * attached via [[start]] get this FOR FREE since r15 — its adapter
     * reads the newest committed version at the first delivered batch
     * and offsets the run's ids above it; only callers driving
-    * [[mergeBatch]] directly still own the mapping (see
-    * [[graft.tools.StreamBench]]'s `id + 1` seed offset). If a
+    * [[mergeBatch]] directly still own the mapping (see `Run
+    * upsert-sharded`'s `id + 1` seed offset). If a
     * redelivered merge nonetheless COLLIDES
     * with the reshard's id, exactly-once semantics win by design: the
     * merge recomputes against `versions < batchId` (the retained

@@ -53,11 +53,7 @@ import graft.ext.{Dedup, Spans}
 class SpanAdmission(stateDir: String, textCol: String, idCol: String,
     k: Int = 8, gatePct: Int = 20,
     compactEvery: Int = 64, shards: Int = 16,
-    targetShardBytes: Long = 16L << 20,
-    /** See [[NearDupAdmission]]'s `adaptiveExec` / [[AdmissionRegistry
-      * .withFixedPlans]]: micro-batch admission plans default to
-      * non-adaptive execution (profiled per-trigger fixed cost). */
-    adaptiveExec: Boolean = false) extends Serializable {
+    targetShardBytes: Long = 16L << 20) extends Serializable {
 
   private val registry = new AdmissionRegistry(stateDir,
     StructType(Seq(StructField("sh", LongType))),
@@ -68,7 +64,7 @@ class SpanAdmission(stateDir: String, textCol: String, idCol: String,
     * registers their distinct span hashes under `batchId`. */
   def admit(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    AdmissionRegistry.withFixedPlans(spark, adaptiveExec) {
+    AdmissionRegistry.withFixedPlans(spark) {
     // Committed-watermark compaction — same contract as
     // [[NearDupAdmission.admit]]: batches below `batchId` are durably
     // committed by the time the sink sees this one, so folding them is
@@ -196,7 +192,7 @@ class SpanAdmission(stateDir: String, textCol: String, idCol: String,
   /** `foreachBatch` adapter. */
   def step(forward: (DataFrame, Long) => Unit)(
       batch: DataFrame, batchId: Long): Unit =
-    AdmissionRegistry.withFixedPlans(batch.sparkSession, adaptiveExec) {
+    AdmissionRegistry.withFixedPlans(batch.sparkSession) {
       forward(admit(batch, batchId), batchId)
     }
 }

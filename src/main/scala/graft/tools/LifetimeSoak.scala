@@ -1,9 +1,11 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.GraftSession
 import graft.ext.Sharded
 import graft.streaming.{AdmissionRegistry, ShardedUpsertSink}
 
@@ -40,16 +42,39 @@ import graft.streaming.{AdmissionRegistry, ShardedUpsertSink}
   * soak uses small targets (the policies are size-ratio-driven; the
   * measured LAWS, not the absolute bytes, are what transfer to 100 TB).
   *
-  * Usage: runMain graft.tools.LifetimeSoak [triggers] [batchRows]
-  * (defaults 2048 × 32; ~2k Spark write jobs ⇒ run on an idle box.)
+  * The defaults (2048 × 32) are ~2k Spark write jobs; run on an idle box.
   */
 object LifetimeSoak {
 
-  def main(args: Array[String]): Unit = {
-    val triggers = args.headOption.map(_.toInt).getOrElse(2048)
-    val batchRows = if (args.length > 1) args(1).toInt else 32
-    val spark = GraftSession.local()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The registry invariants both soaks assert (this one and
+    * [[CrawlArrival]]) at trigger `i`: the registry's live `batch=`
+    * directories stay within the O(log lifetime) bound `every +
+    * ceil(log2(i)) + slack`, and the pruned history probe of the fixed
+    * `probe` frame reads no more than 4× its `firstKb` (or 512 KB).
+    * Returns (live dirs, bound, probe KB). */
+  private[tools] def checkRegistry(reg: AdmissionRegistry, dir: String,
+      every: Int, i: Long, probe: DataFrame,
+      firstKb: Option[Double]): (Int, Int, Double) = {
+    val spark = probe.sparkSession
+    val (pb, _) = Sharded.scanFootprint(spark, Seq(dir)) {
+      reg.historyTouched(spark, Long.MaxValue, reg.probeTokens(probe))
+    }
+    val kb = pb / 1024.0
+    val dirs = Option(new java.io.File(dir).listFiles())
+      .getOrElse(Array.empty)
+      .count(f => f.isDirectory && f.getName.startsWith("batch="))
+    val bound = every + 2 + (64 - java.lang.Long.numberOfLeadingZeros(i + 2L))
+    require(dirs <= bound,
+      s"live dirs $dirs > O(log) bound $bound at trigger $i")
+    firstKb.foreach(f => require(kb <= math.max(f * 4, 512.0),
+      f"probe bytes not flat: first $f%.1f KB now $kb%.1f KB at trigger $i"))
+    (dirs, bound, kb)
+  }
+
+  /** `soak [triggers] [batchRows]`. */
+  def run(spark: SparkSession, a: Seq[String]): Run.Metrics = {
+    val triggers = Run.intArg(a, 0, 2048)
+    val batchRows = Run.intArg(a, 1, 32)
 
     val root = java.nio.file.Files.createTempDirectory("graft_soak_").toString
     val regDir = s"$root/registry"
@@ -72,15 +97,11 @@ object LifetimeSoak {
       (col("id") % 1000).cast("double").as("v"),
       md5(col("id").cast("string")).as("doc"))
 
-    println(s"[soak] triggers=$triggers batch_rows=$batchRows " +
-      s"compact_every=$every upsert_target=64KiB registry_target=64KiB " +
-      "(trigger i / live dirs / reg files / probe KB / upsert P / " +
-      "upsert files / lookup files / reshards / heap MB)")
-
     var nextId = 0L
     var reshards = 0
-    var probeKbFirst = -1.0
-    val samples = scala.collection.mutable.ArrayBuffer[String]()
+    var upP = 8 // shard count: the first merge's, then each reshard's
+    var probeKbFirst = Option.empty[Double]
+    var last = Map.empty[String, Any]
 
     def fileCount(dir: String): Int = {
       def walk(f: java.io.File): Int =
@@ -88,12 +109,8 @@ object LifetimeSoak {
         else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
       walk(new java.io.File(dir))
     }
-    def liveDirs: Seq[String] = Option(new java.io.File(regDir).listFiles())
-      .getOrElse(Array.empty).filter(f => f.isDirectory &&
-        f.getName.startsWith("batch=")).map(_.getName).toSeq
 
-    val t0 = System.nanoTime()
-    (0 until triggers).foreach { i =>
+    val (_, soakS) = Run.timed((0 until triggers).foreach { i =>
       val mergeId = nextId; nextId += 1
       reg.maybeCompact(spark, mergeId, every)
       reg.append(regRows(i), mergeId)
@@ -103,53 +120,35 @@ object LifetimeSoak {
         val rid = nextId
         ShardedUpsertSink.maybeReshard(spark, upDir, upKeys, rid,
           targetShardBytes = 64L << 10).foreach { p =>
-          nextId += 1; reshards += 1
-          println(s"[soak]   trigger=$i resharded upsert store to P=$p " +
+          nextId += 1; reshards += 1; upP = p
+          Run.progress(s"soak trigger=$i resharded upsert store to P=$p " +
             s"(version $rid)")
         }
       }
       if (i % 128 == 127 || i == triggers - 1) {
         // pruned probe bytes at K=4 (guarantee 2 over lifetime)
-        val probe = spark.range(4)
-          .select(pmod(xxhash64(col("id"), lit("probe")), lit(100000L)).as("k"))
-        val tokens = reg.probeTokens(probe)
-        val (pb, _) = Sharded.scanFootprint(spark, Seq(regDir)) {
-          reg.historyTouched(spark, Long.MaxValue, tokens)
-        }
-        if (probeKbFirst < 0) probeKbFirst = pb / 1024.0
+        val (dirs, logBound, probeKb) = checkRegistry(reg, regDir, every, i,
+          spark.range(4).select(pmod(xxhash64(col("id"), lit("probe")),
+            lit(100000L)).as("k")), probeKbFirst)
+        probeKbFirst = probeKbFirst.orElse(Some(probeKb))
         // point-lookup footprint through reshards
         val probeKey = java.lang.Math.floorMod(
           new scala.util.Random(i).nextLong(), keyDomain)
         val (_, lkFiles) = Sharded.scanFootprint(spark, Seq(upDir)) {
           ShardedUpsertSink.lookup(spark, upDir, upKeys, Seq(probeKey)).get
         }
-        val upP = {
-          val last = ShardedUpsertSink.versions(spark, upDir).last
-          new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
-            .get(s"$upDir/v=$last/_manifest"))).linesIterator.next()
-            .stripPrefix("#shards ").trim.toInt
-        }
         System.gc()
         val heapMb = (Runtime.getRuntime.totalMemory() -
           Runtime.getRuntime.freeMemory()) / 1e6
-        val dirs = liveDirs
-        val logBound = every + 2 +
-          (64 - java.lang.Long.numberOfLeadingZeros(i + 2L))
-        val line = f"[soak] i=$i%5d live_dirs=${dirs.size}%3d " +
-          f"(bound=$logBound%3d) reg_files=${fileCount(regDir)}%5d " +
-          f"probe_kb=${pb / 1024.0}%8.1f up_P=$upP%5d " +
-          f"up_files=${fileCount(upDir)}%5d lookup_files=$lkFiles%2d " +
-          f"reshards=$reshards heap_mb=$heapMb%7.1f"
-        println(line); samples += line
-        // THE INVARIANTS (assert, don't eyeball)
-        require(dirs.size <= logBound,
-          s"live dirs ${dirs.size} > O(log) bound $logBound: $dirs")
+        last = ListMap("trigger" -> i, "live_dirs" -> dirs,
+          "live_dirs_bound" -> logBound, "reg_files" -> fileCount(regDir),
+          "probe_kb" -> probeKb, "upsert_shards" -> upP,
+          "upsert_files" -> fileCount(upDir), "lookup_files" -> lkFiles,
+          "heap_mb" -> heapMb)
+        Run.progress("soak " + Run.json(last))
         require(lkFiles <= 2, s"lookup footprint grew: $lkFiles files")
-        require(pb / 1024.0 <= math.max(probeKbFirst * 4, 512.0),
-          f"probe bytes not flat: first $probeKbFirst%.1f KB now ${pb / 1024.0}%.1f KB")
       }
-    }
-    val soakS = (System.nanoTime() - t0) / 1e9
+    })
 
     // FINAL content identity vs one-shot (count + bit_xor of row hashes)
     val n = triggers.toLong * batchRows
@@ -158,7 +157,7 @@ object LifetimeSoak {
       .select(pmod(xxhash64(col("id"), lit("r")), lit(100000L)).as("k"))
       .distinct()
     val gotReg = reg.history(spark, excludeBatchId = Long.MaxValue).distinct()
-    def sig(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+    def sig(df: DataFrame, cols: Seq[String]) =
       df.agg(count(lit(1)).as("n"),
         expr(s"bit_xor(xxhash64(${cols.mkString(",")}))").as("x"))
         .collect().head.toSeq
@@ -177,9 +176,8 @@ object LifetimeSoak {
       sig(expUp, Seq("k", "seq", "v", "doc")))
     require(us == ues, s"upsert view drifted: got $us expected $ues")
 
-    println(f"[soak] PASS triggers=$triggers rows=$n wall_s=$soakS%.0f " +
-      f"registry_rows=${rs.head} upsert_keys=${us.head} " +
-      f"reshards=$reshards final: ${samples.last.stripPrefix("[soak] ")}")
-    spark.stop()
+    ListMap("triggers" -> triggers, "rows" -> n, "soak_s" -> soakS,
+      "exact" -> true, "registry_rows" -> rs.head, "upsert_keys" -> us.head,
+      "reshards" -> reshards, "probe_kb_first" -> probeKbFirst, "last" -> last)
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
-import graft.GraftSession
+import org.apache.spark.sql.SparkSession
 
 /** Registry-wide physical-plan audit: explains every SparkEntry query
   * at the given sf dir and reports, per query, the plan features that
@@ -15,7 +15,7 @@ import graft.GraftSession
   * per-query spelunk, so a future regression (a typed map sneaking
   * into a hot census) is one diff away from visible.
   *
-  * Usage: runMain graft.tools.PlanAudit [sfDir]
+  * Scenario `plan-audit` of [[Run]].
   *
   * Frozen as a REGRESSION GATE in r17 (VERDICT r16 #3): PlanAuditSpec
   * runs [[audit]] over the whole registry at sf0.001 inside `sbt test`
@@ -44,8 +44,7 @@ object PlanAudit {
           val exch = " Exchange \\(".r.findAllIn(tree).length
           val smj = " SortMergeJoin".r.findAllIn(tree).length
           val cart = "CartesianProduct".r.findAllIn(tree).length
-          spark.catalog.clearCache()
-          graft.ops.Caches.releaseAll()
+          Run.release(spark)
           Audit(name, deser, exch, smj, cart, None)
         } catch {
           case e: Throwable =>
@@ -54,24 +53,18 @@ object PlanAudit {
         }
     }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = audit(spark, sfDir)
-    rows.flatMap(a => a.error.map(a.name -> _)).foreach { case (n, e) =>
-      System.err.println(s"[audit] $n failed: $e")
-    }
-    println("[audit] query deser exchanges smj cartesian")
-    rows.foreach { a =>
-      if (a.deser != 0 || a.smj > 0 || a.cartesian > 0)
-        println(f"[audit] ${a.name}%-40s ${a.deser}%2d ${a.exchanges}%2d ${a.smj}%2d ${a.cartesian}%2d")
-    }
-    println(s"[audit] TOTAL queries=${rows.size} " +
-      s"with_deser=${rows.count(_.deser > 0)} " +
-      s"with_smj=${rows.count(_.smj > 0)} " +
-      s"with_cartesian=${rows.count(_.cartesian > 0)} " +
-      s"errors=${rows.count(_.error.isDefined)}")
-    spark.stop()
+  /** `plan-audit [sfDir]`: the audit's totals, and each query with a
+    * deser boundary, sort-merge join or cartesian product. */
+  def run(spark: SparkSession, a: Seq[String]): Run.Metrics = {
+    val rows = audit(spark, Run.arg(a, 0, "sfDir"))
+    def feature(a: Audit) = a.deser != 0 || a.smj > 0 || a.cartesian > 0
+    ListMap("queries" -> rows.size,
+      "with_deser" -> rows.count(_.deser > 0),
+      "with_smj" -> rows.count(_.smj > 0),
+      "with_cartesian" -> rows.count(_.cartesian > 0),
+      "errors" -> ListMap(rows.flatMap(a => a.error.map(a.name -> _)): _*),
+      "flagged" -> ListMap(rows.filter(feature).map(a => a.name ->
+        ListMap("deser" -> a.deser, "exchanges" -> a.exchanges,
+          "smj" -> a.smj, "cartesian" -> a.cartesian)): _*))
   }
 }
