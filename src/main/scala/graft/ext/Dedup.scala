@@ -415,7 +415,8 @@ object Dedup {
       keys: Seq[String], q: DataFrame): DataFrame = {
     val parts = keys.init :+ "shard" :+ keys.last
     val want = q.select(keys.init.map(col) ++ Seq(
-        Sharded.shardOf(col(keys.last), IndexShards), col(keys.last)): _*)
+        Sharded.shardOfAll(Seq(col(keys.last)), IndexShards),
+        col(keys.last)): _*)
       .collect()
     Pq.read(spark, path).filter(want.map(r => parts.indices
       .map(i => col(parts(i)) === lit(r.get(i))).reduce(_ && _))
@@ -1097,13 +1098,13 @@ object Dedup {
   }
 
   /** Point probe over a [[writeShardedAdjacency]] artifact: the query
-    * id's shard is computed by the ENGINE's own hash in one 1-row job
-    * (as [[pointRead]] does), then the scan pins the literal
+    * id's shard is the ENGINE's own hash evaluated on the driver
+    * ([[Sharded.driverShard]], no job), then the scan pins the literal
     * (shard, doc_id) — one directory of the index, no join. */
   def probeAdjacency(spark: org.apache.spark.sql.SparkSession,
       path: String, docId: Long, shards: Int = 16): DataFrame = {
-    val qShard = spark.range(1)
-      .select(Sharded.shardOf(lit(docId), shards)).head().getInt(0)
+    val qShard = Sharded.driverShard(
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(docId)), shards)
     graft.sources.Pq.read(spark, path)
       .filter(col("shard") === lit(qShard) && col("doc_id") === lit(docId))
       .select("other", "score")

@@ -1,6 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64}
 import org.apache.spark.sql.functions._
 
 /** Shard-partitioned PHYSICAL layouts for persisted corpus artifacts —
@@ -27,16 +29,23 @@ import org.apache.spark.sql.functions._
   */
 object Sharded {
 
-  /** The shard of `key`: engine hash mod `shards` (int — partition
-    * directory values round-trip as int). */
-  def shardOf(key: Column, shards: Int): Column =
-    pmod(xxhash64(key), lit(shards)).cast("int")
-
-  /** [[shardOf]] over a COMPOSITE key (hash of all columns together) —
-    * the shard function of artifacts whose probe key is a tuple, e.g.
-    * the streaming admission registries' (band, bucket) / (t, bucket). */
+  /** The shard of a key: engine hash of all its columns together mod
+    * `shards` (int — partition directory values round-trip as int). A
+    * single-column key is `Seq(key)`; the streaming admission registries
+    * route composite keys such as (band, bucket) / (planes, t, bucket). */
   def shardOfAll(keys: Seq[Column], shards: Int): Column =
     pmod(xxhash64(keys: _*), lit(shards)).cast("int")
+
+  /** [[shardOfAll]]'s hash for ONE key, computed on the driver with no
+    * job: Spark's own `XxHash64` expression (seed 42, `xxhash64`'s fixed
+    * seed) evaluated over typed literal children, so it cannot drift
+    * from the SQL function. Null children are skipped, as in SQL. */
+  def driverToken(key: Seq[Expression]): Long =
+    XxHash64(key, 42L).eval(InternalRow.empty).asInstanceOf[Long]
+
+  /** [[driverToken]] mod `shards` — the driver twin of [[shardOfAll]]. */
+  def driverShard(key: Seq[Expression], shards: Int): Int =
+    java.lang.Math.floorMod(driverToken(key), shards.toLong).toInt
 
   /** Write `df` as parquet partitioned on disk by
     * `shard = xxhash64(keyCol) % shards` (plus `extraPartitionCols`
@@ -56,7 +65,7 @@ object Sharded {
     // upstream tasks that is 32× the files, and at fixture scale the
     // parquet footers outweigh the data; at corpus scale it is the
     // classic small-files problem)
-    df.withColumn("shard", shardOf(col(keyCol), shards))
+    df.withColumn("shard", shardOfAll(Seq(col(keyCol)), shards))
       .repartition(parts.map(col): _*)
       .write.partitionBy(parts: _*)
       .mode(mode).parquet(path)
@@ -72,7 +81,8 @@ object Sharded {
   def touchedShards(keys: DataFrame, keyCol: String, shards: Int,
       prefixCols: Seq[String] = Nil): Seq[Seq[Int]] = {
     import scala.math.Ordering.Implicits.seqOrdering
-    keys.select(prefixCols.map(col) :+ shardOf(col(keyCol), shards): _*)
+    keys.select(
+        prefixCols.map(col) :+ shardOfAll(Seq(col(keyCol)), shards): _*)
       .distinct().collect().map(r => r.toSeq.map(_.asInstanceOf[Int]))
       .toSeq.sorted
   }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * engine's own artifacts.
   *
   * Staleness contract: artifact WRITERS call [[invalidate]] with the
-  * path they (re)wrote — the next read re-lists. Reads of paths that are
+  * path they (re)wrote — the next read re-lists, and the next
+  * [[ParquetMeta.rowCount]] re-counts. Reads of paths that are
   * mutated outside the engine's writers must not go through here.
   */
 object Pq {
@@ -36,17 +37,21 @@ object Pq {
     perSession.getOrElseUpdate(path, spark.read.parquet(path))
   }
 
-  /** Drop every cached frame at or under `path` (and any cached parent
-    * whose listing would now be stale) — called by the engine's artifact
-    * writers after a write/append so the next [[read]] re-lists. */
-  def invalidate(path: String): Unit = cache.synchronized {
-    val it = cache.values().iterator()
-    while (it.hasNext) {
-      val m = it.next()
-      m.keys.foreach { k =>
-        if (k == path || k.startsWith(path + "/") ||
-            path.startsWith(k + "/")) m.remove(k)
+  /** Drop every memo at or under `path` (and any memoized parent whose
+    * listing would now be stale): the cached frames here and
+    * [[ParquetMeta.rowCount]]'s counts. The one call the engine's
+    * artifact writers make after a write/append, so the next [[read]]
+    * re-lists and the next count re-reads the footers. */
+  def invalidate(path: String): Unit = {
+    val stale = (k: String) => k == path || k.startsWith(path + "/") ||
+      path.startsWith(k + "/")
+    cache.synchronized {
+      val it = cache.values().iterator()
+      while (it.hasNext) {
+        val m = it.next()
+        m.keys.filter(stale).foreach(m.remove)
       }
     }
+    ParquetMeta.invalidate(stale)
   }
 }

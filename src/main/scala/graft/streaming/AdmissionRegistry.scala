@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -87,6 +88,45 @@ import graft.ext.Sharded
   * `spark.read.parquet(stateDir)` still sees every row (with inferred
   * `batch`/`shard` columns) for audits.
   *
+  * **The per-trigger admission protocol**
+  * ([[AdmissionRegistry.Admission]], written once; a family supplies
+  * only its key rows and its decision). A micro-batch is admitted
+  * against history it cannot see itself in:
+  *
+  *   - Every action runs under fixed plans
+  *     ([[AdmissionRegistry.withFixedPlans]]), the downstream
+  *     consumption in `step` included.
+  *   - Committed-watermark compaction first ([[maybeCompact]] every
+  *     `compactEvery` batches): when the sink is handed batch N, batch
+  *     N−1 is durably committed, so folding below N is replay-safe.
+  *   - Then one of two forms, chosen from the input size
+  *     ([[AdmissionRegistry.smallTrigger]]; families without a driver
+  *     form always take the job form). Both make the same decisions and
+  *     register the same rows — spec-locked per family.
+  *     - *Job form.* The key rows are cached for the trigger; their
+  *       distinct key hashes ([[probeTokens]]) prune the history read
+  *       ([[historyTouched]]); the family's SQL decision yields the
+  *       rejected ids, persisted (not checkpointed: lineage survives
+  *       cache-block loss) and counted eagerly so the caller's later
+  *       consumption does not re-run the decision; the batch is
+  *       `left_anti` the rejected set, and the key rows of kept docs are
+  *       appended.
+  *     - *Driver form* (small triggers: 3 jobs instead of 9–10). One
+  *       single-task job collects the key rows; tokens come from
+  *       [[graft.ext.Sharded.driverToken]]; history is matched through a
+  *       literal `IN` predicate ([[matching]]: no shuffle, no broadcast
+  *       build, and the lists reach the row-group stats); the family's
+  *       driver decision and the append ([[appendCollected]]) run on the
+  *       driver. It never approximates: null or non-integral ids (Spark's
+  *       string/decimal `min` orderings have no cheap driver twin) and key
+  *       sets past [[AdmissionRegistry.literalCap]] fall back to the job
+  *       form. The kept rows are selected by a null-SAFE predicate (`id IS
+  *       NULL OR NOT id IN (…)`): a null-id doc with no key rows never
+  *       reaches the fallback check, and `NOT IN` alone would drop it by
+  *       three-valued logic where the job form's `left_anti` keeps it.
+  *   - Each phase (`maybeCompact`, `probeTokens`, `historyPlan`,
+  *     `decide`, `append`) reports `(phase, ms)` to the caller's probe.
+  *
   * @param shardCols payload columns whose composite hash routes a row to
   *                  its shard — the PROBE KEY (the columns the admission
   *                  join matches on), so a probe's touched-shard set is
@@ -102,6 +142,9 @@ import graft.ext.Sharded
 final class AdmissionRegistry(stateDir: String, schema: StructType,
     shardCols: Seq[String], shards: Int = 16,
     targetShardBytes: Long = 16L << 20,
+    /** A SET registry: each append registers a row once, however many
+      * times the batch produced it. */
+    distinctRows: Boolean = false,
     /** Applied to the merged payload inside [[compact]]/[[maybeCompact]]
       * folds, BEFORE re-sharding and dedup — the hook that lets a family
       * rewrite DERIVED columns while history is being rewritten anyway
@@ -528,20 +571,21 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * job path's shuffle + dynamic-partition commit protocol cost
     * ~320 ms of a 1.55 s trigger for ~130 rows (`Run crawl-arrival`'s
     * per-phase split). When every payload column is int32/int64 and the
-    * rows collect under
-    * [[AdmissionRegistry.smallAppendCap]] (ONE bounded job — the limit
-    * stops the scan), they are bucketed by the SAME pmod(xxhash64)
-    * shard function computed driver-side ([[driverShard]], spec-pinned
-    * against the SQL function) and written as one plain parquet file
-    * per touched shard — no shuffle, no committer, same layout, same
-    * crash contract (partial dir without marker = full-read). Larger
+    * rows collect under [[AdmissionRegistry.smallAppendCap]] (ONE
+    * bounded job — the limit stops the scan), they are bucketed by the
+    * SAME pmod(xxhash64) shard function evaluated driver-side
+    * ([[graft.ext.Sharded.driverShard]]) and written as one plain
+    * parquet file per touched shard — no shuffle, no committer, same
+    * layout, same crash contract (partial dir without marker =
+    * full-read). Larger
     * batches and non-fixed-width families (embedding vectors) take the
     * job path unchanged — at that size the job overhead is amortized
     * anyway. */
   def append(rows: DataFrame, batchId: Long): Unit = {
     val spark = rows.sparkSession
     val dir = new Path(s"$stateDir/batch=$batchId")
-    val ordered = rows.select(schema.fieldNames.map(col).toSeq: _*)
+    val projected = rows.select(schema.fieldNames.map(col).toSeq: _*)
+    val ordered = if (distinctRows) projected.distinct() else projected
     val fast: Option[Array[Row]] =
       if (!allFixedWidth) None
       else {
@@ -567,42 +611,42 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
   private val allFixedWidth = schema.fields.forall(f =>
     f.dataType == IntegerType || f.dataType == LongType)
 
-  /** Driver-side replica of the SQL `xxhash64(shardCols…)` the shard
-    * expression and [[probeTokens]] compute: Spark's XxHash64 folds
-    * children left-to-right from seed 42, int32 via hashInt, int64 via
-    * hashLong, nulls skipped. Pinned against the SQL function in
-    * AdmissionRegistrySpec — a drift here would mis-shard appends and
-    * break probe pruning (silent duplicate admissions). `row` is in
-    * SCHEMA column order. */
-  private[graft] def keyToken(row: Row): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    var h = 42L
-    shardColIdx.foreach { i =>
-      if (!row.isNullAt(i))
-        h = schema.fields(i).dataType match {
-          case IntegerType => XXH64.hashInt(row.getInt(i), h)
-          case _ => XXH64.hashLong(row.getLong(i), h)
-        }
-    }
-    h
-  }
+  /** A key's literal children, typed as its registry columns. */
+  private def keyLiterals(values: Seq[Any]): Seq[Literal] =
+    values.zip(keyTypes).map { case (v, t) => Literal.create(v, t) }
+  private val keyTypes = shardCols.map(schema(_).dataType)
+  private[streaming] val keyWidth = shardCols.size
+  private val shardColIdx = shardCols.map(schema.fieldIndex)
 
-  /** pmod form of [[keyToken]] — the shard a row lands in. */
-  private[graft] def driverShard(row: Row, p: Int): Int =
-    java.lang.Math.floorMod(keyToken(row), p.toLong).toInt
-  private val shardColIdx = shardCols.map(schema.fieldIndex).toArray
+  /** The driver twin of [[probeTokens]]' hash for one key (`shardCols`
+    * order). */
+  private[streaming] def token(key: Row): Long =
+    Sharded.driverToken(keyLiterals(key.toSeq))
+
+  /** Which of `keys` (`shardCols` order) `history` holds, through a
+    * literal predicate — per value of the leading key columns, the last
+    * one `IN (…)` — instead of a semi join: no shuffle, no broadcast
+    * build job, and the lists reach the parquet row-group stats. */
+  private[streaming] def matching(history: DataFrame,
+      keys: Seq[Row]): Set[Row] =
+    if (keys.isEmpty) Set.empty
+    else history.filter(keys.groupBy(_.toSeq.init).map { case (lead, ks) =>
+        (shardCols.init.zip(lead).map { case (c, v) => col(c) === lit(v) } :+
+          col(shardCols.last).isin(ks.map(_.get(lead.size)): _*))
+          .reduce(_ && _)
+      }.reduce(_ || _))
+      .select(shardCols.map(col): _*).distinct().collect().toSet
 
   /** Append PRE-COLLECTED rows (schema column order) without any Spark
-    * job — the driver leg of [[append]]'s fast path, exposed for
-    * admission families that already hold the batch's registry rows on
-    * the driver (the small-trigger fast path in [[NearDupAdmission]]):
-    * the write itself is a handful of tiny parquet files and must not
-    * cost a job launch + commit protocol. Same layout, same marker,
-    * same crash contract as the job path. */
+    * job — the driver leg of [[append]]'s fast path, used by the
+    * admission protocol's driver form, which already holds the batch's
+    * registry rows: the write itself is a handful of tiny parquet files
+    * and must not cost a job launch + commit protocol. Same layout, same
+    * marker, same crash contract as the job path. */
   private[streaming] def appendCollected(spark: SparkSession,
       rows: Array[Row], batchId: Long): Unit = {
     val dir = new Path(s"$stateDir/batch=$batchId")
-    appendDriver(spark, dir, rows)
+    appendDriver(spark, dir, if (distinctRows) rows.distinct else rows)
     writeMarker(spark, dir, shards)
   }
 
@@ -614,7 +658,9 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     f.delete(dir, true)
     f.mkdirs(dir)
     val conf = spark.sessionState.newHadoopConf()
-    rows.groupBy(driverShard(_, shards)).foreach { case (s, rs) =>
+    val shardOf = (r: Row) =>
+      Sharded.driverShard(keyLiterals(shardColIdx.map(r.get)), shards)
+    rows.groupBy(shardOf).foreach { case (s, rs) =>
       val file = new Path(dir, s"shard=$s/part-00000.parquet")
       val w = AdmissionRegistry.rowParquetWriter(file, schema, conf)
       try rs.foreach(w.write) finally w.close()
@@ -752,63 +798,57 @@ object AdmissionRegistry {
     * × bands product, far below driver-memory relevance). */
   val smallAppendCap: Int = 1 << 15
 
-  /** Shared small-trigger gate for the admission families' driver
-    * fast paths (r18, judge #6): true when the batch's input bytes
-    * are PROVABLY small, judged from its own non-empty file list with
-    * no Spark job. Unknown provenance answers FALSE — and that
-    * includes an EMPTY `inputFiles` (ADVICE r18, high): Kafka /
-    * socket / memory sources report no files for every micro-batch
-    * regardless of size, so "empty = small" routed the 100 TB/day
-    * ingest shape this class documents onto a single-task
-    * `coalesce(1).collect()` per trigger. Only a listed, ≤64-file,
-    * ≤`maxBytes` batch qualifies; the distributed path stays the
-    * semantics-defining implementation for everything else.
-    * `spark.graft.admissionFastPath = off` forces false;
-    * `= force` forces true — the equivalence specs' lever for
-    * in-memory frames, which have no file list to qualify on (the
-    * per-family row guards — literalCap, null/non-integral-id
-    * fallback — still apply under force, so even a forced oversized
-    * batch degrades to one bounded collect, not an OOM).
-    *
-    * r19, closing the hole the ADVICE fix opened: the engine's own
-    * streaming sources (WARC arrival, and any V1/RDD-backed source)
-    * report an EMPTY `inputFiles` for every micro-batch, so the sound
-    * "empty = not small" rule routed THEIR genuinely tiny triggers onto
-    * the 9-job distributed path too (measured: 1.29 s/trigger on the
-    * `Run crawl-arrival` trickle shape that ran 0.65 s in r18 — r18's
-    * number was powered by the unsound empty-is-small gate). When the
-    * caller passes `probeSize` (a per-row payload-size expression only
-    * the family knows), an empty file list falls back to ONE bounded probe
-    * job: collect at most [[probeRowCap]]+1 size values through a
-    * `limit` (the scan stops early on a big batch, and the driver
-    * receives longs, never payloads) and qualify iff the row count AND
-    * the summed payload bytes are under the gates. Sound for any
-    * source; costs one sub-batch-scan job only on the no-file-list
-    * path, which the fast path's 5-job saving dwarfs. */
-  def smallTrigger(batch: DataFrame, maxBytes: Long): Boolean =
-    smallTrigger(batch, maxBytes, None)
+  /** Input-bytes ceiling for the driver form: steady-state arrival
+    * triggers sit orders of magnitude below; backlog-drain mega-batches
+    * sit above and keep the job form (where the job overhead the driver
+    * form avoids is amortized anyway). */
+  val fastPathMaxInputBytes: Long = 4L << 20
+
+  /** Distinct-key ceiling for the driver form's literal history
+    * predicate — above it the IN-lists stop being a "small plan" and the
+    * job form's semi join is the right shape. */
+  val literalCap: Int = 4096
 
   /** Probe-row ceiling for the no-file-list qualification: far above a
     * sane micro-batch, far below driver-memory relevance (the probe
     * collects one long per row). */
   val probeRowCap: Int = 4096
 
+  /** The small-trigger gate that picks the admission protocol's driver
+    * form (r18, judge #6): true when the batch's input bytes are
+    * PROVABLY small, judged from its own non-empty file list with no
+    * Spark job. Unknown provenance answers FALSE — and that includes an
+    * EMPTY `inputFiles` (ADVICE r18, high): Kafka / socket / memory
+    * sources report no files for every micro-batch regardless of size,
+    * so "empty = small" routed the 100 TB/day ingest shape this class
+    * documents onto a single-task `coalesce(1).collect()` per trigger.
+    * Only a listed, ≤64-file, ≤`maxBytes` batch qualifies; the job form
+    * stays the semantics-defining implementation for everything else.
+    *
+    * r19, closing the hole the ADVICE fix opened: the engine's own
+    * streaming sources (WARC arrival, and any V1/RDD-backed source)
+    * report an EMPTY `inputFiles` for every micro-batch, so the sound
+    * "empty = not small" rule routed THEIR genuinely tiny triggers onto
+    * the 9-job job form too (measured: 1.29 s/trigger on the
+    * `Run crawl-arrival` trickle shape that ran 0.65 s in r18 — r18's
+    * number was powered by the unsound empty-is-small gate). When the
+    * caller passes `probeSize` (a per-row payload-size expression only
+    * the family knows), an empty file list falls back to ONE bounded
+    * probe job: collect at most [[probeRowCap]]+1 size values through a
+    * `limit` (the scan stops early on a big batch, and the driver
+    * receives longs, never payloads) and qualify iff the row count AND
+    * the summed payload bytes are under the gates. Sound for any
+    * source; costs one sub-batch-scan job only on the no-file-list
+    * path, which the driver form's 5-job saving dwarfs. */
   def smallTrigger(batch: DataFrame, maxBytes: Long,
-      probeSize: Option[Column]): Boolean = {
-    val mode = batch.sparkSession.conf
-      .getOption("spark.graft.admissionFastPath").getOrElse("auto")
-    if (mode.equalsIgnoreCase("off")) false
-    else if (mode.equalsIgnoreCase("force")) true
-    else (try {
+      probeSize: Option[Column] = None): Boolean =
+    try {
       val files = batch.inputFiles
       if (files.nonEmpty) files.length <= 64 && {
         val conf = batch.sparkSession.sessionState.newHadoopConf()
-        var total = 0L
-        files.foreach { f =>
-          val p = new Path(f)
-          total += p.getFileSystem(conf).getFileStatus(p).getLen
-        }
-        total <= maxBytes
+        files.map(new Path(_))
+          .map(p => p.getFileSystem(conf).getFileStatus(p).getLen)
+          .sum <= maxBytes
       }
       else probeSize.exists { sz =>
         val sizes = batch
@@ -817,7 +857,136 @@ object AdmissionRegistry {
         sizes.length <= probeRowCap &&
           sizes.iterator.map(_.getLong(0)).sum <= maxBytes
       }
-    } catch { case scala.util.control.NonFatal(_) => false })
+    } catch { case scala.util.control.NonFatal(_) => false }
+
+  /** A family's driver form: `size`, the per-row input size for
+    * [[smallTrigger]]'s no-file-list probe, and `reject(rows,
+    * inHistory)`, the decision over the collected key rows — the same
+    * ids its SQL decision rejects. `inHistory(r)`: row r's key is
+    * registered. Ids are integral here. */
+  final case class DriverForm(size: Column,
+      reject: (Array[Row], Row => Boolean) => Set[Any])
+
+  /** One registry-gated admission family ([[NearDupAdmission]],
+    * [[SpanAdmission]], [[EmbeddingAdmission]]). It supplies its key
+    * rows and its decision; [[admit]] runs the per-trigger protocol (the
+    * [[AdmissionRegistry]] class doc) around them. */
+  abstract class Admission(idCol: String, compactEvery: Int)
+      extends Serializable {
+
+    /** The family's registry (read by audits and soak checks too). */
+    private[graft] def registry: AdmissionRegistry
+
+    /** The batch's key rows: `id` (the doc id) first, then the
+      * registry's `shardCols`, then whatever the decision reads. */
+    protected def keyRows(batch: DataFrame, batchId: Long): DataFrame
+
+    /** The SQL decision: the `id`s to reject, given the cached key rows
+      * and the pruned history. */
+    protected def rejectJobs(batch: DataFrame, keys: DataFrame,
+        history: DataFrame): DataFrame
+
+    /** The job form's rows to register, from the key rows of the docs
+      * it kept (null ids included). */
+    protected def registered(kept: DataFrame): DataFrame = kept
+
+    /** Runs first in every trigger, before compaction. */
+    protected def open(spark: SparkSession): Unit = ()
+
+    /** The family's driver form (its registry columns are exactly its
+      * `shardCols`); None = job form only. */
+    protected def driverForm: Option[DriverForm] = None
+
+    /** Admit one micro-batch: returns the admitted rows (original
+      * schema) and registers their keys under `batchId`. A replay of the
+      * same batchId recomputes identical decisions. `probe(phase, ms)`
+      * fires after each phase. */
+    def admit(batch: DataFrame, batchId: Long,
+        probe: (String, Long) => Unit = (_, _) => ()): DataFrame =
+      admitVia(batch, batchId, None, probe)
+
+    /** [[admit]] on a chosen form: Some(true) the driver form (where
+      * the family has one), Some(false) the job form, None the
+      * small-trigger gate decides. Specs pick a form here. */
+    private[graft] def admitVia(batch: DataFrame, batchId: Long,
+        driver: Option[Boolean],
+        probe: (String, Long) => Unit = (_, _) => ()): DataFrame = {
+      val spark = batch.sparkSession
+      withFixedPlans(spark) {
+        open(spark)
+        timed(probe, "maybeCompact")(
+          registry.maybeCompact(spark, batchId, compactEvery))
+        driverForm.filter(d => driver.getOrElse(
+            smallTrigger(batch, fastPathMaxInputBytes, Some(d.size)))) match {
+          case Some(d) => admitDriver(batch, batchId, d.reject, probe)
+          case None => admitJobs(batch, batchId, probe)
+        }
+      }
+    }
+
+    private def timed[T](probe: (String, Long) => Unit, phase: String)(
+        body: => T): T = {
+      val t0 = System.nanoTime()
+      val r = body
+      probe(phase, (System.nanoTime() - t0) / 1000000)
+      r
+    }
+
+    private def admitJobs(batch: DataFrame, batchId: Long,
+        probe: (String, Long) => Unit): DataFrame = {
+      val spark = batch.sparkSession
+      val keys = keyRows(batch, batchId).persist()
+      try {
+        val tokens = timed(probe, "probeTokens")(registry.probeTokens(keys))
+        val history = timed(probe, "historyPlan")(
+          registry.historyTouched(spark, batchId, tokens))
+        val rejected = rejectJobs(batch, keys, history).persist()
+        timed(probe, "decide")(rejected.count())
+        val admitted = batch.join(
+          rejected.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+        timed(probe, "append")(registry.append(
+          registered(keys.join(rejected, Seq("id"), "left_anti")), batchId))
+        admitted
+      } finally keys.unpersist()
+    }
+
+    private def admitDriver(batch: DataFrame, batchId: Long,
+        reject: (Array[Row], Row => Boolean) => Set[Any],
+        probe: (String, Long) => Unit): DataFrame = {
+      val spark = batch.sparkSession
+      val rows = timed(probe, "probeTokens")(
+        keyRows(batch, batchId).coalesce(1).collect())
+      val width = registry.keyWidth
+      def keyOf(r: Row) = Row.fromSeq((1 to width).map(r.get))
+      val keys = rows.map(keyOf).distinct
+      if (keys.length > literalCap || rows.exists(r =>
+          !r.get(0).isInstanceOf[java.lang.Long] &&
+            !r.get(0).isInstanceOf[java.lang.Integer]))
+        return admitJobs(batch, batchId, probe)
+      val history = timed(probe, "historyPlan")(registry.historyTouched(
+        spark, batchId, Some(keys.map(registry.token).distinct)))
+      val matched = timed(probe, "decide")(registry.matching(history, keys))
+      val rejected = reject(rows, r => matched(keyOf(r)))
+      timed(probe, "append")(registry.appendCollected(spark,
+        rows.filterNot(r => rejected(r.get(0))).map(keyOf), batchId))
+      if (rejected.isEmpty) batch
+      else batch.filter(col(idCol).isNull ||
+        !col(idCol).isin(rejected.toSeq: _*))
+    }
+
+    /** Fold committed batch directories ≤ `uptoBatchId` into one (see
+      * [[AdmissionRegistry.compact]] for the replay-safety contract). */
+    def compact(spark: SparkSession, uptoBatchId: Long): Int =
+      registry.compact(spark, uptoBatchId)
+
+    /** `foreachBatch` adapter: admit, then hand the admitted rows to the
+      * downstream writer — under the same fixed plans, since the
+      * admitted frame is as micro-batch-bounded as the admission's. */
+    def step(forward: (DataFrame, Long) => Unit)(
+        batch: DataFrame, batchId: Long): Unit =
+      withFixedPlans(batch.sparkSession) {
+        forward(admit(batch, batchId), batchId)
+      }
   }
 
   /** Minimal parquet [[org.apache.parquet.hadoop.api.WriteSupport]]

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
@@ -58,10 +58,9 @@ import graft.ext.{Dedup, Vectors}
   *     constant factor on probe keys, in exchange for bucket occupancy
   *     (the quadratic term) pinned ~constant for life.
   *
-  * Same foreachBatch-against-[[AdmissionRegistry]] shape as the
-  * siblings: per-batch overwrite appends + own-batch exclusion make
-  * replay exactly-once, reads fail closed, directories fold on the
-  * geometric schedule with shard-pruned probes. */
+  * Persistence, replay, compaction and the per-trigger protocol are
+  * [[AdmissionRegistry]]'s. The family has no driver form: its registry
+  * rows carry vectors, and its decision is a cosine verify. */
 class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     threshold: Double, planes: Int = 4, tables: Int = 8, dim: Int = 64,
     seed: Long = 42L, compactEvery: Int = 64,
@@ -70,7 +69,8 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     maxPlanes: Int = 20,
     /** corpus size at which the width starts growing (one extra sign
       * bit per doubling past it) — [[Dedup.sizedPlanes]]' n0. */
-    sizeDatum: Long = 1000L) extends Serializable {
+    sizeDatum: Long = 1000L)
+    extends AdmissionRegistry.Admission(idCol, compactEvery) {
 
   require(planes >= 1 && planes <= maxPlanes && maxPlanes <= 62,
     s"need 1 <= planes($planes) <= maxPlanes($maxPlanes) <= 62")
@@ -86,7 +86,7 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
   /** Row-wise bucket under width `w` for a row's OWN table (`tCol`) —
     * the fold-time re-bucket expression (tables is config-small, so a
     * CASE over t stays codegen-friendly). */
-  private def bucketByTable(spark: org.apache.spark.sql.SparkSession,
+  private def bucketByTable(spark: SparkSession,
       vec: Column, tCol: Column, w: Int): Column = {
     val hp = prefix(w)
     (0 until tables).foldRight(lit(null).cast("long"): Column) {
@@ -109,8 +109,8 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
       .withColumn("planes", lit(w))
   }
 
-  private val registry = new AdmissionRegistry(stateDir, StructType(Seq(
-    StructField("planes", IntegerType),
+  private[graft] val registry = new AdmissionRegistry(stateDir,
+    StructType(Seq(StructField("planes", IntegerType),
     StructField("t", IntegerType), StructField("bucket", LongType),
     StructField("id", LongType),
     StructField("embedding", ArrayType(FloatType)))),
@@ -146,7 +146,7 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     * rewritten with the current instance's planes/sizeDatum: they
     * define the store's existing layout by construction (this instance
     * is the one that has been operating it). */
-  private def verifyFamilyParams(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def verifyFamilyParams(spark: SparkSession): Unit = {
     val p = new org.apache.hadoop.fs.Path(stateDir, "_family")
     val f = p.getFileSystem(spark.sessionState.newHadoopConf())
     val prefix = s"seed=$seed tables=$tables dim=$dim maxPlanes=$maxPlanes"
@@ -168,23 +168,21 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     } else write(overwrite = false)
   }
 
-  /** Admit one micro-batch: returns the admitted rows (original schema)
-    * and registers their (planes, bucket, vector) rows under `batchId`. */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    AdmissionRegistry.withFixedPlans(spark) {
+  override protected def open(spark: SparkSession): Unit =
     verifyFamilyParams(spark)
-    registry.maybeCompact(spark, batchId, compactEvery)
-    // ONE footer walk (no scan job, own batch excluded for replay
-    // determinism) yields both size-dependent inputs: the registered
-    // count -> this trigger's WRITE width, and the widths actually
-    // PRESENT on disk -> the probe levels. History holds O(log runs)
-    // distinct widths (one per run), so probing only those — instead of
-    // the whole [planes, wNow] ladder — keeps the probe frame at the
-    // 1-3 levels that can match, with the full ladder as the fail-safe
-    // when footer statistics are unavailable.
+
+  /** (id, t, bucket, planes, embedding, __now): the batch's buckets at
+    * every probed width; `__now` marks this trigger's WRITE width. ONE
+    * footer walk (no scan job, own batch excluded for replay
+    * determinism) yields both size-dependent inputs: the registered
+    * count -> the write width, and the widths actually PRESENT on disk
+    * -> the probe levels. History holds O(log runs) distinct widths (one
+    * per run), so probing only those — instead of the whole [planes,
+    * wNow] ladder — keeps the probe frame at the 1-3 levels that can
+    * match. */
+  protected def keyRows(batch: DataFrame, batchId: Long): DataFrame = {
     val (regRows, widthsSeen) =
-      registry.footerStats(spark, batchId, Some("planes"))
+      registry.footerStats(batch.sparkSession, batchId, Some("planes"))
     val wNow = width(regRows / tables)
     // Fail-safe ladder spans to maxPlanes, NOT wNow: widths are only
     // APPROXIMATELY monotone in registry size — crash-leftover duplicate
@@ -196,53 +194,40 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
       .getOrElse((planes to maxPlanes).toSet)
       .filter(w => w >= planes && w <= maxPlanes) + wNow).toSeq.sorted
     val vecs = vecsOf(batch)
-    // The probe frame carries the batch's buckets at each probed width;
-    // cached for the trigger (probe tokens, history join, in-batch
-    // join, registry append all consume it).
-    val bf = probeWidths.map { w =>
+    probeWidths.map { w =>
       Dedup.embeddingBucketTableHyper(vecs, "embedding", "id", prefix(w))
-        .withColumn("planes", lit(w))
+        .withColumn("planes", lit(w)).withColumn("__now", lit(w == wNow))
     }.reduce(_ unionByName _)
       .join(vecs, Seq("id"))
-      .persist()
-    try {
-      val cos = (a: Column, b: Column) => Vectors.cosineNative(spark, a, b)
-      val tokens = registry.probeTokens(bf)
-      val hist = registry.historyTouched(spark, batchId, tokens)
-        .select(col("planes"), col("t"), col("bucket"),
-          col("embedding").as("__he"))
-      val vsHistory = bf.join(hist, Seq("planes", "t", "bucket"))
-        .filter(cos(col("embedding"), col("__he")) >= threshold)
-        .select(col("id")).distinct()
-      // In-batch arm blocks at the CURRENT width (one width suffices
-      // within a batch; both sides computed under the same prefix).
-      val bfNow = bf.filter(col("planes") === wNow)
-      val vsBatch = bfNow.select(col("t"), col("bucket"),
-          col("id").as("__ka"), col("embedding").as("__ea"))
-        .join(bfNow.select(col("t"), col("bucket"), col("id"),
-          col("embedding")), Seq("t", "bucket"))
-        .filter(col("__ka") < col("id") &&
-          cos(col("__ea"), col("embedding")) >= threshold)
-        .select(col("id")).distinct()
-      // Eager persist (NOT localCheckpoint): stops the caller's
-      // consumption of `admitted` from re-running the sketch/cosine DAG
-      // after bf is unpersisted, while KEEPING lineage — checkpoint
-      // block loss (executor decommission mid-trigger) would fail the
-      // micro-batch outright, whereas a lost cache block just recomputes
-      // (review r13). Blocks are reclaimed by the ContextCleaner once
-      // the trigger's plans are unreachable.
-      val rejected = vsHistory.union(vsBatch).distinct().persist()
-      rejected.count()
-      val admitted = batch.join(
-        rejected.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-      registry.append(
-        bfNow.join(admitted.select(col(idCol).cast("long").as("id")),
-            Seq("id"), "left_semi")
-          .select("planes", "t", "bucket", "id", "embedding"), batchId)
-      admitted
-    } finally bf.unpersist()
-    }
   }
+
+  /** Reject an id whose exact cosine to a bucket-sharing history vector
+    * (any probed width), or to a lower id of this batch sharing a bucket
+    * at the write width, reaches `threshold`. */
+  protected def rejectJobs(batch: DataFrame, keys: DataFrame,
+      history: DataFrame): DataFrame = {
+    val spark = batch.sparkSession
+    val cos = (a: Column, b: Column) => Vectors.cosineNative(spark, a, b)
+    val hist = history.select(col("planes"), col("t"), col("bucket"),
+      col("embedding").as("__he"))
+    val vsHistory = keys.join(hist, Seq("planes", "t", "bucket"))
+      .filter(cos(col("embedding"), col("__he")) >= threshold)
+      .select(col("id")).distinct()
+    // one width suffices within a batch (both sides under one prefix)
+    val now = keys.filter(col("__now"))
+    val vsBatch = now.select(col("t"), col("bucket"),
+        col("id").as("__ka"), col("embedding").as("__ea"))
+      .join(now.select(col("t"), col("bucket"), col("id"),
+        col("embedding")), Seq("t", "bucket"))
+      .filter(col("__ka") < col("id") &&
+        cos(col("__ea"), col("embedding")) >= threshold)
+      .select(col("id")).distinct()
+    vsHistory.union(vsBatch).distinct()
+  }
+
+  /** Admitted vectors with an id register at the write width only. */
+  override protected def registered(kept: DataFrame): DataFrame =
+    kept.filter(col("__now") && col("id").isNotNull)
 
   /** Register `batch`'s vectors WITHOUT admission gating — the
     * backfill/seeding path: at 100 TB a new stream bootstraps its
@@ -268,16 +253,4 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
         .join(vecs, Seq("id"))
         .select("planes", "t", "bucket", "id", "embedding"), batchId)
   }
-
-  /** Fold committed batch directories ≤ `uptoBatchId` into one
-    * (re-bucketed to the size-derived width via the fold hook). */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      uptoBatchId: Long): Int = registry.compact(spark, uptoBatchId)
-
-  /** `foreachBatch` adapter. */
-  def step(forward: (DataFrame, Long) => Unit)(
-      batch: DataFrame, batchId: Long): Unit =
-    AdmissionRegistry.withFixedPlans(batch.sparkSession) {
-      forward(admit(batch, batchId), batchId)
-    }
 }

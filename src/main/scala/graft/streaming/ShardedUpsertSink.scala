@@ -265,9 +265,10 @@ object ShardedUpsertSink {
     * the one-shard read itself): the stored schema comes from ONE
     * driver-side parquet footer of a live shard, each value is cast to
     * its key column's stored type, and the writer's own shard expression
-    * (xxhash64 over the typed literals, floorMod the manifest's recorded
-    * modulus) is EVALUATED on the driver — Catalyst `eval` over literal
-    * children, zero jobs until the caller acts on the returned frame.
+    * ([[Sharded.driverShard]]: xxhash64 over the typed literals, floorMod
+    * the manifest's recorded modulus) is EVALUATED on the driver —
+    * Catalyst `eval` over literal children, zero jobs until the caller
+    * acts on the returned frame.
     * The schema-driven cast also closes the silent-miss trap (ADVICE
     * r14): an Int probe against a Long key column, or a String date,
     * used to hash to a DIFFERENT shard and return an empty frame for a
@@ -281,8 +282,7 @@ object ShardedUpsertSink {
     * maps no shards at all (an empty store has no schema source). */
   def lookup(spark: SparkSession, baseDir: String, keys: Seq[String],
       values: Seq[Any]): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     require(values.length == keys.length,
       s"lookup needs one value per key column ${keys.mkString(",")}")
     versions(spark, baseDir).lastOption.flatMap { v =>
@@ -302,12 +302,7 @@ object ShardedUpsertSink {
           val l = Literal(x)
           if (l.dataType == dt) l else Cast(l, dt, tz)
         }
-        // == pmod(xxhash64(typed…), lit(p)).cast("int"), the writer's
-        // shardExpr, evaluated over literal children with no plan
-        // (seed 42 is functions.xxhash64's fixed seed)
-        val shard = java.lang.Math.floorMod(
-          XxHash64(typed, 42L).eval(InternalRow.empty).asInstanceOf[Long],
-          p.toLong).toInt
+        val shard = Sharded.driverShard(typed, p)
         // miss path (key's shard unmapped): the schema is already in
         // hand, so the empty frame is built directly — zero listings,
         // zero files, instead of resolving the whole version root for

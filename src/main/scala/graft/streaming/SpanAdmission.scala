@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -14,185 +16,87 @@ import graft.ext.{Dedup, Spans}
   * web-crawl regime where new pages are mostly old navigation chrome
   * plus a sliver of fresh text.
   *
-  * Same foreachBatch-against-a-registry shape as [[NearDupAdmission]]
-  * (a doc's decision spans all its span keys, so per-key state-store
-  * logic can't decide it; one per-batch join can). Docs within a batch
+  * A doc's decision spans all its span keys, so per-key state-store
+  * logic can't decide it; one per-batch join can. Docs within a batch
   * do not gate each other — their spans register on admission and gate
   * from the NEXT batch on (admission control, not retroactive dedup).
   *
   * Registry: DISTINCT span hashes of admitted docs — fixed-width longs,
   * one row per distinct span (the span-registry cost is O(distinct
-  * spans), the price any substring-level structure pays), SHARD-
-  * PARTITIONED on disk by hash(sh) so each trigger's history probe
-  * reads only the `shard=` directories its own span hashes touch (a
-  * bounded ≤ shards set) instead of the whole span registry — the
-  * per-trigger read scales with touched/shards of the registry, not
-  * with corpus lifetime. Persistence goes through [[AdmissionRegistry]]:
-  * per-batch overwrite appends + own-batch exclusion on the history
-  * read make replay exactly-once (a crashed-then-replayed batch
-  * recomputes identical gate decisions instead of self-rejecting
-  * against the spans it registered before the crash), read failures
-  * fail closed, and batch directories compact on a schedule (shard
-  * layout preserved).
-  *
-  * Pruning honesty (the [[graft.ext.Sharded]] selectivity note applies
-  * here hardest): a doc contributes MANY distinct span hashes — K per
-  * trigger is large, so under a FIXED shard count the touched set
+  * spans), the price any substring-level structure pays), shard-
+  * partitioned on hash(sh). Pruning honesty (the [[graft.ext.Sharded]]
+  * selectivity note applies here hardest): a doc contributes MANY
+  * distinct span hashes, so under a FIXED shard count the touched set
   * saturates instantly (the gram-index regime). The self-sized shard
   * count ([[AdmissionRegistry]] guarantee 2) is what still bounds the
-  * probe: per-trigger bytes plateau at K × targetShardBytes once the
-  * registry outgrows that, instead of tracking registry size forever;
-  * the plateau is higher than the near-dup family's (K is tokens-per-
-  * trigger here, not bands-per-doc), which is this family's honest
-  * price at any layout.
-  *
-  * Small triggers take the same driver fast path as
-  * [[NearDupAdmission]] (r18): one collect job, literal-IN history
-  * probe, driver-side coverage gate and append — decision-identical
-  * by spec (AdmissionRegistrySpec's span equivalence arm). */
+  * probe: per-trigger bytes plateau at K × targetShardBytes, higher than
+  * the near-dup family's (K is tokens-per-trigger here, not
+  * bands-per-doc) — this family's honest price at any layout.
+  * Persistence, replay, compaction and the per-trigger protocol are
+  * [[AdmissionRegistry]]'s. */
 class SpanAdmission(stateDir: String, textCol: String, idCol: String,
     k: Int = 8, gatePct: Int = 20,
     compactEvery: Int = 64, shards: Int = 16,
-    targetShardBytes: Long = 16L << 20) extends Serializable {
+    targetShardBytes: Long = 16L << 20)
+    extends AdmissionRegistry.Admission(idCol, compactEvery) {
 
-  private val registry = new AdmissionRegistry(stateDir,
+  private[graft] val registry = new AdmissionRegistry(stateDir,
     StructType(Seq(StructField("sh", LongType))),
     shardCols = Seq("sh"), shards = shards,
-    targetShardBytes = targetShardBytes)
+    targetShardBytes = targetShardBytes, distinctRows = true)
 
-  /** Admit one micro-batch: returns admitted rows (original schema) and
-    * registers their distinct span hashes under `batchId`. */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    AdmissionRegistry.withFixedPlans(spark) {
-    // Committed-watermark compaction — same contract as
-    // [[NearDupAdmission.admit]]: batches below `batchId` are durably
-    // committed by the time the sink sees this one, so folding them is
-    // replay-safe and bounds the registry's directory count.
-    registry.maybeCompact(spark, batchId, compactEvery)
-    if (AdmissionRegistry.smallTrigger(batch, 4L << 20,
-        Some(org.apache.spark.sql.functions.length(
-          org.apache.spark.sql.functions.col(textCol)))))
-      admitSmall(batch, batchId)
-    else admitJobs(batch, batchId)
-    }
+  /** (id, sh, pos) for every k-token span of every doc. */
+  protected def keyRows(batch: DataFrame, batchId: Long): DataFrame =
+    Spans.positions(batch, textCol, idCol, k)
+      .select(col("doc_id").as("id"), col("sh"), col("pos"))
+
+  override protected def driverForm =
+    Some(AdmissionRegistry.DriverForm(length(col(textCol)), rejectDriver))
+
+  /** Only admitted docs with an id register their spans. */
+  override protected def registered(kept: DataFrame): DataFrame =
+    kept.filter(col("id").isNotNull)
+
+  /** Reject a doc when its tokens covered by history-matched spans
+    * reach `gatePct`% of its token count (an inner join: a doc with no
+    * spans is never rejected). */
+  protected def rejectJobs(batch: DataFrame, keys: DataFrame,
+      history: DataFrame): DataFrame = {
+    val covered = keys.join(history.distinct(), Seq("sh"))
+      .select(col("id"),
+        explode(sequence(col("pos"), col("pos") + (k - 1))).as("j"))
+      .distinct()
+      .groupBy("id")
+      .agg(count(lit(1)).as("__covered"))
+    batch
+      .select(col(idCol).as("id"),
+        size(Dedup.tokens(col(textCol))).cast("long").as("__n"))
+      .join(covered, Seq("id"))
+      .filter(col("__covered") * 100 >= col("__n") * gatePct)
+      .select(col("id"))
   }
 
-  /** SMALL-TRIGGER driver fast path (r18, judge #6 — the same shape
-    * as [[NearDupAdmission]]'s): ONE job collects the batch's
-    * (doc_id, pos, sh) span rows; the token-count each decision needs
-    * is derived exactly from them (positions = n−k+1 sliding spans, so
-    * n = maxPos + k − 1, and a doc with NO positions can never be
-    * rejected on either path — the job path's coverage join is inner);
-    * the history probe is a literal `sh IN (…)` filter; the coverage
-    * gate, decisions, and the distinct-hash append run driver-side.
-    * Null/non-integral ids or key sets past the literal cap fall back
-    * to [[admitJobs]], which stays the semantics-defining
-    * implementation; the fast≡job equivalence is spec-locked. */
-  private def admitSmall(batch: DataFrame, batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    val rows = Spans.positions(batch, textCol, idCol, k)
-      .coalesce(1).collect() // (doc_id, pos, sh)
-    if (rows.exists(r => r.isNullAt(0) ||
-        !(r.get(0).isInstanceOf[java.lang.Long] ||
-          r.get(0).isInstanceOf[java.lang.Integer])))
-      return admitJobs(batch, batchId)
-    val spanSet = rows.map(_.getLong(2)).distinct
-    if (spanSet.length > NearDupAdmission.literalCap)
-      return admitJobs(batch, batchId)
-    val tokens = spanSet
-      .map(sh => registry.keyToken(org.apache.spark.sql.Row(sh))).distinct
-    val history = registry.historyTouched(spark, batchId, Some(tokens))
-    val matched: Set[Long] =
-      if (spanSet.isEmpty) Set.empty
-      else history
-        .filter(col("sh").isin(spanSet.map(java.lang.Long.valueOf).toSeq: _*))
-        .select("sh").distinct().collect().map(_.getLong(0)).toSet
-    // driver twin of the coverage gate: covered token indices =
-    // union of [pos, pos+k-1] over this doc's HISTORY-matched spans;
-    // n = maxPos + k - 1 (exact for any doc that has positions)
-    val covered = scala.collection.mutable.Map.empty[Any,
-      scala.collection.mutable.BitSet]
-    val maxPos = scala.collection.mutable.Map.empty[Any, Long]
+  /** [[rejectJobs]] on the driver: covered token indices are the union
+    * of [pos, pos+k-1] over a doc's history-matched spans, and its token
+    * count is maxPos + k − 1 (positions are the n−k+1 sliding spans, so
+    * this is exact for any doc that has positions). */
+  private def rejectDriver(rows: Array[Row],
+      inHistory: Row => Boolean): Set[Any] = {
+    val covered = mutable.Map.empty[Any, mutable.BitSet]
+    val maxPos = mutable.Map.empty[Any, Long]
     rows.foreach { r =>
       val id = r.get(0)
-      val pos = r.getAs[Number](1).longValue() // posexplode emits int32
+      val pos = r.getAs[Number](2).longValue() // posexplode emits int32
       maxPos(id) = math.max(maxPos.getOrElse(id, 0L), pos)
-      if (matched(r.getLong(2))) {
-        val bits = covered.getOrElseUpdate(id,
-          new scala.collection.mutable.BitSet)
+      if (inHistory(r)) {
+        val bits = covered.getOrElseUpdate(id, new mutable.BitSet)
         var j = pos
         while (j < pos + k) { bits += j.toInt; j += 1 }
       }
     }
-    val rejected = covered.collect {
+    covered.collect {
       case (id, bits)
-          if bits.size.toLong * 100 >= (maxPos(id) + k - 1) * gatePct =>
-        id
-    }.toSeq
-    val admitted =
-      if (rejected.isEmpty) batch
-      // null-SAFE keep predicate (ADVICE r18, medium): a null-id doc
-      // shorter than k tokens yields no span row, so the null-id
-      // fallback above never sees it — `!isin` alone would drop it via
-      // three-valued logic while the job path's inner coverage join
-      // admits it.
-      else batch.filter(col(idCol).isNull ||
-        !col(idCol).isin(rejected: _*))
-    val rejectedSet = rejected.toSet
-    val appendRows = rows.collect {
-      case r if !rejectedSet.contains(r.get(0)) => r.getLong(2)
-    }.distinct.map(sh => org.apache.spark.sql.Row(sh))
-    registry.appendCollected(spark, appendRows, batchId)
-    admitted
+          if bits.size.toLong * 100 >= (maxPos(id) + k - 1) * gatePct => id
+    }.toSet
   }
-
-  private def admitJobs(batch: DataFrame, batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    // pos feeds three consumers (touched-shard job, coverage join,
-    // registry append) — cache it for the trigger.
-    val pos = Spans.positions(batch, textCol, idCol, k).persist()
-    try {
-      val tokens = registry.probeTokens(pos)
-      val covered = pos.join(
-          registry.historyTouched(spark, batchId, tokens).distinct(),
-          Seq("sh"))
-        .select(col("doc_id"),
-          explode(sequence(col("pos"), col("pos") + (k - 1))).as("j"))
-        .distinct()
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("__covered"))
-      // Eager persist: see NearDupAdmission — the caller consumes
-      // `admitted` after pos is unpersisted; the cached rejected set
-      // stops that from re-running the span/coverage DAG per trigger,
-      // and lineage survives cache-block loss.
-      val rejected = batch
-        .select(col(idCol).as("doc_id"),
-          size(Dedup.tokens(col(textCol))).cast("long").as("__n"))
-        .join(covered, Seq("doc_id"))
-        .filter(col("__covered") * 100 >= col("__n") * gatePct)
-        .select(col("doc_id"))
-        .persist()
-      rejected.count()
-      val admitted = batch.join(
-        rejected.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-      registry.append(
-        pos.join(admitted.select(col(idCol).as("doc_id")), Seq("doc_id"),
-            "left_semi")
-          .select("sh").distinct(), batchId)
-      admitted
-    } finally pos.unpersist()
-  }
-
-  /** Fold committed batch directories ≤ `uptoBatchId` into one (see
-    * [[AdmissionRegistry.compact]] for the replay-safety contract). */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      uptoBatchId: Long): Int = registry.compact(spark, uptoBatchId)
-
-  /** `foreachBatch` adapter. */
-  def step(forward: (DataFrame, Long) => Unit)(
-      batch: DataFrame, batchId: Long): Unit =
-    AdmissionRegistry.withFixedPlans(batch.sparkSession) {
-      forward(admit(batch, batchId), batchId)
-    }
 }

@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ext.{Dedup, WarcFixtures}
 import graft.sources.Warc
@@ -24,7 +23,7 @@ import Run.{Metrics, dist, intArg, percentile}
   *      per trigger (the steady crawl shape). Each trigger's cost is
   *      split into the engine's phases (`StreamingQueryProgress
   *      .durationMs`, the last 100 triggers), the admission's own phases
-  *      (`admitInstrumented`) and the downstream collect, each with the
+  *      (`admit`'s phase probe) and the downstream collect, each with the
   *      Spark jobs it started;
   *   2. backlog drain: `waves` more archives land at once and drain in
   *      `maxFilesPerTrigger`-bounded triggers (the catch-up shape after
@@ -36,8 +35,8 @@ import Run.{Metrics, dist, intArg, percentile}
   *     (`compactEvery + ceil(log2(i)) + slack`) through the
   *     committed-watermark compactions the chain schedules itself;
   *   - the pruned history probe's bytes for a FIXED 4-doc batch stay
-  *     flat while the registry grows (measured through a read-only
-  *     registry twin — readers never mutate, §17.4);
+  *     flat while the registry grows (measured through the admission's
+  *     own registry with read-only calls — readers never mutate, §17.4);
   *   - after the trickle, the admitted set and the registry content are
   *     EXACT vs a batch twin: a second NearDupAdmission (own state dir)
   *     fed the identical wave frames in the identical order through
@@ -57,8 +56,6 @@ object CrawlArrival {
   private val compactEvery = 16
   private val shards = 4
   private val target = 256L << 10
-  private val regSchema = StructType(Seq(StructField("band", IntegerType),
-    StructField("bucket", LongType)))
 
   private def baseText(g: Long): String =
     (1 to 30).map(k => s"t${g}x$k").mkString(" ")
@@ -68,9 +65,6 @@ object CrawlArrival {
   private def docs(wet: DataFrame): DataFrame =
     wet.select(regexp_extract(col("url"), "/docs/(\\d+)\\?", 1)
       .cast("long").as("doc_id"), col("text"))
-
-  private def registry(dir: String) = new AdmissionRegistry(dir, regSchema,
-    Seq("band", "bucket"), shards = shards, targetShardBytes = target)
 
   def run(spark: SparkSession, a: Seq[String]): Metrics = {
     import spark.implicits._
@@ -102,7 +96,6 @@ object CrawlArrival {
     def newAdm(dir: String) = new NearDupAdmission(dir, "text", "doc_id",
       compactEvery = compactEvery, shards = shards, targetShardBytes = target)
     val adm = newAdm(streamState)
-    val regTwin = registry(streamState)
     // the FIXED probe: docs that never change, so probe bytes across the
     // lifetime measure registry growth, not probe drift
     val probeBuckets = Dedup
@@ -131,7 +124,7 @@ object CrawlArrival {
         AdmissionRegistry.withFixedPlans(df.sparkSession) {
           val (t0, j0) = (System.nanoTime(), counters.jobCount)
           var jobs = j0
-          val out = adm.admitInstrumented(df, id, (phase, ms) => {
+          val out = adm.admit(df, id, (phase, ms) => {
             val j = counters.jobCount
             if (trickle) {
               sample(s"admit.$phase.ms", ms.toDouble)
@@ -152,7 +145,7 @@ object CrawlArrival {
         df.select("doc_id").as[Long].collect().foreach(delivered.add)
         batches.increment()
         if (id % 64 == 63 || id == waves - 1) {
-          val (dirs, bound, kb) = LifetimeSoak.checkRegistry(regTwin,
+          val (dirs, bound, kb) = LifetimeSoak.checkRegistry(adm.registry,
             streamState, compactEvery, id, probeBuckets, probeKb.headOption)
           Run.progress(f"crawl-arrival trigger=$id%4d live_dirs=$dirs%3d " +
             f"(bound=$bound%3d) probe_kb=$kb%8.1f admitted=${admitted.size}%6d")
@@ -184,11 +177,11 @@ object CrawlArrival {
       require(streamSet == batchAdmitted,
         s"admitted sets drifted: stream-only=${(streamSet -- batchAdmitted)
           .take(5)} batch-only=${(batchAdmitted -- streamSet).take(5)}")
-      def regSig(dir: String) = registry(dir)
+      def regSig(a: NearDupAdmission) = a.registry
         .history(spark, excludeBatchId = Long.MaxValue).distinct()
         .agg(count(lit(1)), expr("bit_xor(xxhash64(band, bucket))"))
         .head().toSeq
-      val (ss, bs) = (regSig(streamState), regSig(batchState))
+      val (ss, bs) = (regSig(adm), regSig(batchAdm))
       require(ss == bs, s"registry content drifted: stream $ss batch $bs")
 
       // phase 2: backlog drain, `waves` more archives land at once

@@ -215,17 +215,25 @@ object Run {
     .map(p => Trigger(Instant.parse(p.timestamp).toEpochMilli,
       p.batchDuration, p.numInputRows))
 
-  /** Steady-state rate of a run of triggers. The first trigger (source
-    * start-up, code generation) is dropped; the wall clock runs from the
-    * next trigger's start to the last trigger's end, so idle time
-    * between triggers counts (a sum of batch durations skips it and
-    * overstates the rate). */
+  /** Steady-state rate of a run of triggers over a rate source: the
+    * rows of triggers 3..n over the longer of the window they arrived in
+    * (start(2) to start(n): trigger k reads what arrived since trigger
+    * k−1 started) and the window they were processed in (start(3) to
+    * end(n)). The first trigger (source start-up, code generation) is
+    * dropped, and so is the second, which carries the rows piled up
+    * while the first ran (counting it reported 3,789 rows/s from a
+    * 2,000 rows/s source). A pipeline that keeps up is then measured at
+    * the source rate, not at the faster pace it catches up at; one that
+    * falls behind, at the pace it processes (the arrival window alone
+    * gives back the source rate, since a rate source sizes each trigger
+    * by the wall clock). Idle time between triggers counts. */
   def steadyRate(ts: Seq[Trigger]): Metrics = {
-    val steady = ts.drop(1)
+    val steady = ts.drop(2)
     val rows = steady.map(_.rows).sum
     val secs = if (steady.isEmpty) 0.0
-      else (steady.last.startMs + steady.last.durationMs -
-        steady.head.startMs) / 1000.0
+      else math.max(steady.last.startMs - ts(1).startMs,
+        steady.last.startMs + steady.last.durationMs -
+          steady.head.startMs) / 1000.0
     ListMap("triggers" -> steady.size, "rows" -> rows, "wall_s" -> secs,
       "rows_per_s" -> (if (secs > 0) rows / secs else Double.NaN))
   }

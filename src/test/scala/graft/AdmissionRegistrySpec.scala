@@ -264,19 +264,17 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
   }
 
   test("driver shard/token hash ≡ the SQL pmod(xxhash64) (fast-append pin)") {
-    // the r18 driver-written small append and the small-trigger fast
-    // path route rows with a DRIVER-side xxhash64 replica; any drift
-    // vs the SQL function mis-shards appends → probe pruning silently
-    // misses history → duplicate admissions. Pin them equal over the
-    // registry's composite (int, long) key shape.
+    // the r18 driver-written small append, the small-trigger fast path
+    // and the serving lookup route rows with the DRIVER-side token
+    // (Sharded.driverToken); any drift vs the SQL function mis-shards
+    // appends → probe pruning silently misses history → duplicate
+    // admissions. Pin them equal over the registry's composite
+    // (int, long) key shape.
     val s = spark
     import s.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val schema2 = StructType(Seq(
-      StructField("band", org.apache.spark.sql.types.IntegerType),
-      StructField("bucket", LongType)))
-    val reg = new AdmissionRegistry(tmp("graft_hash_"), schema2,
-      Seq("band", "bucket"), shards = 13)
+    import graft.ext.Sharded
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map(_ => (rnd.nextInt(), rnd.nextLong()))
     val sql = rows.toDF("band", "bucket")
@@ -286,40 +284,36 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
           .as("s"))
       .collect()
     sql.foreach { r =>
-      val row = org.apache.spark.sql.Row(r.getInt(0), r.getLong(1))
-      assert(reg.keyToken(row) == r.getLong(2),
+      val key = Seq(Literal(r.getInt(0)), Literal(r.getLong(1)))
+      assert(Sharded.driverToken(key) == r.getLong(2),
         s"token drift at ${(r.getInt(0), r.getLong(1))}")
-      assert(reg.driverShard(row, 13) == r.getInt(3))
+      assert(Sharded.driverShard(key, 13) == r.getInt(3))
     }
   }
 
   test("small-trigger fast path ≡ job path: decisions, registry, layout") {
-    // same doc stream through two NearDupAdmissions — one FORCED onto
-    // the r18 driver fast path (plain in-memory DFs have no file list,
-    // so since the r19 provenance fix they default to the job path —
-    // `force` is the specs' explicit opt-in), one forced onto the
-    // distributed path — must admit identical ids per batch and leave
-    // row-identical registries.
+    // same doc stream through two NearDupAdmissions — one on the r18
+    // driver form (plain in-memory DFs have no file list, so since the
+    // r19 provenance fix the gate sends them to the job form —
+    // `admitVia` is the specs' explicit choice), one on the job form —
+    // must admit identical ids per batch and leave row-identical
+    // registries.
     val s = spark
     import s.implicits._
     def run(stateDir: String, fastPath: Boolean): Seq[Set[Long]] = {
-      s.conf.set("spark.graft.admissionFastPath",
-        if (fastPath) "force" else "off")
-      try {
-        val adm = new NearDupAdmission(stateDir, "text", "doc_id",
-          compactEvery = 3)
-        def text(seed: Long) =
-          (1 to 30).map(j => s"w${seed}t$j").mkString(" ")
-        val batches = Seq(
-          Seq(1L -> text(1), 2L -> text(2), 3L -> text(1)), // 3 dups 1
-          Seq(4L -> (text(2) + " tail"), 5L -> text(5)),    // 4 dups 2
-          Seq(6L -> text(6), 7L -> text(6), 8L -> text(6)), // in-batch
-          Seq(9L -> text(1))) // dup of batch 0 across compaction
-        batches.zipWithIndex.map { case (docs, b) =>
-          adm.admit(docs.toDF("doc_id", "text"), b.toLong)
-            .select("doc_id").collect().map(_.getLong(0)).toSet
-        }
-      } finally s.conf.unset("spark.graft.admissionFastPath")
+      val adm = new NearDupAdmission(stateDir, "text", "doc_id",
+        compactEvery = 3)
+      def text(seed: Long) =
+        (1 to 30).map(j => s"w${seed}t$j").mkString(" ")
+      val batches = Seq(
+        Seq(1L -> text(1), 2L -> text(2), 3L -> text(1)), // 3 dups 1
+        Seq(4L -> (text(2) + " tail"), 5L -> text(5)),    // 4 dups 2
+        Seq(6L -> text(6), 7L -> text(6), 8L -> text(6)), // in-batch
+        Seq(9L -> text(1))) // dup of batch 0 across compaction
+      batches.zipWithIndex.map { case (docs, b) =>
+        adm.admitVia(docs.toDF("doc_id", "text"), b.toLong, Some(fastPath))
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+      }
     }
     val fastDir = tmp("graft_fastpath_")
     val jobDir = tmp("graft_jobpath_")
@@ -347,23 +341,19 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     import s.implicits._
     val boiler = (1 to 20).map(i => s"nav$i").mkString(" ")
     def run(stateDir: String, fastPath: Boolean): Seq[Set[Long]] = {
-      s.conf.set("spark.graft.admissionFastPath",
-        if (fastPath) "force" else "off")
-      try {
-        val adm = new SpanAdmission(stateDir, "text", "doc_id",
-          k = 4, gatePct = 50, compactEvery = 2)
-        val batches = Seq(
-          Seq(1L -> (boiler + " first page body")),
-          Seq(2L -> "fresh unrelated prose entirely new words here",
-            3L -> (boiler + " tiny delta")), // covered by batch 0
-          Seq(4L -> "short", // < k tokens: zero spans, must admit
-            5L -> (boiler + " another rehash")), // across compaction
-          Seq(6L -> (boiler + " yet more chrome")))
-        batches.zipWithIndex.map { case (docs, b) =>
-          adm.admit(docs.toDF("doc_id", "text"), b.toLong)
-            .select("doc_id").collect().map(_.getLong(0)).toSet
-        }
-      } finally s.conf.unset("spark.graft.admissionFastPath")
+      val adm = new SpanAdmission(stateDir, "text", "doc_id",
+        k = 4, gatePct = 50, compactEvery = 2)
+      val batches = Seq(
+        Seq(1L -> (boiler + " first page body")),
+        Seq(2L -> "fresh unrelated prose entirely new words here",
+          3L -> (boiler + " tiny delta")), // covered by batch 0
+        Seq(4L -> "short", // < k tokens: zero spans, must admit
+          5L -> (boiler + " another rehash")), // across compaction
+        Seq(6L -> (boiler + " yet more chrome")))
+      batches.zipWithIndex.map { case (docs, b) =>
+        adm.admitVia(docs.toDF("doc_id", "text"), b.toLong, Some(fastPath))
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+      }
     }
     val fastDir = tmp("graft_spanfast_")
     val jobDir = tmp("graft_spanjob_")
@@ -626,8 +616,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     // ADVICE r18 (high): Kafka/socket/memory batches report empty
     // inputFiles for EVERY micro-batch — "empty = small" routed
     // unbounded ingest onto the driver collect. The gate must qualify
-    // only on a listed, byte-bounded file set; `force`/`off` are the
-    // explicit spec levers.
+    // only on a listed, byte-bounded file set.
     val s = spark
     import s.implicits._
     val mem = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
@@ -643,13 +632,6 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     assert(AdmissionRegistry.smallTrigger(filed, maxBytes = 1L << 20))
     // ...but not past the byte gate.
     assert(!AdmissionRegistry.smallTrigger(filed, maxBytes = 1L))
-    // Conf levers dominate in both directions.
-    s.conf.set("spark.graft.admissionFastPath", "force")
-    try assert(AdmissionRegistry.smallTrigger(mem, maxBytes = 1L << 20))
-    finally s.conf.unset("spark.graft.admissionFastPath")
-    s.conf.set("spark.graft.admissionFastPath", "off")
-    try assert(!AdmissionRegistry.smallTrigger(filed, maxBytes = 1L << 20))
-    finally s.conf.unset("spark.graft.admissionFastPath")
   }
 
   test("smallTrigger: no-file-list batches qualify through the size probe") {
@@ -698,38 +680,32 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
       (java.lang.Long.valueOf(2L), (1 to 30).map(j => s"n$j").mkString(" ")),
       (null.asInstanceOf[java.lang.Long], "")) // tokenless null-id doc
       .toDF("doc_id", "text")
-    def runNear(mode: String): Set[Option[Long]] = {
-      s.conf.set("spark.graft.admissionFastPath", mode)
-      try {
-        val adm = new NearDupAdmission(tmp("graft_nullfast_"),
-          "text", "doc_id")
-        adm.admit(batchDf, 0L).select("doc_id").collect()
-          .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
-      } finally s.conf.unset("spark.graft.admissionFastPath")
+    def runNear(fast: Boolean): Set[Option[Long]] = {
+      val adm = new NearDupAdmission(tmp("graft_nullfast_"),
+        "text", "doc_id")
+      adm.admitVia(batchDf, 0L, Some(fast)).select("doc_id").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
     }
     // doc 2 dups doc 1 in-batch → rejected set is non-empty, so the
     // keep-filter actually runs; the null-id doc must survive it.
     val expected = Set(Some(1L), None: Option[Long])
-    assert(runNear("force") == expected, "near-dup fast path")
-    assert(runNear("off") == expected, "near-dup job path")
-    def runSpan(mode: String): Set[Option[Long]] = {
-      s.conf.set("spark.graft.admissionFastPath", mode)
-      try {
-        val adm = new SpanAdmission(tmp("graft_nullspan_"),
-          "text", "doc_id", k = 4, gatePct = 50)
-        val boiler = (1 to 20).map(i => s"nav$i").mkString(" ")
-        adm.admit(Seq((java.lang.Long.valueOf(1L), boiler + " page one"))
-          .toDF("doc_id", "text"), 0L).count()
-        val b1 = Seq(
-          (java.lang.Long.valueOf(2L), boiler + " tiny delta"), // covered
-          (null.asInstanceOf[java.lang.Long], "ab")) // < k tokens, null id
-          .toDF("doc_id", "text")
-        adm.admit(b1, 1L).select("doc_id").collect()
-          .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
-      } finally s.conf.unset("spark.graft.admissionFastPath")
+    assert(runNear(fast = true) == expected, "near-dup fast path")
+    assert(runNear(fast = false) == expected, "near-dup job path")
+    def runSpan(fast: Boolean): Set[Option[Long]] = {
+      val adm = new SpanAdmission(tmp("graft_nullspan_"),
+        "text", "doc_id", k = 4, gatePct = 50)
+      val boiler = (1 to 20).map(i => s"nav$i").mkString(" ")
+      adm.admitVia(Seq((java.lang.Long.valueOf(1L), boiler + " page one"))
+        .toDF("doc_id", "text"), 0L, Some(fast)).count()
+      val b1 = Seq(
+        (java.lang.Long.valueOf(2L), boiler + " tiny delta"), // covered
+        (null.asInstanceOf[java.lang.Long], "ab")) // < k tokens, null id
+        .toDF("doc_id", "text")
+      adm.admitVia(b1, 1L, Some(fast)).select("doc_id").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
     }
     val expectedSpan = Set(None: Option[Long])
-    assert(runSpan("force") == expectedSpan, "span fast path")
-    assert(runSpan("off") == expectedSpan, "span job path")
+    assert(runSpan(fast = true) == expectedSpan, "span fast path")
+    assert(runSpan(fast = false) == expectedSpan, "span job path")
   }
 }

@@ -32,17 +32,54 @@ class RunSpec extends AnyFunSuite with SparkTestSupport {
     }
   }
 
-  test("steady-state rate runs from the first steady trigger to the last trigger's end") {
-    // a warm-up trigger, then three 1 s triggers 2 s apart: 300 rows in
-    // 5 s of wall clock. Summing batch durations (3 s) would say 100/s.
+  test("steady-state rate counts triggers 3..n, idle time included") {
+    // a warm-up trigger, the trigger that carries what piled up during
+    // it, then two 1 s triggers 2 s apart: 200 rows that arrived over
+    // the 4 s from the second trigger's start to the last one's. Summing
+    // batch durations (2 s) would say 100/s.
     val ts = Seq(Trigger(0L, 9000L, 999L), Trigger(10000L, 1000L, 100L),
       Trigger(12000L, 1000L, 100L), Trigger(14000L, 1000L, 100L))
     val r = Run.steadyRate(ts)
-    assert(r("triggers") == 3)
-    assert(r("rows") == 300L)
-    assert(r("wall_s") == 5.0)
-    assert(r("rows_per_s") == 60.0)
-    assert(Run.steadyRate(ts.take(1))("rows_per_s").asInstanceOf[Double].isNaN)
+    assert(r("triggers") == 2)
+    assert(r("rows") == 200L)
+    assert(r("wall_s") == 4.0)
+    assert(r("rows_per_s") == 50.0)
+    Seq(1, 2).foreach(n => assert(
+      Run.steadyRate(ts.take(n))("rows_per_s").asInstanceOf[Double].isNaN))
+  }
+
+  /** Triggers of a rate source producing `rate` rows/s: trigger k reads
+    * what arrived since the start of trigger k-1 (the first reads
+    * nothing). */
+  private def rateSource(rate: Long, starts: Seq[Long],
+      durations: Seq[Long]): Seq[Trigger] = starts.indices.map { k =>
+    Trigger(starts(k), durations(k),
+      if (k == 0) 0L else rate * (starts(k) - starts(k - 1)) / 1000)
+  }
+
+  test("steady-state rate of a pipeline that keeps up with a slow first trigger is the source rate") {
+    // a 2,000 rows/s source whose first trigger runs 9 s, so trigger 2
+    // carries 18,000 piled-up rows; counting it said 9,167 rows/s.
+    // Triggers 3..6 then run every 0.5 s for 0.4 s each: 4,000 rows that
+    // arrived over 2 s and were processed in 1.9 s.
+    val ts = rateSource(2000L, Seq(0L, 9000L, 9500L, 10000L, 10500L, 11000L),
+      Seq(9000L, 400L, 400L, 400L, 400L, 400L))
+    val r = Run.steadyRate(ts)
+    assert(r("triggers") == 4)
+    assert(r("rows") == 4000L)
+    assert(r("rows_per_s") == 2000.0)
+  }
+
+  test("steady-state rate of a pipeline that falls behind its source is the pipeline's rate") {
+    // a 2,000 rows/s source into a pipeline that handles 1,000 rows/s:
+    // every trigger runs twice as long as the one before, so the 28,000
+    // rows of triggers 3..5 took 28 s to process. Their arrival window
+    // alone (14 s) would give back the source rate.
+    val ts = rateSource(2000L, Seq(0L, 1000L, 3000L, 7000L, 15000L),
+      Seq(1000L, 2000L, 4000L, 8000L, 16000L))
+    val r = Run.steadyRate(ts)
+    assert(r("rows") == 28000L)
+    assert(r("rows_per_s") == 1000.0)
   }
 
   test("percentile is nearest-rank on known sets") {
@@ -89,7 +126,12 @@ class RunSpec extends AnyFunSuite with SparkTestSupport {
     assert(m.get("planted_dups").asLong == 8)
     assert(m.get("rejected_planted").asLong >= 7)
     assert(m.get("drain").get("triggers").asLong >= 1)
-    assert(m.get("trickle").get("split").get("trigger.jobs").get("n").asInt == 3)
+    val jobs = m.get("trickle").get("split").get("trigger.jobs")
+    assert(jobs.get("n").asInt == 3)
+    // trickle triggers take the admission's driver form: 5 jobs per
+    // trigger on a 4-cpu host, where the job form runs 8, so a trickle
+    // routed there fails here
+    assert(jobs.get("p50").asDouble <= 5, jobs)
     assert(m.get("invariants").get("checks").asInt >= 1)
   }
 

@@ -364,4 +364,13 @@ class ShardedArtifactsSpec extends AnyFunSuite with SparkTestSupport {
         s"probe selected ${f.selectedPartitions.partitionCount} partitions")
     }
   }
+
+  test("a writeByKey rewrite clears the memoized row count of the directory") {
+    val s = spark
+    val dir = Files.createTempDirectory("graft-sh-count").toString
+    Sharded.writeByKey(s.range(40).toDF("k"), dir, "k", shards = 4)
+    assert(graft.sources.ParquetMeta.rowCount(s, dir) == 40)
+    Sharded.writeByKey(s.range(70).toDF("k"), dir, "k", shards = 4)
+    assert(graft.sources.ParquetMeta.rowCount(s, dir) == 70)
+  }
 }
