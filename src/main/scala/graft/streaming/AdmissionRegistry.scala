@@ -1,92 +1,65 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{coalesce, col, lit}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft.ext.Sharded
+import graft.streaming.Manifest.{Entry, Version}
 
 /** Shared persistent-registry core for the streaming admission family
   * ([[NearDupAdmission]] = MinHash buckets, [[SpanAdmission]] = span
   * hashes, [[EmbeddingAdmission]] = sign-sketch buckets + vectors, and
-  * any future registry-gated admission). One contract, four guarantees:
+  * any future registry-gated admission). It commits through
+  * [[Manifest]] under the APPEND merge law: each manifest lists the
+  * registry's runs, each run with its directory, modulus, bytes, rows
+  * and int-column ranges. Four guarantees follow:
   *
-  *   1. **Replay-safe appends.** Each micro-batch's rows land in their own
-  *      `batch=<id>` subdirectory with OVERWRITE semantics, so a replayed
-  *      batch rewrites its own append instead of duplicating it — and,
-  *      critically, the history reads EXCLUDE the current batch's
-  *      directory. Without the exclusion, a batch that crashed between
-  *      registry append and sink commit would, on replay, find its own
-  *      keys in history and self-reject every doc it had admitted —
-  *      silently dropping them from the output forever. With it, replay
-  *      recomputes the exact same admission decisions (admit is
-  *      deterministic given (batch, history)) and the sink sees the same
-  *      admitted rows.
-  *   2. **Self-sized shard pruning.** Inside every `batch=` directory
-  *      rows are partitioned by `shard = xxhash64(shardCols…) % P`, with
-  *      the directory's own P recorded in a `_shards` marker file. Fresh
-  *      appends use a small fixed P (`shards` — a micro-batch must not
-  *      write thousands of files); COMPACTION re-shards the folded
-  *      history to `P = bytes / targetShardBytes`, so the shard COUNT
-  *      grows with the registry while the shard SIZE stays constant.
-  *      A trigger's probe collects its distinct key-hash tokens
-  *      ([[probeTokens]], one micro-batch-sized distinct job, driver-
-  *      capped) and each directory is read through a literal
-  *      `shard IN (…)` predicate under ITS OWN modulus
-  *      ([[historyTouched]]) — partition pruning at the file index.
-  *      The at-scale law this buys (and the reason a FIXED shard count
-  *      cannot): per-trigger bytes ≈ min(registry, K × targetShardBytes)
-  *      + uncompacted tail, K = distinct probe keys. The first term is
-  *      CONSTANT in corpus lifetime — hash-uniform keys saturate any
-  *      fixed P once K ≳ P (measured: 256-doc batches × 8 bands touch
-  *      16/16 shards), but a registry that outgrows K × targetShardBytes
-  *      keeps adding shards the probe does NOT touch. The uncompacted
-  *      tail is bounded by compactEvery × trigger size. This is the
-  *      batch tier's pruning discipline ([[graft.ext.Sharded]],
-  *      `Dedup.Scheme.deltaSharded`) plus the footer-derived self-sizing
-  *      of the embedding sketch (SURVEY §14.4), applied to stream state.
-  *   3. **Fail-closed reads.** Only a genuinely absent registry (first
-  *      batch ever) yields empty history, via an explicit filesystem
-  *      existence check. Real read errors — corrupt files, transient IO —
-  *      PROPAGATE so the micro-batch retries, rather than admitting the
-  *      batch as if history were empty and letting near-dups land
-  *      permanently. Pruning fails SAFE, not just closed: a directory
-  *      with no readable `_shards` marker (e.g. the crash window between
-  *      parquet commit and marker write on a replayed append) is read in
-  *      full — a superset, never a miss. Read entry points NEVER mutate
-  *      the layout (ADVICE r14): an audit process reading history() mid-
-  *      swap observes an interrupted fold's aside directory as an extra
-  *      source instead of "recovering" it out from under the writer;
-  *      crash recovery runs only on the mutating paths the single
-  *      foreachBatch writer serializes ([[maybeCompact]]/[[compact]]).
-  *   4. **Tiered compaction.** Micro-batch appends are the small-files
-  *      disease at 100 TB/day ingest. The scheduled path
-  *      ([[maybeCompact]]) folds runs GEOMETRICALLY (LSM size-tiered):
-  *      a run is rewritten only when the newer mass has caught up to
-  *      its size, so live directories number O(log lifetime) and every
-  *      row is rewritten O(log lifetime) times EVER — fold-everything
-  *      compaction would instead rewrite the whole registry every
-  *      cycle, an amortized per-trigger cost that grows with corpus
-  *      lifetime (the same disease the pruned probe cures on the read
-  *      side). [[compact]] remains the one-shot full consolidation.
-  *      Both preserve the `batch=` level (so exclusion semantics
-  *      survive) and re-shard per guarantee 2. Contract: only compact
-  *      batches whose sink writes are durably committed (i.e. strictly
-  *      below the stream's last committed batch) — a replay can then
-  *      never target a folded run. Folds are ordered write-tmp →
-  *      swap-target → delete-olds so a crash leaves duplicate rows
-  *      (harmless: registry reads are semi-joins; a later fold
-  *      deduplicates) rather than missing history, except during the
-  *      swap of the single target directory itself.
+  *   1. **Replay-safe appends.** Batch N's rows land in the run `v=N`,
+  *      and manifest N lists the runs of the newest committed manifest
+  *      below N plus that run. History for batch N is exactly those
+  *      earlier runs, so a batch that crashed between registry append
+  *      and sink commit replays against the same history — it cannot
+  *      find its own keys there and self-reject the docs it admitted —
+  *      recomputes the same decisions (admit is deterministic given
+  *      (batch, history)) and overwrites its own run.
+  *   2. **Self-sized shard pruning.** Inside every run, rows are
+  *      partitioned by `shard = xxhash64(shardCols…) % P`, with the
+  *      run's own P in its manifest entry. Fresh appends use a small
+  *      fixed P (`shards` — a micro-batch must not write thousands of
+  *      files); folds re-shard to `P = bytes / targetShardBytes`, so the
+  *      shard COUNT grows with the registry while the shard SIZE stays
+  *      constant. A trigger's probe collects its distinct key-hash
+  *      tokens ([[probeTokens]], one micro-batch-sized distinct job,
+  *      driver-capped) and each run is read through the `shard=`
+  *      directories its tokens touch under ITS OWN modulus
+  *      ([[historyTouched]]). Per-trigger bytes ≈ min(registry, K ×
+  *      targetShardBytes) + uncompacted tail, K = distinct probe keys:
+  *      the first term is CONSTANT in corpus lifetime, because a
+  *      registry that outgrows K × targetShardBytes keeps adding shards
+  *      the probe does not touch (a FIXED P saturates once K ≳ P). The
+  *      tail is bounded by compactEvery × trigger size.
+  *   3. **Fail-closed reads.** Only a registry with no committed
+  *      manifest (first batch ever) yields empty history. A corrupt or
+  *      truncated manifest, or a listed run with a corrupt file, THROWS,
+  *      so the micro-batch retries instead of admitting against a
+  *      silently smaller history. A run written without its manifest is
+  *      invisible, and row counts and ranges ([[footerStats]]) are read
+  *      from the manifest, walked from the footers once at write time.
+  *      Reads never mutate the layout.
+  *   4. **Tiered compaction.** [[maybeCompact]] folds runs GEOMETRICALLY
+  *      (LSM size-tiered), so live runs number O(log lifetime) and every
+  *      row is rewritten O(log lifetime) times EVER. A fold rewrites the
+  *      layout of the newest committed version and commits by replacing
+  *      that version's manifest with one that denotes the same rows; a
+  *      crash before the rename leaves the old runs listed and readable.
+  *      Contract: fold only below the stream's last committed batch, so
+  *      a replay never targets a folded version.
   *
-  * Registry rows are payload-only (fixed-width hash/bucket longs); batch
-  * id and shard live in directory names, Hive-partition style, so a flat
-  * `spark.read.parquet(stateDir)` still sees every row (with inferred
-  * `batch`/`shard` columns) for audits.
+  * Registry rows are payload-only (fixed-width hash/bucket longs); the
+  * shard lives in directory names, Hive-partition style.
   *
   * **The per-trigger admission protocol**
   * ([[AdmissionRegistry.Admission]], written once; a family supplies
@@ -145,8 +118,8 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     /** A SET registry: each append registers a row once, however many
       * times the batch produced it. */
     distinctRows: Boolean = false,
-    /** Applied to the merged payload inside [[compact]]/[[maybeCompact]]
-      * folds, BEFORE re-sharding and dedup — the hook that lets a family
+    /** Applied to the merged payload inside [[maybeCompact]]'s folds,
+      * BEFORE re-sharding and dedup — the hook that lets a family
       * rewrite DERIVED columns while history is being rewritten anyway
       * (zero extra write cost). [[EmbeddingAdmission]] re-buckets folded
       * runs under a self-sized sketch width here. Must preserve the
@@ -157,197 +130,45 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
   require(shardCols.nonEmpty && shardCols.forall(schema.fieldNames.contains),
     s"shardCols $shardCols must be payload columns of ${schema.fieldNames.toSeq}")
 
-  /** Read-side schema: payload + the `shard` partition column (needed in
-    * the schema for the isin predicate to prune at the file index). */
-  private val readSchema =
-    StructType(schema.fields :+ StructField("shard", IntegerType))
-
   private def shardExpr(p: Int): Column =
     Sharded.shardOfAll(shardCols.map(col), p)
 
-  private def fs(spark: SparkSession) =
-    new Path(stateDir).getFileSystem(spark.sessionState.newHadoopConf())
+  private val payload = schema.fieldNames.map(col).toSeq
 
-  /** Leaf `batch=<id>` directories currently present, with their ids and
-    * whether the entry is an interrupted-swap ASIDE (see [[fold]]'s
-    * `.retire_batch=` protocol).
-    *
-    * `recover = true` (MUTATING entry points only — [[maybeCompact]] /
-    * [[compact]], which the single foreachBatch writer serializes):
-    * completes or unwinds a fold's interrupted target swap first — a
-    * crash between the rename-aside and the tmp→target rename would
-    * otherwise leave the folded run's ONLY live copy in the aside
-    * directory, and [[fold]]'s stale-aside delete would destroy it
-    * (ADVICE r13). After recovery no aside survives, so every returned
-    * entry is a plain `batch=` dir.
-    *
-    * `recover = false` (read-only entry points — [[historyTouched]] /
-    * [[footerStats]], which audit tools may call from a process that is
-    * NOT the writer): performs NO filesystem mutation. An aside whose
-    * `batch=` target is absent (crash before the tmp→target rename: the
-    * aside IS the folded run) is returned as an extra source under its
-    * own id; an aside whose target exists is a stale duplicate the new
-    * target subsumes — skipped. A reader renaming "helpfully" mid-swap
-    * would make the WRITER's rename fail and abort its trigger
-    * (ADVICE r14) — reads must observe, never repair. */
-  private def batchDirs(spark: SparkSession,
-      recover: Boolean): Seq[(Long, Path, Boolean)] = {
-    val f = fs(spark)
-    val root = new Path(stateDir)
-    if (!f.exists(root)) return Nil
-    // ONE root listing serves both the recovery sweep and the result —
-    // batchDirs runs ≥3 times per trigger (compact schedule, footer
-    // stats, history read), so a second LIST here would double the hot
-    // path's root round-trips (review r14); re-list only when a
-    // recovery action actually changed the directory set.
-    val entries = f.listStatus(root).toSeq.filter(_.isDirectory)
-    val asides =
-      entries.filter(_.getPath.getName.startsWith(".retire_batch="))
-    val targetIds = entries.collect {
-      case s if s.getPath.getName.startsWith("batch=") =>
-        s.getPath.getName.stripPrefix("batch=").toLong
-    }.toSet
-    if (!recover) {
-      val live = entries.filter(_.getPath.getName.startsWith("batch="))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong,
-          s.getPath, false))
-      val orphaned = asides.collect {
-        case s if !targetIds.contains(
-            s.getPath.getName.stripPrefix(".retire_batch=").toLong) =>
-          (s.getPath.getName.stripPrefix(".retire_batch=").toLong,
-            s.getPath, true)
-      }
-      return live ++ orphaned
-    }
-    asides.foreach { s =>
-      val id = s.getPath.getName.stripPrefix(".retire_batch=").toLong
-      val target = new Path(root, s"batch=$id")
-      if (targetIds.contains(id)) {
-        // swap completed before the crash: the aside holds rows the new
-        // target subsumes — a stale duplicate, safe to drop
-        f.delete(s.getPath, true)
-      } else {
-        // crashed between rename-aside and tmp→target: the aside is the
-        // only live copy — restore it (the stale tmp is cleared by the
-        // next fold; redoing the fold then re-selects these rows)
-        require(f.rename(s.getPath, target),
-          s"recover: rename ${s.getPath} -> $target failed")
-      }
-    }
-    if (asides.nonEmpty) markerCache.clear()
-    val current = if (asides.isEmpty) entries
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-    current.filter(_.getPath.getName.startsWith("batch="))
-      .map(s => (s.getPath.getName.stripPrefix("batch=").toLong,
-        s.getPath, false))
-  }
+  /** The runs batch `batchId` is admitted against: those of the newest
+    * committed manifest below it (every run, at the default). */
+  private[graft] def runs(spark: SparkSession,
+      batchId: Long = Long.MaxValue): Seq[Entry] =
+    Manifest.below(spark, stateDir, batchId).fold(Seq.empty[Entry])(_.entries)
 
-  /** One cached read of a directory's `_shards` marker file, keyed by
-    * (modification time, length) so any external change — a replayed
-    * overwrite, a fold's rename, a crash deleting the file — is seen on
-    * the next access. Since r14 the marker carries BOTH the shard
-    * modulus (first line) and the `_meta` statistics payload
-    * (`rows=`/`int:` lines), so the admission hot path costs ONE
-    * getFileStatus per live dir per trigger and one open EVER per
-    * distinct content (VERDICT r13 #7: the separate `_shards` + `_meta`
-    * reads doubled the per-trigger metadata round-trips). Errors are
-    * never cached; only successful reads are. */
-  private case class CachedMarker(sig: (Long, Long), text: String)
-  private val markerCache =
-    scala.collection.concurrent.TrieMap[String, CachedMarker]()
-
-  /** Cache key = the FULLY-QUALIFIED directory URI: callers arrive with
-    * both qualified paths (from listStatus) and raw `$stateDir/batch=N`
-    * constructions — unqualified keys would make the writers'
-    * invalidations silent no-ops against entries populated under the
-    * qualified spelling (review r14). */
-  private def cacheKey(spark: SparkSession, dir: Path): String =
-    fs(spark).makeQualified(dir).toString
-
-  private def markerText(spark: SparkSession, dir: Path): Option[String] = {
-    val f = fs(spark)
-    val m = new Path(dir, "_shards")
-    val key = cacheKey(spark, dir)
-    val st =
-      try Some(f.getFileStatus(m))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => markerCache.remove(key); None
-      case Some(s) =>
-        val sig = (s.getModificationTime, s.getLen)
-        markerCache.get(key) match {
-          case Some(c) if c.sig == sig => Some(c.text)
-          case _ =>
-            val in = f.open(m)
-            val text =
-              try new String(in.readAllBytes(), UTF_8) finally in.close()
-            markerCache(key) = CachedMarker(sig, text)
-            Some(text)
-        }
-    }
-  }
-
-  /** The shard modulus a directory was written with, from its `_shards`
-    * marker's FIRST line; -1 (= unprunable, read in full) when the
-    * marker is absent — the fail-safe side of guarantee 3. A PRESENT
-    * but corrupt marker throws (fail closed — pruning with a wrong
-    * modulus would MISS rows, which for an admission registry means
-    * silent duplicates). */
-  private def dirShards(spark: SparkSession, dir: Path): Int =
-    markerText(spark, dir) match {
-      case None => -1
-      case Some(text) => text.linesIterator.next().trim.toInt
-    }
-
-  private def emptyHistory(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-
-  private def readDirs(spark: SparkSession, dirs: Seq[Path]): DataFrame =
-    // basePath anchors partition discovery at the registry root: the
-    // batch= roots themselves match the col=val directory pattern, and
-    // without the anchor Spark's upward walk from the shard= leaves
-    // reports conflicting structures. The discovered batch column is
-    // not in readSchema; the payload select drops it.
-    spark.read.option("basePath", stateDir)
-      .schema(readSchema).parquet(dirs.map(_.toString): _*)
-
-  /** Read one interrupted-swap ASIDE directory (read-only callers treat
-    * it as an extra source — see [[batchDirs]]): anchored at the aside
-    * dir ITSELF, not the registry root, so partition discovery sees only
-    * the `shard=` level and never tries to parse the dot-prefixed
-    * `.retire_batch=` segment as a partition column. */
-  private def readAside(spark: SparkSession, dir: Path): DataFrame =
-    spark.read.option("basePath", dir.toString)
-      .schema(readSchema).parquet(dir.toString)
-
-  /** Int32 payload columns whose per-directory value RANGE rides the
-    * marker cache (each run writes few distinct values — the embedding
-    * family's sketch width — so footer min/max per file unions exactly). */
+  /** Int32 payload columns whose per-run value RANGE the manifest records
+    * (each run writes few distinct values — the embedding family's
+    * sketch width — so footer min/max per file unions exactly). */
   private val intCols = schema.fields
     .filter(_.dataType == IntegerType).map(_.name).toSeq
 
-  /** One directory's footer truth: (rows, per-int-column Some(min,max)
-    * or None when any block lacks statistics). FAILS CLOSED when a data
-    * file's footer is MISSING one of the schema's int columns — that is
-    * a foreign/pre-upgrade layout, and admitting against history this
-    * family cannot match would silently duplicate content. */
-  private def dirFooterWalk(spark: SparkSession,
-      dir: Path): (Long, Map[String, Option[(Int, Int)]]) = {
+  /** The manifest entry of a just-written run: its bytes, rows and
+    * per-int-column ranges from its footers — the one footer walk, at
+    * write time. FAILS CLOSED when a data file's footer is MISSING one
+    * of the schema's int columns: that is a foreign/pre-upgrade layout,
+    * and admitting against history this family cannot match would
+    * silently duplicate content. */
+  private def runEntry(spark: SparkSession, dir: String, p: Int): Entry = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
-    val f = fs(spark)
-    var rows = 0L
+    val f = Manifest.fs(spark, stateDir)
+    var (bytes, rows) = (0L, 0L)
     val ranges = scala.collection.mutable.Map[String, Option[(Int, Int)]](
       intCols.map(_ -> Option.empty[(Int, Int)]): _*)
-    val seen = scala.collection.mutable.Map[String, Boolean](
-      intCols.map(_ -> true): _*)
+    val seen = scala.collection.mutable.Set(intCols: _*)
     def walk(p: Path): Unit = {
       val st = f.listStatus(p)
       st.filter(_.isDirectory).foreach(s => walk(s.getPath))
       st.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .foreach { s =>
+          bytes += s.getLen
           val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
           try r.getFooter.getBlocks.asScala.foreach { b =>
             rows += b.getRowCount
@@ -364,139 +185,67 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
                   (c.getStatistics.genericGetMin,
                       c.getStatistics.genericGetMax) match {
                     case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                      ranges(name) = ranges(name) match {
-                        case Some((a, z)) => Some(
-                          (math.min(a, lo.intValue),
-                            math.max(z, hi.intValue)))
-                        case None => Some((lo.intValue, hi.intValue))
-                      }
-                    case _ => seen(name) = false
+                      ranges(name) = Some(ranges(name).fold(
+                        (lo.intValue, hi.intValue)) { case (a, z) =>
+                          (math.min(a, lo.intValue), math.max(z, hi.intValue)) })
+                    case _ => seen -= name
                   }
-                case _ => seen(name) = false
+                case _ => seen -= name
               }
             }
           }
           finally r.close()
         }
     }
-    walk(dir)
-    (rows, intCols.map(n =>
-      n -> (if (seen(n)) ranges(n) else None)).toMap)
+    walk(new Path(stateDir, dir))
+    Entry(dir, p, bytes, ("rows" -> rows.toString) +: intCols.map { n =>
+      n -> ranges(n).filter(_ => seen(n)).fold("?") { case (lo, hi) => s"$lo,$hi" }
+    })
   }
 
-  /** Write the directory's merged `_shards` marker: the shard modulus on
-    * the FIRST line, then the statistics cache (rows + int-column
-    * ranges) computed from its just-written footers — O(files of ONE
-    * run) at write time, so per-trigger reads cost O(live dirs) = O(log)
-    * tiny-file stats instead of re-walking every footer in the registry
-    * (review r13: the naive walk was itself a lifetime-growing
-    * per-trigger term at 10⁵-file registries). One file, written AFTER
-    * the parquet commit (r14, VERDICT #7 — the separate `_shards` +
-    * `_meta` pair doubled metadata round-trips on the admission hot
-    * path): the crash window yields marker-absent = full-read +
-    * footer-walk, never a wrong modulus. The statistics lines are
-    * DERIVED data — readers that find them missing or unparsable (e.g.
-    * a pre-r14 modulus-only marker) fall back to the footer walk
-    * (ground truth), never fail. */
-  private def writeMarker(spark: SparkSession, dir: Path, p: Int): Unit = {
-    val (rows, ranges) = dirFooterWalk(spark, dir)
-    val body = (p.toString +: s"rows=$rows" +: intCols.map { n =>
-      ranges(n) match {
-        case Some((lo, hi)) => s"int:$n=$lo,$hi"
-        case None => s"int:$n=?"
-      }
-    }).mkString("\n")
-    // tmp + rename, never create-in-place (ADVICE r14): a crash mid-write
-    // can flush a truncated first line that still PARSES as a valid but
-    // smaller modulus ('12' flushed as '1'), and dirShards would then
-    // prune history under the wrong modulus — silently missing rows, the
-    // fail-open this module exists to prevent. The rename is atomic on
-    // Hadoop FileSystems; the crash window leaves the marker ABSENT =
-    // full-read + footer-walk (fail safe), never wrong.
-    val f = fs(spark)
-    val tmp = new Path(dir, "_shards.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(UTF_8)) finally out.close()
-    val target = new Path(dir, "_shards")
-    f.delete(target, false) // rename won't overwrite on HDFS semantics
-    require(f.rename(tmp, target),
-      s"registry marker: rename $tmp -> $target failed")
-    markerCache.remove(cacheKey(spark, dir)) // re-read on next use
-  }
+  private def rowsOf(e: Entry): Long = e.stat("rows").map(_.toLong)
+    .getOrElse(throw new IllegalStateException(
+      s"registry $stateDir: run ${e.dir} records no row count"))
 
-  private def readDirMeta(spark: SparkSession,
-      dir: Path): Option[(Long, Map[String, Option[(Int, Int)]])] =
-    try {
-      markerText(spark, dir).flatMap { text =>
-        val lines = text.linesIterator.toSeq
-        val rows = lines.collectFirst {
-          case l if l.startsWith("rows=") => l.stripPrefix("rows=").toLong
-        }.get
-        val ranges = lines.filter(_.startsWith("int:")).map { l =>
-          val Array(n, v) = l.stripPrefix("int:").split("=", 2)
-          n -> (if (v == "?") None else {
-            val Array(lo, hi) = v.split(","); Some((lo.toInt, hi.toInt))
-          })
-        }.toMap
-        if (intCols.forall(ranges.contains)) Some((rows, ranges)) else None
-      }
-    } catch { case _: Exception => None } // cache, not truth: fall back
-
-  /** EXACT registered row count — from the per-directory marker caches
-    * (fallback: that directory's parquet footers), no scan job.
-    * `excludeBatchId` mirrors the history reads' own-batch exclusion:
-    * parameters derived from the count must be REPLAY-DETERMINISTIC —
-    * a replayed batch whose own earlier append inflated the count would
-    * derive a different width and recompute different decisions. */
+  /** EXACT registered row count of the history batch `excludeBatchId`
+    * is admitted against, from the manifest — no scan job. Parameters
+    * derived from it are REPLAY-DETERMINISTIC: a replayed batch never
+    * counts its own earlier append. */
   def approxRows(spark: SparkSession,
-      excludeBatchId: Long = Long.MinValue): Long =
+      excludeBatchId: Long = Long.MaxValue): Long =
     footerStats(spark, excludeBatchId, None)._1
 
   /** [[approxRows]] plus, when `statsCol` names an int32 payload column,
-    * the SET OF VALUE RANGES that column takes across the registry
-    * (each run writes few distinct values, so per-file min/max unions
+    * the SET OF VALUE RANGES that column takes across those runs (each
+    * run writes few distinct values, so per-file min/max unions
     * exactly; the result is every int in the union of ranges). None
-    * when any directory lacks usable statistics (fail safe: the caller
-    * must assume the full domain). Served from the marker caches, one tiny
-    * read per live directory = O(log runs); cache misses fall back to
-    * that directory's footer walk. */
+    * when any non-empty run lacks usable statistics, or a range spans
+    * more than 64 values (fail safe: the caller must assume the full
+    * domain — and a wild range must not materialize a multi-billion-
+    * element Set ON THE DRIVER). One manifest read. */
   def footerStats(spark: SparkSession, excludeBatchId: Long,
       statsCol: Option[String]): (Long, Option[Set[Int]]) = {
-    var rows = 0L
-    var values = Set.empty[Int]
-    var statsOk = statsCol.forall(intCols.contains)
-    batchDirs(spark, recover = false).foreach { case (id, p, _) =>
-      if (id != excludeBatchId) {
-        val (r, ranges) = readDirMeta(spark, p)
-          .getOrElse(dirFooterWalk(spark, p))
-        rows += r
-        statsCol.foreach { name =>
-          ranges.getOrElse(name, None) match {
-            // Span cap (ADVICE r13): the whole cache rides the "few
-            // distinct values per run" assumption — a footer with wild
-            // min/max (corrupt stats, or a future family with a
-            // wide-domain int payload) would otherwise materialize a
-            // multi-billion-element Set ON THE DRIVER. Above 64 values
-            // the stats are treated as unavailable; the caller's
-            // fail-safe (assume the full domain) already handles it.
-            case Some((lo, hi)) if hi.toLong - lo.toLong > 64L =>
-              statsOk = false
-            case Some((lo, hi)) => values ++= (lo to hi)
-            case None => if (r > 0) statsOk = false
-          }
+    val rs = runs(spark, excludeBatchId)
+    val values = statsCol.filter(intCols.contains).map { name =>
+      rs.map { e =>
+        e.stat(name).filter(_ != "?").map(_.split(",").map(_.toInt)) match {
+          case Some(Array(lo, hi)) if hi.toLong - lo <= 64L => Some((lo to hi).toSet)
+          case None if rowsOf(e) == 0 => Some(Set.empty[Int])
+          case _ => None
         }
       }
     }
-    (rows, if (statsCol.isDefined && statsOk) Some(values) else None)
+    (rs.map(rowsOf).sum,
+      values.filter(_.forall(_.isDefined)).map(_.flatten.flatten.toSet))
   }
 
   /** The trigger's distinct probe-key hash tokens — ONE micro-batch-
-    * sized distinct job; each directory's touched-shard set is then
-    * token % its own modulus, driver-side. Returns None when the
-    * distinct count exceeds `cap` (driver safety: cap × 8 bytes
-    * collected): a probe that large saturates every realistic shard
-    * set, so the full read it falls back to is what pruning would have
-    * selected anyway. `keys` must carry the `shardCols`. */
+    * sized distinct job; each run's touched-shard set is then token % its
+    * own modulus, driver-side. Returns None when the distinct count
+    * exceeds `cap` (driver safety: cap × 8 bytes collected): a probe that
+    * large saturates every realistic shard set, so the full read it
+    * falls back to is what pruning would have selected anyway. `keys`
+    * must carry the `shardCols`. */
   def probeTokens(keys: DataFrame, cap: Int = 1 << 18): Option[Array[Long]] = {
     import org.apache.spark.sql.functions.xxhash64
     val toks = keys.select(xxhash64(shardCols.map(col): _*).as("h"))
@@ -504,87 +253,49 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     if (toks.length > cap) None else Some(toks)
   }
 
-  /** PRUNED history: rows of every batch except `excludeBatchId` whose
-    * shard (under the OWNING directory's modulus) is touched by
-    * `tokens` — the per-trigger probe read. Directories are grouped by
-    * modulus (at most a handful: the append P and the compaction Ps);
-    * each group gets a literal `shard IN (…)` predicate, static at
-    * planning, so the file index prunes untouched `shard=` directories
-    * before any task launches. Correctness: the admission joins match
-    * on `shardCols`, and a history row whose shard differs from every
-    * probe token's shard cannot equal any probe key, so pruning drops
-    * only rows the join would discard. `tokens = None` (saturated
-    * probe) reads everything, = Some(empty) reads nothing. */
+  /** PRUNED history: the rows of the runs batch `excludeBatchId` is
+    * admitted against whose shard (under the run's own modulus) is
+    * touched by `tokens` — the per-trigger probe read, through
+    * [[Manifest.read]]'s explicit `shard=` paths. Correctness: the
+    * admission joins match on `shardCols`, and a history row whose shard
+    * differs from every probe token's shard cannot equal any probe key,
+    * so pruning drops only rows the join would discard. `tokens = None`
+    * (saturated probe) reads everything, = Some(empty) reads nothing. */
   def historyTouched(spark: SparkSession, excludeBatchId: Long,
-      tokens: Option[Array[Long]]): DataFrame = {
-    val dirs = batchDirs(spark, recover = false).collect {
-      case (id, p, aside) if id != excludeBatchId => (p, aside)
-    }
-    if (dirs.isEmpty) return emptyHistory(spark)
-    def readGroup(group: Seq[(Path, Boolean)]): DataFrame = {
-      val (normal, asides) = group.partition(!_._2)
-      val reads =
-        (if (normal.isEmpty) Nil
-         else Seq(readDirs(spark, normal.map(_._1)))) ++
-          asides.map(d => readAside(spark, d._1))
-      reads.reduce(_ unionByName _)
-    }
-    tokens match {
-      case None => readGroup(dirs)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-      case Some(toks) if toks.isEmpty => emptyHistory(spark)
-      case Some(toks) =>
-        val byP = dirs.groupBy(d => dirShards(spark, d._1)).toSeq.sortBy(_._1)
-        byP.map { case (p, group) =>
-          val read = readGroup(group)
-          val pruned =
-            if (p <= 0) read // no/unknown marker: full read (fail safe)
-            else {
-              val touched = toks.map(t => java.lang.Math.floorMod(t, p))
-                .distinct.sorted
-              if (touched.length >= p) read
-              else read.filter(col("shard")
-                .isin(touched.map(Integer.valueOf).toSeq: _*))
-            }
-          pruned.select(schema.fieldNames.map(col).toSeq: _*)
-        }.reduce(_ unionByName _)
-    }
-  }
+      tokens: Option[Array[Long]]): DataFrame =
+    Manifest.read(spark, stateDir, runs(spark, excludeBatchId), schema,
+        tokens.map(t => (p: Int) =>
+          t.iterator.map(java.lang.Math.floorMod(_, p)).toSet))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 
-  /** FULL history: all registered rows EXCEPT batch `excludeBatchId`'s
-    * own append — the audit/measurement read (per-trigger probes use
+  /** FULL history: every row batch `excludeBatchId` is admitted against
+    * — the audit/measurement read (per-trigger probes use
     * [[historyTouched]]). Empty (with the registry's schema) iff no
-    * other batch has ever appended; read failures on existing data
+    * earlier batch has committed; read failures on existing data
     * propagate (fail closed). */
   def history(spark: SparkSession, excludeBatchId: Long): DataFrame =
     historyTouched(spark, excludeBatchId, None)
 
-  /** Idempotent per-batch append: overwrites `batch=<batchId>`, so a
+  /** Idempotent per-batch append: overwrites the run `v=<batchId>` and
+    * commits manifest `batchId` = the earlier runs plus this one, so a
     * replayed batch replaces its earlier (possibly partial) append.
-    * Rows land under `shard=` subdirectories with the modulus recorded
-    * in the `_shards` marker AFTER the parquet commit (the overwrite
-    * wipes any stale marker, so the crash window yields marker-absent =
-    * full-read, never a wrong modulus).
     *
-    * SMALL batches take a DRIVER-WRITTEN fast path (r18, judge #6): a
-    * micro-batch append is ≤ |batch| × bands fixed-width rows, and the
-    * job path's shuffle + dynamic-partition commit protocol cost
-    * ~320 ms of a 1.55 s trigger for ~130 rows (`Run crawl-arrival`'s
-    * per-phase split). When every payload column is int32/int64 and the
-    * rows collect under [[AdmissionRegistry.smallAppendCap]] (ONE
-    * bounded job — the limit stops the scan), they are bucketed by the
-    * SAME pmod(xxhash64) shard function evaluated driver-side
-    * ([[graft.ext.Sharded.driverShard]]) and written as one plain
-    * parquet file per touched shard — no shuffle, no committer, same
-    * layout, same crash contract (partial dir without marker =
-    * full-read). Larger
-    * batches and non-fixed-width families (embedding vectors) take the
-    * job path unchanged — at that size the job overhead is amortized
-    * anyway. */
+    * SMALL batches take a DRIVER-WRITTEN fast path: a micro-batch
+    * append is ≤ |batch| × bands fixed-width rows, and the job path's
+    * shuffle + dynamic-partition commit protocol cost ~320 ms of a 1.55 s
+    * trigger for ~130 rows (`Run crawl-arrival`'s per-phase split). When
+    * every payload column is int32/int64 and the rows collect under
+    * [[AdmissionRegistry.smallAppendCap]] (ONE bounded job — the limit
+    * stops the scan), they are bucketed by the SAME pmod(xxhash64) shard
+    * function evaluated driver-side ([[graft.ext.Sharded.driverShard]])
+    * and written as one plain parquet file per touched shard — no
+    * shuffle, no committer, same layout, same commit. Larger batches and
+    * non-fixed-width families (embedding vectors) take the job path —
+    * at that size the job overhead is amortized anyway. */
   def append(rows: DataFrame, batchId: Long): Unit = {
     val spark = rows.sparkSession
-    val dir = new Path(s"$stateDir/batch=$batchId")
-    val projected = rows.select(schema.fieldNames.map(col).toSeq: _*)
+    val dir = s"v=$batchId"
+    val projected = rows.select(payload: _*)
     val ordered = if (distinctRows) projected.distinct() else projected
     val fast: Option[Array[Row]] =
       if (!allFixedWidth) None
@@ -601,10 +312,16 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
         ordered.withColumn("shard", shardExpr(shards))
           .repartition(col("shard"))
           .write.partitionBy("shard")
-          .mode("overwrite").parquet(dir.toString)
+          .mode("overwrite").parquet(s"$stateDir/$dir")
     }
-    writeMarker(spark, dir, shards)
+    commitRun(spark, batchId, dir)
   }
+
+  /** Commit manifest `batchId`: the runs below it plus the run `dir`. */
+  private def commitRun(spark: SparkSession, batchId: Long,
+      dir: String): Unit =
+    Manifest.commit(spark, stateDir, Version(batchId, shards,
+      runs(spark, batchId) :+ runEntry(spark, dir, shards)))
 
   /** Whether every payload column is a fixed-width primitive the
     * driver writer handles. */
@@ -640,28 +357,26 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
   /** Append PRE-COLLECTED rows (schema column order) without any Spark
     * job — the driver leg of [[append]]'s fast path, used by the
     * admission protocol's driver form, which already holds the batch's
-    * registry rows: the write itself is a handful of tiny parquet files
-    * and must not cost a job launch + commit protocol. Same layout, same
-    * marker, same crash contract as the job path. */
+    * registry rows. Same layout, same commit as the job path. */
   private[streaming] def appendCollected(spark: SparkSession,
       rows: Array[Row], batchId: Long): Unit = {
-    val dir = new Path(s"$stateDir/batch=$batchId")
-    appendDriver(spark, dir, if (distinctRows) rows.distinct else rows)
-    writeMarker(spark, dir, shards)
+    appendDriver(spark, s"v=$batchId", if (distinctRows) rows.distinct else rows)
+    commitRun(spark, batchId, s"v=$batchId")
   }
 
-  /** One parquet file per touched shard, written with a plain
-    * [[org.apache.parquet.hadoop.ParquetWriter]] on the driver. */
-  private def appendDriver(spark: SparkSession, dir: Path,
+  /** One parquet file per touched shard of run `dir`, written with a
+    * plain [[org.apache.parquet.hadoop.ParquetWriter]] on the driver. */
+  private def appendDriver(spark: SparkSession, dir: String,
       rows: Array[Row]): Unit = {
-    val f = fs(spark)
-    f.delete(dir, true)
-    f.mkdirs(dir)
+    val f = Manifest.fs(spark, stateDir)
+    val path = new Path(stateDir, dir)
+    f.delete(path, true)
+    f.mkdirs(path)
     val conf = spark.sessionState.newHadoopConf()
     val shardOf = (r: Row) =>
       Sharded.driverShard(keyLiterals(shardColIdx.map(r.get)), shards)
     rows.groupBy(shardOf).foreach { case (s, rs) =>
-      val file = new Path(dir, s"shard=$s/part-00000.parquet")
+      val file = new Path(path, s"shard=$s/part-00000.parquet")
       val w = AdmissionRegistry.rowParquetWriter(file, schema, conf)
       try rs.foreach(w.write) finally w.close()
     }
@@ -671,122 +386,68 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * watermark: call at the START of processing batch `batchId` (before
     * this batch's history read/append). When foreachBatch hands the
     * sink batch N, the engine has already durably committed batch N−1 —
-    * a failure can only ever replay N itself — so every directory
-    * ≤ N−1 is foldable, and any fold target's id stays < N, leaving the
-    * replayed batch's own-dir exclusion semantics intact. No-ops unless
-    * `every > 0` and `batchId` is a multiple of it; idempotent on
-    * replay (layout never changes admission DECISIONS — the
-    * ChainedStress admission family proves it — and a re-run just finds
-    * the already-folded layout and selects little or nothing).
+    * a failure can only ever replay N itself — so the newest committed
+    * version below N is foldable. No-ops unless `every > 0` and
+    * `batchId` is a multiple of it; idempotent on replay (layout never
+    * changes admission DECISIONS — the ChainedStress admission family
+    * proves it — and a re-run finds the folded layout and selects little
+    * or nothing). Returns the number of runs folded.
     *
     * Fold POLICY is geometric (LSM size-tiered), not fold-everything:
-    * walking newest → oldest, a run is included while its size ≤ the
-    * accumulated size of everything newer, and the selected suffix is
-    * folded into one run. Why not fold all (the r13-initial design):
-    * folding everything rewrites the ENTIRE registry every `every`
-    * batches — amortized O(registry / every) bytes per trigger, which
-    * GROWS with corpus lifetime and becomes the dominant per-trigger
-    * term precisely when the pruned probe has stopped growing. The
-    * geometric rule leaves run sizes super-increasing (each older run
-    * > the sum of everything newer), so (a) live `batch=` directories
-    * number O(log lifetime) — the probe's per-dir listing/marker reads
-    * stay bounded; (b) a row is rewritten only when the newer mass has
-    * caught up to its run — O(log lifetime) rewrites per row ever,
-    * amortized O(log) bytes written per ingested byte, lifetime-flat
-    * per trigger. Each folded run is re-sharded to its own self-sized
-    * modulus (guarantee 2; the per-dir `_shards` marker is what lets
-    * every run carry a different one), so the probe's pruned bytes are
-    * Σ over runs of min(run, K × targetShardBytes) ≤ O(log) × K ×
-    * targetShardBytes. */
-  def maybeCompact(spark: SparkSession, batchId: Long, every: Int): Unit = {
-    if (every <= 0 || batchId <= 0 || batchId % every != 0) return
-    val f = fs(spark)
-    val dirs = batchDirs(spark, recover = true)
-      .map { case (id, p, _) => (id, p) }
-      .filter(_._1 < batchId).sortBy(_._1)
-    if (dirs.size < 2) return
-    val sized = dirs.map { case (id, p) =>
-      (id, p, f.getContentSummary(p).getLength) }
-    // 1.5× slack on the inclusion rule tolerates byte jitter between
-    // same-generation runs (parquet overhead varies per fold) without
-    // breaking the invariant: surviving older runs still exceed 2/3 of
-    // the newer mass, so run count stays O(log) and each row is
-    // rewritten O(log) times. The newest run is included POSITIONALLY,
-    // not via an acc==0 escape hatch: with that hatch, a tail of
-    // zero-byte runs (empty/all-rejected micro-batches) left acc at 0
-    // and the walk fell through into the base — a full registry rewrite
-    // on every quiet cycle, the exact disease this policy prevents
-    // (r13 review finding).
-    var acc = 0L
-    var cut = sized.size
-    var i = sized.size - 1
-    while (i >= 0 &&
-        (i == sized.size - 1 || sized(i)._3 <= acc + (acc >> 1))) {
-      acc += sized(i)._3; cut = i; i -= 1
+    * walking newest → oldest, a run is included while its size ≤ 1.5 ×
+    * the accumulated size of everything newer, and the selected suffix
+    * is folded into one run. Folding everything would rewrite the
+    * ENTIRE registry every `every` batches — amortized O(registry /
+    * every) bytes per trigger, which GROWS with corpus lifetime. The
+    * geometric rule leaves run sizes super-increasing, so (a) live runs
+    * number O(log lifetime); (b) a row is rewritten only when the newer
+    * mass has caught up to its run — O(log lifetime) rewrites per row
+    * ever. Each folded run is re-sharded to its own self-sized modulus
+    * (guarantee 2), so the probe's pruned bytes are Σ over runs of
+    * min(run, K × targetShardBytes) ≤ O(log) × K × targetShardBytes.
+    * Run sizes come from the manifest, not from the layout. */
+  def maybeCompact(spark: SparkSession, batchId: Long, every: Int): Int = {
+    if (every <= 0 || batchId <= 0 || batchId % every != 0) 0
+    else Manifest.below(spark, stateDir, batchId).fold(0) { v =>
+      val sized = v.entries
+      // The 1.5× slack tolerates byte jitter between same-generation runs
+      // (parquet overhead varies per fold); surviving older runs still
+      // exceed 2/3 of the newer mass, so run count stays O(log). The
+      // newest run is included POSITIONALLY, not via an acc==0 escape
+      // hatch: a tail of zero-byte runs (empty/all-rejected
+      // micro-batches) would leave acc at 0 and pull the base into a
+      // full rewrite on every quiet cycle.
+      var acc = 0L
+      var cut = sized.size
+      var i = sized.size - 1
+      while (i >= 0 &&
+          (i == sized.size - 1 || sized(i).bytes <= acc + (acc >> 1))) {
+        acc += sized(i).bytes; cut = i; i -= 1
+      }
+      if (sized.size - cut < 2) 0 else fold(spark, v, cut)
     }
-    val selected = sized.drop(cut).map { case (id, p, _) => (id, p) }
-    if (selected.size >= 2)
-      fold(spark, selected, selected.map(_._1).max)
   }
 
-  /** Fold every `batch=` directory with id ≤ `uptoBatchId` into the
-    * single directory `batch=<uptoBatchId>` — FULL consolidation (the
-    * one-shot/offline form; the per-trigger schedule uses
-    * [[maybeCompact]]'s geometric policy instead). Returns the number
-    * of directories folded. Only call with a durably-committed
-    * watermark (see class doc). */
-  def compact(spark: SparkSession, uptoBatchId: Long): Int = {
-    val olds = batchDirs(spark, recover = true)
-      .map { case (id, p, _) => (id, p) }
-      .filter(_._1 <= uptoBatchId)
-    if (olds.size <= 1) return olds.size
-    fold(spark, olds, uptoBatchId)
-  }
-
-  /** Fold the given batch directories into `batch=<targetId>` (distinct
-    * rows — registry reads are semi-joins, so multiplicity is
+  /** Fold the runs of version `v` from index `cut` on into one fresh run
+    * (distinct rows — registry reads are semi-joins, so multiplicity is
     * irrelevant), re-sharded to the SELF-SIZED modulus P =
     * max(`shards`, bytes/targetShardBytes) — the step that keeps shard
-    * size (and therefore small-probe bytes) constant as a run grows.
-    * `targetId` must be ≥ every folded id and ≤ the committed
-    * watermark, so a replay can never target the folded run. */
-  private def fold(spark: SparkSession, olds: Seq[(Long, Path)],
-      targetId: Long): Int = {
-    val f = fs(spark)
-    val bytes = olds.map { case (_, p) => f.getContentSummary(p).getLength }.sum
+    * size (and therefore small-probe bytes) constant as a run grows —
+    * and commit by replacing `v`'s manifest. Returns the runs folded. */
+  private def fold(spark: SparkSession, v: Version, cut: Int): Int = {
+    val (kept, olds) = v.entries.splitAt(cut)
+    val bytes = olds.map(_.bytes).sum
     val p = math.min(1L << 20, math.max(shards.toLong,
       (bytes + targetShardBytes - 1) / targetShardBytes)).toInt
-    val merged = foldTransform(readDirs(spark, olds.map(_._2))
-        .select(schema.fieldNames.map(col).toSeq: _*))
-      .select(schema.fieldNames.map(col).toSeq: _*).distinct()
-    val tmp = new Path(s"$stateDir/.compact_tmp")
-    f.delete(tmp, true) // stale leftover from a crashed fold
+    val merged = foldTransform(
+        Manifest.read(spark, stateDir, olds, schema, None).get)
+      .select(payload: _*).distinct()
+    val dir = Manifest.fresh(spark, stateDir, v.id)
     merged.withColumn("shard", shardExpr(p))
       .repartition(p, col("shard"))
-      .write.partitionBy("shard").mode("overwrite").parquet(tmp.toString)
-    writeMarker(spark, tmp, p)
-    // Swap protocol (ADVICE r13: the old delete-then-rename left the
-    // crash window where tmp held the ONLY copy of the folded history
-    // and the next fold's stale-tmp delete destroyed it): the target is
-    // RENAMED ASIDE, never deleted, before tmp swaps in — every row has
-    // a live copy outside tmp at every instant. [[batchDirs]] completes
-    // or unwinds an interrupted swap (aside present + target present =
-    // drop the stale aside; aside present + target absent = restore).
-    // After the swap the not-yet-deleted olds merely DUPLICATE rows
-    // already in the target (semi-join-harmless; refolded next time).
-    // Hadoop FileSystem reports most rename/delete failures by
-    // RETURNING FALSE, not throwing — check them, or a failed swap
-    // followed by the olds deletion would destroy the only copy of the
-    // folded history (fail-open in a fail-closed module).
-    val target = new Path(s"$stateDir/batch=$targetId")
-    val aside = new Path(s"$stateDir/.retire_batch=$targetId")
-    f.delete(aside, true) // stale from an interrupted PRIOR fold epoch
-    if (f.exists(target))
-      require(f.rename(target, aside), s"compact: cannot retire $target")
-    require(f.rename(tmp, target), s"compact: rename $tmp -> $target failed")
-    markerCache.remove(cacheKey(spark, target))
-    f.delete(aside, true)
-    olds.foreach { case (id, dir) => if (id != targetId) f.delete(dir, true) }
+      .write.partitionBy("shard").mode("overwrite").parquet(s"$stateDir/$dir")
+    Manifest.commit(spark, stateDir,
+      v.copy(entries = kept :+ runEntry(spark, dir, p)))
     olds.size
   }
 }
@@ -974,11 +635,6 @@ object AdmissionRegistry {
         !col(idCol).isin(rejected.toSeq: _*))
     }
 
-    /** Fold committed batch directories ≤ `uptoBatchId` into one (see
-      * [[AdmissionRegistry.compact]] for the replay-safety contract). */
-    def compact(spark: SparkSession, uptoBatchId: Long): Int =
-      registry.compact(spark, uptoBatchId)
-
     /** `foreachBatch` adapter: admit, then hand the admitted rows to the
       * downstream writer — under the same fixed plans, since the
       * admitted frame is as micro-batch-bounded as the admission's. */
@@ -992,8 +648,8 @@ object AdmissionRegistry {
   /** Minimal parquet [[org.apache.parquet.hadoop.api.WriteSupport]]
     * for int32/int64-only registry payloads (the driver fast path of
     * [[AdmissionRegistry.append]]). Column stats are written as usual
-    * — the marker's footer walk and the embedding family's range cache
-    * read them exactly like job-written files. */
+    * — the run's write-time footer walk reads them exactly like
+    * job-written files. */
   private final class RowWriteSupport(schema: StructType)
       extends org.apache.parquet.hadoop.api.WriteSupport[Row] {
     import org.apache.parquet.schema.{PrimitiveType, Type, Types}

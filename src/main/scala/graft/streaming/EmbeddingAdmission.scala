@@ -100,9 +100,9 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
     * row count — the zero-extra-write moment the self-sizing rides. */
   private def rebucket(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    // DISTINCT ids, not raw rows/tables: a crashed fold can leave
-    // duplicate physical rows (swap-then-delete ordering), and a count
-    // inflated by them would derive a too-wide width (review r13).
+    // DISTINCT ids, not raw rows/tables: an id can sit in more than one
+    // folded run, and a count inflated by it would derive a too-wide
+    // width.
     val w = width(df.select(col("id")).distinct().count())
     df.withColumn("bucket",
         bucketByTable(spark, col("embedding"), col("t"), w))
@@ -185,11 +185,11 @@ class EmbeddingAdmission(stateDir: String, vecCol: String, idCol: String,
       registry.footerStats(batch.sparkSession, batchId, Some("planes"))
     val wNow = width(regRows / tables)
     // Fail-safe ladder spans to maxPlanes, NOT wNow: widths are only
-    // APPROXIMATELY monotone in registry size — crash-leftover duplicate
-    // rows can inflate a count past a doubling boundary and leave a run
-    // one width above what the deduplicated count later implies
-    // (review r13) — so when footer stats are unavailable the probe
-    // must cover everything a run could legally carry.
+    // APPROXIMATELY monotone in registry size — rows registered in more
+    // than one run inflate a count past a doubling boundary and leave a
+    // run one width above what the deduplicated count later implies — so
+    // when the run statistics are unavailable the probe must cover
+    // everything a run could legally carry.
     val probeWidths = (widthsSeen
       .getOrElse((planes to maxPlanes).toSet)
       .filter(w => w >= planes && w <= maxPlanes) + wNow).toSeq.sorted

@@ -1,17 +1,17 @@
 package graft.streaming
 
 import java.io.FileNotFoundException
-import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ext.Sharded
 import graft.ops.Upsert
+import graft.streaming.Manifest.{Entry, Version}
 
 /** The serving tier's keyed materialized view (K2): the reference's
   * pandas upsert frame (`visualizer.py:30-44,61-82`) as a durable
@@ -23,16 +23,12 @@ import graft.ops.Upsert
   *
   * The keyed snapshot is partitioned by `shard = xxhash64(keys…) %
   * shards`, and each merge REWRITES ONLY THE SHARDS THE BATCH TOUCHES —
-  * untouched shards are carried forward by reference through a per-
-  * version `_manifest` (shard → owning version), the stand-in for a
+  * untouched shards are carried forward by reference, the stand-in for a
   * MERGE's file-level copy-on-write. A trigger costs O(touched/shards ×
   * view + batch), so per-trigger bytes track the BATCH's key locality,
-  * not view size — the serving-tier member of the r13
-  * bounded-per-trigger family ([[AdmissionRegistry]] guarantee 2 bounds
-  * the read side, its geometric compaction the rewrite side). A small
-  * view wants few shards (`shards = 1` is one directory rewritten per
-  * merge, as [[Pipeline.maintainView]] starts it); [[maybeReshard]]
-  * grows the modulus as the view grows.
+  * not view size. A small view wants few shards (`shards = 1` is one
+  * directory rewritten per merge, as [[Pipeline.maintainView]] starts
+  * it); [[maybeReshard]] grows the modulus as the view grows.
   *
   * A merge's Spark work is one job to collect the touched shards and
   * one shuffle on `shard` under the write ([[mergeBatch]]); every read
@@ -42,191 +38,68 @@ import graft.ops.Upsert
   * Readers resolve the newest committed manifest ([[currentView]], no
   * Spark job) and scan its files; a view that fits one advisory
   * partition is read as one partition, so a serving query over it is
-  * one job of one task. GC keeps [[KeepVersions]] manifests, so a scan
-  * that outlives two commits can find its files deleted —
-  * [[ServingHttp]] re-resolves the view and reruns such a read.
+  * one job of one task. GC keeps two manifests, so a scan that outlives
+  * two commits can find its files deleted — [[ServingHttp]] re-resolves
+  * the view and reruns such a read.
   *
-  * Layout and commit protocol:
-  *   - `baseDir/v=<batchId>/shard=<s>/` — the shards REWRITTEN at that
-  *     batch (a version dir holds only its own writes, never copies).
-  *   - `baseDir/v=<batchId>/_manifest` — "s v" lines mapping EVERY live
-  *     shard to the version that owns its current data. Written via
-  *     tmp + rename AFTER the parquet commit: the manifest IS the
-  *     commit marker (a crashed attempt leaves data without a manifest,
-  *     which every reader ignores and the replay overwrites).
-  *   - Exactly-once without transactions: the merge reads the newest
-  *     COMMITTED manifest with id < batchId, so a replay recomputes
-  *     against the same predecessor and rewrites the same shards with
-  *     the same rows — idempotent by construction.
-  *   - GC after commit: the last [[KeepVersions]] committed manifests
-  *     (≤ batchId) pin their version ids and every (version, shard)
-  *     they reference; anything else is deleted — at shard granularity,
-  *     so a version directory holding one still-live shard sheds its
-  *     superseded siblings instead of pinning them forever. Dead bytes
-  *     are therefore bounded by the retention window's rewrites, not by
-  *     view size or lifetime.
+  * Layout, under [[Manifest]]'s commit protocol with the keep-latest
+  * merge law: the merge of batch N writes the shards it rewrites to
+  * `v=N/shard=<s>/` and commits `v=N/_manifest`, which lists one entry
+  * per live shard: the directory that holds its current rows (written
+  * at N, or carried from the predecessor) and its bytes. The header's
+  * modulus is the store's layout truth, ADOPTED by every later merge: a
+  * restart with a different `shards` parameter must not re-hash keys
+  * against shard directories laid out under the old modulus (a key would
+  * stop meeting its own previous version — duplicate keys in the view).
   */
 object ShardedUpsertSink {
-
-  /** Retained manifest generations (current + rollback/replay safety). */
-  private val KeepVersions = 2
-
-  /** One live shard's manifest entry: the version that owns its current
-    * data, and the shard directory's byte size AS WRITTEN (VERDICT r14
-    * #2: [[maybeReshard]] used to issue one getContentSummary RPC per
-    * live shard per maintenance call — at P=1024 on an object store the
-    * walk cost more than the decision it gates; the merge knows each
-    * shard's bytes the moment it writes them, so they ride the manifest
-    * and the decision is ONE file read). */
-  private case class ShardRef(version: Long, bytes: Long)
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def shardExpr(keys: Seq[String], shards: Int) =
     Sharded.shardOfAll(keys.map(col), shards)
 
-  /** Per-shard byte sizes of one just-written version directory — one
-    * directory listing per shard, at WRITE time (amortized into the
-    * write the merge already did), so reads/maintenance never re-walk. */
-  private def writtenShardBytes(spark: SparkSession, baseDir: String,
-      version: Long): Map[Int, Long] = {
-    val f = fs(spark, baseDir)
-    f.listStatus(new Path(s"$baseDir/v=$version")).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
-      .map { d =>
-        d.getPath.getName.stripPrefix("shard=").toInt ->
-          f.listStatus(d.getPath).filter(_.isFile).map(_.getLen).sum
-      }.toMap
-  }
-
   /** COMMITTED snapshot versions (manifest present), ascending. */
-  def versions(spark: SparkSession, baseDir: String): Seq[Long] = {
-    val f = fs(spark, baseDir)
-    val root = new Path(baseDir)
-    if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(s => f.exists(new Path(s.getPath, "_manifest")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .sorted
-  }
+  def versions(spark: SparkSession, baseDir: String): Seq[Long] =
+    Manifest.versions(spark, baseDir)
 
-  /** (modulus, shard → [[ShardRef]]). The modulus rides the manifest
-    * header (`#shards P`) — the store's layout truth, ADOPTED by every
-    * later merge: a restart with a different `shards` parameter must
-    * not re-hash keys under a new modulus against shard dirs laid out
-    * under the old one (a key would silently stop meeting its own
-    * previous version — duplicate keys in the view). -1 when a foreign
-    * manifest has no header (callers refuse it). Body lines are
-    * `s v bytes`; anything else is a bad manifest line. */
-  private def readManifest(spark: SparkSession, baseDir: String,
-      version: Long): (Int, Map[Int, ShardRef]) = {
-    val in = fs(spark, baseDir).open(
-      new Path(s"$baseDir/v=$version/_manifest"))
-    val lines =
-      try new String(in.readAllBytes(), UTF_8).linesIterator
-        .filter(_.nonEmpty).toSeq
-      finally in.close()
-    val modulus = lines.collectFirst {
-      case l if l.startsWith("#shards ") =>
-        l.stripPrefix("#shards ").trim.toInt
-    }.getOrElse(-1)
-    val refs = lines.filterNot(_.startsWith("#")).map { l =>
-      l.trim.split("\\s+") match {
-        case Array(s, v, b) => s.toInt -> ShardRef(v.toLong, b.toLong)
-        case other => throw new IllegalStateException(
-          s"upsert store $baseDir: bad manifest line '$l' in v=$version")
-      }
-    }.toMap
-    (modulus, refs)
-  }
-
-  private def writeManifest(spark: SparkSession, baseDir: String,
-      version: Long, modulus: Int, manifest: Map[Int, ShardRef]): Unit = {
-    val f = fs(spark, baseDir)
-    val tmp = new Path(s"$baseDir/v=$version/_manifest.tmp")
-    val out = f.create(tmp, true)
-    try out.write((s"#shards $modulus" +: manifest.toSeq.sortBy(_._1)
-      .map { case (s, ShardRef(v, b)) => s"$s $v $b" })
-      .mkString("\n").getBytes(UTF_8))
-    finally out.close()
-    val target = new Path(s"$baseDir/v=$version/_manifest")
-    f.delete(target, false) // rename won't overwrite on HDFS semantics
-    // rename failures surface as FALSE on Hadoop FileSystems; returning
-    // normally here would let the engine commit a batch whose updates
-    // no reader can see (the manifest IS the commit marker) — throw so
-    // the micro-batch retries instead.
-    require(f.rename(tmp, target),
-      s"upsert commit: rename $tmp -> $target failed")
-  }
-
-  /** Rows of `manifest`'s shards restricted to `wanted` (None = all):
-    * one pruned read per distinct owning version. With a `wanted` set
-    * the read is given the wanted `shard=` DIRECTORIES as explicit
-    * paths, so relation resolution LISTS only those — a point lookup
-    * against a P=1024 store costs one directory listing, not 1024 (at
-    * r15's jobless-lookup measurement the root-path spelling spent
-    * ~0.5 s listing every shard dir of the version to then prune all
-    * but one). The `shard IN (…)` literal additionally pins the file-
-    * index pruning for the footprint locks. Every read carries the
-    * stored PAYLOAD schema — `knownSchema` when the caller already holds
-    * it, else [[storedSchema]] of the shards read — so relation
-    * resolution runs no footer-inference job: building the frame is
-    * driver-side listing and one footer read, no Spark job. */
+  /** Rows of the `entries` whose shard is in `wanted` (None = all),
+    * through [[Manifest.read]]'s explicit shard paths. Every read
+    * carries the stored PAYLOAD schema — `knownSchema`
+    * when the caller already holds it, else [[storedSchema]] of the
+    * shards read — so building the frame is driver-side listing and one
+    * footer read, no Spark job. */
   private def readShards(spark: SparkSession, baseDir: String,
-      manifest: Map[Int, ShardRef], wanted: Option[Set[Int]],
+      entries: Seq[Entry], wanted: Option[Set[Int]],
       knownSchema: Option[StructType] = None): Option[DataFrame] = {
-    val live = wanted match {
-      case Some(w) => manifest.filter { case (s, _) => w.contains(s) }
-      case None => manifest
-    }
-    if (live.isEmpty) return None
-    // the physical layout adds the shard partition column; it must ride
-    // the explicit schema for the isin predicate to prune at file index
-    val readSchema = StructType(
-      knownSchema.getOrElse(storedSchema(spark, baseDir, live)).fields :+
-        StructField("shard", IntegerType))
-    val reads = live.groupBy(_._2.version).toSeq.sortBy(_._1).map { case (v, ss) =>
-      // basePath anchors partition discovery at the version dir: v=<id>
-      // itself matches the col=val pattern and would otherwise join the
-      // upward walk (the AdmissionRegistry batch= lesson).
-      val paths =
-        if (wanted.isEmpty) Seq(s"$baseDir/v=$v") // full view: one root
-        else ss.keys.toSeq.sorted.map(s => s"$baseDir/v=$v/shard=$s")
-      spark.read.option("basePath", s"$baseDir/v=$v").schema(readSchema)
-        .parquet(paths: _*)
-        .filter(col("shard").isin(ss.keys.toSeq.sorted
-          .map(Integer.valueOf): _*))
-    }
-    Some(reads.reduce(_ unionByName _))
+    val live = entries.filter(e => wanted.forall(_(e.shard)))
+    if (live.isEmpty) None
+    else Manifest.read(spark, baseDir, live,
+      knownSchema.getOrElse(storedSchema(spark, baseDir, live)), None)
   }
 
-  /** The stored PAYLOAD schema (without the `shard` partition column),
+  /** The stored PAYLOAD schema (without the `shard` directory level),
     * read DRIVER-SIDE from the footer of one data file: the first of
-    * `manifest`'s shards, in shard order, whose directory still holds a
-    * parquet file. Spark embeds its own StructType JSON in every file it
-    * writes; the physical-schema conversion is the fallback for foreign
-    * files. No Spark job, no relation resolution. A manifest none of
-    * whose shards holds a data file (its files were lost, or GC took
-    * them after the manifest was read) raises `FileNotFoundException`,
-    * the same missing-file failure a scan of those shards would raise. */
+    * `entries`, in shard order, whose directory still holds a parquet
+    * file. Spark embeds its own StructType JSON in every file it writes;
+    * the physical-schema conversion is the fallback for foreign files.
+    * No Spark job, no relation resolution. Entries none of which holds a
+    * data file (its files were lost, or GC took them after the manifest
+    * was read) raise `FileNotFoundException`, the same missing-file
+    * failure a scan of those shards would raise. */
   private def storedSchema(spark: SparkSession, baseDir: String,
-      manifest: Map[Int, ShardRef]): StructType = {
+      entries: Seq[Entry]): StructType = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    val f = fs(spark, baseDir)
-    val file = manifest.toSeq.sortBy(_._1).iterator.flatMap { case (s, ref) =>
-      val dir = new Path(s"$baseDir/v=${ref.version}/shard=$s")
+    val f = Manifest.fs(spark, baseDir)
+    val file = entries.sortBy(_.shard).iterator.flatMap { e =>
       val listed =
-        try f.listStatus(dir)
+        try f.listStatus(new Path(s"$baseDir/${e.dir}"))
         catch { case _: FileNotFoundException => Array.empty[FileStatus] }
       listed.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .minByOption(_.getPath.getName)
     }.nextOption().getOrElse(throw new FileNotFoundException(
       s"upsert store $baseDir: no data file in any of the shards " +
-        manifest.keys.toSeq.sorted.mkString(",")))
+        entries.map(_.shard).sorted.mkString(",")))
     val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try {
       val meta = r.getFooter.getFileMetaData
@@ -238,8 +111,7 @@ object ShardedUpsertSink {
     } finally r.close()
   }
 
-  /** The current materialized view (without the physical `shard`
-    * column); None before the first commit. Resolving it runs no Spark
+  /** The current materialized view; None before the first commit. Resolving it runs no Spark
     * job: one manifest read, the shard listings and one footer
     * ([[readShards]]). A view whose manifest records at most
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes` of shard bytes is
@@ -247,52 +119,39 @@ object ShardedUpsertSink {
     * no exchange, so each serving query ([[graft.ops.Serving]]) runs one
     * job of one task. A larger view keeps the scan's partitions. */
   def currentView(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    versions(spark, baseDir).lastOption.flatMap { v =>
-      val manifest = readManifest(spark, baseDir, v)._2
-      readShards(spark, baseDir, manifest, None).map { df =>
-        val view = df.drop("shard")
-        if (manifest.values.map(_.bytes).sum <= spark.sessionState.conf
+    Manifest.below(spark, baseDir, Long.MaxValue).flatMap { v =>
+      readShards(spark, baseDir, v.entries, None).map { view =>
+        if (v.entries.map(_.bytes).sum <= spark.sessionState.conf
             .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) view.coalesce(1)
         else view
       }
     }
 
   /** POINT LOOKUP: the current view's rows for ONE key, reading only the
-    * key's own `shard=` directory under its owning version — the serving
-    * read the sharded layout exists for. JOBLESS before the pruned read
-    * (VERDICT r14 #1: this used to spawn a `spark.range(1)…head()` Spark
-    * job just to hash the key, paying scheduler overhead comparable to
-    * the one-shard read itself): the stored schema comes from ONE
-    * driver-side parquet footer of a live shard, each value is cast to
-    * its key column's stored type, and the writer's own shard expression
-    * ([[Sharded.driverShard]]: xxhash64 over the typed literals, floorMod
-    * the manifest's recorded modulus) is EVALUATED on the driver —
-    * Catalyst `eval` over literal children, zero jobs until the caller
-    * acts on the returned frame.
-    * The schema-driven cast also closes the silent-miss trap (ADVICE
-    * r14): an Int probe against a Long key column, or a String date,
-    * used to hash to a DIFFERENT shard and return an empty frame for a
-    * key that exists — now every value is reconciled against the stored
-    * type before hashing AND before the equality filters (a value that
-    * cannot cast fails loudly). A key whose shard holds no data yields
-    * an EMPTY frame (built directly from the stored schema — zero
-    * listings, zero files), NOT None: a committed store with a
-    * shard-less key is a miss, not an uncommitted store (review r14).
-    * None only before the first commit, or when the committed manifest
-    * maps no shards at all (an empty store has no schema source). */
+    * key's own shard directory — the serving read the sharded layout
+    * exists for. JOBLESS before the pruned read: the stored schema comes
+    * from ONE driver-side parquet footer of a live shard, each value is
+    * cast to its key column's stored type, and the writer's own shard
+    * expression ([[Sharded.driverShard]]: xxhash64 over the typed
+    * literals, floorMod the manifest's modulus) is EVALUATED on the
+    * driver — zero jobs until the caller acts on the returned frame.
+    * The schema-driven cast also closes the silent-miss trap: an Int
+    * probe against a Long key column, or a String date, would otherwise
+    * hash to a DIFFERENT shard and return an empty frame for a key that
+    * exists (a value that cannot cast fails loudly). A key whose shard
+    * holds no data yields an EMPTY frame (built directly from the stored
+    * schema — zero listings, zero files), NOT None: a committed store
+    * with a shard-less key is a miss, not an uncommitted store. None
+    * only before the first commit, or when the committed manifest maps
+    * no shards at all (an empty store has no schema source). */
   def lookup(spark: SparkSession, baseDir: String, keys: Seq[String],
       values: Seq[Any]): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     require(values.length == keys.length,
       s"lookup needs one value per key column ${keys.mkString(",")}")
-    versions(spark, baseDir).lastOption.flatMap { v =>
-      val (p, manifest) = readManifest(spark, baseDir, v)
-      require(p > 0, s"upsert store $baseDir: manifest lacks a '#shards' " +
-        "header — cannot compute the key's shard")
-      if (manifest.isEmpty) None
-      else {
-        // stored schema: one live shard's footer, read driver-side
-        val schema = storedSchema(spark, baseDir, manifest)
+    Manifest.below(spark, baseDir, Long.MaxValue)
+      .filter(_.entries.nonEmpty).map { v =>
+        val schema = storedSchema(spark, baseDir, v.entries)
         val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
         val typed = keys.zip(values).map { case (k, x) =>
           require(schema.fieldNames.contains(k),
@@ -302,24 +161,16 @@ object ShardedUpsertSink {
           val l = Literal(x)
           if (l.dataType == dt) l else Cast(l, dt, tz)
         }
-        val shard = Sharded.driverShard(typed, p)
-        // miss path (key's shard unmapped): the schema is already in
-        // hand, so the empty frame is built directly — zero listings,
-        // zero files, instead of resolving the whole version root for
-        // a limit(0)
-        Some(readShards(spark, baseDir, manifest, Some(Set(shard)),
+        val shard = Sharded.driverShard(typed, v.modulus)
+        val df = readShards(spark, baseDir, v.entries, Some(Set(shard)),
             Some(schema))
           .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(schema.fields :+ StructField("shard", IntegerType)))))
-          .map { df =>
-            keys.zip(typed).foldLeft(df) { case (d, (k, l)) =>
-              d.filter(col(k) ===
-                org.apache.spark.sql.graftshim.ColumnShim.column(l))
-            }.drop("shard")
-          }
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+        keys.zip(typed).foldLeft(df) { case (d, (k, l)) =>
+          d.filter(col(k) ===
+            org.apache.spark.sql.graftshim.ColumnShim.column(l))
+        }
       }
-    }
   }
 
   /** The foreachBatch merge body (public for direct testing — replaying
@@ -327,22 +178,9 @@ object ShardedUpsertSink {
   def mergeBatch(spark: SparkSession, baseDir: String, keys: Seq[String],
       orderCols: Seq[String], shards: Int)(
       batch: DataFrame, batchId: Long): Unit = {
-    val prev = versions(spark, baseDir).filter(_ < batchId)
-      .lastOption.map(readManifest(spark, baseDir, _))
-    // Adopt the store's recorded modulus over the parameter: re-hashing
-    // under a different P against the existing layout would silently
-    // duplicate keys (see readManifest). A manifest WITHOUT the header
-    // is refused outright — guessing a modulus for an unknown layout
-    // and then stamping the guess as truth would lock corruption in
-    // (review r13).
-    val p = prev match {
-      case Some((m, _)) if m > 0 => m
-      case Some((m, _)) => throw new IllegalStateException(
-        s"upsert store $baseDir: manifest lacks a '#shards' header " +
-          s"(got modulus $m) — refusing to re-hash an unknown layout")
-      case None => shards
-    }
-    val prevManifest = prev.map(_._2).getOrElse(Map.empty[Int, ShardRef])
+    val prev = Manifest.below(spark, baseDir, batchId)
+    val p = prev.fold(shards)(_.modulus) // the store's modulus wins
+    val prevEntries = prev.fold(Seq.empty[Entry])(_.entries)
     // the id enters the plan through a UDF, not a literal: generated
     // code inlines a long literal, so every merge would compile its
     // stages afresh, while a UDF is referenced, and the code is the same
@@ -351,9 +189,10 @@ object ShardedUpsertSink {
       .persist()
     try {
       val touched = touchedShards(tagged)
-      val unioned = readShards(spark, baseDir, prevManifest,
+      val unioned = readShards(spark, baseDir, prevEntries,
           Some(touched)) match {
-        case Some(prev) => prev.unionByName(tagged)
+        case Some(prev) =>
+          prev.withColumn("shard", shardExpr(keys, p)).unionByName(tagged)
         case None => tagged
       }
       // keep-latest within the touched shards only, behind ONE exchange:
@@ -367,14 +206,11 @@ object ShardedUpsertSink {
           "shard" +: keys, orderCols :+ "__batch")
         .write.partitionBy("shard")
         .mode("overwrite").parquet(s"$baseDir/v=$batchId")
-      // size the rewritten shards NOW (O(touched) listings amortized
-      // into the write) — carried-forward shards keep their recorded
-      // bytes, so maintenance never re-walks the layout
-      val written = writtenShardBytes(spark, baseDir, batchId)
-      val manifest = prevManifest ++ touched.map(s =>
-        s -> ShardRef(batchId, written.getOrElse(s, 0L))).toMap
-      writeManifest(spark, baseDir, batchId, p, manifest)
-      gc(spark, baseDir, batchId)
+      val written = Manifest.written(spark, baseDir, s"v=$batchId")
+      Manifest.commit(spark, baseDir, Version(batchId, p,
+        (prevEntries.filterNot(e => touched(e.shard)) ++ touched.toSeq.map(s =>
+          Entry(s"v=$batchId/shard=$s", p, written.getOrElse(s, 0L))))
+          .sortBy(_.shard)))
     } finally tagged.unpersist()
   }
 
@@ -388,65 +224,35 @@ object ShardedUpsertSink {
       .collect().toSet
   }
 
-  /** OFFLINE maintenance: rewrite the current view under a NEW shard
-    * modulus, committed as version `batchId` with every shard owned by
-    * it. The modulus is otherwise pinned by the manifest header FOREVER
-    * — merges refuse to re-hash (see [[mergeBatch]]) because silent
-    * modulus drift duplicates keys — so this is the one sanctioned way
-    * to grow P with the view: a store created at P=1024 whose view
-    * grows 100× would otherwise carry 100×-target shards, and every
-    * merge/lookup cost rides shard size. One full-view rewrite;
-    * schedule it geometrically (re-shard to bytes/targetShardBytes when
-    * the view has ~doubled past P × target), so a lifetime pays O(log
-    * growth) rewrites — the same amortization as the admission
-    * registry's tiered folds. Same commit protocol as a merge (data,
-    * then manifest-as-marker, then GC), so a crash mid-reshard leaves
-    * an uncommitted version readers ignore. Quiesce merges first
-    * (single-writer contract); `batchId` must exceed every committed
-    * version so the new manifest is the newest.
-    *
-    * ID-SPACE CONTRACT with a resuming stream: a foreachBatch stream
-    * resumes at ITS OWN next id (checkpoint-determined), so stream ids
-    * must map ABOVE the reshard version when restarting. Streams
-    * attached via [[start]] get this FOR FREE since r15 — its adapter
-    * reads the newest committed version at the first delivered batch
-    * and offsets the run's ids above it; only callers driving
-    * [[mergeBatch]] directly still own the mapping (see `Run
-    * upsert-sharded`'s `id + 1` seed offset). If a
-    * redelivered merge nonetheless COLLIDES
-    * with the reshard's id, exactly-once semantics win by design: the
-    * merge recomputes against `versions < batchId` (the retained
-    * pre-reshard predecessor — [[KeepVersions]] ≥ 2 exists for exactly
-    * this), overwrites the version, and the view stays correct under
-    * the OLD modulus; only the reshard work is lost (redo it). A merge
-    * LANDING BETWEEN the newest pre-reshard version and a gapped
-    * reshard id would leave the newest manifest (the reshard) blind to
-    * it until ids pass the gap — hence the `committed.last + 1`-style
-    * id, never a gap. Spec-armed. */
+  /** OFFLINE maintenance: rewrite the newest committed version under a
+    * NEW shard modulus. Merges never re-hash (silent modulus drift
+    * duplicates keys), so this is the one sanctioned way to grow P with
+    * the view: every merge and lookup cost rides shard size. One
+    * full-view rewrite into a fresh directory, committed by replacing
+    * the newest manifest with one that denotes the same rows under the
+    * new modulus ([[Manifest]]'s maintenance rule): no batch id is
+    * spent, a crash before the rename leaves the old layout readable,
+    * and the next merge adopts the new modulus. Schedule it
+    * geometrically ([[maybeReshard]]) so a lifetime pays O(log growth)
+    * rewrites. Quiesce merges first (single writer). */
   def reshard(spark: SparkSession, baseDir: String, keys: Seq[String],
-      newShards: Int, batchId: Long): Unit = {
+      newShards: Int): Unit = {
     require(newShards > 0, s"reshard: bad modulus $newShards")
-    val committed = versions(spark, baseDir)
-    require(committed.nonEmpty, s"reshard: no committed version in $baseDir")
-    require(batchId > committed.last,
-      s"reshard: batchId $batchId must exceed newest ${committed.last}")
-    val manifest = readManifest(spark, baseDir, committed.last)._2
-    require(manifest.nonEmpty, s"reshard: $baseDir maps no shards")
-    val view = readShards(spark, baseDir, manifest, None).get.drop("shard")
-    view.withColumn("shard", shardExpr(keys, newShards))
+    val v = Manifest.below(spark, baseDir, Long.MaxValue).getOrElse(
+      throw new IllegalArgumentException(
+        s"reshard: no committed version in $baseDir"))
+    require(v.entries.nonEmpty, s"reshard: $baseDir maps no shards")
+    val dir = Manifest.fresh(spark, baseDir, v.id)
+    readShards(spark, baseDir, v.entries, None).get
+      .withColumn("shard", shardExpr(keys, newShards))
       .repartition(col("shard"))
       .write.partitionBy("shard")
-      .mode("overwrite").parquet(s"$baseDir/v=$batchId")
-    // Single-owner manifest over the shards that actually hold rows
-    // (from the just-written layout, not 0 until P: a 2^20-modulus
-    // store must not drag a million-line manifest into every later
-    // merge); prior versions own nothing and GC out of retention.
-    // Lookups on empty shards still return Some(empty) — the absent-
-    // shard path handles unmapped shards.
-    writeManifest(spark, baseDir, batchId, newShards,
-      writtenShardBytes(spark, baseDir, batchId).map { case (s, b) =>
-        s -> ShardRef(batchId, b) })
-    gc(spark, baseDir, batchId)
+      .mode("overwrite").parquet(s"$baseDir/$dir")
+    // entries for the shards that hold rows, not 0 until P: a 2^20
+    // modulus must not drag a million-line manifest into every merge
+    Manifest.commit(spark, baseDir, Version(v.id, newShards,
+      Manifest.written(spark, baseDir, dir).toSeq.sorted.map {
+        case (s, b) => Entry(s"$dir/shard=$s", newShards, b) }))
   }
 
   /** Scheduled form of [[reshard]] — the upsert twin of the admission
@@ -454,102 +260,38 @@ object ShardedUpsertSink {
     * targetShardBytes whenever the CURRENT average shard has grown past
     * 2 × target (the doubling gate is what bounds lifetime rewrites to
     * O(log growth)). Call from the same quiesced maintenance window as
-    * [[reshard]]; view bytes come from the manifest's own per-shard
-    * byte entries — ONE file read per maintenance call (VERDICT r14
-    * #2). Returns the new modulus when a reshard ran, None on the no-op
-    * path.
+    * [[reshard]]; view bytes come from the manifest's per-shard byte
+    * entries — ONE file read per call. Returns the new modulus when a
+    * reshard ran, None on the no-op path.
     * `targetShardBytes` must sit well above parquet's per-file overhead
     * (~1 KB footer) — below it, measured bytes grow with P itself and
     * any byte-driven policy thrashes (spec pins the behavior at a sane
     * target; the 64 MB default is 5 orders above the overhead). */
   def maybeReshard(spark: SparkSession, baseDir: String, keys: Seq[String],
-      batchId: Long, targetShardBytes: Long = 64L << 20): Option[Int] = {
-    val committed = versions(spark, baseDir)
-    if (committed.isEmpty) return None
-    val (p, manifest) = readManifest(spark, baseDir, committed.last)
-    if (p <= 0 || manifest.isEmpty) return None
-    val bytes = manifest.values.map(_.bytes).sum
-    if (bytes / math.max(p, 1) <= 2 * targetShardBytes) None
-    else {
-      val newP = math.min(1L << 20, math.max(p.toLong,
-        (bytes + targetShardBytes - 1) / targetShardBytes)).toInt
-      reshard(spark, baseDir, keys, newP, batchId)
-      Some(newP)
-    }
-  }
-
-  /** Shard-granular retention: keep every version id and (version,
-    * shard) reference of the last [[KeepVersions]] committed manifests
-    * at or below `batchId`; delete unreferenced shard directories and
-    * fully-dead version directories. */
-  private def gc(spark: SparkSession, baseDir: String,
-      batchId: Long): Unit = {
-    val f = fs(spark, baseDir)
-    val committed = versions(spark, baseDir).filter(_ <= batchId)
-    val pinned = committed.takeRight(KeepVersions)
-    val liveRefs: Set[(Long, Int)] = pinned.flatMap { v =>
-      // .toSeq first: mapping the Map directly would re-key by owner
-      // version and collapse every shard it owns to one entry
-      readManifest(spark, baseDir, v)._2.toSeq
-        .map { case (s, ref) => (ref.version, s) }
-    }.toSet
-    val root = new Path(baseDir)
-    f.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .foreach { st =>
-        val id = st.getPath.getName.stripPrefix("v=").toLong
-        if (id < batchId && !pinned.contains(id)) {
-          if (liveRefs.exists(_._1 == id)) {
-            // version still owns live shards: shed only the dead ones
-            f.listStatus(st.getPath)
-              .filter(d => d.isDirectory &&
-                d.getPath.getName.startsWith("shard="))
-              .foreach { d =>
-                val s = d.getPath.getName.stripPrefix("shard=").toInt
-                if (!liveRefs.contains((id, s))) f.delete(d.getPath, true)
-              }
-          } else f.delete(st.getPath, true)
+      targetShardBytes: Long = 64L << 20): Option[Int] =
+    Manifest.below(spark, baseDir, Long.MaxValue)
+      .filter(_.entries.nonEmpty).flatMap { v =>
+        val bytes = v.entries.map(_.bytes).sum
+        if (bytes / v.modulus <= 2 * targetShardBytes) None
+        else {
+          val newP = math.min(1L << 20, math.max(v.modulus.toLong,
+            (bytes + targetShardBytes - 1) / targetShardBytes)).toInt
+          reshard(spark, baseDir, keys, newP)
+          Some(newP)
         }
       }
-  }
 
-  /** Attach the sink to a streaming DataFrame and start it.
-    *
-    * The adapter OWNS the reshard id-space contract (VERDICT r14 #3 —
-    * [[reshard]]'s scaladoc used to trust every caller to map resumed
-    * stream ids above an out-of-band reshard version): at the FIRST
-    * delivered batch it reads the store's newest committed version once
-    * and, when the engine's checkpoint-determined id would not clear it,
-    * merges every batch of this run at `batchId + offset` with
-    * `offset = newest + 1 − firstBatchId`. A stream resumed after a
-    * quiesced maintenance [[reshard]] therefore lands ABOVE the reshard
-    * version instead of colliding with it and silently discarding the
-    * reshard work. The offset is fixed for the run (replays within a
-    * run hit the same id — idempotent, unchanged); a crash-redelivered
-    * batch across a RESTART may map one id higher than its earlier
-    * commit, in which case it re-merges against a predecessor that
-    * already contains it — keep-latest makes that a content no-op (one
-    * redundant version, GC'd), never a wrong view. Callers driving
-    * [[mergeBatch]] directly still own their id space. */
+  /** Attach the sink to a streaming DataFrame and start it: each
+    * micro-batch merges under the engine's own batch id. A stream
+    * resumed after a quiesced [[reshard]] merges its next batch against
+    * the resharded manifest and adopts its modulus. */
   def start(stream: DataFrame, baseDir: String, checkpointDir: String,
       keys: Seq[String], orderCols: Seq[String],
-      shards: Int = 64): StreamingQuery = {
-    val spark = stream.sparkSession
-    val merge = mergeBatch(spark, baseDir, keys, orderCols, shards) _
-    // resolved at the first delivered batch, then fixed for the run;
-    // atomic for cross-thread visibility (batches are serialized, but
-    // the engine does not promise the same thread)
-    val offset = new java.util.concurrent.atomic.AtomicLong(-1L)
+      shards: Int = 64): StreamingQuery =
     stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (offset.get() < 0) {
-          val newest = versions(spark, baseDir).lastOption.getOrElse(-1L)
-          offset.set(math.max(0L, newest + 1 - batchId))
-        }
-        merge(batch, batchId + offset.get())
-      }
+      .foreachBatch(
+        mergeBatch(stream.sparkSession, baseDir, keys, orderCols, shards) _)
       .start()
-  }
 }

@@ -403,18 +403,17 @@ object ChainedStress {
           keys = Seq("user_id", "day"), orderCols = Seq("ts", "event_id"),
           shards = shards) _
         (0 until splits).foreach { b =>
-          // batch ids leave a gap so the midway reshard version slots in
           val (secs, _) = timed(
-            merge(ev.filter(col("event_id") % splits === b), b.toLong * 2))
+            merge(ev.filter(col("event_id") % splits === b), b.toLong))
           println(f"[chstress] upsert($tag%-9s) merge ${b + 1}/$splits: " +
             f"$secs%6.2f s")
           if (reshardMidway > 0 && b == splits / 2)
             ShardedUpsertSink.reshard(spark, dir, Seq("user_id", "day"),
-              reshardMidway, b.toLong * 2 + 1)
+              reshardMidway)
         }
         if (replayLast) // crash-replay of the final batch: no-op change
           merge(ev.filter(col("event_id") % splits === (splits - 1)),
-            (splits - 1).toLong * 2)
+            (splits - 1).toLong)
         persist(ShardedUpsertSink.currentView(spark, dir).get
           .select(payload.map(col): _*), s"upsert_view_$tag")
       }

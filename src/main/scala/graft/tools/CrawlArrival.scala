@@ -31,7 +31,7 @@ import Run.{Metrics, dist, intArg, percentile}
   *
   * The bounds are asserted, not just reported:
   *
-  *   - registry live `batch=` dirs stay O(log lifetime)
+  *   - the registry's live runs stay O(log lifetime)
   *     (`compactEvery + ceil(log2(i)) + slack`) through the
   *     committed-watermark compactions the chain schedules itself;
   *   - the pruned history probe's bytes for a FIXED 4-doc batch stay

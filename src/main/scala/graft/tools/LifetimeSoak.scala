@@ -19,10 +19,11 @@ import graft.streaming.{AdmissionRegistry, ShardedUpsertSink}
   * triggers against both stores and asserts the O(log)/flat claims as
   * invariants, not eyeballs:
   *
-  *   - registry live `batch=` directories stay O(log lifetime): at
-  *     trigger i the bound is `every + ceil(log2(mass)) + slack` (the
-  *     unfolded tail plus the super-increasing folded runs);
-  *   - total on-disk file counts stay bounded (registry: O(live dirs ×
+  *   - the registry's live runs (its newest manifest's entries) stay
+  *     O(log lifetime): at trigger i the bound is `every +
+  *     ceil(log2(mass)) + slack` (the unfolded tail plus the
+  *     super-increasing folded runs);
+  *   - total on-disk file counts stay bounded (registry: O(live runs ×
   *     shards); upsert: O(P + touched), never O(lifetime));
   *   - the K-key pruned probe's bytes stay FLAT while the registry
   *     grows ~linearly (guarantee 2's plateau, now over lifetime);
@@ -35,23 +36,23 @@ import graft.streaming.{AdmissionRegistry, ShardedUpsertSink}
   *     upsert view ≡ keep-latest over all batches (count + bit_xor of
   *     row hashes).
   *
-  * Trigger ids share one monotone counter across merges and reshards —
-  * the same id discipline [[ShardedUpsertSink.start]] enforces for
-  * resumed streams. Shard/fold targets are sized far above parquet's
-  * per-file footer overhead is NOT possible at 32-row triggers, so the
-  * soak uses small targets (the policies are size-ratio-driven; the
-  * measured LAWS, not the absolute bytes, are what transfer to 100 TB).
+  * Both stores commit trigger i as version i; folds and reshards
+  * replace the newest manifest and spend no id. Shard/fold targets
+  * sized far above parquet's per-file footer overhead are NOT possible
+  * at 32-row triggers, so the soak uses small targets (the policies are
+  * size-ratio-driven; the measured LAWS, not the absolute bytes, are
+  * what transfer to 100 TB).
   *
   * The defaults (2048 × 32) are ~2k Spark write jobs; run on an idle box.
   */
 object LifetimeSoak {
 
   /** The registry invariants both soaks assert (this one and
-    * [[CrawlArrival]]) at trigger `i`: the registry's live `batch=`
-    * directories stay within the O(log lifetime) bound `every +
+    * [[CrawlArrival]]) at trigger `i`: the live runs of the registry's
+    * newest manifest stay within the O(log lifetime) bound `every +
     * ceil(log2(i)) + slack`, and the pruned history probe of the fixed
     * `probe` frame reads no more than 4× its `firstKb` (or 512 KB).
-    * Returns (live dirs, bound, probe KB). */
+    * Returns (live runs, bound, probe KB). */
   private[tools] def checkRegistry(reg: AdmissionRegistry, dir: String,
       every: Int, i: Long, probe: DataFrame,
       firstKb: Option[Double]): (Int, Int, Double) = {
@@ -60,15 +61,13 @@ object LifetimeSoak {
       reg.historyTouched(spark, Long.MaxValue, reg.probeTokens(probe))
     }
     val kb = pb / 1024.0
-    val dirs = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .count(f => f.isDirectory && f.getName.startsWith("batch="))
+    val live = reg.runs(spark).size
     val bound = every + 2 + (64 - java.lang.Long.numberOfLeadingZeros(i + 2L))
-    require(dirs <= bound,
-      s"live dirs $dirs > O(log) bound $bound at trigger $i")
+    require(live <= bound,
+      s"live runs $live > O(log) bound $bound at trigger $i")
     firstKb.foreach(f => require(kb <= math.max(f * 4, 512.0),
       f"probe bytes not flat: first $f%.1f KB now $kb%.1f KB at trigger $i"))
-    (dirs, bound, kb)
+    (live, bound, kb)
   }
 
   /** `soak [triggers] [batchRows]`. */
@@ -97,7 +96,6 @@ object LifetimeSoak {
       (col("id") % 1000).cast("double").as("v"),
       md5(col("id").cast("string")).as("doc"))
 
-    var nextId = 0L
     var reshards = 0
     var upP = 8 // shard count: the first merge's, then each reshard's
     var probeKbFirst = Option.empty[Double]
@@ -111,20 +109,16 @@ object LifetimeSoak {
     }
 
     val (_, soakS) = Run.timed((0 until triggers).foreach { i =>
-      val mergeId = nextId; nextId += 1
-      reg.maybeCompact(spark, mergeId, every)
-      reg.append(regRows(i), mergeId)
+      reg.maybeCompact(spark, i, every)
+      reg.append(regRows(i), i)
       ShardedUpsertSink.mergeBatch(spark, upDir, upKeys, Seq("seq"),
-        shards = 8)(upRows(i), mergeId)
-      if (i % 256 == 255) {
-        val rid = nextId
-        ShardedUpsertSink.maybeReshard(spark, upDir, upKeys, rid,
+        shards = 8)(upRows(i), i)
+      if (i % 256 == 255)
+        ShardedUpsertSink.maybeReshard(spark, upDir, upKeys,
           targetShardBytes = 64L << 10).foreach { p =>
-          nextId += 1; reshards += 1; upP = p
-          Run.progress(s"soak trigger=$i resharded upsert store to P=$p " +
-            s"(version $rid)")
+          reshards += 1; upP = p
+          Run.progress(s"soak trigger=$i resharded upsert store to P=$p")
         }
-      }
       if (i % 128 == 127 || i == triggers - 1) {
         // pruned probe bytes at K=4 (guarantee 2 over lifetime)
         val (dirs, logBound, probeKb) = checkRegistry(reg, regDir, every, i,

@@ -50,7 +50,7 @@ object Run {
   val scenarios: ListMap[String, Scenario] = ListMap(
     "profile" -> Scenario("<query[,query...]> <sfDir> [repeats=3] [explain]",
       profile, _.lift(1)),
-    "throughput" -> Scenario("[rowsPerSec=500000] [secs=30]",
+    "throughput" -> Scenario("[rowsPerSec=50000] [secs=30]",
       StreamBench.throughput),
     "mediagate" -> Scenario("[rowsPerSec=200000] [secs=30]",
       StreamBench.mediagate),

@@ -43,7 +43,7 @@ object StreamBench {
     * `value` envelope) → [[Pipeline.summarize]] (decode → normalize →
     * 1-day window agg, update mode) → noop sink; sustained rows/s. */
   def throughput(spark: SparkSession, a: Seq[String]): Metrics = {
-    val rps = intArg(a, 0, 500000)
+    val rps = intArg(a, 0, 50000)
     // 500 games, event times spread over ~12 days so the window state is
     // non-trivial. app_id must be a JSON NUMBER: Review.schema declares
     // LongType and from_json nulls a quoted value instead of coercing it

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{AdmissionRegistry, NearDupAdmission, SpanAdmission}
+import graft.streaming.{AdmissionRegistry, Manifest, NearDupAdmission,
+  ShardedUpsertSink, SpanAdmission}
 
 /** The shared admission-registry contract: replay-safe per-batch appends
   * (own-batch exclusion — a crashed-then-replayed batch must NOT
@@ -15,6 +16,34 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/state"
+
+  /** Every row the newest manifest of the store at `dir` lists, with its
+    * run and shard: (run dir, payload…, shard). */
+  private def listedRows(dir: String, schema: StructType): Set[Seq[Any]] =
+    Manifest.below(spark, dir, Long.MaxValue).toSeq.flatMap(_.entries)
+      .flatMap { e =>
+        Manifest.read(spark, dir, Seq(e), schema, None).toSeq
+          .flatMap(_.collect().map(r => e.dir +: r.toSeq))
+      }.toSet
+
+  /** A committed version's manifest removed (with its checksum
+    * sidecar): the state a crash before the manifest rename leaves. */
+  private def dropManifest(versionDir: String): Unit =
+    Seq("_manifest", "._manifest.crc").foreach(n =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$versionDir/$n")))
+
+  /** Every parquet file under `dir` overwritten with bytes that are not
+    * parquet (checksum sidecars dropped). */
+  private def garble(dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .toSeq.filter(_.toString.endsWith(".parquet")).foreach { f =>
+        java.nio.file.Files.write(f, "this is not parquet".getBytes)
+        java.nio.file.Files.deleteIfExists(
+          f.resolveSibling(s".${f.getFileName}.crc"))
+      }
+  }
 
   test("history excludes the current batch's own append (replay safety)") {
     val s = spark
@@ -45,13 +74,11 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val reg = new AdmissionRegistry(tmp("graft_reg_"), keySchema, Seq("k"))
     assert(reg.history(s, excludeBatchId = 0).count() == 0)
 
+    // a run the manifest lists, whose data files are garbage
     val dir = tmp("graft_reg_")
-    val bad = new java.io.File(dir + "/batch=0/shard=0")
-    bad.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + "/batch=0/shard=0/part-garbage.parquet"),
-      "this is not parquet".getBytes)
     val reg2 = new AdmissionRegistry(dir, keySchema, Seq("k"))
+    reg2.append(s.range(1, 3).toDF("k"), batchId = 0)
+    garble(s"$dir/v=0")
     assertThrows[Exception] {
       reg2.history(s, excludeBatchId = 9).count()
     }
@@ -66,8 +93,8 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     // Two committed batches spanning many shards.
     reg.append((1L to 64L).toDF("k"), batchId = 0)
     reg.append((65L to 128L).toDF("k"), batchId = 1)
-    // Physical layout: shard= directories nested under each batch=.
-    val shardDirs = new java.io.File(dir + "/batch=0").listFiles()
+    // Physical layout: shard= directories nested under each run.
+    val shardDirs = new java.io.File(dir + "/v=0").listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).toSet
     assert(shardDirs.nonEmpty && shardDirs.subsetOf(
       (0 until shards).map(i => s"shard=$i").toSet), s"layout: $shardDirs")
@@ -106,10 +133,12 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val dir = tmp("graft_shardc_")
     val shards = 8
     val reg = new AdmissionRegistry(dir, keySchema, Seq("k"), shards)
-    (0 to 3).foreach(b =>
+    (0 to 2).foreach(b =>
       reg.append((b * 50L until b * 50L + 50L).toDF("k"), batchId = b))
-    assert(reg.compact(s, uptoBatchId = 2) == 3)
-    val shardDirs = new java.io.File(dir + "/batch=2").listFiles()
+    assert(reg.maybeCompact(s, batchId = 3, every = 3) == 3)
+    reg.append((150L until 200L).toDF("k"), batchId = 3)
+    val folded = reg.runs(s).head.dir
+    val shardDirs = new java.io.File(s"$dir/$folded").listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).toSet
     assert(shardDirs.nonEmpty, "compacted batch lost its shard layout")
     val probe = Seq(11L, 171L).toDF("k") // one compacted row, one live
@@ -132,7 +161,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     import s.implicits._
     // Tiny targetShardBytes forces the self-sizing arm at fixture scale:
     // the folded registry must carry MORE shards than the append floor,
-    // record its modulus in the _shards marker, and a fixed-size probe
+    // record its modulus in its manifest entry, and a fixed-size probe
     // must read FEWER bytes from the grown registry than a fixed-count
     // layout would (which reads bytes ∝ registry size forever).
     val dir = tmp("graft_selfsize_")
@@ -140,12 +169,11 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
       shards = 4, targetShardBytes = 4096L)
     (0 to 3).foreach(b =>
       reg.append(((b * 4000L) until (b * 4000L + 4000L)).toDF("k"), b))
-    assert(reg.compact(s, uptoBatchId = 3) == 4)
-    val marker = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir + "/batch=3/_shards")))
-      .linesIterator.next().trim.toInt // first line = modulus (r14 layout)
-    assert(marker > 4, s"self-sized modulus $marker should exceed the floor")
-    val nDirs = new java.io.File(dir + "/batch=3").listFiles()
+    assert(reg.maybeCompact(s, batchId = 4, every = 1) == 4)
+    val Seq(run) = reg.runs(s)
+    assert(run.modulus > 4,
+      s"self-sized modulus ${run.modulus} should exceed the floor")
+    val nDirs = new java.io.File(s"$dir/${run.dir}").listFiles()
       .count(_.getName.startsWith("shard="))
     assert(nDirs > 4, s"expected >4 shard dirs, got $nDirs")
     // Correctness under the grown modulus: pruned == full for the probe.
@@ -166,47 +194,49 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
       s"pruned=$prBytes full=$fullBytes — self-sizing should prune ≥3×")
   }
 
-  test("_shards marker: absent = fail-safe full read; corrupt = fail closed") {
+  test("a run written without its manifest is invisible, and its replay overwrites it") {
     val s = spark
     import s.implicits._
-    val dir = tmp("graft_marker_")
-    val reg = new AdmissionRegistry(dir, keySchema, Seq("k"), shards = 8)
-    reg.append((1L to 40L).toDF("k"), batchId = 0)
-    reg.append((41L to 80L).toDF("k"), batchId = 1)
-    val probe = Seq(3L).toDF("k")
-    val tokens = reg.probeTokens(probe)
-    // Baseline: pruned probe reads a strict subset.
-    val (prBytes0, _) = graft.ext.Sharded.scanFootprint(s, Seq(dir)) {
-      reg.historyTouched(s, excludeBatchId = 9, tokens)
-    }
-    val (fullBytes, _) = graft.ext.Sharded.scanFootprint(s, Seq(dir)) {
-      reg.history(s, excludeBatchId = 9)
-    }
-    assert(prBytes0 < fullBytes)
-    // ABSENT marker (the crash window between parquet commit and marker
-    // write): that directory must be read IN FULL — a superset, never a
-    // miss. batch=0 loses its marker; the probe must still see ALL of
-    // batch=0's rows while batch=1 stays pruned.
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(dir + "/batch=0/_shards"))
-    val pruned = reg.historyTouched(s, excludeBatchId = 9, tokens)
-    assert((1L to 40L).toDF("k").join(pruned, Seq("k"), "left_semi")
-      .count() == 40, "marker-less directory must be read unpruned")
-    val (prBytes1, _) = graft.ext.Sharded.scanFootprint(s, Seq(dir)) {
-      reg.historyTouched(s, excludeBatchId = 9, tokens)
-    }
-    assert(prBytes1 > prBytes0 && prBytes1 < fullBytes,
-      s"expected full batch=0 + pruned batch=1: $prBytes0 < $prBytes1 < $fullBytes")
-    // CORRUPT marker: pruning with a wrong modulus would silently MISS
-    // history rows (= duplicate admissions), so it must THROW instead.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + "/batch=1/_shards"),
-      "not-a-number".getBytes)
-    assertThrows[Exception] {
-      reg.historyTouched(s, excludeBatchId = 9, tokens).count()
-    }
-    // The unpruned audit read ignores markers entirely and still works.
-    assert(reg.history(s, excludeBatchId = 9).count() == 80)
+    import org.apache.spark.sql.types.IntegerType
+    // the crash window between a run's data and its manifest rename:
+    // batch 1's run is on disk, its manifest is not
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("w", IntegerType)))
+    val dir = tmp("graft_unlisted_")
+    val reg = new AdmissionRegistry(dir, schema, Seq("k"), shards = 8)
+    reg.append(Seq((1L, 3), (2L, 3)).toDF("k", "w"), batchId = 0)
+    reg.append(Seq((3L, 5), (4L, 5)).toDF("k", "w"), batchId = 1)
+    dropManifest(s"$dir/v=1")
+    assert(new java.io.File(s"$dir/v=1").list().exists(_.startsWith("shard=")))
+    val keys = reg.history(s, excludeBatchId = 9).as[(Long, Int)]
+      .collect().map(_._1).toSet
+    assert(keys == Set(1L, 2L), s"unlisted run leaked into history: $keys")
+    assert(reg.footerStats(s, excludeBatchId = 9, Some("w")) ==
+      (2L, Some(Set(3))))
+    val toks = reg.probeTokens(Seq(3L, 4L).toDF("k"))
+    assert(reg.historyTouched(s, excludeBatchId = 9, toks).count() == 0)
+    // the replay of batch 1 overwrites the unlisted run, not adds to it
+    reg.append(Seq((3L, 5)).toDF("k", "w"), batchId = 1)
+    assert(reg.history(s, excludeBatchId = 9).as[(Long, Int)].collect()
+      .map(_._1).sorted.toSeq == Seq(1L, 2L, 3L))
+    // the upsert twin: the merge of batch 1 without its manifest is
+    // invisible to the view and to a lookup, and its replay lands
+    val up = java.nio.file.Files.createTempDirectory("graft_unlisted_up_")
+      .toString
+    val merge = ShardedUpsertSink.mergeBatch(s, up, Seq("k"), Seq("seq"),
+      shards = 4) _
+    merge((0 until 20).map(i => (s"key$i", 1L, i.toDouble))
+      .toDF("k", "seq", "v"), 0L)
+    merge(Seq(("key7", 2L, 777.0)).toDF("k", "seq", "v"), 1L)
+    dropManifest(s"$up/v=1")
+    def lookup7() = ShardedUpsertSink.lookup(s, up, Seq("k"), Seq("key7")).get
+      .collect().map(_.getAs[Double]("v")).toSeq
+    assert(ShardedUpsertSink.versions(s, up) == Seq(0L))
+    assert(lookup7() == Seq(7.0))
+    assert(ShardedUpsertSink.currentView(s, up).get.count() == 20)
+    merge(Seq(("key7", 2L, 777.0)).toDF("k", "seq", "v"), 1L)
+    assert(lookup7() == Seq(777.0))
+    assert(ShardedUpsertSink.currentView(s, up).get.count() == 20)
   }
 
   test("compact folds committed batches and preserves exclusion layout") {
@@ -217,12 +247,12 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     reg.append(Seq(1L).toDF("k"), batchId = 0)
     reg.append(Seq(2L).toDF("k"), batchId = 1)
     reg.append(Seq(3L).toDF("k"), batchId = 2)
+    // at the start of batch 3, the runs of batches 0-2 fold into one
+    assert(reg.maybeCompact(s, batchId = 3, every = 3) == 3)
     reg.append(Seq(4L).toDF("k"), batchId = 3)
-    assert(reg.compact(s, uptoBatchId = 2) == 3)
-    // Folded rows live on under batch=2; batch=3 is untouched.
-    val dirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(dirs == Set("batch=2", "batch=3"))
+    // Folded rows live on in one run; batch 3's run is untouched.
+    assert(reg.runs(s).map(_.dir).last == "v=3" && reg.runs(s).size == 2,
+      s"runs: ${reg.runs(s)}")
     val h = reg.history(s, excludeBatchId = 9).as[Long].collect().toSet
     assert(h == Set(1L, 2L, 3L, 4L))
     // A replay of uncompacted batch 3 still excludes only its own rows.
@@ -238,8 +268,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val adm = new NearDupAdmission(stateDir, "text", "doc_id",
       compactEvery = 3)
     def doc(i: Long) = (i, (1 to 25).map(j => s"v${i}w$j").mkString(" "))
-    def batchDirs() = new java.io.File(stateDir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
+    def batchDirs() = adm.registry.runs(s).map(_.dir)
     // A long run: 10 single-doc batches, each doc disjoint -> all admit.
     (0L to 9L).foreach { b =>
       assert(adm.admit(Seq(doc(b)).toDF("doc_id", "text"), b)
@@ -256,7 +285,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     assert(adm.admit(Seq(doc(9L)).toDF("doc_id", "text"), 9L).count() == 1)
     assert(batchDirs() == layoutBefore,
       s"replay changed the layout: $layoutBefore -> ${batchDirs()}")
-    // History folded into batch=8 still gates: a near-dup of batch 0's
+    // Folded history still gates: a near-dup of batch 0's
     // doc (admitted 9 batches and one compaction ago) is rejected.
     val nearDup = Seq((100L, doc(0L)._2 + " tail")).toDF("doc_id", "text")
     assert(adm.admit(nearDup, 10L).count() == 0,
@@ -321,15 +350,10 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val job = run(jobDir, fastPath = false)
     assert(fast == job, s"decisions diverged: $fast vs $job")
     assert(fast == Seq(Set(1L, 2L), Set(5L), Set(6L), Set.empty[Long]))
-    // registries row-identical (batch + shard layout included)
-    def registryRows(dir: String): Set[(Long, Long, Int, Long)] =
-      s.read.parquet(dir)
-        .selectExpr("CAST(batch AS BIGINT)", "CAST(shard AS BIGINT)",
-          "band", "bucket")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSet
-    assert(registryRows(fastDir) == registryRows(jobDir))
+    // registries row-identical (run + shard layout included)
+    val bands = StructType(Seq(StructField("band", IntegerType),
+      StructField("bucket", LongType)))
+    assert(listedRows(fastDir, bands) == listedRows(jobDir, bands))
   }
 
   test("SpanAdmission fast path ≡ job path: decisions and registries") {
@@ -361,12 +385,8 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val job = run(jobDir, fastPath = false)
     assert(fast == job, s"decisions diverged: $fast vs $job")
     assert(fast == Seq(Set(1L), Set(2L), Set(4L), Set.empty[Long]))
-    def registryRows(dir: String): Set[(Long, Long, Long)] =
-      s.read.parquet(dir)
-        .selectExpr("CAST(batch AS BIGINT)", "CAST(shard AS BIGINT)", "sh")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    assert(registryRows(fastDir) == registryRows(jobDir))
+    val spans = StructType(Seq(StructField("sh", LongType)))
+    assert(listedRows(fastDir, spans) == listedRows(jobDir, spans))
   }
 
   test("SpanAdmission auto-compacts and the folded span registry still gates") {
@@ -384,9 +404,8 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     // (gating is layout-independent; dir count stays bounded).
     assert(adm.admit(Seq((3L, boiler + " tiny delta")).toDF("doc_id", "text"),
       2L).count() == 0)
-    val dirs = new java.io.File(stateDir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(dirs.size <= 3, s"layout: $dirs")
+    val runs = adm.registry.runs(s)
+    assert(runs.size <= 3, s"runs: $runs")
   }
 
   test("maybeCompact is geometric: small runs fold, a big base is not rewritten") {
@@ -394,22 +413,21 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     import s.implicits._
     val dir = tmp("graft_geo_")
     val reg = new AdmissionRegistry(dir, keySchema, Seq("k"), shards = 4)
-    def dataFiles(batch: String): Set[String] = {
-      val root = new java.io.File(s"$dir/$batch")
+    def dataFiles(run: String): Set[String] = {
+      val root = new java.io.File(s"$dir/$run")
       if (!root.exists()) Set.empty
       else root.listFiles().filter(_.isDirectory).flatMap(_.listFiles())
         .map(_.getName).filter(_.endsWith(".parquet")).toSet
     }
-    def dirNames(): Set[String] = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
+    def dirNames(): Seq[String] = reg.runs(s).map(_.dir)
     // Four equal appends -> the first scheduled fold takes them all.
     // (2000-row batches: data bytes must dominate parquet footers for
     // the size comparisons below to mean what they say.)
     (0 to 3).foreach(b => reg.append((b * 2000L until b * 2000L + 2000L)
       .toDF("k"), b))
     reg.maybeCompact(s, batchId = 4, every = 1)
-    assert(dirNames() == Set("batch=3"), s"layout: ${dirNames()}")
-    val baseFiles = dataFiles("batch=3")
+    val Seq(base) = dirNames()
+    val baseFiles = dataFiles(base)
     // Two SMALL appends: the next fold must merge only them — the big
     // base (8000 rows vs 100+100) stays byte-identical (same part
     // files), which is the whole point: fold-everything would rewrite
@@ -417,8 +435,9 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     reg.append((90000L until 90100L).toDF("k"), 4)
     reg.append((90100L until 90200L).toDF("k"), 5)
     reg.maybeCompact(s, batchId = 6, every = 1)
-    assert(dirNames() == Set("batch=3", "batch=5"), s"layout: ${dirNames()}")
-    assert(dataFiles("batch=3") == baseFiles,
+    assert(dirNames().size == 2 && dirNames().head == base,
+      s"layout: ${dirNames()}")
+    assert(dataFiles(base) == baseFiles,
       "geometric fold rewrote the big base for a tiny tail")
     // Keep appending equal runs: once the newer mass catches up
     // (geometric trigger), the base is folded in — one consolidated
@@ -435,91 +454,109 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     // into the fold — zero-byte runs once left the accumulator at 0 and
     // the old acc==0 escape hatch folded (rewrote) the whole registry
     // on every idle cycle.
-    val consolidated = dirNames().map(_.stripPrefix("batch=").toLong).max
-    val baseAfter = dataFiles(s"batch=$consolidated")
+    val consolidated = dirNames()
+    val baseAfter = consolidated.map(dataFiles)
     reg.append(spark.range(0).selectExpr("id as k"), 14)
     reg.append(spark.range(0).selectExpr("id as k"), 15)
     reg.maybeCompact(s, batchId = 16, every = 1)
-    assert(dataFiles(s"batch=$consolidated") == baseAfter,
+    assert(dirNames().take(consolidated.size) == consolidated &&
+      consolidated.map(dataFiles) == baseAfter,
       "empty-append tail triggered a full registry rewrite")
     assert(reg.history(s, excludeBatchId = 99).count() == 8000 + 200 + 16000)
   }
 
-  test("fold swap crash windows recover without losing registered rows") {
+  test("a fold or reshard interrupted before the manifest rename leaves the old rows readable") {
     val s = spark
     import s.implicits._
+    import java.nio.file.{Files, Paths}
+    // The state a crash leaves between a maintenance step's data and its
+    // manifest rename: the new layout and `_manifest.tmp` on disk, the
+    // old manifest in place. Built by running the step on a copy of the
+    // store and carrying its output back; returns the output directory.
+    def interrupted(dir: String, id: Long)(step: String => Unit): String = {
+      val copy = Files.createTempDirectory("graft_crash_copy_").toString +
+        "/store"
+      copyDir(Paths.get(dir), Paths.get(copy))
+      step(copy)
+      val out = new java.io.File(copy).list().filter(_.startsWith(s"v=$id.")).head
+      copyDir(Paths.get(s"$copy/$out"), Paths.get(s"$dir/$out"))
+      Files.copy(Paths.get(s"$copy/v=$id/_manifest"),
+        Paths.get(s"$dir/v=$id/_manifest.tmp"))
+      out
+    }
+    // the registry's fold of version 2
     val dir = tmp("graft_crash_")
     val reg = new AdmissionRegistry(dir, keySchema, Seq("k"))
     (0 to 2).foreach(b => reg.append(Seq(b * 10L, b * 10L + 1L).toDF("k"), b))
-    assert(reg.compact(s, uptoBatchId = 2) == 3)
-    // Window A (ADVICE r13): crash BETWEEN the target's rename-aside and
-    // the tmp→target rename — the folded run survives only as
-    // `.retire_batch=2` (+ the stale tmp). Pre-fix, reads silently
-    // missed every folded row and the next fold deleted the only copy.
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/batch=2"),
-      java.nio.file.Paths.get(s"$dir/.retire_batch=2"))
-    val reg2 = new AdmissionRegistry(dir, keySchema, Seq("k")) // fresh caches
-    // READ paths observe the aside as an extra source WITHOUT repairing
-    // it (ADVICE r14): a reader in a separate audit process renaming
-    // mid-swap would make the writer's own rename fail and abort its
-    // trigger. No row vanishes, and the layout is untouched.
-    assert(reg2.history(s, excludeBatchId = 9).as[Long].collect().toSet ==
-      Set(0L, 1L, 10L, 11L, 20L, 21L),
-      "interrupted swap must stay readable — no registered row may vanish")
-    assert(reg2.approxRows(s, excludeBatchId = 9) == 6,
-      "footerStats must count the aside's rows")
-    assert(!new java.io.File(s"$dir/batch=2").exists() &&
-      new java.io.File(s"$dir/.retire_batch=2").exists(),
-      "read-only history() must NOT perform recovery renames")
-    // The MUTATING path (the single writer's compaction schedule) is
-    // where recovery runs: the aside is restored to its batch= target.
-    reg2.maybeCompact(s, batchId = 3, every = 3)
-    assert(new java.io.File(s"$dir/batch=2").exists() &&
-      !new java.io.File(s"$dir/.retire_batch=2").exists(),
-      "writer-path compaction must unwind the interrupted swap")
-    assert(reg2.history(s, excludeBatchId = 9).as[Long].collect().toSet ==
-      Set(0L, 1L, 10L, 11L, 20L, 21L))
-    // Window B: crash AFTER the swap, before the aside delete — the
-    // aside duplicates rows the new target holds; reads skip it (a
-    // stale duplicate) and the writer path drops it.
-    reg2.append(Seq(30L).toDF("k"), 3)
-    assert(reg2.compact(s, uptoBatchId = 3) == 2)
-    copyDir(java.nio.file.Paths.get(s"$dir/batch=3"),
-      java.nio.file.Paths.get(s"$dir/.retire_batch=3"))
-    val reg3 = new AdmissionRegistry(dir, keySchema, Seq("k"))
-    assert(reg3.history(s, excludeBatchId = 9).count() == 7,
-      "stale aside (target present) must not double-count rows")
-    assert(new java.io.File(s"$dir/.retire_batch=3").exists(),
-      "read-only history() must not delete the stale aside")
-    reg3.compact(s, uptoBatchId = 3)
-    assert(!new java.io.File(s"$dir/.retire_batch=3").exists(),
-      "completed swap's stale aside must be dropped by the writer path")
-    assert(reg3.history(s, excludeBatchId = 9).count() == 7)
+    val all = Set(0L, 1L, 10L, 11L, 20L, 21L)
+    val before = reg.runs(s)
+    val out = interrupted(dir, 2L)(d => assert(
+      new AdmissionRegistry(d, keySchema, Seq("k")).maybeCompact(s, 3, 3) == 3))
+    assert(reg.runs(s) == before, "the old manifest must stay in place")
+    assert(reg.history(s, excludeBatchId = 9).as[Long].collect().toSet == all,
+      "an interrupted fold must not lose a registered row")
+    assert(reg.approxRows(s, excludeBatchId = 9) == 6)
+    // the writer redoes the fold into a fresh directory, and GC drops
+    // the interrupted one
+    assert(reg.maybeCompact(s, batchId = 3, every = 3) == 3)
+    assert(reg.runs(s).map(_.dir) != Seq(out) && reg.runs(s).size == 1)
+    assert(!new java.io.File(s"$dir/$out").exists())
+    assert(reg.history(s, excludeBatchId = 9).as[Long].collect().toSet == all)
+    // the upsert store's reshard of version 1
+    val up = Files.createTempDirectory("graft_crash_up_").toString + "/store"
+    val merge = ShardedUpsertSink.mergeBatch(s, up, Seq("k"), Seq("seq"),
+      shards = 4) _
+    merge((0 until 50).map(i => (s"key$i", 1L, i.toDouble))
+      .toDF("k", "seq", "v"), 0L)
+    merge(Seq(("key7", 2L, 777.0)).toDF("k", "seq", "v"), 1L)
+    def view() = ShardedUpsertSink.currentView(s, up).get.collect()
+      .map(r => r.getAs[String]("k") -> r.getAs[Double]("v")).toMap
+    val was = view()
+    val upOut = interrupted(up, 1L)(d =>
+      ShardedUpsertSink.reshard(s, d, Seq("k"), newShards = 16))
+    assert(view() == was && was.size == 50)
+    assert(ShardedUpsertSink.lookup(s, up, Seq("k"), Seq("key7")).get
+      .collect().map(_.getAs[Double]("v")).toSeq == Seq(777.0))
+    assert(Manifest.load(s, up, 1L).modulus == 4)
+    // the next merge adopts the old modulus; GC drops the unlisted layout
+    merge(Seq(("key8", 2L, 888.0)).toDF("k", "seq", "v"), 2L)
+    assert(Manifest.load(s, up, 2L).modulus == 4)
+    assert(view() == was + ("key8" -> 888.0))
+    assert(!new java.io.File(s"$up/$upOut").exists())
   }
 
-  test("a truncated _shards marker cannot be observed (tmp+rename commit)") {
+  test("a corrupt or truncated manifest throws, never reads as a smaller modulus") {
     val s = spark
     import s.implicits._
-    val dir = tmp("graft_marker_")
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    val dir = tmp("graft_trunc_")
     val reg = new AdmissionRegistry(dir, keySchema, Seq("k"), shards = 12)
     reg.append((0L until 64L).toDF("k"), 0)
-    // The marker is committed via tmp + rename (ADVICE r14): mid-write
-    // state lives only in `_shards.tmp`, so a reader never sees a
-    // truncated first line that parses as a SMALLER modulus ('12' → '1')
-    // and prunes history under it. Simulate the only crash window the
-    // protocol leaves — tmp written, rename not yet done: the marker is
-    // ABSENT, which the registry treats as unprunable-full-read (a
-    // superset, never a miss).
-    val marker = new java.io.File(s"$dir/batch=0/_shards")
-    val tmpF = new java.io.File(s"$dir/batch=0/_shards.tmp")
-    java.nio.file.Files.move(marker.toPath, tmpF.toPath)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/batch=0/._shards.crc"))
-    val reg2 = new AdmissionRegistry(dir, keySchema, Seq("k"), shards = 12)
-    val toks = reg2.probeTokens(Seq(7L).toDF("k"))
-    assert(reg2.historyTouched(s, excludeBatchId = 9, toks)
-      .count() == 64, "marker-absent dir must be read IN FULL (fail safe)")
+    val up = Files.createTempDirectory("graft_trunc_up_").toString
+    ShardedUpsertSink.mergeBatch(s, up, Seq("k"), Seq("seq"), shards = 12)(
+      (0 until 64).map(i => (s"key$i", 1L, i.toDouble))
+        .toDF("k", "seq", "v"), 0L)
+    val toks = reg.probeTokens(Seq(7L).toDF("k"))
+    def regRead() = reg.historyTouched(s, excludeBatchId = 9, toks)
+    def upRead() = ShardedUpsertSink.lookup(s, up, Seq("k"), Seq("key7"))
+    Seq[(String, () => Any)](dir -> (() => regRead()), up -> (() => upRead()))
+      .foreach { case (store, read) =>
+        val m = Paths.get(s"$store/v=0/_manifest")
+        val text = new String(Files.readAllBytes(m), UTF_8)
+        Files.deleteIfExists(Paths.get(s"$store/v=0/._manifest.crc"))
+        // Every proper prefix — what a crash mid-write would leave, had
+        // the manifest not gone through tmp + rename — and a corrupt
+        // body. '#shards 12' cut to '#shards 1' must not prune under 1.
+        ((1 until text.length).map(text.take) :+ "not-a-manifest").foreach {
+          bad =>
+            Files.write(m, bad.getBytes(UTF_8))
+            intercept[IllegalStateException](read())
+        }
+        Files.write(m, text.getBytes(UTF_8))
+      }
+    assert(regRead().as[Long].collect().contains(7L))
+    assert(upRead().get.collect().map(_.getAs[Double]("v")).toSeq == Seq(7.0))
   }
 
   private def copyDir(src: java.nio.file.Path,
@@ -541,21 +578,14 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     val reg = new AdmissionRegistry(dir, schema, Seq("k"))
     reg.append(Seq((1L, 3), (2L, 3), (3L, 4)).toDF("k", "w"), 0)
     reg.append(Seq((4L, 4)).toDF("k", "w"), 1)
-    // marker layout is MERGED (r14): one `_shards` file per dir, no _meta
-    assert(new java.io.File(s"$dir/batch=0/_shards").exists() &&
-      !new java.io.File(s"$dir/batch=0/_meta").exists())
     val (rows, vals) = reg.footerStats(s, excludeBatchId = 9, Some("w"))
     assert(rows == 4 && vals == Some(Set(3, 4)))
     // exclusion mirrors the history reads' replay determinism
     assert(reg.footerStats(s, excludeBatchId = 1, Some("w"))._1 == 3)
-    // legacy modulus-only marker (pre-r14 layout): stats lines absent →
-    // footer-walk fallback still yields the exact count and ranges
-    val m = java.nio.file.Paths.get(s"$dir/batch=0/_shards")
-    val modulus = new String(java.nio.file.Files.readAllBytes(m))
-      .linesIterator.next()
-    java.nio.file.Files.write(m, modulus.getBytes)
-    val reg1 = new AdmissionRegistry(dir, schema, Seq("k"))
-    assert(reg1.footerStats(s, excludeBatchId = 9, Some("w")) ==
+    // the statistics ride the manifest, walked from the footers once at
+    // write time: answering them opens no data file
+    garble(dir)
+    assert(reg.footerStats(s, excludeBatchId = 9, Some("w")) ==
       (4L, Some(Set(3, 4))))
     // SPAN CAP (ADVICE r13): a wide int range — corrupt stats or a
     // wide-domain payload column — must degrade to stats-unavailable,

@@ -8,9 +8,9 @@ import graft.tools.Run.Trigger
 
 /** The tool harness `graft.tools.Run`: its listener, steady-state rate,
   * percentile and JSON escaper, its scenario lookup, and a tiny run of
-  * the two scenarios that have no spec of their own (`crawl-arrival`,
-  * `curation`), so a broken tool fails here instead of on its next
-  * manual run. */
+  * the three scenarios that have no spec of their own (`crawl-arrival`,
+  * `curation`, `soak`), so a broken tool fails here instead of on its
+  * next manual run. */
 class RunSpec extends AnyFunSuite with SparkTestSupport {
 
   private val mapper = new ObjectMapper()
@@ -133,6 +133,16 @@ class RunSpec extends AnyFunSuite with SparkTestSupport {
     // routed there fails here
     assert(jobs.get("p50").asDouble <= 5, jobs)
     assert(m.get("invariants").get("checks").asInt >= 1)
+  }
+
+  test("soak at 40 triggers of 8 rows: exact, and the registry's live runs within the bound") {
+    // folds, reshards, GC and merges interleaved through both stores
+    val m = parse(Run.run(spark, "soak", Seq("40", "8"))).get("metrics")
+    assert(m.get("exact").asBoolean)
+    assert(m.get("registry_rows").asLong == 320, m)
+    assert(m.get("upsert_keys").asLong == 320, m)
+    val last = m.get("last")
+    assert(last.get("live_dirs").asInt <= last.get("live_dirs_bound").asInt, last)
   }
 
   test("curation with two tiny triggers: one record, each stage narrows the last") {

@@ -236,11 +236,13 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       .toDF("k", "seq", "v"), 0L)
     merge4(Seq(("key3", 2L, 33.0)).toDF("k", "seq", "v"), 1L)
     val before = viewMap(dir)
-    // the sanctioned modulus change: one full rewrite under P=16
-    ShardedUpsertSink.reshard(s, dir, Seq("k"), newShards = 16, batchId = 2L)
+    // the sanctioned modulus change: one full rewrite under P=16, which
+    // replaces the newest manifest and spends no batch id
+    ShardedUpsertSink.reshard(s, dir, Seq("k"), newShards = 16)
     assert(viewMap(dir) == before, "reshard changed view content")
+    assert(ShardedUpsertSink.versions(s, dir) == Seq(0L, 1L))
     val manifest = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/v=2/_manifest")))
+      java.nio.file.Paths.get(s"$dir/v=1/_manifest")))
     assert(manifest.startsWith("#shards 16"))
     // point lookups route under the NEW modulus
     val hit = ShardedUpsertSink.lookup(s, dir, Seq("k"), Seq("key3")).get
@@ -248,47 +250,48 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     assert(hit == Seq(33.0))
     // a later merge (even with a drifted shards parameter) adopts 16
     ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 7)(
-      Seq(("key5", 2L, 55.0)).toDF("k", "seq", "v"), 3L)
-    val m3 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/v=3/_manifest")))
-    assert(m3.startsWith("#shards 16"))
+      Seq(("key5", 2L, 55.0)).toDF("k", "seq", "v"), 2L)
+    val m2 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/v=2/_manifest")))
+    assert(m2.startsWith("#shards 16"))
     assert(viewMap(dir) == before + ("key5" -> 55.0))
     // single-owner invariant: after the next merge, pre-reshard
     // versions own nothing and GC out of the retention window
     ShardedUpsertSink.mergeBatch(s, dir, Seq("k"), Seq("seq"), shards = 16)(
-      Seq(("key6", 2L, 66.0)).toDF("k", "seq", "v"), 4L)
+      Seq(("key6", 2L, 66.0)).toDF("k", "seq", "v"), 3L)
     val dirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("v=")).map(_.getName).toSet
     assert(!dirs.contains("v=0") && !dirs.contains("v=1"),
       s"pre-reshard versions survived GC: $dirs")
-    // refusals: stale batchId and an empty store
+    // refusals: a bad modulus and an empty store
     assertThrows[IllegalArgumentException] {
-      ShardedUpsertSink.reshard(s, dir, Seq("k"), 32, batchId = 2L)
+      ShardedUpsertSink.reshard(s, dir, Seq("k"), 0)
     }
     assertThrows[IllegalArgumentException] {
       ShardedUpsertSink.reshard(s,
         Files.createTempDirectory("graft-shup-rs2").toString,
-        Seq("k"), 8, batchId = 0L)
+        Seq("k"), 8)
     }
-    // ID COLLISION (the resuming-stream footgun the scaladoc contracts
-    // around): a redelivered merge with the reshard's own id recomputes
-    // against the RETAINED pre-reshard predecessor and overwrites the
-    // version — exactly-once wins, the view stays CORRECT under the old
-    // modulus, only the reshard work is lost.
+    // REPLAY OF A RESHARDED VERSION: a redelivered merge of the batch
+    // whose version was resharded recomputes against the RETAINED
+    // predecessor and overwrites the version — exactly-once wins, the
+    // view stays CORRECT under the old modulus, only the reshard work is
+    // lost.
     val dir2 = Files.createTempDirectory("graft-shup-rsc").toString
-    val m2 = ShardedUpsertSink.mergeBatch(s, dir2,
+    val m2merge = ShardedUpsertSink.mergeBatch(s, dir2,
       keys = Seq("k"), orderCols = Seq("seq"), shards = 4) _
-    m2((0 until 50).map(i => (s"key$i", 1L, i.toDouble))
+    m2merge((0 until 50).map(i => (s"key$i", 1L, i.toDouble))
       .toDF("k", "seq", "v"), 0L)
-    ShardedUpsertSink.reshard(s, dir2, Seq("k"), newShards = 16, batchId = 1L)
-    m2(Seq(("key9", 2L, 99.0)).toDF("k", "seq", "v"), 1L) // collides
+    m2merge(Seq(("key9", 2L, 99.0)).toDF("k", "seq", "v"), 1L)
+    ShardedUpsertSink.reshard(s, dir2, Seq("k"), newShards = 16)
+    m2merge(Seq(("key9", 2L, 99.0)).toDF("k", "seq", "v"), 1L) // replayed
     val view2 = ShardedUpsertSink.currentView(s, dir2).get.collect()
       .map(r => r.getAs[String]("k") -> r.getAs[Double]("v")).toMap
     assert(view2.size == 50 && view2("key9") == 99.0 && view2("key0") == 0.0)
     val m2manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir2/v=1/_manifest")))
     assert(m2manifest.startsWith("#shards 4"),
-      "colliding merge must carry the pre-reshard modulus it merged under")
+      "the replayed merge must carry the pre-reshard modulus it merged under")
     // maybeReshard: fires only past the 2x-target doubling gate, sizes
     // P to bytes/target, and no-ops immediately after. The target must
     // sit above parquet's per-file footer overhead (~1 KB) or ANY
@@ -301,17 +304,17 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     val before4 = ShardedUpsertSink.currentView(s, dir4).get.collect()
       .map(r => r.getAs[String]("k") -> r.getAs[Double]("v")).toMap
     val grew = ShardedUpsertSink.maybeReshard(s, dir4, Seq("k"),
-      batchId = 1L, targetShardBytes = 4096L)
+      targetShardBytes = 4096L)
     assert(grew.exists(_ > 2), s"expected a grown modulus, got $grew")
     assert(ShardedUpsertSink.maybeReshard(s, dir4, Seq("k"),
-      batchId = 2L, targetShardBytes = 4096L).isEmpty,
+      targetShardBytes = 4096L).isEmpty,
       "freshly resharded store must not reshard again")
     assert(ShardedUpsertSink.currentView(s, dir4).get.collect()
       .map(r => r.getAs[String]("k") -> r.getAs[Double]("v")).toMap
       == before4)
     // huge target -> under the gate -> no-op
     assert(ShardedUpsertSink.maybeReshard(s, dir4, Seq("k"),
-      batchId = 3L, targetShardBytes = 1L << 30).isEmpty)
+      targetShardBytes = 1L << 30).isEmpty)
   }
 
   test("lookup is JOBLESS before the pruned read, and type-reconciled") {
@@ -410,13 +413,13 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       .linesIterator.toSeq
     val body = lines.filterNot(_.startsWith("#"))
     assert(body.nonEmpty && body.forall(_.split("\\s+").length == 3),
-      s"manifest lines must be 's v bytes': $body")
+      s"manifest lines must be 'dir modulus bytes': $body")
     // recorded bytes must equal the actual shard directory sizes
     body.foreach { l =>
       val Array(sh, _, b) = l.split("\\s+")
       // data files only: the local FS's hidden .crc sidecars are not
       // part of the layout (Hadoop's listStatus hides them too)
-      val actual = new java.io.File(s"$dir/v=0/shard=$sh").listFiles()
+      val actual = new java.io.File(s"$dir/$sh").listFiles()
         .filter(f => f.isFile && !f.getName.startsWith("."))
         .map(_.length()).sum
       assert(b.toLong == actual, s"shard $sh recorded $b actual $actual")
@@ -437,14 +440,14 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     }
     rewriteBytes(1000000L)
     val fired = ShardedUpsertSink.maybeReshard(s, dir, Seq("k"),
-      batchId = 1L, targetShardBytes = 1L << 20)
+      targetShardBytes = 1L << 20)
     assert(fired.exists(_ > 4),
       s"inflated manifest bytes must drive the decision (got $fired)")
     // content survives the reshard
     assert(viewMap(dir).size == 200 && viewMap(dir)("key7") == 7.0)
   }
 
-  test("start() owns the reshard id-space: resume after reshard, no collision") {
+  test("a stream resumed after a reshard adopts the new modulus and has the exact view") {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
@@ -460,25 +463,20 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       q1.processAllAvailable()
     } finally q1.stop()
     assert(ShardedUpsertSink.versions(s, base) == Seq(0L))
-    // quiesced maintenance window: grow the modulus at the next id
-    ShardedUpsertSink.reshard(s, base, Seq("k"), newShards = 16, batchId = 1L)
-    assert(ShardedUpsertSink.versions(s, base) == Seq(0L, 1L))
-    // resume the SAME checkpoint: the engine's next batchId is 1 — a
-    // direct mergeBatch would collide with the reshard version and
-    // silently discard its work. start()'s adapter reads the newest
-    // committed version once and offsets the run's ids above it.
+    // quiesced maintenance window: grow the modulus of the newest
+    // version in place — no batch id spent
+    ShardedUpsertSink.reshard(s, base, Seq("k"), newShards = 16)
+    assert(ShardedUpsertSink.versions(s, base) == Seq(0L))
+    // resume the SAME checkpoint: the engine's next batch is 1, merged
+    // against the resharded version 0
     val q2 = startQ()
     try {
       stream.addData(("a", 2L, 2.0), ("c", 1L, 30.0))
       q2.processAllAvailable()
     } finally q2.stop()
-    val committed = ShardedUpsertSink.versions(s, base)
-    assert(committed.last > 1L,
-      s"resumed merge collided with the reshard version: $committed")
-    // view correct under the NEW modulus (today's collision arm keeps
-    // the old one; this proves the reshard survived the resume)
+    assert(ShardedUpsertSink.versions(s, base) == Seq(0L, 1L))
     val m = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/v=${committed.last}/_manifest")))
+      java.nio.file.Paths.get(s"$base/v=1/_manifest")))
     assert(m.startsWith("#shards 16"),
       s"resumed merge must adopt the resharded modulus: ${m.linesIterator.next()}")
     assert(viewMap(base) == Map("a" -> 2.0, "b" -> 10.0, "c" -> 30.0))
