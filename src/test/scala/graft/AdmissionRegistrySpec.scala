@@ -194,7 +194,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
       s"pruned=$prBytes full=$fullBytes — self-sizing should prune ≥3×")
   }
 
-  test("a run written without its manifest is invisible, and its replay overwrites it") {
+  test("a run without its manifest is invisible; its replay overwrites it") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.types.IntegerType
@@ -465,7 +465,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     assert(reg.history(s, excludeBatchId = 99).count() == 8000 + 200 + 16000)
   }
 
-  test("a fold or reshard interrupted before the manifest rename leaves the old rows readable") {
+  test("an interrupted fold or reshard leaves the old rows readable") {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
@@ -525,7 +525,7 @@ class AdmissionRegistrySpec extends AnyFunSuite with SparkTestSupport {
     assert(!new java.io.File(s"$up/$upOut").exists())
   }
 
-  test("a corrupt or truncated manifest throws, never reads as a smaller modulus") {
+  test("a corrupt or truncated manifest throws, never a smaller modulus") {
     val s = spark
     import s.implicits._
     import java.nio.charset.StandardCharsets.UTF_8

@@ -447,7 +447,7 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     assert(viewMap(dir).size == 200 && viewMap(dir)("key7") == 7.0)
   }
 
-  test("a stream resumed after a reshard adopts the new modulus and has the exact view") {
+  test("a stream resumed after a reshard adopts the new modulus, exact view") {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
