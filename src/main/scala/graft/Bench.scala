@@ -45,8 +45,8 @@ import graft.tools.Run.jstr
   * matched — and (b) char-budgeted to ~49 of 130 queries, so fast queries
   * that regress would be invisible even to a fixed regex):
   *   1. BENCH_HISTORY.jsonl — this tool appends its own full-precision
-  *      line after every COMPLETE run (all queries, matching sf), so the
-  *      next round compares against untruncated data;
+  *      line after every COMPLETE run (all queries, matching sf and
+  *      host), so the next round compares against untruncated data;
   *   2. newest BENCH_OUT_r*.json — a committed full bench_out.json;
   *   3. newest BENCH_r*.json — de-escaped driver wrapper (last resort).
   * These files, the history append and the default output file resolve
@@ -93,16 +93,31 @@ object Bench {
       }
     }
 
+  /** This host's shape as stamped on every Bench line: core count and
+    * driver heap ([[Run.host]] without the load average). */
+  private[graft] def hostTag: String = {
+    val h = Run.host()
+    s""""host":{"cpus":${h("cpus")},"heap_mb":${h("heap_mb")}}"""
+  }
+
+  /** Whether a bench line (or a driver file, escaped or not) ran at
+    * `sfDir` on a host of shape `host` ([[hostTag]]); a line with no
+    * host block never matches. */
+  private def comparable(sfDir: String, host: String)(txt: String): Boolean = {
+    val t = txt.replace("\\\"", "\"")
+    t.contains("\"sf\":" + jstr(sfDir)) && t.contains(host)
+  }
+
   /** (source name, per-query times) for the most recent comparable run at
     * `sfDir` — see class doc for the source priority. A source only
     * qualifies if it carries the SAME sf dir (a local sf0.01 iteration
-    * must not become the baseline for the driver's sf0.1 run). */
-  def prevTimes(sfDir: String,
-      repoDir: String = "."): (String, Map[String, Double]) = {
-    val sfTag = "\"sf\":" + jstr(sfDir)
-    def sfMatches(txt: String): Boolean =
-      txt.replace("\\\"", "\"").contains(sfTag)
-    // 1. history: last full-precision line with a matching sf
+    * must not become the baseline for the driver's sf0.1 run) and the
+    * same host shape (a 32-core history line is no baseline for a
+    * 4-core run). */
+  def prevTimes(sfDir: String, repoDir: String = ".",
+      host: String = hostTag): (String, Map[String, Double]) = {
+    val sfMatches = comparable(sfDir, host) _
+    // 1. history: last full-precision line with a matching sf and host
     val hist = new java.io.File(s"$repoDir/BENCH_HISTORY.jsonl")
     val fromHist = if (!hist.isFile) None else
       try Files.readAllLines(hist.toPath).toArray.toSeq.map(_.toString)
@@ -131,7 +146,7 @@ object Bench {
       .getOrElse("" -> Map.empty)
   }
 
-  /** The BEST (minimum) anchor median across matching-sf BENCH_HISTORY
+  /** The BEST (minimum) anchor median across comparable BENCH_HISTORY
     * lines — the drift denominator. Minimum, not most-recent: the
     * anchor measures host speed, and normalizing against the
     * best-observed host makes `normalized_total` a stable "cost at
@@ -149,26 +164,25 @@ object Bench {
     * min-anchor denominator still flatters normalized totals against a
     * speed no longer reachable — raw totals ride alongside in every
     * line, and drift > 2 is flagged for manual reading (`drift_high`). */
-  def prevAnchorMed(sfDir: String,
-      repoDir: String = "."): Option[Double] =
-    prevAnchorKeyMed("anchor_med", sfDir, repoDir)
+  def prevAnchorMed(sfDir: String, repoDir: String = ".",
+      host: String = hostTag): Option[Double] =
+    prevAnchorKeyMed("anchor_med", sfDir, repoDir, host)
 
   /** [[prevAnchorMed]] for the r19 mid-weight SHUFFLE anchor series
     * (`anchor2_med`) — None until the first run that recorded one. */
-  def prevAnchor2Med(sfDir: String,
-      repoDir: String = "."): Option[Double] =
-    prevAnchorKeyMed("anchor2_med", sfDir, repoDir)
+  def prevAnchor2Med(sfDir: String, repoDir: String = ".",
+      host: String = hostTag): Option[Double] =
+    prevAnchorKeyMed("anchor2_med", sfDir, repoDir, host)
 
   private def prevAnchorKeyMed(key: String, sfDir: String,
-      repoDir: String): Option[Double] = {
+      repoDir: String, host: String): Option[Double] = {
     val hist = new java.io.File(s"$repoDir/BENCH_HISTORY.jsonl")
     if (!hist.isFile) return None
-    val sfTag = "\"sf\":" + jstr(sfDir)
     val re = java.util.regex.Pattern.compile("\"" + key + "\":([0-9.]+)")
     try {
       val all = Files.readAllLines(hist.toPath).toArray.toSeq
         .map(_.toString)
-        .filter(_.contains(sfTag))
+        .filter(comparable(sfDir, host))
         .flatMap { l =>
           val m = re.matcher(l)
           if (m.find()) Some(m.group(1).toDouble) else None
@@ -414,11 +428,12 @@ object Bench {
     val moved = movers(prev, results)
     val movedJson = moved.map { case (k, r) => jstr(k) + ":" + f"$r%.2f" }
       .mkString("{", ",", "}")
-    // Materialized-artifact build costs: the first query touching an
+    // Artifact build costs by catalog key: the first query touching an
     // artifact absorbs its one-time build (the signature index, IVF
-    // centroids, gram index...); reporting them separately makes each
-    // per-query number readable as index-read cost vs build cost.
-    val artJson = QueriesExt.artifactBuildSeconds.toSeq.sortBy(-_._2)
+    // centroids, gram index, fixture exports...); reporting them
+    // separately makes each per-query number readable as index-read
+    // cost vs build cost.
+    val artJson = graft.ops.Artifacts.buildSeconds.toSeq.sortBy(-_._2)
       .map { case (k, v) => jstr(k) + ":" + r3(v) }
       .mkString("{", ",", "}")
     // Drift block: anchor_med is THIS run's host-speed measurement (the
@@ -436,7 +451,7 @@ object Bench {
           s""","prev_anchor_med":${r3(prevAnchor.get)},"drift":${f"$d%.3f"},"drift_high":${d > 2.0},"normalized_total":${f"${total / d}%.2f"},"normalized_production_total":${f"${productionTotal / d}%.2f"}""")
           .getOrElse("")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"min_of_retries_gt_${rerunSec}s","wall_sec":${f"$wallSec%.2f"},"n_reruns":$rerun,"queries":$qs,"r1_total":$r1Total,"production_total":${f"$productionTotal%.2f"},"anchors_total":${f"$anchorsTotal%.2f"},$driftJson,"n_queries":${results.size},"errors":$errJson,"n_errors":${errors.size},"spread":$spreadJson,"codegen_fallbacks":$cgJson,"n_codegen_fallbacks":${fellBack.size},"prev_bench":${jstr(prevName)},"moved":$movedJson,"n_moved":${moved.size},"artifact_builds":$artJson,"loadavg":${jstr(loadavg)},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","method":"min_of_retries_gt_${rerunSec}s","wall_sec":${f"$wallSec%.2f"},"n_reruns":$rerun,"queries":$qs,"r1_total":$r1Total,"production_total":${f"$productionTotal%.2f"},"anchors_total":${f"$anchorsTotal%.2f"},$driftJson,"n_queries":${results.size},"errors":$errJson,"n_errors":${errors.size},"spread":$spreadJson,"codegen_fallbacks":$cgJson,"n_codegen_fallbacks":${fellBack.size},"prev_bench":${jstr(prevName)},"moved":$movedJson,"n_moved":${moved.size},"artifact_builds":$artJson,"loadavg":${jstr(loadavg)},$hostTag,"sf":${jstr(sfDir)}}"""
     Option(Paths.get(outFile).getParent).foreach(Files.createDirectories(_))
     Files.writeString(Paths.get(outFile), json + "\n")
     // Full-precision history: every run appends its line so the NEXT

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Archives, ArchiveFixtures, Audio, AudioFixtures, Boilerplate, Chunking, Decontam, Dedup, Fuzzy, MediaFixtures, Multimodal, Similarity, Spans, TextStats, Vectors}
-import graft.ops.{HeavyHitters, Packing, Sampling}
+import graft.ops.{Artifacts, HeavyHitters, Packing, Sampling}
 
 /** Extension-operator query registry: dedup, similarity search, text
   * analysis, multimodal — the 100 TB training-data-pipeline surface
@@ -29,50 +29,6 @@ object QueriesExt {
   // DuckDB token list, identical semantics to Dedup.tokens.
   private val sqlToks = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
-  /** JVM-local materialized intermediates: build once per (key), persist
-    * to a temp parquet, read back for every consumer. The MinHash pairs
-    * table feeds BOTH `q_dedup_minhash_pairs` and `q_dedup_minhash`
-    * (pairs + anti-join) — without this the whole signature+band-join
-    * pipeline runs twice across the two registered queries. This is the
-    * 100 TB shape too: a near-dup pairs table is an expensive corpus-level
-    * artifact you materialize once and derive all downstream views from. */
-  private object Materialized {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, String]()
-    private val buildSecs =
-      scala.collection.concurrent.TrieMap[String, Double]()
-    def apply(s: org.apache.spark.sql.SparkSession, key: String)(
-        build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val path = cache.getOrElseUpdate(key, {
-        val t0 = System.nanoTime()
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_mv_").toString
-        // REBALANCE before write (guide: size output files by bytes, not
-        // by upstream task count): without it the artifact inherits one
-        // file per build task — 32 footer-dominated KB files at fixture
-        // scale, and every consumer scan pays one task per file; with
-        // AQE the rebalance coalesces to advisoryPartitionSizeInBytes,
-        // which is also the 100 TB posture (~64 MB files, not one file
-        // per map task).
-        build.hint("REBALANCE").write.mode("overwrite").parquet(p)
-        buildSecs(key) = (System.nanoTime() - t0) / 1e9
-        p
-      })
-      // memoized read: artifacts are write-once per JVM, and the old
-      // per-call read.parquet paid a schema-inference job per consumer
-      graft.sources.Pq.read(s, path)
-    }
-    def buildSeconds: Map[String, Double] = buildSecs.toMap
-    def recordBuild(key: String, secs: Double): Unit = buildSecs(key) = secs
-  }
-
-  /** One-time build cost of each materialized corpus artifact this JVM
-    * paid so far — Bench reports these beside the per-query times, so an
-    * index-probe query's number is readable as read cost, with the build
-    * it may have absorbed broken out (VERDICT r8 next-round #5). */
-  private[graft] def artifactBuildSeconds: Map[String, Double] =
-    Materialized.buildSeconds
-
   /** Corpus row count from parquet footers (driver-side, no job) for the
     * scale-aware blocking caps below. At fixture scale every derived cap
     * floors to its historical constant, so the oracle SQL that embeds
@@ -95,10 +51,12 @@ object QueriesExt {
       (nRows(s, dir, "documents") / 2000L).toInt))
 
   /** The shared MinHash near-dup pairs table for `dir` (raw,
-    * unrounded) — the xxhash64 perf family. */
+    * unrounded) — the xxhash64 perf family. Both `q_dedup_minhash_pairs`
+    * and `q_dedup_minhash` read it, so the signature + band-join pipeline
+    * runs once. */
   private def minhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"minhash_pairs:$dir") {
+    Artifacts.frame(s, s"minhash_pairs:$dir") {
       Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5,
           maxBucket = Dedup.scaledCap(1000, nRows(s, dir, "documents")),
           shingle = 3, family = Dedup.XxHash)
@@ -111,7 +69,7 @@ object QueriesExt {
     * Verify's ratio telemetry read one persisted table. */
   private def simhashPairsTwin(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"simhash_pairs_twin:$dir") {
+    Artifacts.frame(s, s"simhash_pairs_twin:$dir") {
       Dedup.SimHash(maxHamming = 3, family = Dedup.XxHash)
         .textPairs(t(s, dir, "documents"), "text", "doc_id")
     }
@@ -125,7 +83,7 @@ object QueriesExt {
     * duplicates THIS doc" query scans only the index. */
   private def minhashSigIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"minhash_sigs_portable:$dir") {
+    Artifacts.frame(s, s"minhash_sigs_portable:$dir") {
       Dedup.MinHash(numHashes = 32, shingle = 3)
         .signatures(t(s, dir, "documents"), "text", "doc_id")
     }
@@ -136,7 +94,7 @@ object QueriesExt {
     * instead of re-voting the corpus per call. */
   private def simhashFpIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"simhash_fps_portable:$dir") {
+    Artifacts.frame(s, s"simhash_fps_portable:$dir") {
       Dedup.SimHash().signatures(t(s, dir, "documents"), "text", "doc_id")
     }
 
@@ -146,7 +104,7 @@ object QueriesExt {
     * edges), so the signature+band pipeline runs once. */
   private def minhashPairsPortable(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"minhash_pairs_portable:$dir") {
+    Artifacts.frame(s, s"minhash_pairs_portable:$dir") {
       Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5)
         .pairs(minhashSigIndex(s, dir))
     }
@@ -203,7 +161,7 @@ object QueriesExt {
       |FROM ($portableSql) p""".stripMargin
 
   /** Twin vs portable pair counts for Verify's drift telemetry — reads
-    * the [[Materialized]] artifacts the registry queries already built
+    * the [[Artifacts]] entries the registry queries already built
     * (cheap parquet re-reads within the same JVM). */
   private[graft] def twinPortablePairCounts(
       s: org.apache.spark.sql.SparkSession,
@@ -223,7 +181,7 @@ object QueriesExt {
   private def ivfArtifacts(s: org.apache.spark.sql.SparkSession,
       dir: String): (Array[(Int, Array[Float])],
         org.apache.spark.sql.DataFrame) = {
-    val centsDf = Materialized(s, s"ivf_cents:$dir") {
+    val centsDf = Artifacts.frame(s, s"ivf_cents:$dir") {
       val sp = s
       import sp.implicits._
       Similarity.kmeansCentroids(t(s, dir, "embeddings"), "embedding",
@@ -233,7 +191,7 @@ object QueriesExt {
     val cents = centsDf.collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
-    val index = Materialized(s, s"ivf_index:$dir") {
+    val index = Artifacts.frame(s, s"ivf_index:$dir") {
       Similarity.ivfAssign(t(s, dir, "embeddings"), "embedding", cents)
     }
     (cents, index)
@@ -252,7 +210,7 @@ object QueriesExt {
   private def fuzzyVocabSides(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    val vocab = Materialized(s, s"vocab:$dir") {
+    val vocab = Artifacts.frame(s, s"vocab:$dir") {
       TextStats.vocabulary(Dedup.parallelize(t(s, dir, "documents")),
         "text", "doc_id").select("token", "tf")
     }
@@ -303,7 +261,7 @@ object QueriesExt {
     * `q_dedup_cc` (transitive closure over the same edges). */
   private def ngramPairsHi(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"ngram_pairs_hi:$dir") {
+    Artifacts.frame(s, s"ngram_pairs_hi:$dir") {
       Dedup.ngramJaccardPairsOverGrams(ngramGramIndex(s, dir),
         threshold = 0.5,
         maxDf = Dedup.scaledCap(1000, nRows(s, dir, "documents")))
@@ -314,33 +272,16 @@ object QueriesExt {
     * incremental family — filters this artifact). */
   private def ngramGramIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"ngram_grams:$dir") {
+    Artifacts.frame(s, s"ngram_grams:$dir") {
       Dedup.ngramGramTable(t(s, dir, "documents"), "text", "doc_id", n = 3)
     }
-
-  /** Paths of SHARD-PARTITIONED physical artifacts ([[graft.ext.Sharded]]
-    * layouts — the serving/ingest disk layouts whose reads prune AT THE
-    * SCAN). Written once per key per JVM like the [[Materialized]]
-    * artifacts, with build time recorded beside theirs. */
-  private val shardedPaths =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private def shardedArtifact(key: String)(write: String => Unit): String =
-    shardedPaths.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_shardidx_").toString
-      val t0 = System.nanoTime()
-      write(p)
-      Materialized.recordBuild(key.takeWhile(_ != ':') + "_sharded",
-        (System.nanoTime() - t0) / 1e9)
-      p
-    })
 
   /** The SHARD-PARTITIONED inverted band index for `dir`
     * ([[Dedup.Scheme.writeIndex]] — the physical serving layout:
     * probes prune to one (band, shard) directory per band AT THE SCAN). */
   private def shardedBandIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"band_idx:$dir") { p =>
+    Artifacts.path(s"band_idx:$dir") { p =>
       Dedup.MinHash(numHashes = 32, bands = 8)
         .writeIndex(minhashSigIndex(s, dir), p)
     }
@@ -353,30 +294,30 @@ object QueriesExt {
   // count is a layout knob, not a semantic one.
   private def bandIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"band_idx_old:$dir") { p =>
+    Artifacts.path(s"band_idx_old:$dir") { p =>
       Dedup.MinHash(numHashes = 32, bands = 8)
         .writeIndex(minhashSigIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def chunkIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"chunk_idx_old:$dir") { p =>
+    Artifacts.path(s"chunk_idx_old:$dir") { p =>
       Dedup.SimHash(maxHamming = 3)
         .writeIndex(simhashFpIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def gramIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"gram_idx_old:$dir") { p =>
+    Artifacts.path(s"gram_idx_old:$dir") { p =>
       Dedup.writeShardedGramIndex(
         ngramGramIndex(s, dir).filter(col("id") % 2 === 0), p)
     }
   private def gramCensusOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"gram_census_old:$dir") { p =>
+    Artifacts.path(s"gram_census_old:$dir") { p =>
       Dedup.writeShardedGramCensus(ngramOldCensus(s, dir), p)
     }
   private def bucketIdxOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"bucket_idx_old:$dir") { p =>
+    Artifacts.path(s"bucket_idx_old:$dir") { p =>
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
         .filter(col("id") % 2 === 0)
@@ -386,7 +327,7 @@ object QueriesExt {
     }
   private def vecsOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"vecs_old:$dir") { p =>
+    Artifacts.path(s"vecs_old:$dir") { p =>
       Dedup.writeShardedVectors(t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
         .filter(col("id") % 2 === 0), p)
@@ -396,7 +337,7 @@ object QueriesExt {
   // one; chunkIdxOldPath above is the even-half ingest-side twin).
   private def chunkIdxAllPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"chunk_idx_all:$dir") { p =>
+    Artifacts.path(s"chunk_idx_all:$dir") { p =>
       Dedup.SimHash(maxHamming = 3).writeIndex(simhashFpIndex(s, dir), p)
     }
 
@@ -406,7 +347,7 @@ object QueriesExt {
   // Similarity.lshTopKSharded reads.
   private def lshBucketIdxPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"lsh_bucket_idx:$dir") { p =>
+    Artifacts.path(s"lsh_bucket_idx:$dir") { p =>
       Dedup.writeShardedBucketIndex(
         Dedup.embeddingBucketTable(
           t(s, dir, "embeddings")
@@ -416,20 +357,20 @@ object QueriesExt {
     }
   private def vecsAllPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"vecs_all:$dir") { p =>
+    Artifacts.path(s"vecs_all:$dir") { p =>
       Dedup.writeShardedVectors(t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding")), p)
     }
 
   private def labelsOldPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"labels_old:$dir") { p =>
+    Artifacts.path(s"labels_old:$dir") { p =>
       Dedup.writeShardedLabels(ccOldLabels(s, dir), s"$p/by_id",
         s"$p/by_comp", "doc_id", shards = 16)
     }
   private def adjacencyPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"minhash_adj:$dir") { p =>
+    Artifacts.path(s"minhash_adj:$dir") { p =>
       Dedup.writeShardedAdjacency(minhashPairsPortable(s, dir), p,
         scoreCol = "est_jaccard", shards = 16)
     }
@@ -449,7 +390,7 @@ object QueriesExt {
     * regardless of the batch split — exactly q_upsert_latest's oracle. */
   private def upsertStorePath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    shardedArtifact(s"upsert_store:$dir") { p =>
+    Artifacts.path(s"upsert_store:$dir") { p =>
       import graft.streaming.ShardedUpsertSink
       val shards = 8
       val ev = t(s, dir, "events")
@@ -473,7 +414,7 @@ object QueriesExt {
     * slice-sized work). */
   private def ngramOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"ngram_old_pairs:$dir") {
+    Artifacts.frame(s, s"ngram_old_pairs:$dir") {
       val gOld = ngramGramIndex(s, dir).filter(col("id") % 2 === 0)
       Dedup.ngramJaccardPairsFromGrams(gOld, threshold = 0.1,
         maxDf = Dedup.scaledCap(1000, nRows(s, dir, "documents")))
@@ -481,7 +422,7 @@ object QueriesExt {
 
   private def ngramOldCensus(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"ngram_old_census:$dir") {
+    Artifacts.frame(s, s"ngram_old_census:$dir") {
       Dedup.ngramGramCensus(
         ngramGramIndex(s, dir).filter(col("id") % 2 === 0))
     }
@@ -497,21 +438,21 @@ object QueriesExt {
     * oracles. */
   private def minhashOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"minhash_old_pairs:$dir") {
+    Artifacts.frame(s, s"minhash_old_pairs:$dir") {
       Dedup.MinHash(numHashes = 32, bands = 8, threshold = 0.5)
         .pairs(minhashSigIndex(s, dir).filter(col("id") % 2 === 0))
     }
 
   private def simhashOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"simhash_old_pairs:$dir") {
+    Artifacts.frame(s, s"simhash_old_pairs:$dir") {
       Dedup.SimHash(maxHamming = 3)
         .pairs(simhashFpIndex(s, dir).filter(col("id") % 2 === 0))
     }
 
   private def embeddingOldPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"embedding_old_pairs:$dir") {
+    Artifacts.frame(s, s"embedding_old_pairs:$dir") {
       // bucket(vec) depends only on the vector and the fixed hyperplane
       // family, so sketching the even slice directly equals filtering a
       // whole-corpus bucket table to even ids
@@ -530,7 +471,7 @@ object QueriesExt {
     * historical pairs. */
   private def ccOldLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"cc_old_labels:$dir") {
+    Artifacts.frame(s, s"cc_old_labels:$dir") {
       val gOld = ngramGramIndex(s, dir).filter(col("id") % 2 === 0)
       val cap = Dedup.scaledCap(1000, nRows(s, dir, "documents"))
       Dedup.assignComponents(
@@ -546,7 +487,7 @@ object QueriesExt {
     * join instead of a fresh corpus-wide count/window per query. */
   private def ngramCensusIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Materialized(s, s"ngram_census:$dir") {
+    Artifacts.frame(s, s"ngram_census:$dir") {
       Dedup.ngramGramCensus(ngramGramIndex(s, dir))
     }
 
@@ -1598,7 +1539,7 @@ object QueriesExt {
         val cap = Dedup.scaledCap(1000, nRows(s, dir, "documents"))
         val gOld = grams.filter(col("id") % 2 === 0)
         val gNew = grams.filter(col("id") % 2 =!= 0)
-        // Yesterday's LABELS are a persisted artifact (Materialized —
+        // Yesterday's LABELS are a persisted artifact (an Artifacts frame —
         // the real ingest posture: the query READS the labeling, it
         // does not re-run CC over the historical pairs), so the query
         // body is exactly the ingest path: delta pairs + star-edge
@@ -1797,7 +1738,7 @@ object QueriesExt {
     // semantics, so hash equality certifies pair weighting, the
     // deterministic tie-break, AND the merge-application law per round.
     QueryCase("q_bpe_merges",
-      (s, dir) => Materialized(s, s"bpe_merges:$dir") {
+      (s, dir) => Artifacts.frame(s, s"bpe_merges:$dir") {
         graft.ext.Bpe.induceMerges(t(s, dir, "documents"), "text",
           rounds = 8)
       },
@@ -1811,10 +1752,10 @@ object QueriesExt {
     QueryCase("q_bpe_segment",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        // the induction artifact is shared with q_bpe_merges (Materialized
-        // — same 100 TB shape as the minhash pairs table: induce once,
+        // the induction artifact is shared with q_bpe_merges (an Artifacts
+        // frame — same 100 TB shape as the minhash pairs table: induce once,
         // derive every downstream view from the artifact)
-        val merges = Materialized(s, s"bpe_merges:$dir") {
+        val merges = Artifacts.frame(s, s"bpe_merges:$dir") {
             graft.ext.Bpe.induceMerges(docs, "text", rounds = 8)
           }.orderBy("rank").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1890,7 +1831,7 @@ object QueriesExt {
     QueryCase("q_bpe_fertility",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val merges = Materialized(s, s"bpe_merges:$dir") {
+        val merges = Artifacts.frame(s, s"bpe_merges:$dir") {
             graft.ext.Bpe.induceMerges(docs, "text", rounds = 8)
           }.orderBy("rank").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -3482,9 +3423,9 @@ object QueriesExt {
     QueryCase("q_span_incremental",
       (s, dir) => {
         val docs = Dedup.parallelize(t(s, dir, "documents"))
-        // r19: yesterday's partial census is READ (Materialized — the
+        // r19: yesterday's partial census is READ (an Artifacts frame, the
         // ngramOldPairs posture); only today's half is censused per run.
-        val oldCensus = Materialized(s, s"span_census_old:$dir") {
+        val oldCensus = Artifacts.frame(s, s"span_census_old:$dir") {
           Spans.spanCensus(docs.filter(col("doc_id") % 2 === 0),
             "text", "doc_id", 8)
         }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.WarcFixtures
+import graft.ops.Artifacts
 import graft.sources.Warc
 
 /** WARC/WET ingestion queries: the crawl-archive source tier
@@ -23,25 +24,21 @@ object QueriesWarc {
   private[graft] final case class Fixture(gz: String, plain: String,
       responses: String, media: String, damaged: String)
 
-  private val fixtures =
-    scala.collection.concurrent.TrieMap[String, Fixture]()
-
-  private[graft] def fixture(s: SparkSession, dir: String): Fixture =
-    fixtures.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_wet_").toString
-      WarcFixtures.writeWetShards(s, dir, s"$base/gz", shards = 4,
+  private[graft] def fixture(s: SparkSession, dir: String): Fixture = {
+    val base = Artifacts.path(s"wet:$dir") { out =>
+      WarcFixtures.writeWetShards(s, dir, s"$out/gz", shards = 4,
         gzip = true)
-      WarcFixtures.writeWetShards(s, dir, s"$base/plain", shards = 2,
+      WarcFixtures.writeWetShards(s, dir, s"$out/plain", shards = 2,
         gzip = false)
-      WarcFixtures.writeResponseShards(s, dir, s"$base/responses",
+      WarcFixtures.writeResponseShards(s, dir, s"$out/responses",
         shards = 3)
-      WarcFixtures.writeMediaShards(s, dir, s"$base/media", shards = 3)
-      WarcFixtures.writeDamagedShards(s, dir, s"$base/damaged",
+      WarcFixtures.writeMediaShards(s, dir, s"$out/media", shards = 3)
+      WarcFixtures.writeDamagedShards(s, dir, s"$out/damaged",
         shards = 3)
-      Fixture(s"$base/gz", s"$base/plain", s"$base/responses",
-        s"$base/media", s"$base/damaged")
-    })
+    }
+    Fixture(s"$base/gz", s"$base/plain", s"$base/responses",
+      s"$base/media", s"$base/damaged")
+  }
 
   /** doc_id back out of the fixture URL (`.../docs/<id>?...`). */
   private def docId = regexp_extract(col("url"), "/docs/(\\d+)\\?", 1)
@@ -334,53 +331,31 @@ object QueriesWarc {
         |FROM documents""".stripMargin))
   )
 
-  /** Export-once cache for the frame-indexed single-shard fixture. */
-  private val zstSplitFixtures =
-    scala.collection.concurrent.TrieMap[String, String]()
+  /** The `documents` columns every zstd JSONL export writes. */
+  private def zstDocs(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents").select("doc_id", "source", "text", "n_chars")
 
+  /** The frame-indexed single-shard export: ONE shard, because the
+    * splittable path is the point. */
   private def zstSplitFixture(s: SparkSession, dir: String): String =
-    zstSplitFixtures.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_zsts_").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "source", "text", "n_chars")
-        .coalesce(1) // ONE shard: the splittable path is the point
-      graft.sources.CompressedText.writeJsonlZstdShards(docs, out,
-        frameBytes = 32L << 10)
-      out
-    })
+    Artifacts.path(s"zst_split:$dir") { out =>
+      graft.sources.CompressedText.writeJsonlZstdShards(
+        zstDocs(s, dir).coalesce(1), out, frameBytes = 32L << 10)
+    }
 
-  /** Export-once cache for the PUBLIC-seekable-format single-shard
-    * fixture: seek table in the file tail, NO sidecar — the foreign
-    * corpus shape. */
-  private val zstSeekableFixtures =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+  /** The PUBLIC-seekable-format single-shard export: seek table in the
+    * file tail, NO sidecar — the foreign corpus shape. */
   private def zstSeekableFixture(s: SparkSession, dir: String): String =
-    zstSeekableFixtures.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_zstk_").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "source", "text", "n_chars")
-        .coalesce(1)
-      graft.sources.CompressedText.writeJsonlZstdShards(docs, out,
-        frameBytes = 32L << 10, sidecarIndex = false,
-        seekableFooter = true)
-      out
-    })
+    Artifacts.path(s"zst_seekable:$dir") { out =>
+      graft.sources.CompressedText.writeJsonlZstdShards(
+        zstDocs(s, dir).coalesce(1), out, frameBytes = 32L << 10,
+        sidecarIndex = false, seekableFooter = true)
+    }
 
-  /** Export-once cache for the zstd fixture (3 shards per sf dir). */
-  private val zstFixtures =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+  /** The zstd export, 3 shards. */
   private def zstFixture(s: SparkSession, dir: String): String =
-    zstFixtures.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_zst_").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "source", "text", "n_chars")
-        .repartitionByRange(3, col("doc_id"))
-      graft.sources.CompressedText.writeJsonlZstdShards(docs, out)
-      out
-    })
+    Artifacts.path(s"zst:$dir") { out =>
+      graft.sources.CompressedText.writeJsonlZstdShards(
+        zstDocs(s, dir).repartitionByRange(3, col("doc_id")), out)
+    }
 }

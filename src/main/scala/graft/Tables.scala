@@ -27,34 +27,22 @@ object Tables {
   private val nanosCols: Map[String, Seq[String]] = Map(
     "events" -> Seq("ts"))
 
-  // Memoized per (session, dir, table): `spark.read.parquet` pays a fresh
-  // file listing + footer schema read on EVERY call, and the bench builds
-  // each of 188 query plans 2-3 times — all over the same ten immutable
-  // fixture files. Reusing the analyzed DataFrame (immutable, so sharing
-  // is safe) keeps one InMemoryFileIndex per table per session: a pure
-  // driver-side fixed-cost cut, no change to any plan shape (r20 tail
-  // cut; the 100 TB analog is the filesourcePartitionFileCacheSize
-  // listing cache, guide §6). Weak keys: sessions come and go in tests.
-  private val dfCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]())
-
+  // Memoized per (session, dir, table) through [[graft.sources.Pq]]:
+  // `spark.read.parquet` pays a fresh file listing + footer schema read
+  // on EVERY call, and the bench builds each of 188 query plans 2-3
+  // times over the same ten immutable fixture files. Reusing the
+  // analyzed DataFrame keeps one InMemoryFileIndex per table per
+  // session, with no change to any plan shape. The "table" view keeps
+  // the normalized frame apart from `Pq.read`'s raw one.
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val perSession = dfCache.synchronized {
-      var m = dfCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        dfCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(s"$sfDir/$name", load(spark, sfDir, name))
+    val path = s"$sfDir/$name.parquet"
+    graft.sources.Pq.memo(spark, path, "table")(load(spark, path, name))
   }
 
-  private def load(spark: SparkSession, sfDir: String,
+  private def load(spark: SparkSession, path: String,
       name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = spark.read.parquet(path)
     nanosCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.schema(c).dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.collection.concurrent.TrieMap
+
 /** Memoized `spark.read.parquet` for persisted artifact paths.
   *
   * Every `read.parquet(path)` call pays a fresh driver-side file listing
@@ -23,18 +25,26 @@ object Pq {
 
   private val cache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]())
+      TrieMap[(String, String), DataFrame]]())
 
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String): DataFrame =
+    memo(spark, path, "parquet")(spark.read.parquet(path))
+
+  /** `load`'s frame over `path`, once per session and `view`: a reader
+    * that derives its own frame from `path` (a normalized fixture table)
+    * memoizes it here under its own view, so [[invalidate]] covers it and
+    * [[read]] of the same path still returns the raw parquet frame. */
+  def memo(spark: SparkSession, path: String, view: String)(
+      load: => DataFrame): DataFrame = {
     val perSession = cache.synchronized {
       var m = cache.get(spark)
       if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        m = TrieMap.empty[(String, String), DataFrame]
         cache.put(spark, m)
       }
       m
     }
-    perSession.getOrElseUpdate(path, spark.read.parquet(path))
+    perSession.getOrElseUpdate((path, view), load)
   }
 
   /** Drop every memo at or under `path` (and any memoized parent whose
@@ -49,7 +59,7 @@ object Pq {
       val it = cache.values().iterator()
       while (it.hasNext) {
         val m = it.next()
-        m.keys.filter(stale).foreach(m.remove)
+        m.keys.filter(k => stale(k._1)).foreach(m.remove)
       }
     }
     ParquetMeta.invalidate(stale)

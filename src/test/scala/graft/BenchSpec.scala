@@ -12,6 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * real bytes so a future driver format change fails loudly. */
 class BenchSpec extends AnyFunSuite {
 
+  // every fixture history line carries this host's shape, as Bench
+  // stamps it; only such lines are comparable
+  private val host = Bench.hostTag
+  private val escapedHost = host.replace("\"", "\\\"")
+
   private def read(name: String): String =
     java.nio.file.Files.readString(java.nio.file.Paths.get(s"/root/repo/$name"))
 
@@ -65,10 +70,10 @@ class BenchSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), txt)
     // Truncated round file (escaped-tail shape) + a full history line.
     write("BENCH_r03.json",
-      """{"n":3,"tail":"\"queries\":{\"q_x\":2.00},\"sf\":\"/data/sf0.1\""}""")
+      raw"""{"n":3,"tail":"\"queries\":{\"q_x\":2.00},$escapedHost,\"sf\":\"/data/sf0.1\""}""")
     write("BENCH_HISTORY.jsonl",
-      """{"queries":{"q_x":1.00,"q_y":0.50},"sf":"/data/sf0.1"}""" + "\n" +
-      """{"queries":{"q_x":9.99},"sf":"/data/sf0.01"}""" + "\n")
+      s"""{"queries":{"q_x":1.00,"q_y":0.50},$host,"sf":"/data/sf0.1"}""" + "\n" +
+      s"""{"queries":{"q_x":9.99},$host,"sf":"/data/sf0.01"}""" + "\n")
     val (src, times) = Bench.prevTimes("/data/sf0.1", dir)
     assert(src == "BENCH_HISTORY.jsonl")
     assert(times == Map("q_x" -> 1.0, "q_y" -> 0.5)) // NOT the sf0.01 line
@@ -90,10 +95,10 @@ class BenchSpec extends AnyFunSuite {
       // pre-anchor line (no anchor_med), then anchored lines at two
       // sfs — the matching-sf MINIMUM (best-observed host) must win,
       // NOT the latest (which may have run under load)
-      """{"queries":{"q_x":1.0},"sf":"/data/sf0.1"}""" + "\n" +
-      """{"anchor_med":0.42,"sf":"/data/sf0.1"}""" + "\n" +
-      """{"anchor_med":9.90,"sf":"/data/sf0.01"}""" + "\n" +
-      """{"anchor_med":0.57,"sf":"/data/sf0.1"}""" + "\n")
+      s"""{"queries":{"q_x":1.0},$host,"sf":"/data/sf0.1"}""" + "\n" +
+      s"""{"anchor_med":0.42,$host,"sf":"/data/sf0.1"}""" + "\n" +
+      s"""{"anchor_med":9.90,$host,"sf":"/data/sf0.01"}""" + "\n" +
+      s"""{"anchor_med":0.57,$host,"sf":"/data/sf0.1"}""" + "\n")
     assert(Bench.prevAnchorMed("/data/sf0.1", dir).contains(0.42))
     assert(Bench.prevAnchorMed("/data/sf0.01", dir).contains(9.90))
     assert(Bench.prevAnchorMed("/data/sf9", dir).isEmpty)
@@ -102,8 +107,31 @@ class BenchSpec extends AnyFunSuite {
     // denominator — 0.10 is discarded, the best PLAUSIBLE anchor wins.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/BENCH_HISTORY.jsonl"),
-      """{"anchor_med":0.10,"sf":"/data/sf0.1"}""" + "\n",
+      s"""{"anchor_med":0.10,$host,"sf":"/data/sf0.1"}""" + "\n",
       java.nio.file.StandardOpenOption.APPEND)
     assert(Bench.prevAnchorMed("/data/sf0.1", dir).contains(0.42))
+  }
+
+  test("history from another host shape or with no host block is skipped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_").toString
+    val hist = java.nio.file.Paths.get(s"$dir/BENCH_HISTORY.jsonl")
+    val other = """"host":{"cpus":9999,"heap_mb":1}"""
+    val comparable =
+      s"""{"queries":{"q_x":1.00},"anchor_med":0.40,$host,"sf":"/data/sf0.1"}"""
+    val foreign = Seq(
+      s"""{"queries":{"q_x":7.00},"anchor_med":0.20,$other,"sf":"/data/sf0.1"}""",
+      """{"queries":{"q_x":8.00},"anchor_med":0.30,"sf":"/data/sf0.1"}""")
+    java.nio.file.Files.writeString(hist,
+      (comparable +: foreign).mkString("", "\n", "\n"))
+    // the later, faster foreign lines are neither the baseline nor the
+    // drift denominator
+    assert(Bench.prevTimes("/data/sf0.1", dir) ==
+      ("BENCH_HISTORY.jsonl" -> Map("q_x" -> 1.0)))
+    assert(Bench.prevAnchorMed("/data/sf0.1", dir).contains(0.40))
+    java.nio.file.Files.writeString(hist, foreign.mkString("", "\n", "\n"))
+    assert(Bench.prevTimes("/data/sf0.1", dir) == ("" -> Map.empty))
+    assert(Bench.prevAnchorMed("/data/sf0.1", dir).isEmpty)
+    // the other host's own runs still find their line
+    assert(Bench.prevTimes("/data/sf0.1", dir, other)._2 == Map("q_x" -> 7.0))
   }
 }
