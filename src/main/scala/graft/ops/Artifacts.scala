@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ShutdownShim
 
 /** The JVM-wide catalog of build-once corpus artifacts: the only owner
   * of artifact directories.
@@ -14,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Entries are write-once per JVM, so nothing memoized over them goes
   * stale. A key whose build throws is not recorded; the next use
-  * rebuilds it in a new directory.
+  * rebuilds it in a new directory. Every directory is registered for
+  * deletion when it is created, and Spark's shutdown hook deletes it at
+  * JVM exit: artifacts live as long as the JVM that built them.
   */
 object Artifacts {
 
@@ -28,6 +31,7 @@ object Artifacts {
       val t0 = System.nanoTime()
       val dir = java.nio.file.Files.createTempDirectory(
         "graft_" + key.takeWhile(_ != ':') + "_").toString
+      ShutdownShim.deleteAtExit(dir)
       write(dir)
       secs(key) = (System.nanoTime() - t0) / 1e9
       dir

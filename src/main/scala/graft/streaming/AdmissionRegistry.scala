@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
@@ -280,17 +281,19 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * commits manifest `batchId` = the earlier runs plus this one, so a
     * replayed batch replaces its earlier (possibly partial) append.
     *
-    * SMALL batches take a DRIVER-WRITTEN fast path: a micro-batch
-    * append is ≤ |batch| × bands fixed-width rows, and the job path's
-    * shuffle + dynamic-partition commit protocol cost ~320 ms of a 1.55 s
-    * trigger for ~130 rows (`Run crawl-arrival`'s per-phase split). When
-    * every payload column is int32/int64 and the rows collect under
+    * SMALL batches commit through [[Manifest]]'s small-commit path, the
+    * one the upsert store's small merges take: a micro-batch append is
+    * ≤ |batch| × bands fixed-width rows, and the job path's shuffle +
+    * dynamic-partition commit protocol cost ~320 ms of a 1.55 s trigger
+    * for ~130 rows (`Run crawl-arrival`'s per-phase split). When every
+    * payload column is int32/int64 (so the row cap bounds the bytes the
+    * driver receives) and the rows collect under
     * [[AdmissionRegistry.smallAppendCap]] (ONE bounded job — the limit
     * stops the scan), they are bucketed by the SAME pmod(xxhash64) shard
     * function evaluated driver-side ([[graft.ext.Sharded.driverShard]])
-    * and written as one plain parquet file per touched shard — no
-    * shuffle, no committer, same layout, same commit. Larger batches and
-    * non-fixed-width families (embedding vectors) take the job path —
+    * and written by [[Manifest.writeLocal]], one file per touched shard —
+    * no shuffle, no committer, same layout, same commit. Larger batches
+    * and non-fixed-width families (embedding vectors) take the job path —
     * at that size the job overhead is amortized anyway. */
   def append(rows: DataFrame, batchId: Long): Unit = {
     val spark = rows.sparkSession
@@ -307,7 +310,7 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
         if (taken.length > cap) None else Some(taken)
       }
     fast match {
-      case Some(collected) => appendDriver(spark, dir, collected)
+      case Some(collected) => writeLocal(spark, dir, collected)
       case None =>
         ordered.withColumn("shard", shardExpr(shards))
           .repartition(col("shard"))
@@ -323,8 +326,8 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     Manifest.commit(spark, stateDir, Version(batchId, shards,
       runs(spark, batchId) :+ runEntry(spark, dir, shards)))
 
-  /** Whether every payload column is a fixed-width primitive the
-    * driver writer handles. */
+  /** Whether every payload column is a fixed-width primitive, so that
+    * [[AdmissionRegistry.smallAppendCap]] rows bound the driver's bytes. */
   private val allFixedWidth = schema.fields.forall(f =>
     f.dataType == IntegerType || f.dataType == LongType)
 
@@ -360,26 +363,19 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * registry rows. Same layout, same commit as the job path. */
   private[streaming] def appendCollected(spark: SparkSession,
       rows: Array[Row], batchId: Long): Unit = {
-    appendDriver(spark, s"v=$batchId", if (distinctRows) rows.distinct else rows)
+    writeLocal(spark, s"v=$batchId", if (distinctRows) rows.distinct else rows)
     commitRun(spark, batchId, s"v=$batchId")
   }
 
-  /** One parquet file per touched shard of run `dir`, written with a
-    * plain [[org.apache.parquet.hadoop.ParquetWriter]] on the driver. */
-  private def appendDriver(spark: SparkSession, dir: String,
+  /** Run `dir` as one parquet file per touched shard of `rows`, through
+    * [[Manifest.writeLocal]]. */
+  private def writeLocal(spark: SparkSession, dir: String,
       rows: Array[Row]): Unit = {
-    val f = Manifest.fs(spark, stateDir)
-    val path = new Path(stateDir, dir)
-    f.delete(path, true)
-    f.mkdirs(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val shardOf = (r: Row) =>
-      Sharded.driverShard(keyLiterals(shardColIdx.map(r.get)), shards)
-    rows.groupBy(shardOf).foreach { case (s, rs) =>
-      val file = new Path(path, s"shard=$s/part-00000.parquet")
-      val w = AdmissionRegistry.rowParquetWriter(file, schema, conf)
-      try rs.foreach(w.write) finally w.close()
-    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    Manifest.writeLocal(spark, stateDir, dir, schema, rows.groupBy(r =>
+        Sharded.driverShard(keyLiterals(shardColIdx.map(r.get)), shards))
+      .map { case (s, rs) =>
+        s -> rs.toSeq.map(toCatalyst(_).asInstanceOf[InternalRow]) })
   }
 
   /** Scheduled TIERED compaction driven by the stream's committed
@@ -643,68 +639,6 @@ object AdmissionRegistry {
       withFixedPlans(batch.sparkSession) {
         forward(admit(batch, batchId), batchId)
       }
-  }
-
-  /** Minimal parquet [[org.apache.parquet.hadoop.api.WriteSupport]]
-    * for int32/int64-only registry payloads (the driver fast path of
-    * [[AdmissionRegistry.append]]). Column stats are written as usual
-    * — the run's write-time footer walk reads them exactly like
-    * job-written files. */
-  private final class RowWriteSupport(schema: StructType)
-      extends org.apache.parquet.hadoop.api.WriteSupport[Row] {
-    import org.apache.parquet.schema.{PrimitiveType, Type, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    private var consumer: org.apache.parquet.io.api.RecordConsumer = _
-    private val message = {
-      val b = Types.buildMessage()
-      schema.fields.foreach { f =>
-        val tn = f.dataType match {
-          case IntegerType => PrimitiveTypeName.INT32
-          case LongType => PrimitiveTypeName.INT64
-          case other => throw new IllegalArgumentException(
-            s"driver append supports fixed-width columns only, got $other")
-        }
-        b.addField(new PrimitiveType(Type.Repetition.OPTIONAL, tn, f.name))
-      }
-      b.named("graft_registry")
-    }
-    override def init(conf: org.apache.hadoop.conf.Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport.WriteContext =
-      new org.apache.parquet.hadoop.api.WriteSupport.WriteContext(
-        message, java.util.Collections.emptyMap[String, String]())
-    override def prepareForWrite(
-        rc: org.apache.parquet.io.api.RecordConsumer): Unit =
-      consumer = rc
-    override def write(r: Row): Unit = {
-      consumer.startMessage()
-      var i = 0
-      while (i < schema.fields.length) {
-        if (!r.isNullAt(i)) {
-          val f = schema.fields(i)
-          consumer.startField(f.name, i)
-          f.dataType match {
-            case IntegerType => consumer.addInteger(r.getInt(i))
-            case _ => consumer.addLong(r.getLong(i))
-          }
-          consumer.endField(f.name, i)
-        }
-        i += 1
-      }
-      consumer.endMessage()
-    }
-  }
-
-  private[streaming] def rowParquetWriter(file: Path, schema: StructType,
-      conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.parquet.hadoop.ParquetWriter[Row] = {
-    import org.apache.parquet.hadoop.ParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    new ParquetWriter[Row](file, new RowWriteSupport(schema),
-      CompressionCodecName.SNAPPY, ParquetWriter.DEFAULT_BLOCK_SIZE,
-      ParquetWriter.DEFAULT_PAGE_SIZE, ParquetWriter.DEFAULT_PAGE_SIZE,
-      ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
-      ParquetWriter.DEFAULT_IS_VALIDATING_ENABLED,
-      ParquetWriter.DEFAULT_WRITER_VERSION, conf)
   }
 
   /** Run `body`'s actions under non-adaptive execution (saved and

@@ -1,11 +1,21 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
 
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The one commit protocol of the engine's streaming state. The keyed
@@ -44,6 +54,14 @@ import org.apache.spark.sql.types.StructType
   *     shard set and the owning versions stay out of the plan and its
   *     generated code, the file index lists only what is read, and no
   *     schema is inferred with a job.
+  *   - **Small commits.** A write that fits one advisory partition
+  *     ([[smallBytes]]) may skip the job: [[writeLocal]] writes its
+  *     shards on the driver through Spark's own parquet write support,
+  *     and [[readLocal]] reads a one-shard entry back the same way. The
+  *     files are what a job writes (encoding, compression, the
+  *     `org.apache.spark.sql.parquet.row.metadata` footer), so every
+  *     read, footer walk and later job-form merge treats them alike.
+  *     Both stores commit small writes through this one path.
   */
 private[graft] object Manifest {
 
@@ -190,6 +208,81 @@ private[graft] object Manifest {
     if (paths.isEmpty) None
     else Some(spark.read.option("recursiveFileLookup", "true").schema(schema)
       .parquet(paths.map(p => s"$base/$p"): _*))
+  }
+
+  /** The size rule of the small-commit path and of the one-partition
+    * view read: `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
+  def smallBytes(spark: SparkSession): Long =
+    spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** The small-commit writer: `dir` replaced by one parquet file per
+    * shard of `rows` (shard → rows of `schema`), written on the driver
+    * through Spark's parquet write support. `dir` is cleared first, as a
+    * job's overwrite clears it, so a replay leaves no file of an earlier
+    * attempt; the file name carries a fresh UUID per write, so a replayed
+    * commit never lists a name an earlier attempt used. Returns the bytes
+    * written per shard. */
+  def writeLocal(spark: SparkSession, base: String, dir: String,
+      schema: StructType, rows: Map[Int, Iterable[InternalRow]])
+      : Map[Int, Long] = {
+    val f = fs(spark, base)
+    val root = new Path(base, dir)
+    f.delete(root, true)
+    f.mkdirs(root)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}.c000" +
+      factory.getFileExtension(ctx)
+    rows.map { case (s, rs) =>
+      val file = new Path(root, s"shard=$s/$name")
+      val w = factory.newInstance(file.toString, schema, ctx)
+      try rs.foreach(w.write) finally w.close()
+      s -> f.getFileStatus(file).getLen
+    }
+  }
+
+  /** The rows of the one-shard entry `e` as `schema`, read on the driver
+    * through Spark's parquet read support: the small-commit reader. Each
+    * row is an `UnsafeRow` copy. */
+  def readLocal(spark: SparkSession, base: String, e: Entry,
+      schema: StructType): Iterator[InternalRow] = {
+    val sql = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+        SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+        SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(c => conf.setBoolean(c.key, sql.getConf(c)))
+    val unsafe = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (c, i) =>
+        BoundReference(i, c.dataType, nullable = true) })
+    val files = fs(spark, base).listStatus(new Path(base, e.dir))
+      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
+        !s.getPath.getName.startsWith("_"))
+      .sortBy(_.getPath.getName)
+    files.iterator.flatMap { st =>
+      // dates and timestamps rebase as the file's writer asked, as a scan does
+      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val meta: String => String =
+        try footer.getFooter.getFileMetaData.getKeyValueMetaData.get
+        finally footer.close()
+      val r = ParquetReader.builder(new ParquetReadSupport(None,
+          enableVectorizedReader = false,
+          DataSourceUtils.datetimeRebaseSpec(meta,
+            sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString),
+          DataSourceUtils.int96RebaseSpec(meta,
+            sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)),
+          st.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null)
+        .map(unsafe(_).copy()).toVector
+      finally r.close()
+    }
   }
 
   /** Keep the newest [[Keep]] manifests at or below `upto` (and any

@@ -4,10 +4,12 @@ import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Descending, InterpretedOrdering, InterpretedUnsafeProjection, SortOrder, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 
 import graft.ext.Sharded
 import graft.ops.Upsert
@@ -30,10 +32,18 @@ import graft.streaming.Manifest.{Entry, Version}
   * directory rewritten per merge, as [[Pipeline.maintainView]] starts
   * it); [[maybeReshard]] grows the modulus as the view grows.
   *
-  * A merge's Spark work is one job to collect the touched shards and
-  * one shuffle on `shard` under the write ([[mergeBatch]]); every read
-  * of the store carries the stored schema from one driver-side parquet
-  * footer, so no read infers a schema with a job of its own.
+  * A merge starts with ONE job, which computes the micro-batch and
+  * collects its touched shards, and its rows when they are small
+  * ([[mergeVia]]). A small merge (the rows, and the touched predecessor
+  * shards' manifest bytes, fit [[Manifest.smallBytes]]) then commits
+  * through [[Manifest]]'s small-commit path, the one the admission
+  * registry's appends take: the driver reads the touched shards, keeps
+  * the latest row per key and writes one file per touched shard. A
+  * dashboard trigger is then one Spark job, with no shuffle. A larger
+  * merge keeps the job form: one shuffle on `shard` under a partitioned
+  * write. Every read of the store carries the stored schema from one
+  * driver-side parquet footer, so no read infers a schema with a job of
+  * its own.
   *
   * Readers resolve the newest committed manifest ([[currentView]], no
   * Spark job) and scan its files; a view that fits one advisory
@@ -121,8 +131,8 @@ object ShardedUpsertSink {
   def currentView(spark: SparkSession, baseDir: String): Option[DataFrame] =
     Manifest.below(spark, baseDir, Long.MaxValue).flatMap { v =>
       readShards(spark, baseDir, v.entries, None).map { view =>
-        if (v.entries.map(_.bytes).sum <= spark.sessionState.conf
-            .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) view.coalesce(1)
+        if (v.entries.map(_.bytes).sum <= Manifest.smallBytes(spark))
+          view.coalesce(1)
         else view
       }
     }
@@ -177,7 +187,24 @@ object ShardedUpsertSink {
     * a batchId must be a no-op change to the committed chain). */
   def mergeBatch(spark: SparkSession, baseDir: String, keys: Seq[String],
       orderCols: Seq[String], shards: Int)(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Unit =
+    mergeVia(spark, baseDir, keys, orderCols, shards, None)(batch, batchId)
+
+  /** [[mergeBatch]] on a chosen form: Some(true) the driver form (where
+    * the keys allow it), Some(false) the job form, None the size rule
+    * decides. Specs pick a form here.
+    *
+    * Both forms start with the same job ([[touchedRows]]), which also
+    * computes the micro-batch; the batch stays persisted, so the job
+    * form never recomputes it. The driver form runs when that job
+    * returned the batch rows (at most [[Manifest.smallBytes]] of them)
+    * and the touched predecessor shards' manifest bytes fit the same
+    * size; its keep-latest order is the job form's. Keys holding a float
+    * or double take the job form: Spark groups them after normalizing
+    * NaN and -0.0, which a byte-equal driver key does not. */
+  private[graft] def mergeVia(spark: SparkSession, baseDir: String,
+      keys: Seq[String], orderCols: Seq[String], shards: Int,
+      driver: Option[Boolean])(batch: DataFrame, batchId: Long): Unit = {
     val prev = Manifest.below(spark, baseDir, batchId)
     val p = prev.fold(shards)(_.modulus) // the store's modulus wins
     val prevEntries = prev.fold(Seq.empty[Entry])(_.entries)
@@ -188,25 +215,18 @@ object ShardedUpsertSink {
       .withColumn("shard", shardExpr(keys, p))
       .persist()
     try {
-      val touched = touchedShards(tagged)
-      val unioned = readShards(spark, baseDir, prevEntries,
-          Some(touched)) match {
-        case Some(prev) =>
-          prev.withColumn("shard", shardExpr(keys, p)).unionByName(tagged)
-        case None => tagged
-      }
-      // keep-latest within the touched shards only, behind ONE exchange:
-      // the union is hashed by shard, and keep-latest runs per
-      // (shard +: keys) — the same groups as per key, because a key's
-      // shard is a pure function of the key (merge never moves rows
-      // across shards). Hash partitioning on shard already clusters
-      // those groups, so the window plans no exchange of its own, and
-      // its sort (shard first) is the order the partitioned write needs.
-      Upsert.keepLatestPerKey(unioned.repartition(col("shard")),
-          "shard" +: keys, orderCols :+ "__batch")
-        .write.partitionBy("shard")
-        .mode("overwrite").parquet(s"$baseDir/v=$batchId")
-      val written = Manifest.written(spark, baseDir, s"v=$batchId")
+      val small = Manifest.smallBytes(spark)
+      val cap =
+        if (keys.exists(k => floating(tagged.schema(k).dataType))) -1L
+        else driver.fold(small)(if (_) Long.MaxValue else -1L)
+      val (touched, rows) = touchedRows(tagged, cap)
+      val prevTouched = prevEntries.filter(e => touched(e.shard))
+      val written = rows
+        .filter(_ => driver.isDefined || prevTouched.map(_.bytes).sum <= small)
+        .flatMap(mergeLocal(spark, baseDir, keys, orderCols, tagged.schema,
+          prevTouched, _, batchId))
+        .getOrElse(mergeJob(spark, baseDir, keys, orderCols, p, prevTouched,
+          tagged, batchId))
       Manifest.commit(spark, baseDir, Version(batchId, p,
         (prevEntries.filterNot(e => touched(e.shard)) ++ touched.toSeq.map(s =>
           Entry(s"v=$batchId/shard=$s", p, written.getOrElse(s, 0L))))
@@ -214,14 +234,131 @@ object ShardedUpsertSink {
     } finally tagged.unpersist()
   }
 
-  /** The distinct `shard` values of `tagged`: deduplicated inside each
-    * partition, then on the driver — one job and no shuffle, where a
-    * `distinct()` would plan an exchange and a second job. */
-  private def touchedShards(tagged: DataFrame): Set[Int] = {
-    val s = tagged.sparkSession
-    import s.implicits._
-    tagged.select("shard").as[Int].mapPartitions(_.toSet.iterator)
-      .collect().toSet
+  private def nullable(s: StructType): StructType = {
+    def of(t: DataType): DataType = t match {
+      case s: StructType => nullable(s)
+      case a: ArrayType => ArrayType(of(a.elementType), containsNull = true)
+      case m: MapType => MapType(of(m.keyType), of(m.valueType),
+        valueContainsNull = true)
+      case o => o
+    }
+    StructType(s.fields.map(c => c.copy(dataType = of(c.dataType),
+      nullable = true)))
+  }
+
+  private def floating(t: DataType): Boolean = t match {
+    case FloatType | DoubleType => true
+    case s: StructType => s.fields.exists(f => floating(f.dataType))
+    case a: ArrayType => floating(a.elementType)
+    case m: MapType => floating(m.keyType) || floating(m.valueType)
+    case _ => false
+  }
+
+  /** The one job of a merge, over the persisted `tagged` batch: its
+    * distinct `shard` values, and its rows (`UnsafeRow` copies) when
+    * every partition's rows fit `cap / partitions` bytes — so the driver
+    * never receives more than `cap` bytes of rows. A negative `cap`
+    * returns no rows. No shuffle: shards are deduplicated inside each
+    * partition, then on the driver. */
+  private def touchedRows(tagged: DataFrame,
+      cap: Long): (Set[Int], Option[Array[InternalRow]]) = {
+    val qe = tagged.queryExecution
+    val schema = tagged.schema
+    val si = schema.fieldIndex("shard")
+    val parts = SQLExecution.withNewExecutionId(qe, Some("touchedRows")) {
+      val rdd = qe.toRdd
+      val share = if (cap < 0) -1L else cap / math.max(1, rdd.getNumPartitions)
+      rdd.mapPartitions { it =>
+        val unsafe = InterpretedUnsafeProjection.createProjection(
+          schema.fields.toSeq.zipWithIndex.map { case (c, i) =>
+            BoundReference(i, c.dataType, c.nullable) })
+        val shards = scala.collection.mutable.Set[Int]()
+        val rows = scala.collection.mutable.ArrayBuffer[InternalRow]()
+        var bytes = 0L
+        it.foreach { r =>
+          shards += r.getInt(si)
+          if (bytes <= share) {
+            val u = (r match {
+              case u: UnsafeRow => u
+              case o => unsafe(o)
+            }).copy()
+            bytes += u.getSizeInBytes
+            if (bytes <= share) rows += u else rows.clear()
+          }
+        }
+        Iterator((shards.toArray, if (bytes <= share) rows.toArray else null))
+      }.collect()
+    }
+    (parts.iterator.flatMap(_._1).toSet,
+      if (parts.forall(_._2 != null)) Some(parts.flatMap(_._2)) else None)
+  }
+
+  /** The job form: keep-latest over the touched predecessor shards and
+    * the batch behind ONE exchange, then a partitioned write. The union
+    * is hashed by shard, and keep-latest runs per (shard +: keys) — the
+    * same groups as per key, because a key's shard is a pure function of
+    * the key (merge never moves rows across shards). Hash partitioning
+    * on shard already clusters those groups, so the window plans no
+    * exchange of its own, and its sort (shard first) is the order the
+    * partitioned write needs. Returns the bytes written per shard. */
+  private def mergeJob(spark: SparkSession, baseDir: String,
+      keys: Seq[String], orderCols: Seq[String], p: Int,
+      prevTouched: Seq[Entry], tagged: DataFrame,
+      batchId: Long): Map[Int, Long] = {
+    val unioned = readShards(spark, baseDir, prevTouched, None) match {
+      case Some(prev) =>
+        prev.withColumn("shard", shardExpr(keys, p)).unionByName(tagged)
+      case None => tagged
+    }
+    Upsert.keepLatestPerKey(unioned.repartition(col("shard")),
+        "shard" +: keys, orderCols :+ "__batch")
+      .write.partitionBy("shard")
+      .mode("overwrite").parquet(s"$baseDir/v=$batchId")
+    Manifest.written(spark, baseDir, s"v=$batchId")
+  }
+
+  /** The driver form: the touched predecessor shards read on the driver
+    * ([[Manifest.readLocal]]), the latest row per key kept in memory
+    * under the job form's order (`orderCols` descending, nulls last,
+    * then the batch id), and one file written per touched shard
+    * ([[Manifest.writeLocal]]). None, and the job form runs, when the
+    * batch's columns differ from the stored ones by name or type. */
+  private def mergeLocal(spark: SparkSession, baseDir: String,
+      keys: Seq[String], orderCols: Seq[String], batchSchema: StructType,
+      prevTouched: Seq[Entry], rows: Array[InternalRow],
+      batchId: Long): Option[Map[Int, Long]] = {
+    val payload = StructType(batchSchema.filterNot(_.name == "shard"))
+    // the job form writes the batch's own schema, or its union with the
+    // predecessor as read, where a file scan makes every column nullable
+    val schema =
+      if (prevTouched.isEmpty) payload
+      else nullable(storedSchema(spark, baseDir, prevTouched))
+    def shape(s: StructType) =
+      s.fields.toSeq.map(c => c.name -> c.dataType.catalogString).sorted
+    if (shape(schema) != shape(payload)) None
+    else {
+      def at(s: StructType, c: String) =
+        BoundReference(s.fieldIndex(c), s(c).dataType, nullable = true)
+      val stored = InterpretedUnsafeProjection.createProjection(
+        schema.fieldNames.toSeq.map(at(batchSchema, _)))
+      val keyOf = InterpretedUnsafeProjection.createProjection(
+        keys.map(at(schema, _)))
+      val newer = new InterpretedOrdering(
+        (orderCols :+ "__batch").map(c => SortOrder(at(schema, c), Descending)))
+      val si = batchSchema.fieldIndex("shard")
+      val prevOf = prevTouched.map(e => e.shard -> e).toMap
+      Some(Manifest.writeLocal(spark, baseDir, s"v=$batchId", schema,
+        rows.groupBy(_.getInt(si)).map { case (s, batchRows) =>
+          val latest = scala.collection.mutable.LinkedHashMap[InternalRow, InternalRow]()
+          (prevOf.get(s).iterator
+              .flatMap(Manifest.readLocal(spark, baseDir, _, schema)) ++
+            batchRows.iterator.map(stored(_).copy())).foreach { r =>
+            val k = keyOf(r).copy()
+            if (latest.get(k).forall(newer.compare(r, _) < 0)) latest(k) = r
+          }
+          s -> latest.values
+        }))
+    }
   }
 
   /** OFFLINE maintenance: rewrite the newest committed version under a

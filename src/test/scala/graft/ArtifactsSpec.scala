@@ -87,4 +87,19 @@ class ArtifactsSpec extends AnyFunSuite with SparkTestSupport {
     assert(!(Tables(spark, dir, "events") eq table))
     assert(!(graft.sources.Pq.read(spark, path) eq raw))
   }
+
+  test("every directory the catalog built is deleted at JVM exit") {
+    Artifacts.path("spec_exit:/sf/a") { d =>
+      Files.writeString(Paths.get(d, "part"), "a")
+    }
+    Artifacts.frame(spark, "spec_exit_frame:/sf/a")(spark.range(3).toDF("id"))
+    // every built key, whichever spec built it: path returns its
+    // directory without building again
+    val dirs = Artifacts.buildSeconds.keySet.toSeq.map(k =>
+      Artifacts.path(k)(_ => fail(s"$k built again")))
+    assert(dirs.size >= 2)
+    val kept = dirs.filterNot(
+      org.apache.spark.sql.graftshim.ShutdownShim.deletedAtExit)
+    assert(kept.isEmpty, s"not registered for deletion at exit: $kept")
+  }
 }

@@ -22,7 +22,8 @@ import graft.ops.Serving
 import graft.streaming.ShardedUpsertSink
 
 /** Plan shapes of the live dashboard's path through the keyed serving
-  * store: a merge plans ONE shuffle, on `shard`, under its write and
+  * store: a small merge is ONE Spark job and writes on the driver; a
+  * job-form merge plans ONE shuffle, on `shard`, under its write and
   * infers no schema with a job of its own; a view resolution launches
   * no Spark job; over a view that fits one advisory partition each
   * serving query runs ONE job of one task with no exchange; and a
@@ -146,10 +147,10 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
     }
   }
 
-  test("a merge plans one exchange, on shard, and infers no schema with a job") {
-    val s = spark
-    import s.implicits._
-    val dir = store()
+  /** The jobs `body` launched and the file writes
+    * (`InsertIntoHadoopFsRelation`) it ran. */
+  private def jobsAndWrites(body: => Unit)
+      : (Seq[Properties], ConcurrentLinkedQueue[QueryExecution]) = {
     val writes = new ConcurrentLinkedQueue[QueryExecution]()
     val qel = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -159,12 +160,48 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(qel)
-    val (_, jobs) =
-      try jobsOf {
-        ShardedUpsertSink.mergeBatch(s, dir, keys, Nil, shards = 4)(
-          Seq(("g5", 2024, 2, 2, 5.0, 1L), ("g9", 2024, 3, 3, 9.0, 1L))
-            .toDF(keys :+ "A_value" :+ "T_reviews": _*), 2L)
-      } finally spark.listenerManager.unregister(qel)
+    try (jobsOf(body)._2, writes)
+    finally spark.listenerManager.unregister(qel)
+  }
+
+  /** A two-game update of the [[store]], as a dashboard trigger brings. */
+  private def update(): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq(("g5", 2024, 2, 2, 5.0, 1L), ("g9", 2024, 3, 3, 9.0, 1L))
+      .toDF(keys :+ "A_value" :+ "T_reviews": _*)
+  }
+
+  test("a small merge runs one Spark job and writes through no job") {
+    val dir = store()
+    val (jobs, writes) = jobsAndWrites {
+      ShardedUpsertSink.mergeBatch(spark, dir, keys, Nil, shards = 4)(
+        update(), 2L)
+    }
+    assert(jobs.size == 1, s"a small merge ran ${jobs.size} jobs")
+    assert(jobs.head.getProperty("spark.sql.execution.id") != null)
+    assert(writes.isEmpty, s"${writes.size} writes")
+    assert(ShardedUpsertSink.currentView(spark, dir).get.count() == 41)
+  }
+
+  test("a merge above the advisory size takes the job form") {
+    val dir = store()
+    val (jobs, writes) = withAdvisory("1") {
+      jobsAndWrites {
+        ShardedUpsertSink.mergeBatch(spark, dir, keys, Nil, shards = 4)(
+          update(), 2L)
+      }
+    }
+    assert(writes.size == 1 && jobs.size > 1, s"${jobs.size} jobs")
+    assert(ShardedUpsertSink.currentView(spark, dir).get.count() == 41)
+  }
+
+  test("a merge plans one exchange, on shard, and infers no schema with a job") {
+    val dir = store()
+    val (jobs, writes) = jobsAndWrites {
+      ShardedUpsertSink.mergeVia(spark, dir, keys, Nil, shards = 4,
+        driver = Some(false))(update(), 2L)
+    }
     // a schema-inference job runs outside any SQL execution
     val outside = jobs.filter(_.getProperty("spark.sql.execution.id") == null)
     assert(outside.isEmpty, s"${outside.size} job(s) outside a SQL execution")
@@ -189,7 +226,8 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
     // relation would be folded on the driver
     val dir = store()
     def merge(id: Long): Unit =
-      ShardedUpsertSink.mergeBatch(spark, dir, keys, Nil, shards = 4)(
+      ShardedUpsertSink.mergeVia(spark, dir, keys, Nil, shards = 4,
+          driver = Some(false))(
         spark.range(40).select(
           concat(lit("g"), (col("id") % 8).cast("string")).as("app_name"),
           lit(2024).as("time_year"),

@@ -507,4 +507,143 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       assert(viewMap(base) == Map("a" -> 2.0, "b" -> 10.0, "c" -> 30.0))
     } finally q.stop()
   }
+
+  /** Spark's own record of the stored schema: the row metadata in the
+    * footer of one data file of `dir`'s newest version. */
+  private def footerSchema(dir: String): String = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val v = ShardedUpsertSink.versions(spark, dir).last
+    val file = new java.io.File(s"$dir/v=$v").listFiles()
+      .filter(_.getName.startsWith("shard=")).flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet")).head
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toString),
+      spark.sessionState.newHadoopConf()))
+    try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally r.close()
+  }
+
+  /** The Spark jobs `body` launched: a listener counts the jobs of a
+    * thread-local tag, and a sentinel job flushes its ordered queue. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"shup-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("graft.test.tag")) match {
+          case Some(t) if t == tag => jobs.incrementAndGet()
+          case Some(t) if t == s"$tag-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      try body finally sc.setLocalProperty("graft.test.tag", s"$tag-flush")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.tag", null)
+      assert(flushed.await(20, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Merges `batches` into one store per form, and after every merge
+    * asserts identical views, stored schemas and manifests (modulus and
+    * entry dirs). The driver form runs one job, the job form more:
+    * proof that each store took its form. */
+  private def bothForms(keys: Seq[String], orderCols: Seq[String],
+      shards: Int, batches: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    val dirs = Seq(true, false).map(d =>
+      d -> Files.createTempDirectory(s"graft-shup-form-$d").toString).toMap
+    batches.zipWithIndex.foreach { case (b, i) =>
+      dirs.foreach { case (d, dir) =>
+        val jobs = jobsOf(ShardedUpsertSink.mergeVia(spark, dir, keys,
+          orderCols, shards, Some(d))(b, i.toLong))
+        assert((jobs == 1) == d, s"merge $i ran $jobs jobs (driver form: $d)")
+      }
+      def rows(dir: String) = ShardedUpsertSink.currentView(spark, dir).get
+        .collect().map(_.toString).sorted.toSeq
+      assert(rows(dirs(true)) == rows(dirs(false)), s"merge $i")
+      assert(footerSchema(dirs(true)) == footerSchema(dirs(false)))
+      def manifest(dir: String) = {
+        val v = graft.streaming.Manifest.load(spark, dir, i.toLong)
+        (v.modulus, v.entries.map(_.dir))
+      }
+      assert(manifest(dirs(true)) == manifest(dirs(false)), s"merge $i")
+    }
+  }
+
+  test("driver form ≡ job form over the dashboard view schema") {
+    val s = spark
+    import s.implicits._
+    def review(app: Int, ts: Long, sentiment: Float) =
+      s"""{"index":1,"app_id":$app,"app_name":"game$app","review_id":$ts,""" +
+        s""""timestamp_created":$ts,"recommended":${ts % 3 != 0},""" +
+        s""""sentiment":$sentiment,"author_playtime_at_review":60.0}"""
+    val rnd = new scala.util.Random(7)
+    // collected, so the batch runs no shuffle of its own and a merge's
+    // jobs are its own
+    def batch(n: Int, apps: Int) = {
+      val df = graft.ops.Serving.decomposeTime(
+        graft.streaming.Pipeline.summarize(Seq.fill(n)(review(
+          rnd.nextInt(apps), 1700000000L + rnd.nextInt(10 * 86400),
+          rnd.nextFloat() * 2 - 1)).toDF("value")))
+      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    }
+    bothForms(Seq("app_id", "app_name", "time_year", "time_month",
+      "time_day"), Nil, 4, Seq(batch(300, 12), batch(20, 16), batch(20, 16)))
+  }
+
+  test("driver form ≡ job form over (user_id, day) with dates, timestamps and nulls") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(11)
+    var id = 0L
+    def batch(n: Int, users: Int) = (0 until n).map { _ =>
+      id += 1
+      val day = java.sql.Date.valueOf(s"2024-01-0${1 + rnd.nextInt(3)}")
+      val ts = if (rnd.nextInt(5) == 0) None else Some(new java.sql.Timestamp(
+        day.getTime + rnd.nextInt(86400) * 1000L))
+      (rnd.nextInt(users).toLong, day,
+        if (rnd.nextInt(4) == 0) None else Some(s"type${rnd.nextInt(3)}"),
+        if (rnd.nextInt(4) == 0) None else Some(rnd.nextDouble()), id, ts)
+    }.toDF("user_id", "day", "event_type", "value", "event_id", "ts")
+    bothForms(Seq("user_id", "day"), Seq("ts", "event_id"), 8,
+      Seq(batch(200, 40), batch(30, 50), batch(30, 50)))
+  }
+
+  test("a driver-form merge is invisible until its manifest; its replay overwrites it") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-shup-crash").toString
+    val merge = ShardedUpsertSink.mergeVia(s, dir, Seq("k"), Seq("seq"),
+      shards = 4, driver = Some(true)) _
+    merge((0 until 40).map(i => (s"key$i", 1L, i.toDouble))
+      .toDF("k", "seq", "v"), 0L)
+    merge(Seq(("key3", 2L, 33.0)).toDF("k", "seq", "v"), 1L)
+    val before = viewMap(dir)
+    val update = Seq(("key3", 3L, 333.0), ("key8", 2L, 88.0))
+      .toDF("k", "seq", "v")
+    // the state a crash between the shard files and Manifest.commit
+    // leaves: batch 2's files on disk, no manifest naming them
+    merge(update, 2L)
+    val crashed = dataFiles(dir, 2L)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/v=2/_manifest"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$dir/v=2/._manifest.crc"))
+    assert(crashed.nonEmpty && ShardedUpsertSink.versions(s, dir).last == 1L)
+    assert(viewMap(dir) == before, "uncommitted driver-written files are visible")
+    merge(update, 2L) // the replay
+    val replayed = dataFiles(dir, 2L)
+    assert(replayed.keySet == crashed.keySet)
+    assert(replayed.values.flatten.toSet
+      .intersect(crashed.values.flatten.toSet).isEmpty,
+      "the replay kept a file name, or a file, of the crashed attempt")
+    assert(viewMap(dir) == before ++ Map("key3" -> 333.0, "key8" -> 88.0))
+  }
 }
