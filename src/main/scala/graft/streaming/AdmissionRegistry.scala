@@ -155,8 +155,6 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     * and admitting against history this family cannot match would
     * silently duplicate content. */
   private def runEntry(spark: SparkSession, dir: String, p: Int): Entry = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val f = Manifest.fs(spark, stateDir)
@@ -170,7 +168,7 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
       st.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .foreach { s =>
           bytes += s.getLen
-          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+          val r = graft.sources.ParquetMeta.open(s, conf)
           try r.getFooter.getBlocks.asScala.foreach { b =>
             rows += b.getRowCount
             intCols.foreach { name =>

@@ -3,12 +3,16 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,6 +21,8 @@ import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+
+import graft.sources.ParquetMeta
 
 /** The one commit protocol of the engine's streaming state. The keyed
   * serving store ([[ShardedUpsertSink]], merge law keep-latest) and the
@@ -220,7 +226,10 @@ private[graft] object Manifest {
     * through Spark's parquet write support. `dir` is cleared first, as a
     * job's overwrite clears it, so a replay leaves no file of an earlier
     * attempt; the file name carries a fresh UUID per write, so a replayed
-    * commit never lists a name an earlier attempt used. Returns the bytes
+    * commit never lists a name an earlier attempt used. The shards are
+    * written in parallel on the global execution context: on a local file
+    * system without Hadoop's native IO, creating a file forks a `chmod`
+    * for it, its checksum file and its directory. Returns the bytes
     * written per shard. */
   def writeLocal(spark: SparkSession, base: String, dir: String,
       schema: StructType, rows: Map[Int, Iterable[InternalRow]])
@@ -236,12 +245,20 @@ private[graft] object Manifest {
       new TaskAttemptID())
     val name = s"part-00000-${UUID.randomUUID()}.c000" +
       factory.getFileExtension(ctx)
-    rows.map { case (s, rs) =>
-      val file = new Path(root, s"shard=$s/$name")
-      val w = factory.newInstance(file.toString, schema, ctx)
-      try rs.foreach(w.write) finally w.close()
-      s -> f.getFileStatus(file).getLen
+    val sql = spark.sessionState.conf
+    val writes = rows.toSeq.map { case (s, rs) =>
+      // the writer reads its rebase modes and time zone from SQLConf.get,
+      // which off the session's thread is not the session's conf
+      Future(SQLConf.withExistingConf(sql) {
+        val file = new Path(root, s"shard=$s/$name")
+        val w = factory.newInstance(file.toString, schema, ctx)
+        try rs.foreach(w.write) finally w.close()
+        s -> f.getFileStatus(file).getLen
+      })(ExecutionContext.global)
     }
+    // every write ends before a failure is rethrown, so no straggler
+    // writes into `dir` after a replay has cleared it
+    writes.map(w => Try(Await.result(w, Duration.Inf))).map(_.get).toMap
   }
 
   /** The rows of the one-shard entry `e` as `schema`, read on the driver
@@ -267,18 +284,24 @@ private[graft] object Manifest {
       .sortBy(_.getPath.getName)
     files.iterator.flatMap { st =>
       // dates and timestamps rebase as the file's writer asked, as a scan does
-      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val footer = ParquetMeta.open(st, conf)
       val meta: String => String =
         try footer.getFooter.getFileMetaData.getKeyValueMetaData.get
         finally footer.close()
-      val r = ParquetReader.builder(new ParquetReadSupport(None,
-          enableVectorizedReader = false,
-          DataSourceUtils.datetimeRebaseSpec(meta,
-            sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString),
-          DataSourceUtils.int96RebaseSpec(meta,
-            sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)),
-          st.getPath)
-        .withConf(conf).build()
+      val support = new ParquetReadSupport(None,
+        enableVectorizedReader = false,
+        DataSourceUtils.datetimeRebaseSpec(meta,
+          sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString),
+        DataSourceUtils.int96RebaseSpec(meta,
+          sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString))
+      // built over `conf`: `ParquetReader.builder` would build a new
+      // Hadoop Configuration per file, as a bare footer open does
+      val r = new ParquetReader.Builder[InternalRow](
+          HadoopInputFile.fromStatus(st, conf),
+          new HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport(): ReadSupport[InternalRow] =
+          support
+      }.build()
       try Iterator.continually(r.read()).takeWhile(_ != null)
         .map(unsafe(_).copy()).toVector
       finally r.close()

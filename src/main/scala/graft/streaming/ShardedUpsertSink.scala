@@ -97,8 +97,6 @@ object ShardedUpsertSink {
     * failure a scan of those shards would raise. */
   private def storedSchema(spark: SparkSession, baseDir: String,
       entries: Seq[Entry]): StructType = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val f = Manifest.fs(spark, baseDir)
     val file = entries.sortBy(_.shard).iterator.flatMap { e =>
@@ -110,7 +108,7 @@ object ShardedUpsertSink {
     }.nextOption().getOrElse(throw new FileNotFoundException(
       s"upsert store $baseDir: no data file in any of the shards " +
         entries.map(_.shard).sorted.mkString(",")))
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val r = graft.sources.ParquetMeta.open(file, conf)
     try {
       val meta = r.getFooter.getFileMetaData
       Option(meta.getKeyValueMetaData

@@ -508,11 +508,13 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     } finally q.stop()
   }
 
-  /** Spark's own record of the stored schema: the row metadata in the
-    * footer of one data file of `dir`'s newest version. */
-  private def footerSchema(dir: String): String = {
+  /** Spark's own records in the footer of one data file of `dir`'s
+    * newest version: the stored schema (row metadata), the writer version
+    * and any rebase or time-zone key. */
+  private def sparkFooter(dir: String): Map[String, String] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
     val v = ShardedUpsertSink.versions(spark, dir).last
     val file = new java.io.File(s"$dir/v=$v").listFiles()
       .filter(_.getName.startsWith("shard=")).flatMap(_.listFiles())
@@ -520,8 +522,8 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toString),
       spark.sessionState.newHadoopConf()))
-    try r.getFooter.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata")
+    try r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
+      .filter(_._1.startsWith("org.apache.spark."))
     finally r.close()
   }
 
@@ -569,7 +571,7 @@ class ShardedUpsertSinkSpec extends AnyFunSuite with SparkTestSupport {
       def rows(dir: String) = ShardedUpsertSink.currentView(spark, dir).get
         .collect().map(_.toString).sorted.toSeq
       assert(rows(dirs(true)) == rows(dirs(false)), s"merge $i")
-      assert(footerSchema(dirs(true)) == footerSchema(dirs(false)))
+      assert(sparkFooter(dirs(true)) == sparkFooter(dirs(false)))
       def manifest(dir: String) = {
         val v = graft.streaming.Manifest.load(spark, dir, i.toLong)
         (v.modulus, v.entries.map(_.dir))
