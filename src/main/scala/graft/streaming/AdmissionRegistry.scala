@@ -373,7 +373,8 @@ final class AdmissionRegistry(stateDir: String, schema: StructType,
     Manifest.writeLocal(spark, stateDir, dir, schema, rows.groupBy(r =>
         Sharded.driverShard(keyLiterals(shardColIdx.map(r.get)), shards))
       .map { case (s, rs) =>
-        s -> rs.toSeq.map(toCatalyst(_).asInstanceOf[InternalRow]) })
+        val shard = rs.toSeq.map(toCatalyst(_).asInstanceOf[InternalRow])
+        s -> (() => shard.iterator) })
   }
 
   /** Scheduled TIERED compaction driven by the stream's committed

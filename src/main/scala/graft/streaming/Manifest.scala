@@ -10,19 +10,14 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
-import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
-
-import graft.sources.ParquetMeta
 
 /** The one commit protocol of the engine's streaming state. The keyed
   * serving store ([[ShardedUpsertSink]], merge law keep-latest) and the
@@ -63,10 +58,11 @@ import graft.sources.ParquetMeta
   *   - **Small commits.** A write that fits one advisory partition
   *     ([[smallBytes]]) may skip the job: [[writeLocal]] writes its
   *     shards on the driver through Spark's own parquet write support,
-  *     and [[readLocal]] reads a one-shard entry back the same way. The
-  *     files are what a job writes (encoding, compression, the
-  *     `org.apache.spark.sql.parquet.row.metadata` footer), so every
-  *     read, footer walk and later job-form merge treats them alike.
+  *     and [[readLocal]] reads a one-shard entry back through a scan's
+  *     own parquet reader. The files are what a job writes (encoding,
+  *     compression, the `org.apache.spark.sql.parquet.row.metadata`
+  *     footer), so every read, footer walk and later job-form merge
+  *     treats them alike.
   *     Both stores commit small writes through this one path.
   */
 private[graft] object Manifest {
@@ -222,17 +218,19 @@ private[graft] object Manifest {
     spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
   /** The small-commit writer: `dir` replaced by one parquet file per
-    * shard of `rows` (shard → rows of `schema`), written on the driver
-    * through Spark's parquet write support. `dir` is cleared first, as a
-    * job's overwrite clears it, so a replay leaves no file of an earlier
-    * attempt; the file name carries a fresh UUID per write, so a replayed
-    * commit never lists a name an earlier attempt used. The shards are
-    * written in parallel on the global execution context: on a local file
+    * shard of `rows` (shard → a thunk of rows of `schema`), written on the
+    * driver through Spark's parquet write support. Each shard's thunk runs
+    * inside that shard's write, so only the shards being written are in
+    * memory at once. `dir` is cleared first, as a job's overwrite clears
+    * it, so a replay leaves no file of an earlier attempt; the file name
+    * carries a fresh UUID per write, so a replayed commit never lists a
+    * name an earlier attempt used. The shards are written in parallel on
+    * the global execution context (one thread per core): on a local file
     * system without Hadoop's native IO, creating a file forks a `chmod`
     * for it, its checksum file and its directory. Returns the bytes
     * written per shard. */
   def writeLocal(spark: SparkSession, base: String, dir: String,
-      schema: StructType, rows: Map[Int, Iterable[InternalRow]])
+      schema: StructType, rows: Map[Int, () => Iterator[InternalRow]])
       : Map[Int, Long] = {
     val f = fs(spark, base)
     val root = new Path(base, dir)
@@ -250,9 +248,10 @@ private[graft] object Manifest {
       // the writer reads its rebase modes and time zone from SQLConf.get,
       // which off the session's thread is not the session's conf
       Future(SQLConf.withExistingConf(sql) {
+        val it = rs()
         val file = new Path(root, s"shard=$s/$name")
         val w = factory.newInstance(file.toString, schema, ctx)
-        try rs.foreach(w.write) finally w.close()
+        try it.foreach(w.write) finally w.close()
         s -> f.getFileStatus(file).getLen
       })(ExecutionContext.global)
     }
@@ -261,50 +260,35 @@ private[graft] object Manifest {
     writes.map(w => Try(Await.result(w, Duration.Inf))).map(_.get).toMap
   }
 
-  /** The rows of the one-shard entry `e` as `schema`, read on the driver
-    * through Spark's parquet read support: the small-commit reader. Each
-    * row is an `UnsafeRow` copy. */
-  def readLocal(spark: SparkSession, base: String, e: Entry,
-      schema: StructType): Iterator[InternalRow] = {
-    val sql = spark.sessionState.conf
-    val conf = spark.sessionState.newHadoopConf()
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
-    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
-        SQLConf.PARQUET_INT96_AS_TIMESTAMP,
-        SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
-      .foreach(c => conf.setBoolean(c.key, sql.getConf(c)))
-    val unsafe = InterpretedUnsafeProjection.createProjection(
-      schema.fields.toSeq.zipWithIndex.map { case (c, i) =>
-        BoundReference(i, c.dataType, nullable = true) })
-    val files = fs(spark, base).listStatus(new Path(base, e.dir))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.startsWith("_"))
-      .sortBy(_.getPath.getName)
-    files.iterator.flatMap { st =>
-      // dates and timestamps rebase as the file's writer asked, as a scan does
-      val footer = ParquetMeta.open(st, conf)
-      val meta: String => String =
-        try footer.getFooter.getFileMetaData.getKeyValueMetaData.get
-        finally footer.close()
-      val support = new ParquetReadSupport(None,
-        enableVectorizedReader = false,
-        DataSourceUtils.datetimeRebaseSpec(meta,
-          sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString),
-        DataSourceUtils.int96RebaseSpec(meta,
-          sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString))
-      // built over `conf`: `ParquetReader.builder` would build a new
-      // Hadoop Configuration per file, as a bare footer open does
-      val r = new ParquetReader.Builder[InternalRow](
-          HadoopInputFile.fromStatus(st, conf),
-          new HadoopParquetConfiguration(conf)) {
-        override protected def getReadSupport(): ReadSupport[InternalRow] =
-          support
-      }.build()
-      try Iterator.continually(r.read()).takeWhile(_ != null)
-        .map(unsafe(_).copy()).toVector
-      finally r.close()
+  /** The small-commit reader: a function from a one-shard entry to its
+    * rows as `schema` (`UnsafeRow` copies), read on the driver. Each file
+    * is read by the reader a parquet scan builds
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`), so the
+    * session's read conf, the rebase of dates and timestamps and the
+    * schema rules are a scan's. Building it broadcasts the Hadoop conf
+    * once, as a scan does: ~7 ms on a 4-cpu host, after which a
+    * 1,250-row file reads in ~1.6 ms. The function may run on any
+    * thread. */
+  def readLocal(spark: SparkSession, base: String,
+      schema: StructType): Entry => Iterator[UnsafeRow] = {
+    val f = fs(spark, base)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    e => {
+      // a projection reuses one buffer, so each entry builds its own
+      val unsafe = InterpretedUnsafeProjection.createProjection(
+        schema.fields.toSeq.zipWithIndex.map { case (c, i) =>
+          BoundReference(i, c.dataType, nullable = true) })
+      f.listStatus(new Path(base, e.dir))
+        .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
+          !s.getPath.getName.startsWith("_"))
+        .sortBy(_.getPath.getName).iterator.flatMap { st =>
+          read(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+            st.getModificationTime, st.getLen)).map(unsafe(_).copy())
+        }
     }
   }
 

@@ -35,15 +35,15 @@ import graft.streaming.Manifest.{Entry, Version}
   * A merge starts with ONE job, which computes the micro-batch and
   * collects its touched shards, and its rows when they are small
   * ([[mergeVia]]). A small merge (the rows, and the touched predecessor
-  * shards' manifest bytes, fit [[Manifest.smallBytes]]) then commits
-  * through [[Manifest]]'s small-commit path, the one the admission
-  * registry's appends take: the driver reads the touched shards, keeps
-  * the latest row per key and writes one file per touched shard. A
-  * dashboard trigger is then one Spark job, with no shuffle. A larger
-  * merge keeps the job form: one shuffle on `shard` under a partitioned
-  * write. Every read of the store carries the stored schema from one
-  * driver-side parquet footer, so no read infers a schema with a job of
-  * its own.
+  * shards as manifest bytes and as decoded rows, fit
+  * [[Manifest.smallBytes]]) then commits through [[Manifest]]'s
+  * small-commit path, the one the admission registry's appends take:
+  * per touched shard, the driver reads it, keeps the latest row per key
+  * and writes one file. A dashboard trigger is then one Spark job, with
+  * no shuffle. A larger merge keeps the job form: one shuffle on `shard`
+  * under a partitioned write. Every read of the store carries the stored
+  * schema from one driver-side parquet footer, so no read infers a
+  * schema with a job of its own.
   *
   * Readers resolve the newest committed manifest ([[currentView]], no
   * Spark job) and scan its files; a view that fits one advisory
@@ -194,12 +194,22 @@ object ShardedUpsertSink {
     *
     * Both forms start with the same job ([[touchedRows]]), which also
     * computes the micro-batch; the batch stays persisted, so the job
-    * form never recomputes it. The driver form runs when that job
-    * returned the batch rows (at most [[Manifest.smallBytes]] of them)
-    * and the touched predecessor shards' manifest bytes fit the same
-    * size; its keep-latest order is the job form's. Keys holding a float
-    * or double take the job form: Spark groups them after normalizing
-    * NaN and -0.0, which a byte-equal driver key does not. */
+    * form never recomputes it. Under the size rule the driver form runs
+    * when that job returned the batch rows (at most [[Manifest.smallBytes]]
+    * of them) and the touched predecessor shards fit the same size, as
+    * manifest bytes and as the decoded rows the driver reads: a read
+    * that passes the size stops, and the job form runs. Its keep-latest
+    * order is the job form's. Keys holding a float or double take the
+    * job form: Spark groups them after normalizing NaN and -0.0, which a
+    * byte-equal driver key does not.
+    *
+    * The size rule bounds the driver's memory; it is not a speed
+    * crossover. On a 4-cpu host the driver form was faster at every size
+    * measured, up to 10,000-row merges into all 64 shards of a 207 MB
+    * store (SURVEY §30). Rows decode to more heap than their files take
+    * (dashboard-view rows ~21x their manifest bytes, incompressible
+    * string rows ~3x, row objects and key copies included), so the
+    * decoded bound is the one that holds the heap near 3x the size. */
   private[graft] def mergeVia(spark: SparkSession, baseDir: String,
       keys: Seq[String], orderCols: Seq[String], shards: Int,
       driver: Option[Boolean])(batch: DataFrame, batchId: Long): Unit = {
@@ -222,7 +232,8 @@ object ShardedUpsertSink {
       val written = rows
         .filter(_ => driver.isDefined || prevTouched.map(_.bytes).sum <= small)
         .flatMap(mergeLocal(spark, baseDir, keys, orderCols, tagged.schema,
-          prevTouched, _, batchId))
+          prevTouched, _, batchId,
+          if (driver.isDefined) Long.MaxValue else small))
         .getOrElse(mergeJob(spark, baseDir, keys, orderCols, p, prevTouched,
           tagged, batchId))
       Manifest.commit(spark, baseDir, Version(batchId, p,
@@ -315,16 +326,24 @@ object ShardedUpsertSink {
     Manifest.written(spark, baseDir, s"v=$batchId")
   }
 
-  /** The driver form: the touched predecessor shards read on the driver
-    * ([[Manifest.readLocal]]), the latest row per key kept in memory
-    * under the job form's order (`orderCols` descending, nulls last,
-    * then the batch id), and one file written per touched shard
-    * ([[Manifest.writeLocal]]). None, and the job form runs, when the
-    * batch's columns differ from the stored ones by name or type. */
+  /** A driver-form read past its byte budget. */
+  private final class OverBudget
+      extends RuntimeException(null, null, false, false)
+
+  /** The driver form: per touched shard, its predecessor rows read on
+    * the driver ([[Manifest.readLocal]]), the latest row per key kept in
+    * memory under the job form's order (`orderCols` descending, nulls
+    * last, then the batch id), and one file written
+    * ([[Manifest.writeLocal]]). Each shard is read and kept inside its
+    * own write, so the driver holds the batch rows and only the shards
+    * being written. None, and the job form runs, when the batch's
+    * columns differ from the stored ones by name or type, or when the
+    * predecessor rows read pass `readCap` bytes (`UnsafeRow` sizes); the
+    * job form's overwrite then clears what was written. */
   private def mergeLocal(spark: SparkSession, baseDir: String,
       keys: Seq[String], orderCols: Seq[String], batchSchema: StructType,
-      prevTouched: Seq[Entry], rows: Array[InternalRow],
-      batchId: Long): Option[Map[Int, Long]] = {
+      prevTouched: Seq[Entry], rows: Array[InternalRow], batchId: Long,
+      readCap: Long): Option[Map[Int, Long]] = {
     val payload = StructType(batchSchema.filterNot(_.name == "shard"))
     // the job form writes the batch's own schema, or its union with the
     // predecessor as read, where a file scan makes every column nullable
@@ -337,25 +356,31 @@ object ShardedUpsertSink {
     else {
       def at(s: StructType, c: String) =
         BoundReference(s.fieldIndex(c), s(c).dataType, nullable = true)
-      val stored = InterpretedUnsafeProjection.createProjection(
-        schema.fieldNames.toSeq.map(at(batchSchema, _)))
-      val keyOf = InterpretedUnsafeProjection.createProjection(
-        keys.map(at(schema, _)))
-      val newer = new InterpretedOrdering(
-        (orderCols :+ "__batch").map(c => SortOrder(at(schema, c), Descending)))
       val si = batchSchema.fieldIndex("shard")
       val prevOf = prevTouched.map(e => e.shard -> e).toMap
-      Some(Manifest.writeLocal(spark, baseDir, s"v=$batchId", schema,
-        rows.groupBy(_.getInt(si)).map { case (s, batchRows) =>
+      val read = Manifest.readLocal(spark, baseDir, schema)
+      val left = new java.util.concurrent.atomic.AtomicLong(readCap)
+      try Some(Manifest.writeLocal(spark, baseDir, s"v=$batchId", schema,
+        rows.groupBy(_.getInt(si)).map { case (s, batchRows) => s -> { () =>
+          // per shard: projections reuse one buffer, and the shards are
+          // written in parallel
+          val stored = InterpretedUnsafeProjection.createProjection(
+            schema.fieldNames.toSeq.map(at(batchSchema, _)))
+          val keyOf = InterpretedUnsafeProjection.createProjection(
+            keys.map(at(schema, _)))
+          val newer = new InterpretedOrdering((orderCols :+ "__batch")
+            .map(c => SortOrder(at(schema, c), Descending)))
           val latest = scala.collection.mutable.LinkedHashMap[InternalRow, InternalRow]()
-          (prevOf.get(s).iterator
-              .flatMap(Manifest.readLocal(spark, baseDir, _, schema)) ++
-            batchRows.iterator.map(stored(_).copy())).foreach { r =>
+          (prevOf.get(s).iterator.flatMap(read).map { r =>
+              if (left.addAndGet(-r.getSizeInBytes) < 0) throw new OverBudget
+              r
+            } ++ batchRows.iterator.map(stored(_).copy())).foreach { r =>
             val k = keyOf(r).copy()
             if (latest.get(k).forall(newer.compare(r, _) < 0)) latest(k) = r
           }
-          s -> latest.values
-        }))
+          latest.valuesIterator
+        }}))
+      catch { case _: OverBudget => None }
     }
   }
 

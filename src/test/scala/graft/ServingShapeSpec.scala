@@ -196,6 +196,29 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
     assert(ShardedUpsertSink.currentView(spark, dir).get.count() == 41)
   }
 
+  test("a predecessor that decodes above the advisory size takes the job form") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-serving-shape").toString
+    // 5,000 repetitive rows: a few KB of files, ~360 KB of decoded rows
+    ShardedUpsertSink.mergeBatch(s, dir, keys, Nil, shards = 4)(
+      (0 until 5000).map(i => (s"g${i % 50}", 2024, 1 + i / 50 % 12,
+        1 + i / 600, 1.0, 1L)).toDF(keys :+ "A_value" :+ "T_reviews": _*), 0L)
+    val stored = graft.streaming.Manifest.below(s, dir, 1L).get.entries
+    assert(stored.map(_.bytes).sum <= 65536, stored)
+    val (_, writes) = withAdvisory("65536") {
+      jobsAndWrites {
+        ShardedUpsertSink.mergeBatch(s, dir, keys, Nil, shards = 4)(
+          update(), 1L)
+      }
+    }
+    assert(writes.size == 1, s"${writes.size} writes")
+    val view = ShardedUpsertSink.currentView(s, dir).get
+    assert(view.count() == 5000)
+    assert(view.filter(col("A_value") =!= 1.0).select("app_name")
+      .as[String].collect().sorted.toSeq == Seq("g5", "g9"))
+  }
+
   test("a merge plans one exchange, on shard, and infers no schema with a job") {
     val dir = store()
     val (jobs, writes) = jobsAndWrites {
@@ -220,14 +243,15 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
     assert(ShardedUpsertSink.currentView(spark, dir).get.count() == 41)
   }
 
-  test("repeated merges and reads compile no new code") {
+  /** Merges 2 to 5 on `form` into a fresh [[store]], each after the
+    * three reads of the view: from merge 3 on, none compiles new code. */
+  private def compilesNothingNew(form: Option[Boolean]): Unit = {
     // the batch is a computed plan, as a stream's micro-batch is: a
     // projection over it is whole-stage generated, where a local
     // relation would be folded on the driver
     val dir = store()
     def merge(id: Long): Unit =
-      ShardedUpsertSink.mergeVia(spark, dir, keys, Nil, shards = 4,
-          driver = Some(false))(
+      ShardedUpsertSink.mergeVia(spark, dir, keys, Nil, shards = 4, form)(
         spark.range(40).select(
           concat(lit("g"), (col("id") % 8).cast("string")).as("app_name"),
           lit(2024).as("time_year"),
@@ -252,5 +276,15 @@ class ServingShapeSpec extends AnyFunSuite with SparkTestSupport {
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
         s"merge $id and the reads before it compiled new code")
     }
+  }
+
+  test("repeated merges and reads compile no new code") {
+    compilesNothingNew(Some(false))
+  }
+
+  test("repeated driver-form merges and reads compile no new code") {
+    // the size rule picks the driver form for these merges
+    val (_, writes) = jobsAndWrites(compilesNothingNew(None))
+    assert(writes.isEmpty, s"${writes.size} merges took the job form")
   }
 }
